@@ -120,10 +120,10 @@ class FeathrClient:
 
     def load_project_from_json(self, json_str: str) -> FeathrProject:
         """client.rs:45-48 — rebuild a project from a registry lineage
-        payload."""
-        import json as _json
+        payload of either family (reference Atlas attributes or this
+        engine's ``save_project`` definitions)."""
         from .configio import from_lineage
-        return from_lineage(_json.loads(json_str), spark=self.spark)
+        return from_lineage(json_str, spark=self.spark)
 
     def load_project(self, registry, name: str) -> FeathrProject:
         """Registry-backed load (client.rs:36-43, minus the REST hop)."""

@@ -16,11 +16,15 @@ entry points, one per payload shape the reference produces:
   project.rs:327-357 / observation.rs:50-97): ``observationPath`` +
   ``settings.joinTimeSettings.timestampColumn{def,format}`` +
   ``featureList`` + ``outputPath``.
-* :func:`from_lineage` — the registry's Atlas-style lineage payload
-  (``guidEntityMap`` + ``relations``; the shape of
-  /root/reference/registry/test-data/sample.json), mirroring the
-  reference's ``TryFrom<EntityLineage> for FeathrProjectImpl``
-  (project.rs:742-846).
+* :func:`from_lineage` — a registry lineage payload (``guidEntityMap`` +
+  ``relations``), mirroring the reference's ``TryFrom<EntityLineage> for
+  FeathrProjectImpl`` (project.rs:742-846). It reads both payload
+  families: the reference registry's Atlas-style attributes (the shape
+  of its registry/test-data/sample.json) and the
+  ``kind``-tagged definitions :func:`registry.roundtrip.save_project`
+  stores, as :class:`registry.api.RegistryApi` serves them. It is the
+  only lineage decoder: :func:`registry.roundtrip.load_project` and the
+  :class:`client.FeathrClient` loaders all go through it.
 
 Python ``preprocessing`` source code embedded in lineage payloads is NOT
 executed (arbitrary code); re-bind callables after load, as with
@@ -35,10 +39,11 @@ from typing import Dict, List, Optional, Sequence
 
 from .feature import DerivedFeature, Feature, FeatureAnchor
 from .model import (
-    Aggregation, FeatureType, TensorCategory, TypedKey, UdfTransform,
-    ValueType, VectorType, WindowAggTransform,
+    Aggregation, ExpressionTransform, FeatureType, TensorCategory, TypedKey,
+    UdfTransform, ValueType, VectorType, WindowAggTransform,
 )
 from .project import FeathrProject, FeatureQuery
+from .registry.catalog import EdgeType, RegistryError
 from .source import (
     INPUT_CONTEXT, DataFrameSource, GenericSource, HdfsSource, JdbcSource,
     KafkaSource, ObservationSettings, Source, TimeWindowParameters,
@@ -74,6 +79,8 @@ def _feature_type(d: Optional[dict]) -> FeatureType:
 
 
 def _typed_key(d: dict) -> TypedKey:
+    """One key entry of either lineage family: ``key_column_type`` is the
+    enum value ``save_project`` writes or the reference's name/ordinal."""
     return TypedKey(
         key_column=d["key_column"],
         key_column_type=_value_type(d.get("key_column_type", "UNSPECIFIED")),
@@ -124,11 +131,64 @@ def _transformation(d, keys: tuple = ()):
     return expr
 
 
+def source_from_dict(d: dict) -> Source:
+    """Inverse of :func:`registry.roundtrip.source_to_dict`."""
+    twp = d.get("twp")
+    twp_obj = TimeWindowParameters(**twp) if twp else None
+    kind = d.get("kind")
+    if kind == "input_context":
+        return INPUT_CONTEXT
+    common = {"name": d["name"], "time_window_parameters": twp_obj}
+    if kind == "hdfs":
+        return HdfsSource(path=d["path"], format=d.get("format"),
+                          options=d.get("options") or {}, **common)
+    if kind == "jdbc":
+        return JdbcSource(url=d["url"], dbtable=d.get("dbtable"),
+                          query=d.get("query"), auth=d.get("auth", "anonymous"),
+                          options=d.get("options") or {}, **common)
+    if kind == "kafka":
+        return KafkaSource(brokers=tuple(d.get("brokers") or ()),
+                           topics=tuple(d.get("topics") or ()),
+                           avro_schema_json=d.get("avro_schema_json"),
+                           options=d.get("options") or {}, **common)
+    if kind == "generic":
+        return GenericSource(format=d.get("format", "parquet"),
+                             path=d.get("path"), mode=d.get("mode"),
+                             options=d.get("options") or {}, **common)
+    if kind == "dataframe":
+        return DataFrameSource(df=None, **common)
+    raise RegistryError(f"cannot reconstruct source kind {kind!r}")
+
+
+def _transform_from_dict(d: dict):
+    """Inverse of :func:`registry.roundtrip._transform_to_dict`."""
+    kind = d.get("kind")
+    if kind == "window":
+        return WindowAggTransform(
+            def_expr=d["def_expr"], agg_func=Aggregation(d["agg_func"]),
+            window=d["window"], group_by=d.get("group_by"),
+            filter=d.get("filter"), limit=d.get("limit"),
+            agg_param=d.get("agg_param"))
+    if kind == "udf":
+        return UdfTransform(d["name"])
+    if kind == "expr":
+        return ExpressionTransform(d["sql_expr"])
+    raise RegistryError(f"unknown transform kind {kind!r}")
+
+
+def feature_from_dict(d: dict) -> Feature:
+    """Inverse of :func:`registry.roundtrip.feature_to_dict`."""
+    return Feature(name=d["name"],
+                   transform=_transform_from_dict(d["transform"]),
+                   key=tuple(_typed_key(k) for k in d.get("keys") or ()))
+
+
 def _source_from_config(name: str, d: dict) -> Source:
     """SourceImpl shape (reference source.rs:274-289: ``location`` +
-    ``timeWindowParameters``) or this engine's ``source_to_dict`` shape."""
+    ``timeWindowParameters``), the registry's Atlas source attributes
+    (``path`` + ``event_timestamp_column``/``timestamp_format``), or this
+    engine's ``source_to_dict`` shape."""
     if d.get("kind"):  # our own registry round-trip shape
-        from .registry.roundtrip import source_from_dict
         return source_from_dict(d)
     twp = None
     twp_d = d.get("timeWindowParameters") or d.get("time_window_parameters")
@@ -139,10 +199,15 @@ def _source_from_config(name: str, d: dict) -> Source:
             timestamp_column_format=twp_d.get(
                 "timestampColumnFormat", twp_d.get("timestamp_column_format")),
         )
+    elif d.get("event_timestamp_column"):
+        twp = TimeWindowParameters(
+            timestamp_column=d["event_timestamp_column"],
+            timestamp_column_format=d.get("timestamp_format"))
     loc = d.get("location", d)
     if isinstance(loc, str):  # DataLocation::InputContext serializes bare
         return INPUT_CONTEXT
-    if loc.get("type") in ("PASSTHROUGH", "INPUT_CONTEXT"):
+    if name == INPUT_CONTEXT.name or \
+            loc.get("type") in ("PASSTHROUGH", "INPUT_CONTEXT"):
         return INPUT_CONTEXT
     ltype = str(loc.get("type", "hdfs")).lower()
     if "url" in loc or ltype == "jdbc":
@@ -211,38 +276,42 @@ def from_feature_config(cfg, spark=None,
         p.register_anchor(FeatureAnchor(name=aname, source=src,
                                         features=feats))
 
-    derivations = cfg.get("derivations") or {}
-
     def input_names(dd: dict) -> List[str]:
         inputs = dd.get("inputs", ())
         if isinstance(inputs, dict):  # reference: {alias: {key, feature}}
             return [v["feature"] for v in inputs.values()]
         return list(inputs)
 
-    registered: set = set()
-
-    def add(dname: str):
-        if dname in registered or dname not in derivations:
-            return
-        dd = derivations[dname]
-        for dep in input_names(dd):
-            if dep in derivations:
-                add(dep)
-        d = DerivedFeature(
-            name=dname,
+    pending: Dict[str, tuple] = {}
+    for dname, dd in (cfg.get("derivations") or {}).items():
+        pending[dname] = (input_names(dd), dict(
             feature_type=_feature_type(dd.get("type")),
             transform=_transformation(dd),
-            input_features=[feature_index[n] for n in input_names(dd)],
             key=_keys_from_list(dd.get("key"))
             if dd.get("key") and isinstance(dd["key"][0], dict) else (),
-        )
-        p.register_derived(d)
-        feature_index[dname] = d
-        registered.add(dname)
-
-    for dname in derivations:
-        add(dname)
+        ))
+    _register_derived(p, pending, feature_index)
     return p
+
+
+def _register_derived(p: FeathrProject, pending: Dict[str, tuple],
+                      feature_index: Dict[str, Feature]) -> None:
+    """Register derived features in dependency order (inputs before
+    dependents). ``pending`` maps each name to ``(input names,
+    DerivedFeature keyword arguments)``; input names resolve through
+    ``feature_index``, which gains each derived feature as it registers."""
+    def add(name: str):
+        if name not in pending:  # anchor feature, or already registered
+            return
+        inputs, kwargs = pending.pop(name)
+        for dep in inputs:
+            add(dep)
+        feature_index[name] = p.register_derived(DerivedFeature(
+            name=name, input_features=[feature_index[n] for n in inputs],
+            **kwargs))
+
+    for name in list(pending):
+        add(name)
 
 
 @dataclass(frozen=True)
@@ -281,7 +350,7 @@ def from_join_config(cfg) -> JoinRequest:
 
 
 # ---------------------------------------------------------------------------
-# registry lineage payload (Atlas shape)
+# registry lineage payload (Atlas shape and save_project shape)
 # ---------------------------------------------------------------------------
 
 _WS, _SRC, _ANCHOR, _AF, _DF = (
@@ -289,20 +358,21 @@ _WS, _SRC, _ANCHOR, _AF, _DF = (
     "feathr_anchor_feature_v1", "feathr_derived_feature_v1")
 
 
-def _lineage_source(name: str, attrs: dict,
-                    source_frames: Optional[dict]) -> Source:
-    if attrs.get("type") == "PASSTHROUGH" or name == "PASSTHROUGH":
-        return INPUT_CONTEXT
-    twp = None
-    if attrs.get("event_timestamp_column"):
-        twp = TimeWindowParameters(
-            timestamp_column=attrs["event_timestamp_column"],
-            timestamp_column_format=attrs.get("timestamp_format"))
-    if source_frames and name in source_frames:
-        return DataFrameSource(name=name, df=source_frames[name],
-                               time_window_parameters=twp)
-    return HdfsSource(name=name, path=attrs.get("path", ""),
-                      time_window_parameters=twp)
+def _qualified_name(e: dict) -> str:
+    # Atlas entities carry it among their attributes; RegistryApi entities
+    # carry it beside them
+    return e["attributes"].get("qualifiedName") or e["qualifiedName"]
+
+
+def _lineage_feature(a: dict) -> Feature:
+    if "transform" in a:  # save_project's kind-tagged definition
+        return feature_from_dict(a)
+    return Feature(
+        name=a["name"],
+        feature_type=_feature_type(a.get("type")),
+        transform=_transformation(a.get("transformation", {})),
+        key=_keys_from_list(a.get("key")),
+    )
 
 
 def from_lineage(payload, spark=None,
@@ -310,90 +380,82 @@ def from_lineage(payload, spark=None,
     """Rebuild a runnable project from a registry lineage payload
     (``guidEntityMap`` + ``relations``), the shape the reference registry
     returns and that its client consumes in ``TryFrom<EntityLineage>``
-    (project.rs:742-846). ``source_frames`` optionally re-binds named
-    sources to in-memory DataFrames (remote paths in archived payloads are
-    rarely reachable; embedded preprocessing code is never executed)."""
+    (project.rs:742-846). Entity attributes may come in either payload
+    family (see the module docstring): Atlas-style anchors list their
+    features and reference their source by guid, while ``save_project``
+    anchors name their source and own their features through
+    ``Contains`` relations. ``source_frames`` optionally re-binds named
+    sources to in-memory DataFrames (remote paths in archived payloads
+    are rarely reachable, DataFrame sources are saved without their
+    frame, and embedded preprocessing code is never executed)."""
     if isinstance(payload, str):
         payload = json.loads(payload)
     ents: Dict[str, dict] = payload["guidEntityMap"]
+    by_type: Dict[str, list] = {}
+    for guid, e in ents.items():
+        by_type.setdefault(e["typeName"], []).append((guid, e))
+    contains: Dict[str, list] = {}
+    for r in payload.get("relations", ()):
+        if r["relationshipType"] == EdgeType.Contains.value:
+            contains.setdefault(r["fromEntityId"], []).append(r["toEntityId"])
 
-    ws = next(e for e in ents.values() if e["typeName"] == _WS)
-    project_name = ws["attributes"].get(
-        "name", ws["attributes"].get("qualifiedName", "imported"))
+    ws = by_type[_WS][0][1]
+    project_name = ws["attributes"].get("name") or _qualified_name(ws)
     p = FeathrProject(project_name, spark)
 
-    sources_by_guid: Dict[str, Source] = {}
-    sources_by_qn: Dict[str, Source] = {}
-    for guid, e in ents.items():
-        if e["typeName"] != _SRC:
-            continue
+    sources: Dict[str, Source] = {}  # by guid, qualified name and name
+    for guid, e in by_type.get(_SRC, ()):
         a = e["attributes"]
-        src = _lineage_source(a["name"], a, source_frames)
-        sources_by_guid[guid] = src
-        sources_by_qn[a["qualifiedName"]] = src
-        if not src.is_input_context:
-            p.register_source(src)
+        src = _source_from_config(a["name"], a)
+        if source_frames and src.name in source_frames:
+            src = DataFrameSource(
+                name=src.name, df=source_frames[src.name],
+                time_window_parameters=src.time_window_parameters)
+        p.register_source(src)
+        sources.update({guid: src, _qualified_name(e): src, src.name: src})
 
-    def feature_from_entity(e: dict, keys_override=None) -> Feature:
-        a = e["attributes"]
-        return Feature(
-            name=a["name"],
-            feature_type=_feature_type(a.get("type")),
-            transform=_transformation(a.get("transformation", {})),
-            key=keys_override if keys_override is not None
-            else _keys_from_list(a.get("key")),
-        )
-
+    # strip the known project prefix by length — splitting on the first
+    # "__" would land inside a project name that itself contains "__"
+    prefix = f"{project_name}__"
     feature_index: Dict[str, Feature] = {}
-    for e in ents.values():
-        if e["typeName"] != _ANCHOR:
-            continue
+    for guid, e in by_type.get(_ANCHOR, ()):
         a = e["attributes"]
-        sref = a.get("source") or {}
-        src = (sources_by_guid.get(sref.get("guid"))
-               or sources_by_qn.get(
-                   (sref.get("uniqueAttributes") or {}).get("qualifiedName"))
-               or INPUT_CONTEXT)
-        feats = []
-        for fref in a.get("features", ()):
-            fe = ents[fref["guid"]]
-            f = feature_from_entity(fe)
-            feats.append(f)
-            feature_index[f.name] = f
-        p.register_anchor(FeatureAnchor(name=a["name"], source=src,
-                                        features=feats))
+        sref = a.get("source")
+        if isinstance(sref, dict):  # Atlas entity reference
+            sref = sref.get("guid") if sref.get("guid") in sources else \
+                (sref.get("uniqueAttributes") or {}).get("qualifiedName")
+        feature_guids = ([r["guid"] for r in a["features"]]
+                         if "features" in a else contains.get(guid, ()))
+        feats = [_lineage_feature(ents[g]["attributes"])
+                 for g in feature_guids
+                 if g in ents and ents[g]["typeName"] == _AF]
+        qn = _qualified_name(e)
+        name = a.get("name") or (qn[len(prefix):] if qn.startswith(prefix)
+                                 else qn)
+        p.register_anchor(FeatureAnchor(
+            name=name, source=sources.get(sref, INPUT_CONTEXT),
+            features=feats,
+            broadcast_hint=bool(a.get("broadcast_hint"))))
+        feature_index.update((f.name, f) for f in feats)
 
-    derived_entities = {e["attributes"]["name"]: e for e in ents.values()
-                        if e["typeName"] == _DF}
-
-    def derived_inputs(e: dict) -> List[str]:
+    pending: Dict[str, tuple] = {}
+    for _, e in by_type.get(_DF, ()):
         a = e["attributes"]
-        names = []
-        for ref in list(a.get("input_anchor_features", ())) + \
-                list(a.get("input_derived_features", ())):
-            names.append(ents[ref["guid"]]["attributes"]["name"])
-        return names
-
-    registered: set = set()
-
-    def add(dname: str):
-        if dname in registered:
-            return
-        e = derived_entities[dname]
-        for dep in derived_inputs(e):
-            if dep in derived_entities:
-                add(dep)
-        a = e["attributes"]
-        p.register_derived(DerivedFeature(
-            name=dname,
-            feature_type=_feature_type(a.get("type")),
-            transform=_transformation(a.get("transformation", {})),
-            input_features=[feature_index[n] for n in derived_inputs(e)],
-            key=_keys_from_list(a.get("key")),
-        ))
-        feature_index[dname] = p.derived[dname]
-        registered.add(dname)
-
-    for dname in derived_entities:
-        add(dname)
+        if "sql_expr" in a:  # save_project shape: inputs by name
+            inputs = list(a.get("inputs") or ())
+            kwargs = dict(
+                transform=a["sql_expr"],
+                key=tuple(_typed_key(k) for k in a.get("keys") or ()),
+            )
+        else:  # Atlas shape: inputs by entity reference
+            refs = list(a.get("input_anchor_features", ())) + \
+                list(a.get("input_derived_features", ()))
+            inputs = [ents[r["guid"]]["attributes"]["name"] for r in refs]
+            kwargs = dict(
+                feature_type=_feature_type(a.get("type")),
+                transform=_transformation(a.get("transformation", {})),
+                key=_keys_from_list(a.get("key")),
+            )
+        pending[a["name"]] = (inputs, kwargs)
+    _register_derived(p, pending, feature_index)
     return p

@@ -31,16 +31,18 @@ def spread_by(df: DataFrame, col: Column) -> DataFrame:
     The no-default ``conf.get`` is deliberate: it consults the session
     value AND the entry's built-in default (a ``get(key, None)`` form
     skips the built-in default and hands back None on sessions that
-    never set the key). The except-arm catches everything — "auto"
-    strings on exotic platforms (ValueError) and Py4J errors from a
-    stale session handle in long multi-session processes — and falls
-    back to the context's parallelism, then to Spark's stock 200."""
+    never set the key). Only the count lookup is guarded: its except-arm
+    catches "auto" strings on exotic platforms (ValueError) and Py4J
+    errors from a stale session handle in long multi-session processes,
+    and falls back to the context's parallelism, then to Spark's stock
+    200. ``repartition`` runs once, outside it, so a genuine failure
+    (e.g. an unresolved column) surfaces as itself."""
     sess = df.sparkSession
     try:
-        return df.repartition(
-            int(sess.conf.get("spark.sql.shuffle.partitions")), col)
+        n = int(sess.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         try:
-            return df.repartition(sess.sparkContext.defaultParallelism, col)
+            n = sess.sparkContext.defaultParallelism
         except Exception:
-            return df.repartition(200, col)
+            n = 200
+    return df.repartition(n, col)

@@ -10,11 +10,17 @@ near-dup similarity graphs — needs a distributed fixed-point loop.
 
 Scale design mirrors the components loop: per-iteration cost is one
 rank join + one contribution aggregate (two shuffles on node id), every
-frame is node- or edge-sized, scalar statistics (node count, dangling
-mass) travel as broadcast single-row frames — never a driver collect —
-and each round ends in an eager ``localCheckpoint()`` to TRUNCATE
-lineage (without it the final plan embeds every prior round; see the
-``duplicate_components`` docstring for the measured blowup).
+frame is node- or edge-sized, and scalar statistics (node count, dangling
+mass) travel as broadcast single-row frames — never a driver collect.
+Lineage is truncated LAZILY (r12): a frame the next round reads more
+than once ends its round in ``localCheckpoint(eager=False)``, which cuts
+the plan at once (without it the final plan embeds every prior round;
+see the ``duplicate_components`` docstring for the measured blowup) but
+materializes its blocks inside the next action that needs them — the
+loop's convergence check where it has one, otherwise the caller's single
+action — instead of in an eager job per round. A frame read once chains
+as plain lineage, with a lazy checkpoint every few rounds bounding plan
+growth. Each loop's docstring states its own policy.
 """
 from __future__ import annotations
 

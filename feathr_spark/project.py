@@ -194,8 +194,6 @@ class FeathrProject:
         lazy result DataFrame is returned. Pass an explicit strategy to
         keep planning fully lazy.
         """
-        self._time_prune = time_prune
-        self._pit_strategy = pit_strategy
         spark = spark or self.spark
         if isinstance(observation, ObservationSettings):
             observation_settings = observation
@@ -211,10 +209,11 @@ class FeathrProject:
         queries = [feature_query] if isinstance(feature_query, FeatureQuery) else list(feature_query)
         out = obs_df
         for q in queries:
-            out = self._apply_query(spark, out, q)
+            out = self._apply_query(spark, out, q, time_prune, pit_strategy)
         return out.drop(EVENT_TS_COL)
 
-    def _apply_query(self, spark: SparkSession, obs: DataFrame, q: FeatureQuery) -> DataFrame:
+    def _apply_query(self, spark: SparkSession, obs: DataFrame, q: FeatureQuery,
+                     time_prune: bool, pit_strategy: str) -> DataFrame:
         anchor_feats, derived_order = self._resolve(q.feature_list)
 
         def obs_keys_for(f: Feature) -> List[str]:
@@ -248,7 +247,8 @@ class FeathrProject:
             out = self._attach_keyed_join(spark, out, src_keys, obs_keys, feats)
 
         for (src_name, src_keys, obs_keys), feats in windows.items():
-            out = self._attach_windowed(spark, out, src_keys, obs_keys, feats)
+            out = self._attach_windowed(spark, out, src_keys, obs_keys, feats,
+                                        time_prune, pit_strategy)
 
         # ---- derived features: topo-ordered column expressions ----
         for d in derived_order:
@@ -287,7 +287,8 @@ class FeathrProject:
 
     def _attach_windowed(self, spark: SparkSession, obs: DataFrame,
                          src_keys: Sequence[str], obs_keys: Sequence[str],
-                         feats: List[Tuple[FeatureAnchor, Feature]]) -> DataFrame:
+                         feats: List[Tuple[FeatureAnchor, Feature]],
+                         time_prune: bool, pit_strategy: str) -> DataFrame:
         if EVENT_TS_COL not in obs.columns:
             raise FeathrError(
                 "windowed features require observation timestamp settings "
@@ -296,7 +297,7 @@ class FeathrProject:
         src_df = anchor.source.load(spark)
         specs = [WindowFeatureSpec(out_name=f.name, transform=f.transform)
                  for _, f in feats]
-        if getattr(self, "_time_prune", False):
+        if time_prune:
             bounds = obs.select(
                 F.unix_millis(F.min(EVENT_TS_COL).cast("timestamp")).alias("lo"),
                 F.unix_millis(F.max(EVENT_TS_COL).cast("timestamp")).alias("hi"),
@@ -341,7 +342,7 @@ class FeathrProject:
             obs_keys=list(obs_keys), src_keys=list(src_keys),
             obs_ts=EVENT_TS_COL, src_ts=EVENT_TS_COL,
             specs=specs,
-            strategy=getattr(self, "_pit_strategy", "auto"),
+            strategy=pit_strategy,
         )
 
     def to_feature_config(self) -> dict:

@@ -5,7 +5,9 @@ lineage payload by walking BelongsTo/Consumes edges
 (/root/reference/feathr-rs/src/project.rs:742-846, client.rs:36-60). Here
 the same graph lives in :class:`catalog.Registry`; ``save_project`` stores
 full serialized definitions in entity attributes and ``load_project``
-rebuilds a runnable :class:`FeathrProject`.
+rebuilds a runnable :class:`FeathrProject` from the project's lineage
+payload. This module holds the write side; decoding is
+:func:`feathr_spark.configio.from_lineage`, the one lineage decoder.
 
 Non-serializable pieces degrade explicitly: ``DataFrameSource`` frames and
 ``preprocessing`` callables are recorded by flag only and must be re-bound
@@ -18,14 +20,14 @@ from __future__ import annotations
 
 from typing import Dict, Optional
 
-from ..feature import DerivedFeature, Feature, FeatureAnchor
+from ..configio import from_lineage
+from ..feature import Feature
 from ..model import (
-    Aggregation, ExpressionTransform, TypedKey, UdfTransform, ValueType,
-    WindowAggTransform,
+    ExpressionTransform, TypedKey, UdfTransform, WindowAggTransform,
 )
 from ..source import (
-    INPUT_CONTEXT, DataFrameSource, GenericSource, HdfsSource, JdbcSource,
-    KafkaSource, Source, TimeWindowParameters,
+    DataFrameSource, GenericSource, HdfsSource, JdbcSource, KafkaSource,
+    Source, TimeWindowParameters,
 )
 from .catalog import EdgeType, EntityType, Registry, RegistryError
 
@@ -66,46 +68,11 @@ def source_to_dict(src: Source) -> dict:
     return d
 
 
-def source_from_dict(d: dict) -> Source:
-    twp = d.get("twp")
-    twp_obj = TimeWindowParameters(**twp) if twp else None
-    kind = d.get("kind")
-    if kind == "input_context":
-        return INPUT_CONTEXT
-    common = {"name": d["name"], "time_window_parameters": twp_obj}
-    if kind == "hdfs":
-        return HdfsSource(path=d["path"], format=d.get("format"),
-                          options=d.get("options") or {}, **common)
-    if kind == "jdbc":
-        return JdbcSource(url=d["url"], dbtable=d.get("dbtable"),
-                          query=d.get("query"), auth=d.get("auth", "anonymous"),
-                          options=d.get("options") or {}, **common)
-    if kind == "kafka":
-        return KafkaSource(brokers=tuple(d.get("brokers") or ()),
-                           topics=tuple(d.get("topics") or ()),
-                           avro_schema_json=d.get("avro_schema_json"),
-                           options=d.get("options") or {}, **common)
-    if kind == "generic":
-        return GenericSource(format=d.get("format", "parquet"),
-                             path=d.get("path"), mode=d.get("mode"),
-                             options=d.get("options") or {}, **common)
-    if kind == "dataframe":
-        return DataFrameSource(df=None, **common)
-    raise RegistryError(f"cannot reconstruct source kind {kind!r}")
-
-
 def _key_to_dict(k: TypedKey) -> dict:
     return {"key_column": k.key_column,
             "key_column_type": k.key_column_type.value,
             "full_name": k.full_name, "description": k.description,
             "key_column_alias": k.key_column_alias}
-
-
-def _key_from_dict(d: dict) -> TypedKey:
-    return TypedKey(key_column=d["key_column"],
-                    key_column_type=ValueType(d.get("key_column_type", "UNSPECIFIED")),
-                    full_name=d.get("full_name"), description=d.get("description"),
-                    key_column_alias=d.get("key_column_alias"))
 
 
 def _transform_to_dict(t) -> dict:
@@ -121,30 +88,9 @@ def _transform_to_dict(t) -> dict:
     raise RegistryError(f"unserializable transform {t!r}")
 
 
-def _transform_from_dict(d: dict):
-    kind = d.get("kind")
-    if kind == "window":
-        return WindowAggTransform(
-            def_expr=d["def_expr"], agg_func=Aggregation(d["agg_func"]),
-            window=d["window"], group_by=d.get("group_by"),
-            filter=d.get("filter"), limit=d.get("limit"),
-            agg_param=d.get("agg_param"))
-    if kind == "udf":
-        return UdfTransform(d["name"])
-    if kind == "expr":
-        return ExpressionTransform(d["sql_expr"])
-    raise RegistryError(f"unknown transform kind {kind!r}")
-
-
 def feature_to_dict(f: Feature) -> dict:
     return {"name": f.name, "transform": _transform_to_dict(f.transform),
             "keys": [_key_to_dict(k) for k in f.key]}
-
-
-def feature_from_dict(d: dict) -> Feature:
-    return Feature(name=d["name"],
-                   transform=_transform_from_dict(d["transform"]),
-                   key=tuple(_key_from_dict(k) for k in d.get("keys") or ()))
 
 
 # ---------------------------------------------------------------------------
@@ -201,89 +147,14 @@ def load_project(registry: Registry, name: str, spark=None):
     """Rebuild a runnable FeathrProject from the registry graph
     (reference project.rs:742-846: walk BelongsTo/Contains edges from the
     project entity). UDF callables / DataFrame sources must be re-bound
-    by the caller after load. Implemented over the same lineage payload
-    the API (and its HTTP layer) serves, so in-process and over-the-wire
-    reconstruction cannot drift."""
+    by the caller after load. Decoded by
+    :func:`~feathr_spark.configio.from_lineage` from the same lineage
+    payload the API (and its HTTP layer) serves, so in-process and
+    over-the-wire reconstruction cannot drift."""
     from .api import RegistryApi
 
     pe = registry.get_entity(name)
     if pe.entity_type != EntityType.Project:
         raise RegistryError(f"{name} is a {pe.entity_type.value}, not a Project")
     payload = RegistryApi(registry).get_project_lineage(name)
-    return project_from_lineage(payload, spark)
-
-
-def project_from_lineage(payload, spark=None):
-    """Rebuild a runnable FeathrProject from an API lineage payload
-    (``{"guidEntityMap", "relations"}`` — the JSON shape
-    ``GET /api/v1/projects/{p}/lineage`` returns, mirroring the
-    reference's ``EntityLineage`` consumed in project.rs:742-846).
-    Entity attributes must carry the serialized definitions written by
-    :func:`save_project`."""
-    import json as _json
-
-    from ..project import FeathrProject
-
-    if isinstance(payload, str):
-        payload = _json.loads(payload)
-    ents: Dict[str, dict] = payload["guidEntityMap"]
-    contains: Dict[str, list] = {}
-    for r in payload["relations"]:
-        if r["relationshipType"] == EdgeType.Contains.value:
-            contains.setdefault(r["fromEntityId"], []).append(r["toEntityId"])
-
-    ws = next(e for e in ents.values()
-              if e["typeName"] == "feathr_workspace_v1")
-    project = FeathrProject(ws["qualifiedName"], spark)
-
-    sources: Dict[str, Source] = {}
-    for e in ents.values():
-        if e["typeName"] != "feathr_source_v1":
-            continue
-        src = source_from_dict(e["attributes"])
-        sources[src.name] = src
-        project.register_source(src)
-
-    for ae in ents.values():
-        if ae["typeName"] != "feathr_anchor_v1":
-            continue
-        feats = [ents[g] for g in contains.get(ae["guid"], ())
-                 if g in ents
-                 and ents[g]["typeName"] == "feathr_anchor_feature_v1"]
-        src_name = ae["attributes"].get("source")
-        if src_name == INPUT_CONTEXT.name or src_name == "PASSTHROUGH":
-            src = INPUT_CONTEXT
-        else:
-            src = sources[src_name]
-        # strip the known project prefix by length — splitting on the first
-        # "__" would land inside a project name that itself contains "__"
-        prefix = f"{ws['qualifiedName']}__"
-        anchor_name = (ae["qualifiedName"][len(prefix):]
-                       if ae["qualifiedName"].startswith(prefix)
-                       else ae["qualifiedName"])
-        project.register_anchor(FeatureAnchor(
-            name=anchor_name, source=src,
-            features=[feature_from_dict(fe["attributes"]) for fe in feats],
-            broadcast_hint=bool(ae["attributes"].get("broadcast_hint"))))
-
-    # derived features in dependency order (inputs before dependents)
-    derived = {e["attributes"]["name"]: e["attributes"]
-               for e in ents.values()
-               if e["typeName"] == "feathr_derived_feature_v1"}
-    registered: set = set()
-
-    def add(dname: str):
-        if dname in registered or dname not in derived:
-            return
-        d = derived[dname]
-        for inp in d.get("inputs") or ():
-            add(inp)
-        project.register_derived(DerivedFeature(
-            name=d["name"], transform=d["sql_expr"],
-            input_features=list(d.get("inputs") or ()),
-            key=tuple(_key_from_dict(k) for k in d.get("keys") or ())))
-        registered.add(dname)
-
-    for dname in derived:
-        add(dname)
-    return project
+    return from_lineage(payload, spark)

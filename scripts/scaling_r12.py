@@ -111,8 +111,13 @@ def run_bench(cpus: int, queries, reps=2):
                SPARK_GRAFT_BENCH_REPS=str(reps))
     p = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")],
                        env=env, capture_output=True, text=True)
-    line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    if p.returncode != 0 or not lines:
+        print(p.stderr, file=sys.stderr)
+        raise RuntimeError(
+            f"bench.py at {cpus} cpus exited {p.returncode} with "
+            f"{len(lines)} JSON lines on stdout")
+    return json.loads(lines[-1])
 
 
 def main():

@@ -1,14 +1,18 @@
 """Reference-config ingestion tests.
 
 Round-trip: emit this engine's reference-shaped configs, parse them back,
-and prove the re-built project computes identical values. Lineage: load
-the reference repo's actual registry payload
-(/root/reference/registry/test-data/sample.json) and run its features
-end-to-end on a synthetic taxi frame.
+and prove the re-built project computes identical values. Lineage:
+``from_lineage`` loads both lineage payload families — a handwritten
+payload in the reference registry's Atlas shape, with the entities of the
+reference's sample registry (registry/test-data/sample.json), run
+end-to-end on a synthetic taxi frame; and this engine's own registry
+payload (``save_project`` then ``RegistryApi.get_project_lineage``),
+whose rebuilt project must compute the original's values.
 """
 
 import datetime as dt
 import json
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -18,11 +22,13 @@ from feathr_spark import (
     FeatureQuery, FeathrProject, HdfsSource, INPUT_CONTEXT,
     ObservationSettings, TimeWindowParameters, TypedKey, WindowAggTransform,
 )
+from feathr_spark.client import FeathrClient
 from feathr_spark.configio import (
     from_feature_config, from_join_config, from_lineage,
 )
-
-SAMPLE = "/root/reference/registry/test-data/sample.json"
+from feathr_spark.registry.api import RegistryApi
+from feathr_spark.registry.catalog import Registry
+from feathr_spark.registry.roundtrip import save_project
 
 
 def ts(s):
@@ -108,14 +114,127 @@ def test_join_config_round_trip(spark, canonical_project):
     assert out.count() == obs_df.count()
 
 
-def test_lineage_sample_structure(spark):
-    """The reference repo's actual lineage payload parses into the expected
-    project graph (2 anchors, 4 passthrough + 2 windowed features, 3
-    derived features in dependency order)."""
-    p = from_lineage(open(SAMPLE).read(), spark)
+ATLAS_PROJECT = "feathr_ci_registry_lineage"
+
+
+def _atlas_lineage() -> dict:
+    """A lineage payload in the reference registry's Atlas shape: every
+    entity's attributes carry its ``qualifiedName`` and ``name``, anchors
+    list their features and reference their source by guid, derived
+    features reference their inputs by guid, and key types are ordinal
+    strings. The entities are those of the reference's sample registry:
+    a PASSTHROUGH source with 4 request features, a taxi batch source with
+    2 windowed features, and 3 derived features, one derived from
+    another. Entities are listed dependents-first, so the decoder has to
+    order derived features itself."""
+    ents, rels = {}, []
+
+    def entity(type_name, name, **attrs):
+        qn = name if type_name == "feathr_workspace_v1" \
+            else f"{ATLAS_PROJECT}__{name}"
+        guid = str(uuid.uuid5(uuid.NAMESPACE_URL, qn))
+        ents[guid] = {"guid": guid, "typeName": type_name,
+                      "status": "ACTIVE", "displayText": qn,
+                      "attributes": {"qualifiedName": qn, "name": name,
+                                     "tags": {}, **attrs}}
+        return {"guid": guid, "typeName": type_name,
+                "uniqueAttributes": {"qualifiedName": qn}}
+
+    def relate(a, kind, inverse, b):
+        for x, k, y in ((a, kind, b), (b, inverse, a)):
+            rels.append({"relationshipId": str(uuid.uuid4()),
+                         "relationshipType": k,
+                         "fromEntityId": x["guid"], "toEntityId": y["guid"]})
+
+    def tensor(val_type):
+        return {"type": "TENSOR", "tensorCategory": "DENSE",
+                "dimensionType": [], "valType": val_type}
+
+    dummy_key = [{"full_name": "feathr.dummy_typedkey",
+                  "key_column": "NOT_NEEDED", "key_column_alias": "NOT_NEEDED",
+                  "key_column_type": "UNSPECIFIED",
+                  "description": "A dummy typed key for passthrough"}]
+    location_key = [{"full_name": "nyc_taxi.location_id",
+                     "key_column": "DOLocationID",
+                     "key_column_alias": "DOLocationID",
+                     "key_column_type": "2",
+                     "description": "location id in NYC"}]
+
+    ws = entity("feathr_workspace_v1", ATLAS_PROJECT)
+    passthrough = entity("feathr_source_v1", "PASSTHROUGH",
+                         type="PASSTHROUGH")
+    batch = entity(
+        "feathr_source_v1", "nycTaxiBatchSource", type="wasbs",
+        path="wasbs://public@feathrstorage.blob.core.windows.net/"
+             "sample_data/green_tripdata_2020-04_with_index.csv",
+        preprocessing="def add_new_dropoff_and_fare_amount_column(df): ...",
+        event_timestamp_column="lpep_dropoff_datetime",
+        timestamp_format="yyyy-MM-dd HH:mm:ss")
+    request = {
+        "f_trip_distance": ("trip_distance", "FLOAT"),
+        "f_is_long_trip_distance": ("cast_float(trip_distance)>30",
+                                    "BOOLEAN"),
+        "f_trip_time_duration": (
+            "(to_unix_timestamp(lpep_dropoff_datetime) - "
+            "to_unix_timestamp(lpep_pickup_datetime))/60", "INT"),
+        "f_day_of_week": ("dayofweek(lpep_dropoff_datetime)", "INT"),
+    }
+    feats = {n: entity("feathr_anchor_feature_v1", n, type=tensor(vt),
+                       transformation={"transform_expr": expr},
+                       key=dummy_key)
+             for n, (expr, vt) in request.items()}
+    for n, agg in (("f_location_avg_fare", "AVG"),
+                   ("f_location_max_fare", "MAX")):
+        feats[n] = entity("feathr_anchor_feature_v1", n, type=tensor("FLOAT"),
+                          transformation={"def_expr": "cast_float(fare_amount)",
+                                          "agg_func": agg, "window": "90d"},
+                          key=location_key)
+    anchors = {
+        "request_features": (passthrough, list(request)),
+        "aggregationFeatures": (batch, ["f_location_avg_fare",
+                                        "f_location_max_fare"]),
+    }
+    for aname, (src, fnames) in anchors.items():
+        anchor = entity("feathr_anchor_v1", aname, source=src,
+                        features=[feats[n] for n in fnames])
+        relate(ws, "Contains", "BelongsTo", anchor)
+        relate(anchor, "Consumes", "Produces", src)
+        for n in fnames:
+            relate(anchor, "Contains", "BelongsTo", feats[n])
+            relate(feats[n], "Consumes", "Produces", src)
+
+    def derived(name, expr, val_type, anchor_inputs=(), derived_inputs=()):
+        d = entity("feathr_derived_feature_v1", name, type=tensor(val_type),
+                   transformation={"transform_expr": expr}, key=dummy_key,
+                   input_anchor_features=[feats[n] for n in anchor_inputs],
+                   input_derived_features=list(derived_inputs))
+        relate(ws, "Contains", "BelongsTo", d)
+        for inp in [feats[n] for n in anchor_inputs] + list(derived_inputs):
+            relate(d, "Consumes", "Produces", inp)
+        return d
+
+    derived("f_trip_time_distance", "f_trip_distance * f_trip_time_duration",
+            "FLOAT", ["f_trip_distance", "f_trip_time_duration"])
+    rounded = derived("f_trip_time_rounded", "f_trip_time_duration % 10",
+                      "INT", ["f_trip_time_duration"])
+    derived("f_trip_time_rounded_plus", "f_trip_time_rounded + 100", "INT",
+            derived_inputs=[rounded])
+    for src in (passthrough, batch):
+        relate(ws, "Contains", "BelongsTo", src)
+    return {"guidEntityMap": dict(reversed(list(ents.items()))),
+            "relations": rels}
+
+
+def test_lineage_atlas_structure(spark):
+    """An Atlas-shaped lineage payload parses into the expected project
+    graph (2 anchors, 4 passthrough + 2 windowed features, 3 derived
+    features in dependency order)."""
+    p = from_lineage(json.dumps(_atlas_lineage()), spark)
+    assert p.name == ATLAS_PROJECT
     assert set(p.anchors) == {"request_features", "aggregationFeatures"}
     req = p.anchors["request_features"]
     assert req.source.is_input_context
+    assert len(req.features) == 4
     agg = p.anchors["aggregationFeatures"]
     assert agg.source.name == "nycTaxiBatchSource"
     assert agg.source.time_window_parameters.timestamp_column == \
@@ -127,14 +246,18 @@ def test_lineage_sample_structure(spark):
     assert fmax.transform.agg_func == Aggregation.MAX
     assert fmax.transform.window == "90d"
     assert fmax.key_aliases == ("DOLocationID",)
-    assert set(p.derived) >= {"f_trip_time_distance", "f_trip_time_rounded"}
+    assert set(p.derived) == {"f_trip_time_distance", "f_trip_time_rounded",
+                              "f_trip_time_rounded_plus"}
     # derived input resolution crossed entities correctly
     assert "f_trip_time_duration" in p.derived["f_trip_time_rounded"].input_names
+    assert p.derived["f_trip_time_rounded_plus"].input_names == \
+        ("f_trip_time_rounded",)
 
 
-def test_lineage_sample_runs_end_to_end(spark):
-    """Load sample.json with the batch source re-bound to a synthetic taxi
-    frame and compute passthrough + windowed + derived features."""
+def test_lineage_atlas_runs_end_to_end(spark):
+    """Load the Atlas-shaped payload with the batch source re-bound to a
+    synthetic taxi frame and compute passthrough + windowed + derived
+    features."""
     taxi = spark.createDataFrame([
         Row(trip_distance=35.0, fare_amount=100.0, DOLocationID=7,
             lpep_pickup_datetime="2020-04-01 10:00:00",
@@ -146,22 +269,73 @@ def test_lineage_sample_runs_end_to_end(spark):
             lpep_pickup_datetime="2020-04-03 12:00:00",
             lpep_dropoff_datetime="2020-04-03 12:05:00"),
     ])
-    p = from_lineage(open(SAMPLE).read(), spark,
+    p = from_lineage(_atlas_lineage(), spark,
                      source_frames={"nycTaxiBatchSource": taxi})
     obs = ObservationSettings(timestamp_column="lpep_dropoff_datetime",
                               timestamp_format="yyyy-MM-dd HH:mm:ss")
     out = p.get_offline_features(
         obs.with_event_ts(taxi),
         FeatureQuery(["f_is_long_trip_distance", "f_location_avg_fare",
-                      "f_location_max_fare"]))
+                      "f_location_max_fare", "f_trip_time_rounded_plus"]))
     got = {(r.DOLocationID, r.lpep_dropoff_datetime): r for r in out.collect()}
     r1 = got[(7, "2020-04-01 10:30:00")]
     assert r1.f_is_long_trip_distance is True     # 35 > 30
     assert r1.f_location_avg_fare == 100.0        # only itself in window
+    assert r1.f_trip_time_rounded_plus == 100.0   # 30 min % 10 + 100
     r2 = got[(7, "2020-04-02 09:10:00")]
     assert r2.f_is_long_trip_distance is False
     assert r2.f_location_avg_fare == 60.0         # (100+20)/2, 90d window
     assert r2.f_location_max_fare == 100.0
+
+
+def test_lineage_registry_payload_loads_and_matches(spark, canonical_project):
+    """The registry's own payload (save_project, then RegistryApi's
+    project lineage) rebuilds through from_lineage and through
+    FeathrClient.load_project_from_json, and both rebuilt projects
+    compute the original's values."""
+    p, obs_df = canonical_project
+    reg = Registry()
+    save_project(reg, p)
+    payload = RegistryApi(reg).get_project_lineage("cfg_rt")
+    rebuilt = [
+        from_lineage(payload, spark),
+        FeathrClient(spark=spark).load_project_from_json(json.dumps(payload)),
+    ]
+    expected = _run(p, obs_df)
+    for p2 in rebuilt:
+        assert p2.name == "cfg_rt"
+        assert set(p2.sources) == set(p.sources)
+        assert set(p2.anchors) == {"pt", "w"}
+        assert set(p2.derived) == {"f_ratio"}
+        f_cnt = next(f for f in p2.anchors["w"].features
+                     if f.name == "f_cnt_2d")
+        assert f_cnt.transform.filter == "v > 12"
+        assert f_cnt.key_aliases == ("k",)
+        assert _run(p2, obs_df) == expected
+
+
+def test_lineage_registry_payload_names_hints_and_frames(spark):
+    """Project and anchor names containing "__" survive the registry's
+    qualified names, broadcast_hint survives, and a DataFrame source —
+    saved without its frame — is re-bound through source_frames."""
+    dims = spark.createDataFrame([Row(uid=1, score=0.5),
+                                  Row(uid=2, score=1.5)])
+    p = FeathrProject("team__proj", spark)
+    p.register_anchor(FeatureAnchor(
+        name="user__dims", source=DataFrameSource(name="users", df=dims),
+        features=[Feature(name="f_s", transform="score",
+                          key=[TypedKey(key_column="uid")])],
+        broadcast_hint=True))
+    reg = Registry()
+    save_project(reg, p)
+    p2 = from_lineage(RegistryApi(reg).get_project_lineage("team__proj"),
+                      spark, source_frames={"users": dims})
+    assert p2.name == "team__proj"
+    assert set(p2.anchors) == {"user__dims"}
+    assert p2.anchors["user__dims"].broadcast_hint
+    out = p2.get_offline_features(spark.createDataFrame([Row(uid=2)]),
+                                  FeatureQuery(["f_s"]))
+    assert out.collect()[0].f_s == 1.5
 
 
 def test_parameterized_agg_round_trip(spark, tmp_path):

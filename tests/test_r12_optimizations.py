@@ -10,21 +10,7 @@ union build).
 """
 
 import pytest
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[4]")
-         .appName("r12-opt-tests")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .config("spark.sql.session.timeZone", "UTC")
-         .getOrCreate())
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
 
 
 def test_funnel_latency_selection_mode_equals_buffer(spark):
@@ -146,3 +132,23 @@ def test_duplicate_components_matches_union_find(spark):
             parent[max(ra, rb)] = min(ra, rb)
     want = {x: find(x) for x in parent}
     assert got == want
+
+
+def test_spread_by_repartitions_once_and_surfaces_failure(spark):
+    """spread_by guards only the partition-count lookup: a failing
+    repartition is called once and its own error propagates, instead of
+    being retried with the fallback counts."""
+    from feathr_spark.operators._partition import spread_by
+    df = spark.range(8)
+    calls = []
+
+    def failing_repartition(n, col):
+        calls.append(n)
+        raise RuntimeError("repartition failed")
+
+    df.repartition = failing_repartition   # shadows the bound method
+    with pytest.raises(RuntimeError, match="repartition failed"):
+        spread_by(df, F.col("id"))
+    assert calls == [int(spark.conf.get("spark.sql.shuffle.partitions"))]
+    assert spread_by(spark.range(8), F.col("id")).rdd.getNumPartitions() \
+        == calls[0]

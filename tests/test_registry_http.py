@@ -18,11 +18,10 @@ from feathr_spark import (
     FeathrProject, HdfsSource, INPUT_CONTEXT, ObservationSettings,
     TimeWindowParameters, TypedKey, WindowAggTransform,
 )
+from feathr_spark.configio import from_lineage
 from feathr_spark.registry.catalog import Registry
 from feathr_spark.registry.http import RegistryHttpServer
-from feathr_spark.registry.roundtrip import (
-    project_from_lineage, save_project,
-)
+from feathr_spark.registry.roundtrip import save_project
 
 SF = "/root/testdata/sf0.001"
 
@@ -152,7 +151,7 @@ def test_rebuild_project_from_http_lineage_and_run(server, spark):
     runnable project from the JSON alone, and its query results match the
     in-process original bit-for-bit."""
     payload = _get(f"{server}/api/v1/projects/rt/lineage")
-    p2 = project_from_lineage(json.dumps(payload), spark)
+    p2 = from_lineage(json.dumps(payload), spark)
     assert set(p2.anchors) == {"pt", "w"}
     assert set(p2.derived) == {"f_ratio"}
 
