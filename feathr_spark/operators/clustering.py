@@ -1,5 +1,6 @@
 """Distributed k-means over embedding columns + SemDeDup-style semantic
-deduplication (cluster, then pair only within clusters).
+deduplication (cluster, then pair only within clusters), and the one
+Lloyd's kernel behind both k-means and PQ codebook training (``pq.py``).
 
 The reference's expression DSL delegates scalar work to Spark SQL
 (`/root/reference/feathr-rs/src/model.rs:248-253`); embedding clustering
@@ -9,131 +10,184 @@ only inside each cluster — turning an O(n²) all-pairs problem into
 Σ O(|cluster|²) with k as the knob).
 
 Design for scale (Lloyd's algorithm, Spark-first — the MLlib shape):
+``lloyd`` fits ``m`` independent codebooks, one per contiguous subspace
+of the vector, in the same passes; k-means is the ``m = 1`` case.
   * ASSIGNMENT IS ZERO-SHUFFLE AND VECTORIZED: one Arrow-batched pandas
-    UDF per pass computes the full (batch × k) squared-distance matrix as
-    a single matmul and takes the row argmin — a few fused flops per
-    (vector, centroid), ~1000× an interpreted HOF fold (same trade as
-    ``lsh_buckets_all``);
-  * the centroid UPDATE shuffles only k×dim rows: ``posexplode`` the
-    assigned vectors and ``groupBy(cluster, pos)`` with map-side combine
-    — partials collapse to k×dim per task before the exchange;
+    UDF per pass emits all ``m`` codes, each the argmin of a (batch × k)
+    squared-distance matrix computed as a single matmul — a few fused
+    flops per (vector, centroid), ~1000× an interpreted HOF fold (same
+    trade as ``lsh_buckets_all``);
+  * the centroid UPDATE shuffles only m×k×d_sub rows: ``posexplode`` the
+    assigned vectors and ``groupBy(subspace, code, pos)`` with map-side
+    combine — partials collapse to m×k×d_sub per task before the
+    exchange;
   * centroids are the ONE documented driver action (MLlib does the same):
-    k×dim doubles collected per iteration and shipped back inside the UDF
-    closure — bounded state (k ≤ 2^16, dim ≤ 4096 → MBs), never corpus
-    rows;
-  * per-iteration cost = one corpus scan (persist the projected vectors
-    once) + one k×dim shuffle; n_iter is a small constant (default 5).
+    m×k×d_sub doubles collected per iteration and shipped back inside the
+    UDF closure — bounded state, never corpus rows;
+  * per-iteration cost = one corpus scan (the caller persists the vectors
+    once) + one small shuffle + one collect; the loop stops at the
+    fixpoint, n_iter is a small constant (default 5).
 
 Determinism: centroid components are quantized to 6 decimals after every
 update (well above double noise, well below embedding resolution), the
-centroid matrix is sorted by cluster id, and ties break to the
-first/lowest id via stable argmin/argsort — assignment is therefore a
-pure per-row function, bit-stable across partitionings and runs.
+centroid matrices are sorted by code, and ties break to the first/lowest
+position via stable argmin/argsort — assignment is therefore a pure
+per-row function, bit-stable across partitionings and runs.
 """
 
 from __future__ import annotations
 
+import math
+from functools import partial
 from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
-from .similarity import lsh_bucket
-
-
-def _centroid_means(assigned: DataFrame, vec_col: str,
-                    cluster_col: str) -> DataFrame:
-    """Elementwise mean per cluster, quantized: (cluster_col, __centroid).
-    One small shuffle — groupBy(cluster, pos) partials are k×dim per
-    task."""
-    return (assigned
-            .select(cluster_col, F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy(cluster_col, "pos")
-            .agg(F.round(F.avg("v"), 6).alias("m"))
-            .groupBy(cluster_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m).alias("__centroid")))
+from .similarity import _planes
 
 
-def _collect_centroids(cent: DataFrame) -> Tuple[List[int], np.ndarray]:
-    """The documented driver action: materialize the k-row centroid frame
-    (k×dim doubles) sorted by cluster id."""
-    rows = sorted(cent.collect(), key=lambda r: r["__cid"])
-    cids = [int(r["__cid"]) for r in rows]
-    mat = np.array([r["__centroid"] for r in rows], dtype=np.float64)
-    return cids, mat
+def _stack(col: pd.Series) -> np.ndarray:
+    """An Arrow batch of array<double> values as one (n, dim) matrix."""
+    return np.stack([np.asarray(v, dtype=np.float64)
+                     for v in col.to_numpy()])
 
 
-def _nearest_expr(cids: List[int], mat: np.ndarray, n: int):
+def sq_dists(x: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 distances |x|² − 2x·c + |c|² from each row of
+    ``x`` to each centroid row of ``cmat`` — one matmul. Cancellation can
+    leave a few ulps below 0 for a vector sitting on its centroid."""
+    return ((x * x).sum(axis=1)[:, None] - 2.0 * (x @ cmat.T)
+            + (cmat * cmat).sum(axis=1)[None, :])
+
+
+def nearest_codes(x: np.ndarray, mats: List[np.ndarray]) -> np.ndarray:
+    """(n, m) codes: per contiguous subspace s, the POSITION of the
+    nearest row of ``mats[s]`` (stable: first minimum)."""
+    d_sub = x.shape[1] // len(mats)
+    codes = np.empty((len(x), len(mats)), dtype=np.int32)
+    for s, cmat in enumerate(mats):
+        codes[:, s] = sq_dists(x[:, s * d_sub:(s + 1) * d_sub],
+                               cmat).argmin(axis=1)
+    return codes
+
+
+def _plane_codes(x: np.ndarray, m: int, bits: int) -> np.ndarray:
+    """(n, m) initial codes: per subspace s, the sign bits of the
+    subvector against ``bits`` hyperplanes ``_planes(seed=s)`` of the
+    subvector's own length (bit i set iff dot ≥ 0)."""
+    d_sub = x.shape[1] // m
+    weights = 1 << np.arange(bits)
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for s in range(m):
+        planes = np.asarray(_planes(bits, d_sub, seed=s))
+        codes[:, s] = ((x[:, s * d_sub:(s + 1) * d_sub] @ planes.T)
+                       >= 0) @ weights
+    return codes
+
+
+def _codes_udf(codes_fn):
+    """Arrow-batched array<int> column of all ``m`` codes per vector."""
+
+    @pandas_udf("array<int>")
+    def _codes(col: pd.Series) -> pd.Series:
+        if col.empty:
+            return pd.Series([], dtype=object)
+        return pd.Series(list(codes_fn(_stack(col))))
+
+    return _codes
+
+
+def _update(vecs: DataFrame, col: str, codes_fn,
+            m: int) -> List[Tuple[List[int], np.ndarray]]:
+    """One assignment pass + quantized mean update: per subspace, the
+    (codes, code-sorted centroid matrix) of its non-empty clusters. The
+    subspace width is each row's length // m, so the vector width comes
+    from the data at no extra job. Codes are computed in a projection
+    BELOW the posexplode, so the UDF runs once per vector, not once per
+    exploded component."""
+    d = F.col("__d")
+    sub = (F.col("__p") / d).cast("int")
+    cent = (vecs
+            .select(col, (F.size(col) / m).cast("int").alias("__d"),
+                    _codes_udf(codes_fn)(F.col(col)).alias("__codes"))
+            .select(F.posexplode(F.col(col)).alias("__p", "__x"),
+                    "__codes", "__d")
+            .select(sub.alias("__s"), F.get("__codes", sub).alias("__c"),
+                    (F.col("__p") % d).alias("__pos"), "__x")
+            .groupBy("__s", "__c", "__pos")
+            .agg(F.round(F.avg("__x"), 6).alias("__m"))
+            .collect())
+    if not cent:
+        raise ValueError("lloyd: no vectors to fit")
+    d_sub = 1 + max(r["__pos"] for r in cent)
+    if any(r["__s"] >= m for r in cent):
+        width = 1 + max(r["__s"] * d_sub + r["__pos"] for r in cent)
+        raise ValueError(
+            f"lloyd: vector width {width} not divisible by m {m}")
+    books = []
+    for s in range(m):
+        rows = [r for r in cent if r["__s"] == s]
+        cids = sorted({int(r["__c"]) for r in rows})
+        mat = np.zeros((len(cids), d_sub))
+        pos_of = {c: i for i, c in enumerate(cids)}
+        for r in rows:
+            mat[pos_of[int(r["__c"])], int(r["__pos"])] = r["__m"]
+        books.append((cids, mat))
+    return books
+
+
+def lloyd(vecs: DataFrame, col: str, m: int, kc: int,
+          n_iter: int) -> List[Tuple[List[int], np.ndarray]]:
+    """Lloyd's loop over the persisted array<double> column ``col``,
+    fitting ``m`` codebooks of at most ``kc`` centroids JOINTLY — one
+    corpus scan, one shuffle and one collect per round for all subspaces
+    (a per-subspace loop costs m× the jobs for identical results).
+    Returns (codes, code-sorted centroid matrix) per subspace.
+
+    The vector width is read from the data and must divide into ``m``
+    subspaces. Init: sign-bit hyperplane buckets per subspace
+    (``_planes(seed=s)``) — data-dependent, seedless, reproducible.
+    Empty clusters drop out (``kc`` is an upper bound). Later rounds'
+    codes are POSITIONS into the previous matrices. The loop stops once
+    no matrix changes: centroids are 6-dp-quantized, so exact equality
+    IS the fixpoint."""
+    bits = max(1, int(math.ceil(math.log2(max(2, kc)))))
+    books = _update(vecs, col, partial(_plane_codes, m=m, bits=bits), m)
+    for _ in range(n_iter):
+        mats = [mat for _, mat in books]
+        books = _update(vecs, col, partial(nearest_codes, mats=mats), m)
+        if all(new.shape == old.shape and bool((new == old).all())
+               for (_, new), old in zip(books, mats)):
+            break
+    return books
+
+
+def _nearest_expr(mat: np.ndarray, n: int):
     """Arrow-batched top-``n`` nearest centroids for an array<double>
     column: returns struct<clusters: array<bigint>, sq_dist: double>
-    (sq_dist = distance to the nearest). Ties break to the lowest
-    cluster id (stable sort over the id-sorted matrix)."""
-    from pyspark.sql.functions import pandas_udf
-
-    cid_arr = np.array(cids, dtype=np.int64)
-    c_sq = (mat * mat).sum(axis=1)               # (k,)
-    n = min(n, len(cids))
+    (clusters are positions in ``mat``; sq_dist = distance to the
+    nearest, clamped at 0). Ties break to the lowest position."""
+    n = min(n, len(mat))
 
     @pandas_udf("clusters array<bigint>, sq_dist double")
     def _nearest(col: pd.Series) -> pd.DataFrame:
         if col.empty:
             return pd.DataFrame({"clusters": [], "sq_dist": []})
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        d = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ mat.T) + c_sq[None, :]
-        np.maximum(d, 0.0, out=d)
+        d = sq_dists(_stack(col), mat)
         if n == 1:
-            idx = d.argmin(axis=1)[:, None]      # first min = lowest cid
+            idx = d.argmin(axis=1)[:, None]      # first min = lowest pos
         else:
             idx = np.argsort(d, axis=1, kind="stable")[:, :n]
         return pd.DataFrame({
-            "clusters": list(cid_arr[idx]),
-            "sq_dist": d[np.arange(len(x)), idx[:, 0]],
+            "clusters": list(idx.astype(np.int64)),
+            "sq_dist": np.maximum(d[np.arange(len(d)), idx[:, 0]], 0.0),
         })
 
     return _nearest
-
-
-def _assign(vecs: DataFrame, cids: List[int], mat: np.ndarray) -> DataFrame:
-    nearest = _nearest_expr(cids, mat, 1)
-    return (vecs.select("__id", "__v", nearest("__v").alias("__a"))
-            .select("__id", "__v", F.col("__a.clusters")[0].alias("cluster"),
-                    F.col("__a.sq_dist").alias("sq_dist")))
-
-
-def _fit_centroids(vecs: DataFrame, k: int, n_iter: int,
-                   dim: int = 64) -> Tuple[List[int], np.ndarray]:
-    """Lloyd's loop. Init: elementwise means of the deterministic
-    hyperplane-LSH coarse buckets (one pass; same device as IVF) —
-    data-dependent, seedless, reproducible. Empty clusters simply drop
-    out of the centroid frame (k is an upper bound; the SemDeDup regime
-    doesn't care). ``dim`` must match the vector length (the init planes
-    are dim-length; a longer plane nulls the dot and collapses every
-    vector into one bucket — the PQ subspace bug this parameter fixes)."""
-    import math
-    planes = max(1, int(math.ceil(math.log2(max(2, k)))))
-    init = vecs.withColumn(
-        "__cid", lsh_bucket(F.col("__v"), planes, dim=dim).cast("bigint"))
-    cids, mat = _collect_centroids(
-        _centroid_means(init.select("__cid", "__v"), "__v", "__cid"))
-    for _ in range(n_iter):
-        assigned = _assign(vecs, cids, mat)
-        new_cids, new_mat = _collect_centroids(_centroid_means(
-            assigned.select(F.col("cluster").alias("__cid"), "__v"),
-            "__v", "__cid"))
-        # centroids are 6-dp-quantized, so exact equality IS the
-        # fixpoint test — stop early instead of burning the remaining
-        # rounds' scan+shuffle+collect (2 jobs each) on a no-op
-        converged = (new_cids == cids and new_mat.shape == mat.shape
-                     and bool((new_mat == mat).all()))
-        cids, mat = new_cids, new_mat
-        if converged:
-            break
-    return cids, mat
 
 
 def kmeans_assign(
@@ -143,14 +197,16 @@ def kmeans_assign(
     k: int = 16,
     n_iter: int = 5,
 ) -> DataFrame:
-    """Lloyd's k-means; returns (``id_col``, cluster, sq_dist)."""
+    """Lloyd's k-means; returns (``id_col``, cluster, sq_dist), where
+    cluster is the position of the nearest centroid."""
     vecs = (df.select(F.col(id_col).alias("__id"),
                       F.col(vec_col).cast("array<double>").alias("__v"))
             .persist())
-    cids, mat = _fit_centroids(vecs, k, n_iter)
-    out = _assign(vecs, cids, mat).select(
-        F.col("__id").alias(id_col), "cluster",
-        F.round("sq_dist", 6).alias("sq_dist"))
+    [(_, mat)] = lloyd(vecs, "__v", 1, k, n_iter)
+    out = (vecs.select("__id", _nearest_expr(mat, 1)("__v").alias("__a"))
+           .select(F.col("__id").alias(id_col),
+                   F.col("__a.clusters")[0].alias("cluster"),
+                   F.round("__a.sq_dist", 6).alias("sq_dist")))
     vecs.unpersist()
     return out
 
@@ -185,8 +241,8 @@ def semantic_dedup_pairs(
     vecs = (df.select(F.col(id_col).alias("__id"),
                       F.col(vec_col).cast("array<double>").alias("__v"))
             .persist())
-    cids, mat = _fit_centroids(vecs, k, n_iter)
-    nearest = _nearest_expr(cids, mat, max(1, n_assign))
+    [(_, mat)] = lloyd(vecs, "__v", 1, k, n_iter)
+    nearest = _nearest_expr(mat, max(1, n_assign))
     side = (vecs.select("__id", "__v",
                         F.explode(nearest("__v")["clusters"])
                         .alias("cluster")))
@@ -201,8 +257,7 @@ def semantic_dedup_pairs(
         # clusters the k knob targets.
         pdf = pdf.sort_values("__id")
         ids = pdf["__id"].to_numpy()
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["__v"].to_numpy()])
+        x = _stack(pdf["__v"])
         norms = np.linalg.norm(x, axis=1)
         norms[norms == 0.0] = 1.0                 # zero vec -> cos 0
         xn = x / norms[:, None]
@@ -309,8 +364,7 @@ def silhouette_labels(
         for pdf in it:
             if pdf.empty:
                 continue
-            Q = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["__q"].to_numpy()])
+            Q = _stack(pdf["__q"])
             n_rows = Q.shape[0]
             dists = np.empty((n_rows, k), dtype=np.float64)
             for j in range(k):

@@ -922,7 +922,8 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
     clusters never look like that.
 
     Output: (doc_id, component_id) for every id present in ``pairs``;
-    LAZY — caches attached for ``_cache.release_intermediates``.
+    LAZY — caches attached for ``_cache.release_intermediates``. Raises
+    ``RuntimeError`` if labels still change after ``max_iter`` rounds.
     """
     s, d = F.col(id_a), F.col(id_b)
     # neighbours ∪ self, exploded row-locally: the self-loop keeps
@@ -959,6 +960,10 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
         labels = stepped.select("id", "label")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"duplicate_components: labels still changing after {max_iter} "
+            "rounds (raise max_iter; rounds needed = graph diameter)")
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("label").alias("component_id"))
 

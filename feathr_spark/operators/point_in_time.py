@@ -31,6 +31,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import List, Sequence
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -82,10 +84,13 @@ def choose_pit_strategy(
     """
     try:
         cache_key = (source.semanticHash(), tuple(src_keys), hot_share)
-        if cache_key in _STRATEGY_CACHE:
-            return _STRATEGY_CACHE[cache_key]
-    except Exception:
+    except (Py4JError, PySparkException):
         cache_key = None
+    # one .get(), not `in` then `[]`: another query planning in the same
+    # session may clear() the memo between the two
+    hit = _STRATEGY_CACHE.get(cache_key)
+    if hit is not None:
+        return hit
     sample = source.select(*src_keys).limit(sample_rows)
     top = (sample.groupBy(*src_keys).count()
            .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))

@@ -16,15 +16,16 @@ dim-length dot product. Codebooks are km×dim doubles — driver/broadcast
 scale (the same documented bounded driver action as k-means centroids).
 
 Scale/plan shape:
-  * codebook training reuses the k-means machinery per subspace
-    (Arrow-batched matmul assignment, k×dim-row centroid shuffles), over
-    an optional deterministic hash-sample of the corpus — the standard
-    train-on-a-sample regime;
+  * codebook training IS the k-means kernel (``clustering.lloyd``, of
+    which k-means is the m = 1 case): all ``m`` subspaces train jointly,
+    one Arrow-batched assignment pass + one m×kc×d_sub-row centroid
+    shuffle + one collect per round, over an optional deterministic
+    hash-sample of the corpus — the standard train-on-a-sample regime;
   * encoding is ONE Arrow-batched pass, zero shuffle: all ``m`` argmins
-    come from a single stacked matmul per batch;
-  * scoring is ONE Arrow-batched pass over (id, codes) with a
-    per-batch top-k cut, so the frame entering the final two-stage rank
-    holds ≤ k rows per (batch, query), never the corpus.
+    come from the kernel's ``nearest_codes`` per batch;
+  * ``pq_topk`` encodes and scores in ONE fused Arrow-batched pass with
+    a per-batch top-k cut, so the frame entering the final two-stage
+    rank holds ≤ k rows per (batch, query), never the corpus.
 
 Determinism: codebooks inherit the k-means determinism (quantized
 centroids, stable argmin); scores round to 4 dp BEFORE ranking with
@@ -32,16 +33,17 @@ neighbor-id tie-break (the engine-wide round-before-rank convention).
 """
 from __future__ import annotations
 
-from typing import List, Tuple
-
 import math
+from functools import partial
+from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _planes, _two_stage_topk
+from .clustering import _codes_udf, _stack, lloyd, nearest_codes
+from .similarity import _two_stage_topk
 
 
 def _normalized(df: DataFrame, vec_col: str, id_col: str,
@@ -62,16 +64,14 @@ def pq_fit(
     kc: int = 16,
     n_iter: int = 4,
     train_fraction: float = 1.0,
-    dim: int = 64,
 ) -> List[Tuple[List[int], np.ndarray]]:
     """Train the ``m`` per-subspace codebooks on (a deterministic hash
-    sample of) the L2-normalized corpus. Returns a list of
-    (centroid_ids, centroid_matrix) per subspace — small enough to live
-    in the UDF closures downstream."""
-    if dim % m != 0:
-        raise ValueError(f"pq_fit: dim {dim} not divisible by m {m}")
-    import math
-    d_sub = dim // m
+    sample of) the L2-normalized corpus with the shared joint-subspace
+    Lloyd's kernel (``clustering.lloyd``: every round is one corpus scan,
+    one shuffle and one collect for ALL subspaces). The vector width is
+    read from the data and must divide into ``m`` subspaces. Returns a
+    list of (centroid_ids, centroid_matrix) per subspace — small enough
+    to live in the UDF closures downstream."""
     vecs = _normalized(corpus, vec_col, id_col, "__id") \
         .where(F.col("__nv").isNotNull())
     if train_fraction < 1.0:
@@ -80,107 +80,18 @@ def pq_fit(
             1, 15), 16, 10).cast("double") / F.lit(float(16 ** 15)))
         vecs = vecs.where(draw < F.lit(float(train_fraction)))
     vecs = vecs.persist()
-
-    # ALL m subspaces train JOINTLY: every Lloyd's iteration is exactly
-    # one corpus scan (one Arrow-batched assignment pass producing all m
-    # codes), one (subspace, code, position) mean shuffle whose partials
-    # collapse to m*kc*d_sub rows per task, and one bounded collect of
-    # the m codebooks (m*kc*d_sub doubles — the documented k-means driver
-    # action). The per-subspace-sequential formulation costs m times the
-    # jobs for identical results — at 16 subspaces that was ~20s of pure
-    # job-scheduling latency on the bench.
-    def _update(assigned: DataFrame) -> List[Tuple[List[int], np.ndarray]]:
-        exploded = assigned.select(
-            F.posexplode(F.col("__nv")).alias("__p", "__x"),
-            F.col("__codes"))
-        sub = (F.col("__p") / d_sub).cast("int")
-        cent = (exploded
-                .select(sub.alias("__s"),
-                        F.element_at(F.col("__codes"), sub + 1)
-                        .alias("__c"),
-                        (F.col("__p") % d_sub).alias("__pos"), "__x")
-                .groupBy("__s", "__c", "__pos")
-                .agg(F.round(F.avg("__x"), 6).alias("__m"))
-                .collect())
-        books = []
-        for s in range(m):
-            rows = [r for r in cent if r["__s"] == s]
-            cids = sorted({int(r["__c"]) for r in rows})
-            mat = np.zeros((len(cids), d_sub))
-            pos_of = {c: i for i, c in enumerate(cids)}
-            for r in rows:
-                mat[pos_of[int(r["__c"])], int(r["__pos"])] = r["__m"]
-            books.append((cids, mat))
-        return books
-
-    # init: per-subspace hyperplane-LSH buckets (deterministic, seedless
-    # per subspace via seed=s), all from ONE matmul pass
-    p_bits = max(1, int(math.ceil(math.log2(max(2, kc)))))
-    init_planes = [_planes(p_bits, d_sub, seed=s) for s in range(m)]
-    assigned = vecs.select(
-        "__nv", _codes_udf_init(init_planes, d_sub)(F.col("__nv"))
-        .alias("__codes"))
-    books = _update(assigned)
-    for _ in range(n_iter):
-        assigned = vecs.select(
-            "__nv", _codes_udf(books, d_sub)(F.col("__nv"))
-            .alias("__codes"))
-        books = _update(assigned)
-    vecs.unpersist()
-    return books
+    try:
+        return lloyd(vecs, "__nv", m, kc, n_iter)
+    finally:
+        vecs.unpersist()
 
 
-def _codes_udf_init(init_planes, d_sub):
-    """Arrow-batched initial bucket codes: sign-bit buckets per subspace,
-    one stacked matmul per batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    m = len(init_planes)
-    p_bits = init_planes[0].shape[0] if hasattr(init_planes[0], "shape") \
-        else len(init_planes[0])
-    mats = [np.asarray(p, dtype=np.float64) for p in init_planes]
-    weights = (1 << np.arange(p_bits))
-
-    @pandas_udf("array<int>")
-    def _init(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            xs = x[:, s * d_sub:(s + 1) * d_sub]
-            bits = ((xs @ mats[s].T) >= 0).astype(np.int64)
-            codes[:, s] = (bits * weights).sum(axis=1)
-        return pd.Series(list(codes))
-
-    return _init
-
-
-def _codes_udf(books, d_sub):
-    """Arrow-batched argmin codes against the current codebooks (POSITIONS
-    into each subspace's id-sorted centroid matrix)."""
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [mat for _, mat in books]
-    m = len(mats)
-
-    @pandas_udf("array<int>")
-    def _assign(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s, cmat in enumerate(mats):
-            xs = x[:, s * d_sub:(s + 1) * d_sub]
-            d = ((xs * xs).sum(axis=1)[:, None]
-                 - 2.0 * (xs @ cmat.T)
-                 + (cmat * cmat).sum(axis=1)[None, :])
-            codes[:, s] = d.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return _assign
+def _unit_codes(x: np.ndarray, mats: List[np.ndarray]) -> np.ndarray:
+    """Nearest-centroid codes of the L2-normalized rows of ``x`` (in
+    place; zero rows stay zero)."""
+    n = np.linalg.norm(x, axis=1, keepdims=True)
+    np.divide(x, n, out=x, where=n > 0)
+    return nearest_codes(x, mats)
 
 
 def pq_encode(
@@ -192,31 +103,9 @@ def pq_encode(
     """(id, codes array<int>) — one Arrow-batched pass, zero shuffle; the
     code for subspace s indexes into ``books[s]``'s centroid matrix (a
     POSITION, not a cluster id, so lookup tables index directly)."""
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [mat for _, mat in books]
-    d_sub = mats[0].shape[1]
-    m = len(mats)
-
-    @pandas_udf("array<int>")
-    def _enc(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        n = np.linalg.norm(x, axis=1, keepdims=True)
-        np.divide(x, n, out=x, where=n > 0)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s, cmat in enumerate(mats):
-            xs = x[:, s * d_sub:(s + 1) * d_sub]
-            d = ((xs * xs).sum(axis=1)[:, None]
-                 - 2.0 * (xs @ cmat.T)
-                 + (cmat * cmat).sum(axis=1)[None, :])
-            codes[:, s] = d.argmin(axis=1)       # stable: first minimum
-        return pd.Series(list(codes))
-
+    enc = _codes_udf(partial(_unit_codes, mats=[mat for _, mat in books]))
     return corpus.select(F.col(id_col).alias("neighbor_id"),
-                         _enc(F.col(vec_col)).alias("codes"))
+                         enc(F.col(vec_col)).alias("codes"))
 
 
 def pq_topk(
@@ -228,7 +117,6 @@ def pq_topk(
     m: int = 8,
     kc: int = 16,
     n_iter: int = 4,
-    dim: int = 64,
     train_fraction: float = 1.0,
     rerank=0,
 ) -> DataFrame:
@@ -257,10 +145,8 @@ def pq_topk(
     OPQ), which this operator exposes as ``kc``.
     Output: (query_id, rank, neighbor_id, score), rank 1-based.
     """
-    from pyspark.sql.functions import pandas_udf
-
     books = pq_fit(corpus, vec_col, id_col, m, kc, n_iter,
-                   train_fraction, dim)
+                   train_fraction)
     if rerank == "auto":
         # bounded action: one count on the corpus (the fit above already
         # ran heavier jobs); shortlist = min(max(8k, 5% of corpus), 10k)
@@ -268,7 +154,8 @@ def pq_topk(
         shortlist_n = min(max(8 * k, 0.05 * n_base), 10_000)
         rerank = int(math.ceil(shortlist_n / float(k)))
     rerank = int(rerank)
-    d_sub = dim // m
+    mats = [mat for _, mat in books]
+    d_sub = mats[0].shape[1]
     qrows = _normalized(queries, vec_col, id_col, "qid") \
         .where(F.col("__nv").isNotNull()).collect()
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
@@ -277,10 +164,10 @@ def pq_topk(
     # than kc centroids (empty clusters drop out of the k-means frame),
     # so pad to the widest; padded slots are never indexed (codes are
     # positions into that subspace's own matrix).
-    kc_eff = max(b[1].shape[0] for b in books)
-    lut = np.zeros((len(qids), m, kc_eff), dtype=np.float64)
-    for s in range(m):
-        t = qmat[:, s * d_sub:(s + 1) * d_sub] @ books[s][1].T
+    kc_eff = max(mat.shape[0] for mat in mats)
+    lut = np.zeros((len(qids), len(mats), kc_eff), dtype=np.float64)
+    for s, mat in enumerate(mats):
+        t = qmat[:, s * d_sub:(s + 1) * d_sub] @ mat.T
         lut[:, s, :t.shape[1]] = t
 
     # per-batch survivors must cover the RERANK shortlist, not just k
@@ -293,24 +180,11 @@ def pq_topk(
     # One pass, one boundary crossing; the numpy steps (normalize,
     # per-subspace argmin, LUT gather) are byte-identical to the split
     # formulation. pq_encode stays for the persistable-index path.
-    mats = [mat for _, mat in books]
-    m_eff = len(mats)
-
     def _encode_score(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            x = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["__vec"].to_numpy()])
-            n = np.linalg.norm(x, axis=1, keepdims=True)
-            np.divide(x, n, out=x, where=n > 0)
-            codes = np.empty((len(x), m_eff), dtype=np.int64)
-            for s, cmat in enumerate(mats):
-                xs = x[:, s * d_sub:(s + 1) * d_sub]
-                dd = ((xs * xs).sum(axis=1)[:, None]
-                      - 2.0 * (xs @ cmat.T)
-                      + (cmat * cmat).sum(axis=1)[None, :])
-                codes[:, s] = dd.argmin(axis=1)   # stable: first minimum
+            codes = _unit_codes(_stack(pdf["__vec"]), mats)
             nb = pdf["neighbor_id"].to_numpy().astype(np.int64)
             # scores (B, nq): sum of per-subspace LUT gathers
             sc = np.zeros((len(codes), len(qids)), dtype=np.float64)
@@ -382,7 +256,6 @@ def pq_index(
     m: int = 16,
     kc: int = 16,
     n_iter: int = 4,
-    dim: int = 64,
     train_fraction: float = 1.0,
 ) -> Tuple[DataFrame, DataFrame]:
     """(books_df, codes_df): the persistable PQ index. ``codes_df`` holds
@@ -394,6 +267,6 @@ def pq_index(
     the index grows by appending code rows — codebooks stay fixed, the
     standard frozen-codebook regime."""
     books = pq_fit(corpus, vec_col, id_col, m, kc, n_iter,
-                   train_fraction, dim)
+                   train_fraction)
     return (pq_books_to_df(corpus.sparkSession, books),
             pq_encode(corpus, books, vec_col, id_col))

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -28,3 +29,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns (its result, the
+    number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

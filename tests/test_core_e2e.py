@@ -284,6 +284,30 @@ def test_interval_join_strategy_matches_union_window(spark, tiny):
     assert k3[3] is None and k3[5] == 0
 
 
+def test_strategy_memo_survives_concurrent_clear(spark, monkeypatch,
+                                                 count_jobs):
+    """Two queries planning at once share the PIT strategy memo: another
+    thread's ``clear()`` may land between a membership test and the
+    read. Simulated with a memo that clears itself on ``__contains__``:
+    the second lookup must still be served from the memo, launching no
+    sample job."""
+    from feathr_spark.operators import point_in_time
+
+    class RacyMemo(dict):
+        def __contains__(self, key):
+            hit = dict.__contains__(self, key)
+            self.clear()
+            return hit
+
+    monkeypatch.setattr(point_in_time, "_STRATEGY_CACHE", RacyMemo())
+    src = spark.createDataFrame([Row(k=i % 40, v=float(i))
+                                 for i in range(400)])
+    assert point_in_time.choose_pit_strategy(src, ["k"]) == "union_window"
+    hit, jobs = count_jobs(
+        lambda: point_in_time.choose_pit_strategy(src, ["k"]))
+    assert (hit, jobs) == ("union_window", 0)
+
+
 def test_auto_strategy_switches_on_hot_key(spark):
     """choose_pit_strategy picks the AQE-skew-splittable interval join
     when one entity key dominates the source, union_window on a uniform

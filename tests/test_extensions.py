@@ -631,6 +631,19 @@ def test_duplicate_components_labels(spark):
                    10: 10, 11: 10, 12: 10, 13: 10, 14: 10}
 
 
+def test_duplicate_components_raises_when_rounds_run_out(spark):
+    """A 13-node chain needs more than 3 rounds: exhausting ``max_iter``
+    must fail loudly instead of returning unconverged labels."""
+    from feathr_spark.operators.dedup import duplicate_components
+    pairs = spark.createDataFrame([Row(id_a=i, id_b=i + 1)
+                                   for i in range(12)])
+    with pytest.raises(RuntimeError, match="max_iter"):
+        duplicate_components(pairs, max_iter=3).collect()
+    out = {r.doc_id: r.component_id
+           for r in duplicate_components(pairs).collect()}
+    assert out == {i: 0 for i in range(13)}
+
+
 def test_quota_sample_and_hash_split(spark):
     from feathr_spark.operators.sampling import hash_split, quota_sample
     docs = spark.createDataFrame([
@@ -941,6 +954,48 @@ def test_kmeans_convergence_and_determinism(spark):
                      kmeans_assign(emb.repartition(13), k=8, n_iter=3)
                      .collect()))
     assert one == two
+
+
+def test_kmeans_inertia_pinned(spark, sf_dir):
+    """The one Lloyd kernel reproduces the former k-means fit: total
+    inertia at semantic_dedup_pairs' query parameters (k=16, n_iter=5) is
+    pinned at the value the separate k-means loop produced at each scale
+    factor."""
+    import os
+    from feathr_spark.operators.clustering import kmeans_assign
+    pinned = {"sf0.001": 446.117888, "sf0.01": 445.897757,
+              "sf0.1": 1850.054221}[os.path.basename(sf_dir)]
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    inertia = kmeans_assign(emb, k=16, n_iter=5) \
+        .agg(F.sum("sq_dist")).collect()[0][0]
+    assert inertia == pytest.approx(pinned, abs=1e-6)
+
+
+@pytest.mark.parametrize("dim", [32, 128])
+def test_kmeans_finds_planted_clusters_at_any_width(spark, dim):
+    """The vector width comes from the data. Init buckets are sign bits
+    against hyperplanes, so each planted centre sits in its own init
+    cell (dot = ±3 with each plane) and a correct fit recovers all 8
+    clusters; init planes of the wrong length null the dot and collapse
+    every vector into ONE cluster."""
+    import numpy as np
+    from feathr_spark.operators.clustering import kmeans_assign
+    from feathr_spark.operators.similarity import _planes
+    planes = np.asarray(_planes(3, dim))
+    signs = np.array([[1.0 if (j >> i) & 1 else -1.0 for i in range(3)]
+                      for j in range(8)])
+    centres = (np.linalg.pinv(planes) @ (3.0 * signs.T)).T
+    rng = np.random.default_rng(0)
+    rows = [(j * 40 + t, j,
+             (centres[j] + rng.normal(scale=0.05, size=dim)).tolist())
+            for j in range(8) for t in range(40)]
+    df = spark.createDataFrame(
+        rows, "vec_id bigint, label int, embedding array<double>")
+    got = {(r.label, r.cluster) for r in
+           kmeans_assign(df, k=8, n_iter=5)
+           .join(df.select("vec_id", "label"), "vec_id").collect()}
+    # a bijection: no planted cluster split, none merged
+    assert len(got) == 8 and len({c for _, c in got}) == 8
 
 
 def test_semantic_dedup_recall_floor(spark):

@@ -519,6 +519,64 @@ def test_pq_topk_rerank_recall_floor(spark):
         F.max("count")).first()[0] <= 3
 
 
+def test_pq_runs_on_32d_vectors(spark):
+    """The vector width comes from the data: fit, encode and ADC top-k
+    work on 32-d vectors (no 64-d default), and a width that does not
+    split into ``m`` subspaces is rejected."""
+    from feathr_spark.operators.pq import pq_encode, pq_fit, pq_topk
+    from feathr_spark.operators.similarity import cosine_topk
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet") \
+        .select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
+    books = pq_fit(emb, m=8, kc=8, n_iter=2)
+    assert len(books) == 8
+    assert all(mat.shape[1] == 4 for _, mat in books)
+    assert all(len(r.codes) == 8 for r in pq_encode(emb, books).collect())
+    q = emb.where(F.col("vec_id") < 10)
+    exact = cosine_topk(emb, q, "embedding", "vec_id", k=5) \
+        .select("query_id", "neighbor_id")
+    approx = pq_topk(emb, q, k=5, m=8, kc=8, n_iter=2, rerank=8) \
+        .select("query_id", "neighbor_id")
+    assert approx.count() == exact.count()
+    assert approx.join(exact, ["query_id", "neighbor_id"]).count() \
+        / exact.count() >= 0.6
+    with pytest.raises(ValueError, match="not divisible"):
+        pq_fit(emb, m=5)
+
+
+def test_pq_fit_stops_at_fixpoint(spark, count_jobs):
+    """Centroids are 6-dp-quantized, so a round that changes no codebook
+    is the fixpoint: a fit given rounds past convergence returns the
+    books of the fit stopped exactly there, with the same jobs."""
+    import numpy as np
+    from feathr_spark.operators.pq import pq_fit
+    rng = np.random.default_rng(0)
+    centres = rng.normal(size=(8, 64))
+    df = spark.createDataFrame(
+        [(j * 30 + t, (centres[j] + rng.normal(scale=0.05, size=64))
+          .tolist()) for j in range(8) for t in range(30)],
+        "vec_id bigint, embedding array<double>")
+
+    def fit(n_iter):
+        return count_jobs(lambda: pq_fit(df, m=2, kc=8, n_iter=n_iter))
+
+    def same(a, b):
+        return all(ca == cb and np.array_equal(ma, mb)
+                   for (ca, ma), (cb, mb) in zip(a, b))
+
+    (prev, prev_jobs), at = fit(0), 0
+    while True:                       # the first round that changes nothing
+        at += 1
+        books, jobs = fit(at)
+        if same(books, prev):
+            break
+        assert at < 10
+        prev, prev_jobs = books, jobs
+    assert jobs > prev_jobs           # rounds cost jobs ...
+    past, past_jobs = fit(at + 20)
+    assert same(past, books)
+    assert past_jobs == jobs          # ... and none run past the fixpoint
+
+
 def test_winnow_arrow_equals_expression_form(spark):
     """The Arrow-batched winnow sketch must be value-identical to the
     pure-expression reference implementation on real data + edge cases."""
