@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .feature import DerivedFeature, FeathrError, Feature, FeatureAnchor
 from .functions import feathr_expr, register_feathr_functions
-from .materialization import MaterializationSettings
+from .materialization import DATETIME_FMT, MaterializationSettings
 from .model import ExpressionTransform, UdfTransform, WindowAggTransform
 from .operators.point_in_time import WindowFeatureSpec, point_in_time_aggregate
 from .source import EVENT_TS_COL, ObservationSettings, Source
@@ -312,14 +312,15 @@ class FeathrProject:
                 # the SESSION timezone — build the wall-clock literal there,
                 # not in UTC, or a non-UTC session shifts the pushed-down
                 # bound by the tz offset and silently prunes in-window rows.
-                sess_tz = None
+                from zoneinfo import ZoneInfo
+                tz_name = src_df.sparkSession.conf.get(
+                    "spark.sql.session.timeZone")
                 try:
-                    from zoneinfo import ZoneInfo
-                    tz_name = src_df.sparkSession.conf.get(
-                        "spark.sql.session.timeZone")
                     sess_tz = ZoneInfo(tz_name)
-                except Exception:
-                    pass  # unparseable tz (e.g. GMT+08:00) → no pushdown form
+                except (KeyError, ValueError):
+                    # not an IANA name (e.g. GMT+08:00: ZoneInfoNotFoundError
+                    # is a KeyError) → no pushdown form
+                    sess_tz = None
                 if twp and twp.timestamp_column_format is None and \
                         raw_ts_type in ("timestamp", "timestamp_ntz") and \
                         sess_tz is not None:
@@ -471,18 +472,28 @@ class FeathrProject:
     def _compute_snapshots(self, spark: SparkSession,
                            feature_names: Sequence[str],
                            cutoffs: Sequence[datetime]) -> DataFrame:
-        """Snapshots for every cutoff in ONE pass per source group.
+        """Snapshots for every cutoff in ONE pass: one scan per source
+        group and ONE aggregate over all groups.
 
         Each source row is fanned out to the cutoffs it can contribute to
         with ``explode(filter(<literal cutoff array>, c -> ts <= c))`` — a
         narrow per-row projection, NO join (a broadcast range join against
         a cutoff table would plan a BroadcastNestedLoopJoin; the literal
-        array is evaluated inside the scan stage) — then ONE
-        ``groupBy(keys, cutoff)``. So an N-cutoff backfill costs one
-        source scan and one shuffle, not N of each; map-side partial
-        aggregation compresses the fan-out to |keys| × N rows before the
-        exchange. Per-cutoff window masks are ordinary aggregate-input
-        expressions referencing the exploded cutoff column.
+        array is evaluated inside the scan stage). Per-cutoff window masks
+        are ordinary projections referencing the exploded cutoff column.
+
+        Each group projects its fanned rows to the keys, the cutoff, a
+        presence tag ``__g<i> = 1`` and one masked value column and one ts
+        column per feature; the groups are ``unionByName``-ed (a column of
+        another group reads NULL, which every aggregate ignores) and
+        aggregated by a single ``groupBy(keys, cutoff)``. So an N-cutoff,
+        G-group backfill costs G source scans and one shuffle — no full
+        outer join of per-group aggregates; map-side partial aggregation
+        compresses the fan-out to |keys| × N rows before the exchange.
+        With more than one group each feature is wrapped in
+        ``when(count(__g<i>) > 0, agg)``, so a key absent from a group's
+        source at a cutoff reads NULL for that group's features (not 0 for
+        a COUNT), as in a full outer join of the per-group snapshots.
 
         A key keeps a (possibly all-NULL) row for every cutoff at or after
         its first source row — identical to the per-cutoff formulation
@@ -502,6 +513,8 @@ class FeathrProject:
             gkey = (anchor.source.name, tuple(k.key_column for k in f.key),
                     tuple(k.alias for k in f.key))
             groups.setdefault(gkey, []).append((anchor, f))
+        if not groups:
+            raise FeathrError("no features to materialize")
 
         # naive cutoffs are interpreted as UTC (the engine pins timestamps
         # to UTC instants; see also the tests' session timeZone=UTC)
@@ -510,7 +523,7 @@ class FeathrProject:
         for cutoff in cutoffs:
             cutoff_utc = (cutoff if cutoff.tzinfo
                           else cutoff.replace(tzinfo=timezone.utc))
-            cut_items.append((cutoff.strftime("%Y-%m-%d %H:%M:%S"),
+            cut_items.append((cutoff.strftime(DATETIME_FMT),
                               int(cutoff_utc.timestamp() * 1000)))
         cut_array = F.array(*[
             F.struct(F.lit(s).alias("cut_str"), F.lit(ms).alias("cut_ms"))
@@ -518,10 +531,22 @@ class FeathrProject:
 
         from .model import Aggregation
         from .operators.aggregations import simple_agg
-        result: Optional[DataFrame] = None
+        tagged = len(groups) > 1
+        # cut_ms is grouped alongside cut_str (1:1 — group set is
+        # unchanged) so DECAY's post-transform may reference the cutoff
+        # epoch as a grouping expression.
+        cut_ms = F.col("__feathr_cut_ms")
+        parts: List[DataFrame] = []
+        aggs = []
         join_keys: Optional[List[str]] = None
         feature_order: List[str] = []
-        for (src_name, src_keys, aliases), feats in groups.items():
+        for i, ((src_name, src_keys, aliases), feats) in enumerate(groups.items()):
+            if join_keys is None:
+                join_keys = list(aliases)
+            elif list(aliases) != join_keys:
+                raise FeathrError(
+                    "materialized features must share key aliases "
+                    f"({join_keys} vs {list(aliases)})")
             anchor = feats[0][0]
             src_df = anchor.source.load(spark)
             time_aware = EVENT_TS_COL in src_df.columns
@@ -532,52 +557,45 @@ class FeathrProject:
                         cut_array, lambda c: ts_ms <= c["cut_ms"])))
             else:
                 fanned = src_df.withColumn("__cut", F.explode(cut_array))
-            aggs = []
+            cols = [F.col(sk).alias(a) for sk, a in zip(src_keys, aliases)]
+            cols += [F.col("__cut")["cut_str"].alias("feathr_cutoff"),
+                     F.col("__cut")["cut_ms"].alias("__feathr_cut_ms")]
+            if tagged:
+                cols.append(F.lit(1).alias(f"__g{i}"))
             for _, f in feats:
                 t = f.transform
                 if isinstance(t, WindowAggTransform):
                     if not time_aware:
                         raise FeathrError(f"{f.name}: windowed feature needs event time")
-                    v = F.when(
-                        F.unix_millis(F.col(EVENT_TS_COL).cast("timestamp"))
-                        > F.col("__cut")["cut_ms"] - t.window_ms,
-                        feathr_expr(t.def_expr))
+                    v = F.when(ts_ms > F.col("__cut")["cut_ms"] - t.window_ms,
+                               feathr_expr(t.def_expr))
                     if t.filter:
                         v = F.when(feathr_expr(t.filter), v)
                     # ts in epoch MILLIS to match obs_ts (cut_ms): DECAY
                     # subtracts the two; order-based aggs (NOP/LATEST) are
                     # unaffected by the monotone unit change.
-                    aggs.append(simple_agg(t.agg_func, v, ts_ms,
-                                           t.agg_param,
-                                           obs_ts=F.col("__cut")["cut_ms"])
-                                .alias(f.name))
+                    agg, ts, param = t.agg_func, ts_ms, t.agg_param
                 else:
                     assert isinstance(t, ExpressionTransform)
                     v = feathr_expr(t.sql_expr)
                     agg = Aggregation.LATEST if time_aware else Aggregation.NOP
                     ts = F.col(EVENT_TS_COL) if time_aware else F.lit(0)
-                    aggs.append(simple_agg(agg, v, ts).alias(f.name))
+                    param = None
+                j = len(feature_order)
+                cols += [v.alias(f"__v{j}"), ts.alias(f"__t{j}")]
+                a = simple_agg(agg, F.col(f"__v{j}"), F.col(f"__t{j}"), param,
+                               obs_ts=cut_ms)
+                if tagged:
+                    a = F.when(F.count(f"__g{i}") > 0, a)
+                aggs.append(a.alias(f.name))
                 feature_order.append(f.name)
-            # cut_ms is grouped alongside cut_str (1:1 — group set is
-            # unchanged) so DECAY's post-transform may reference the cutoff
-            # epoch as a grouping expression.
-            snap = fanned.groupBy(
-                *[F.col(sk).alias(a) for sk, a in zip(src_keys, aliases)],
-                F.col("__cut")["cut_str"].alias("feathr_cutoff"),
-                F.col("__cut")["cut_ms"].alias("__feathr_cut_ms"),
-            ).agg(*aggs).drop("__feathr_cut_ms")
-            if result is None:
-                result, join_keys = snap, list(aliases)
-            else:
-                if list(aliases) != join_keys:
-                    raise FeathrError(
-                        "materialized features must share key aliases "
-                        f"({join_keys} vs {list(aliases)})")
-                result = result.join(snap, on=join_keys + ["feathr_cutoff"],
-                                     how="full_outer")
+            parts.append(fanned.select(*cols))
 
-        if result is None:
-            raise FeathrError("no features to materialize")
+        union = parts[0]
+        for part in parts[1:]:
+            union = union.unionByName(part, allowMissingColumns=True)
+        result = union.groupBy(*join_keys, "feathr_cutoff", cut_ms) \
+            .agg(*aggs).drop("__feathr_cut_ms")
         for d in derived_order:
             result = result.withColumn(d.name, feathr_expr(d.transform.sql_expr))
             feature_order.append(d.name)
@@ -594,9 +612,9 @@ class FeathrProject:
         whole backfill in one write.
 
         Unlike the reference's one-job-per-cutoff submission loop, all
-        cutoffs run in a single pass: one source scan + one shuffle total
-        (see :meth:`_compute_snapshots`) — the difference between 365
-        scans and 1 for a year's daily backfill."""
+        cutoffs run in a single pass: one scan per source and one shuffle
+        total (see :meth:`_compute_snapshots`) — the difference between 365
+        scans of each source and 1 for a year's daily backfill."""
         cutoffs = backfill_time.cutoffs()
         if not cutoffs:
             raise FeathrError("backfill range produced no cutoffs")
@@ -605,18 +623,34 @@ class FeathrProject:
     def materialize_features(self, settings: MaterializationSettings,
                              spark: Optional[SparkSession] = None) -> List[datetime]:
         """One snapshot per backfill cutoff, iterating backwards from end
-        (materialization.rs:200-231), written to every sink
-        (job_client/mod.rs:701-723 — frame cached once, N writes)."""
+        (materialization.rs:200-231), written to every sink.
+
+        The reference submits one job per cutoff (job_client/mod.rs:756-793);
+        here every cutoff is computed in ONE pass (:meth:`compute_backfill`).
+        That frame is persisted once when it is read more than once
+        (cutoffs × sinks > 1) — without it every slice write would re-run
+        the whole N-cutoff pass — and each sink then receives one write per
+        cutoff, ``where(feathr_cutoff == cutoff)``, newest cutoff first.
+        The frame is released when the writes end, also when a sink raises.
+        An empty backfill range writes nothing and returns ``[]``."""
         spark = spark or self.spark
         bt = settings.backfill_time
         if bt is None:
             raise FeathrError("materialization requires backfill_time")
-        written = []
-        for cutoff in bt.cutoffs():
-            df = self.compute_snapshot(spark, settings.feature_names, cutoff)
-            if len(settings.sinks) > 1:
-                df = df.cache()
-            for sink in settings.sinks:
-                sink.write(df)
-            written.append(cutoff)
-        return written
+        cutoffs = bt.cutoffs()
+        if not cutoffs:
+            return []
+        df = self.compute_backfill(spark, settings.feature_names, bt)
+        reused = len(cutoffs) * len(settings.sinks) > 1
+        if reused:
+            df = df.persist()
+        try:
+            for cutoff in cutoffs:
+                snap = df.where(F.col("feathr_cutoff")
+                                == cutoff.strftime(DATETIME_FMT))
+                for sink in settings.sinks:
+                    sink.write(snap)
+        finally:
+            if reused:
+                df.unpersist()
+        return cutoffs

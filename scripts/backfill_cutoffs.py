@@ -1,0 +1,154 @@
+"""Time ``FeathrProject.materialize_features`` at several DAILY cutoff counts.
+
+Run from the repository root:
+
+    python3 scripts/backfill_cutoffs.py
+    python3 scripts/backfill_cutoffs.py --cutoffs 2,14,30 --reps 4 --seed 102
+
+This is perfbench's ``backfill`` workload at other cutoff counts. It uses
+perfbench's generated inputs, feature definitions, session settings and
+CPU counter (``perfbench/gen.py``, ``workloads.py``, ``run.py``, imported
+as they are) and writes under ``.perfbench/``, like perfbench.
+
+For each cutoff count it runs one untimed warm-up job, then ``--reps``
+timed jobs, the counts interleaved. Per count it prints the Spark jobs
+one ``materialize_features`` call launches, the median CPU seconds of
+this process and its descendants less JIT threads (``run.engine_cpu_s``)
+and wall seconds, the rows written and a SHA-256 digest of the written
+rows, sorted. Run it in two checkouts to check that their outputs are
+bit-identical. Every job's rows per cutoff, and every cutoff of the
+warm-up job in full, are checked against perfbench's DuckDB/numpy
+oracle; a mismatch exits with code 1. The last line is one JSON object.
+"""
+
+from __future__ import annotations
+
+import argparse
+import hashlib
+import json
+import os
+import shutil
+import statistics
+import sys
+import time
+from datetime import datetime, timedelta, timezone
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "perfbench"))
+
+
+def _digest(path: str) -> str:
+    import pyarrow.parquet as pq
+    table = pq.read_table(path)
+    rows = sorted(table.to_pylist(),
+                  key=lambda r: (r["feathr_cutoff"], r["user_id"]))
+    body = json.dumps([table.column_names, rows], default=str)
+    return hashlib.sha256(body.encode()).hexdigest()
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--cutoffs", default="2,14",
+                    help="comma-separated DAILY cutoff counts (default 2,14)")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--seed", type=int, default=101)
+    args = ap.parse_args(argv)
+    counts = [int(c) for c in args.cutoffs.split(",")]
+
+    work = ROOT / ".perfbench"
+    for d in ("tmp", "spark-local", "data", "out"):
+        (work / d).mkdir(parents=True, exist_ok=True)
+    os.environ["TMPDIR"] = str(work / "tmp")
+    os.environ["SPARK_LOCAL_DIRS"] = str(work / "spark-local")
+    os.environ["PYSPARK_PYTHON"] = sys.executable
+    os.environ["JAVA_TOOL_OPTIONS"] = \
+        "-XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads"
+
+    import feathr_spark as fs
+    import gen
+    import oracle
+    import run
+    import workloads
+
+    data = gen.feature_store_inputs(str(work / "data"), args.seed,
+                                    workloads.FS_SIZES)
+    # the end of the generated history, as in workloads.Backfill
+    end = datetime.fromtimestamp(
+        (gen.START_MS + gen.HISTORY_DAYS * gen.DAY_MS) / 1000, tz=timezone.utc
+    ).replace(tzinfo=None)
+    cores = min(run.MAX_CORES, len(os.sched_getaffinity(0)))
+    spark = run._session(cores, work)
+    sc = spark.sparkContext
+    project = workloads.feature_project(spark, data)
+    out_root = work / "out" / "backfill_cutoffs"
+    problems: list = []
+    samples = {n: [] for n in counts}
+    jobs, rows, digests = {}, {}, {n: set() for n in counts}
+
+    def one_job(n: int, tag: str, full_check: bool):
+        bt = fs.BackfillTime(start=end - timedelta(days=n), end=end,
+                             step="DAILY")
+        path = str(out_root / f"{n}-{tag}")
+        shutil.rmtree(path, ignore_errors=True)
+        settings = fs.MaterializationSettings(
+            name="backfill_cutoffs",
+            sinks=[fs.GenericSink(format="parquet", path=path, mode="append")],
+            feature_names=list(workloads.BACKFILL_FEATURES), backfill_time=bt)
+        group = f"backfill_cutoffs_{n}_{tag}"
+        sc.setJobGroup(group, group)
+        cpu, t = run.engine_cpu_s(), time.perf_counter()
+        try:
+            written = project.materialize_features(settings, spark=spark)
+        finally:
+            took, took_cpu = time.perf_counter() - t, run.engine_cpu_s() - cpu
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        cutoffs = bt.cutoffs()
+        if written != cutoffs:
+            problems.append(f"{n} cutoffs: wrote {len(written)}")
+        expect = oracle.snapshot_row_counts(data, cutoffs)
+        got = oracle.rows_per_cutoff(path)
+        if got != expect:
+            problems.append(f"{n} cutoffs: rows per cutoff {got} != {expect}")
+        if full_check:
+            for c in cutoffs:
+                problems.extend(oracle.compare_snapshot(data, path, c))
+        digests[n].add(_digest(path))
+        shutil.rmtree(path, ignore_errors=True)
+        return n_jobs, sum(got.values()), took_cpu, took
+
+    try:
+        for n in counts:
+            jobs[n], rows[n], _, _ = one_job(n, "warmup", full_check=True)
+        for rep in range(args.reps):
+            for n in counts:
+                n_jobs, rows[n], took_cpu, took = one_job(n, str(rep), False)
+                if n_jobs != jobs[n]:
+                    problems.append(f"{n} cutoffs: {n_jobs} jobs, warm-up had {jobs[n]}")
+                samples[n].append((took_cpu, took))
+    finally:
+        run._stop(spark)
+
+    result = {}
+    for n in counts:
+        cpu = statistics.median(s[0] for s in samples[n])
+        wall = statistics.median(s[1] for s in samples[n])
+        if len(digests[n]) != 1:
+            problems.append(f"{n} cutoffs: output differs between jobs")
+        digest = sorted(digests[n])[0]
+        print(f"cutoffs={n:<3d} jobs={jobs[n]:<3d} cpu_s={cpu:.3f} wall_s={wall:.3f} "
+              f"(median of {len(samples[n])}) rows={rows[n]} digest={digest[:16]}")
+        result[str(n)] = {"jobs": jobs[n], "cpu_s": round(cpu, 4),
+                          "wall_s": round(wall, 4), "rows": rows[n],
+                          "digest": digest}
+    for p in problems:
+        print(f"problem: {p}", file=sys.stderr)
+    print(json.dumps({"seed": args.seed, "cores": cores, "correct": not problems,
+                      "cutoffs": result}))
+    return 1 if problems else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -222,6 +222,55 @@ def test_time_prune_reaches_parquet_pushdown(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(t), GreaterThan(t," in plan, plan[:2000]
 
 
+def test_time_prune_non_iana_session_tz_uses_epoch_predicate(spark, tmp_path):
+    """A session time zone that zoneinfo cannot parse (GMT+08:00) takes
+    the epoch-millis prune predicate instead of the pushed-down raw-column
+    form, and returns the same rows as no pruning."""
+    import datetime as dt
+    from feathr_spark import (
+        Aggregation, Feature, FeatureAnchor, FeatureQuery, FeathrProject,
+        HdfsSource, ObservationSettings, TimeWindowParameters, TypedKey,
+        WindowAggTransform,
+    )
+    src_path = str(tmp_path / "src.parquet")
+    base = dt.datetime(2024, 1, 1)
+    spark.createDataFrame([
+        Row(k=h % 3, t=base + dt.timedelta(hours=5 * h), v=float(h))
+        for h in range(60)
+    ]).write.parquet(src_path)
+    p = FeathrProject("t", spark)
+    key = TypedKey(key_column="k")
+    p.register_anchor(FeatureAnchor(
+        name="w",
+        source=HdfsSource(name="s", path=src_path,
+                          time_window_parameters=TimeWindowParameters("t")),
+        features=[
+            Feature(name="f_sum_1d", transform=WindowAggTransform(
+                "v", Aggregation.SUM, "1d"), key=[key]),
+            Feature(name="f_cnt_1d", transform=WindowAggTransform(
+                "1", Aggregation.COUNT, "1d"), key=[key]),
+        ]))
+    obs = spark.createDataFrame([
+        Row(k=k, t=base + dt.timedelta(hours=7 * i + k))
+        for i in range(6, 14) for k in range(3)])
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "GMT+08:00")
+
+        def run(prune):
+            out = p.get_offline_features(
+                ObservationSettings(timestamp_column="t").with_event_ts(obs),
+                FeatureQuery(["f_sum_1d", "f_cnt_1d"]), time_prune=prune)
+            return out, sorted(tuple(r) for r in out.collect())
+        pruned, got = run(True)
+        _, want = run(False)
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert got == want
+    assert any(r[-1] for r in got)
+    assert "GreaterThan(t," not in plan, plan[:2000]
+
+
 def test_save_offline_features(spark, tmp_path):
     from feathr_spark import (Feature, FeatureAnchor, FeatureQuery,
                               FeathrProject, INPUT_CONTEXT)

@@ -334,6 +334,212 @@ def test_backfill_single_pass_one_scan(spark, tmp_path):
     assert (2, "2024-01-03 12:00:00") not in got
 
 
+def _multi_source_project(spark):
+    """Two time-aware sources and one dimension source on key alias k.
+    Key 3 has only events, key 4 only purchases, key 5 only a dim row."""
+    from feathr_spark.source import TimeWindowParameters
+    events = spark.createDataFrame([
+        Row(k=1, t=ts("2024-01-01 06:00:00"), v=10.0, kind=1),
+        Row(k=1, t=ts("2024-01-02 06:00:00"), v=20.0, kind=2),
+        Row(k=1, t=ts("2024-01-03 09:00:00"), v=40.0, kind=1),
+        Row(k=2, t=ts("2024-01-02 07:00:00"), v=5.0, kind=1),
+        Row(k=3, t=ts("2024-01-01 08:00:00"), v=7.0, kind=2),
+        Row(k=3, t=ts("2024-01-03 10:00:00"), v=9.0, kind=1),
+    ])
+    purchases = spark.createDataFrame([
+        Row(k=1, t=ts("2024-01-02 11:00:00"), price=3.5),
+        Row(k=2, t=ts("2024-01-01 01:00:00"), price=1.25),
+        Row(k=2, t=ts("2024-01-03 02:00:00"), price=2.0),
+        Row(k=4, t=ts("2024-01-02 03:00:00"), price=8.0),
+    ])
+    dims = spark.createDataFrame([
+        Row(k=1, seg="a"), Row(k=2, seg="b"), Row(k=5, seg="c")])
+    p = FeathrProject("multi", spark)
+    key = [TypedKey(key_column="k")]
+    W = WindowAggTransform
+    ev = p.register_anchor(FeatureAnchor(
+        name="ev",
+        source=DataFrameSource(name="events", df=events,
+                               time_window_parameters=TimeWindowParameters("t")),
+        features=[
+            Feature(name="ev_cnt_2d", transform=W("1", Aggregation.COUNT, "2d"), key=key),
+            Feature(name="ev_kind1_cnt_2d", key=key, transform=W(
+                "1", Aggregation.COUNT, "2d", filter="kind = 1")),
+            Feature(name="ev_sum_1d", transform=W("v", Aggregation.SUM, "1d"), key=key),
+            Feature(name="ev_first_2d", transform=W("v", Aggregation.NOP, "2d"), key=key),
+            Feature(name="ev_dsum_3d", key=key, transform=W(
+                "v", Aggregation.DECAY_SUM, "3d", agg_param=1.0)),
+        ]))
+    pu = p.register_anchor(FeatureAnchor(
+        name="pu",
+        source=DataFrameSource(name="purchases", df=purchases,
+                               time_window_parameters=TimeWindowParameters("t")),
+        features=[
+            Feature(name="pu_cnt_2d", transform=W("1", Aggregation.COUNT, "2d"), key=key),
+            Feature(name="pu_last_2d", transform=W("price", Aggregation.LATEST, "2d"),
+                    key=key),
+        ]))
+    p.register_anchor(FeatureAnchor(
+        name="dim", source=DataFrameSource(name="dims", df=dims),
+        features=[Feature(name="seg", transform="seg", key=key)]))
+    p.register_derived(DerivedFeature(
+        name="ev_per_pu", transform="ev_sum_1d / greatest(pu_cnt_2d, 1)",
+        input_features=[ev["ev_sum_1d"], pu["pu_cnt_2d"]]))
+    return p
+
+
+_MULTI_GROUPS = (("ev_cnt_2d", "ev_kind1_cnt_2d", "ev_sum_1d", "ev_first_2d",
+                  "ev_dsum_3d"), ("pu_cnt_2d", "pu_last_2d"), ("seg",))
+_MULTI_FEATURES = sum(_MULTI_GROUPS, ()) + ("ev_per_pu",)
+
+
+def test_backfill_multi_source_matches_joined_snapshots(spark):
+    """compute_backfill over three source groups equals the per-group
+    formulation: single-group snapshots per cutoff, full-outer-joined on
+    (key, cutoff). A key absent from a group at a cutoff reads NULL for
+    that group's features (a COUNT too, not 0)."""
+    import math
+    from functools import reduce
+    from feathr_spark.feature import FeathrError
+    from feathr_spark.materialization import BackfillTime
+    p = _multi_source_project(spark)
+    bt = BackfillTime(start=ts("2024-01-01 12:00:00"),
+                      end=ts("2024-01-04 12:00:00"), step="DAILY")
+    cutoffs = bt.cutoffs()
+    assert len(cutoffs) == 3
+    out = p.compute_backfill(spark, list(_MULTI_FEATURES), bt)
+    assert out.columns == ["k", *_MULTI_FEATURES, "feathr_cutoff"]
+
+    per_cutoff = []
+    for c in cutoffs:
+        snaps = [p.compute_snapshot(spark, list(g), c) for g in _MULTI_GROUPS]
+        per_cutoff.append(reduce(
+            lambda a, b: a.join(b, on=["k", "feathr_cutoff"], how="full_outer"),
+            snaps))
+    want = reduce(lambda a, b: a.unionByName(b), per_cutoff).withColumn(
+        "ev_per_pu", F.expr("ev_sum_1d / greatest(pu_cnt_2d, 1)"))
+
+    def rows(df):
+        return {(r.k, r.feathr_cutoff): r.asDict() for r in df.collect()}
+    got, exp = rows(out), rows(want)
+    assert got.keys() == exp.keys()
+    for key, e in exp.items():
+        g = got[key]
+        assert math.isclose(g.pop("ev_dsum_3d") or 0.0,
+                            e.pop("ev_dsum_3d") or 0.0, rel_tol=1e-12), key
+        assert g == e, key
+    # spot values: key 4 has only purchases, key 5 only a dim row
+    assert got[(4, "2024-01-03 12:00:00")]["ev_cnt_2d"] is None
+    assert got[(4, "2024-01-03 12:00:00")]["pu_cnt_2d"] == 1
+    assert got[(5, "2024-01-02 12:00:00")]["seg"] == "c"
+    assert got[(5, "2024-01-02 12:00:00")]["pu_cnt_2d"] is None
+    assert got[(2, "2024-01-04 12:00:00")]["ev_cnt_2d"] == 0
+    assert got[(1, "2024-01-03 12:00:00")]["ev_kind1_cnt_2d"] == 1
+
+    q = FeathrProject("mismatch", spark)
+    for name, alias in (("a", "k"), ("b", "other")):
+        q.register_anchor(FeatureAnchor(
+            name=name, source=DataFrameSource(
+                name=name, df=spark.createDataFrame([Row(k=1, v=1.0)])),
+            features=[Feature(name=f"f_{name}", transform="v",
+                              key=[TypedKey(key_column="k", key_column_alias=alias)])]))
+    with pytest.raises(FeathrError, match="must share key aliases"):
+        q.compute_backfill(spark, ["f_a", "f_b"], bt)
+
+
+def test_backfill_multi_source_single_pass(spark, monkeypatch, count_jobs):
+    """Two sources × three cutoffs: materialize_features loads each source
+    once (the per-cutoff loop loaded each once per cutoff), and the backfill
+    plan has one hash Exchange and no join. An empty backfill range writes
+    nothing and returns []."""
+    import re
+    from feathr_spark.feature import FeathrError
+    from feathr_spark.materialization import (
+        BackfillTime, MaterializationSettings, Sink)
+    from feathr_spark.source import Source
+    p = _multi_source_project(spark)
+    feats = ["ev_cnt_2d", "ev_sum_1d", "pu_cnt_2d", "ev_per_pu"]
+    bt = BackfillTime(start=ts("2024-01-01 12:00:00"),
+                      end=ts("2024-01-04 12:00:00"), step="DAILY")
+
+    class Recording(Sink):
+        def __init__(self):
+            self.writes = []
+
+        def write(self, df):
+            self.writes.append(sorted(tuple(r) for r in df.collect()))
+
+    loads = []
+    real_load = Source.load
+    monkeypatch.setattr(Source, "load",
+                        lambda self, s: loads.append(self.name) or real_load(self, s))
+    sink = Recording()
+    written, jobs = count_jobs(lambda: p.materialize_features(
+        MaterializationSettings(name="m", sinks=[sink], feature_names=feats,
+                                backfill_time=bt)))
+    assert sorted(loads) == ["events", "purchases"]
+    assert written == bt.cutoffs()
+    # one write per cutoff, newest first, each exactly that cutoff's snapshot
+    assert len(sink.writes) == 3
+    for cutoff, rows in zip(bt.cutoffs(), sink.writes):
+        snap = p.compute_snapshot(spark, feats, cutoff)
+        assert rows == sorted(tuple(r) for r in snap.collect())
+        assert rows and {r[-1] for r in rows} == {cutoff.strftime("%Y-%m-%d %H:%M:%S")}
+    # the per-cutoff loop launched at least two jobs per cutoff (15 here)
+    assert jobs < 2 * len(written), jobs
+
+    plan = p.compute_backfill(spark, feats, bt)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    assert "Join" not in plan, plan
+
+    empty = BackfillTime(start=ts("2024-01-04 12:00:00"),
+                         end=ts("2024-01-04 12:00:00"), step="DAILY")
+    sink = Recording()
+    assert p.materialize_features(MaterializationSettings(
+        name="m", sinks=[sink], feature_names=feats,
+        backfill_time=empty)) == []
+    assert sink.writes == []
+    with pytest.raises(FeathrError):
+        p.compute_backfill(spark, feats, empty)
+
+
+def test_materialize_releases_cache(spark, tmp_path):
+    """A multi-sink backfill leaves nothing cached: the frame is persisted
+    at most once and released after the writes, also when a sink raises."""
+    from feathr_spark.materialization import (
+        BackfillTime, GenericSink, MaterializationSettings, Sink)
+    p = _multi_source_project(spark)
+    bt = BackfillTime(start=ts("2024-01-02 12:00:00"),
+                      end=ts("2024-01-04 12:00:00"), step="DAILY")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # RDDs other tests left persisted may be cleaned meanwhile, never added
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = persisted()
+
+    class Failing(Sink):
+        def write(self, df):
+            raise RuntimeError("sink down")
+
+    sinks = [GenericSink(path=str(tmp_path / "a"), mode="append"),
+             GenericSink(path=str(tmp_path / "b"), mode="append")]
+    assert len(p.materialize_features(MaterializationSettings(
+        name="m", sinks=sinks, feature_names=["ev_cnt_2d", "seg"],
+        backfill_time=bt))) == 2
+    assert spark.read.parquet(str(tmp_path / "b")).count() == \
+        spark.read.parquet(str(tmp_path / "a")).count() > 0
+    assert cache.isEmpty()
+    assert persisted() <= before
+
+    with pytest.raises(RuntimeError, match="sink down"):
+        p.materialize_features(MaterializationSettings(
+            name="m", sinks=[GenericSink(path=str(tmp_path / "c")), Failing()],
+            feature_names=["ev_cnt_2d", "seg"], backfill_time=bt))
+    assert cache.isEmpty()
+    assert persisted() <= before
+
+
 def test_key_alias_reuse(spark):
     """with_key: one feature joined under two different observation key
     columns (viewer/viewee pattern, reference feature.rs:224-241)."""
