@@ -9,7 +9,9 @@ tiny SQL shims so expression strings from reference configs run verbatim.
 from __future__ import annotations
 
 import re
+import weakref
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 # name -> 1-arg SQL template
@@ -22,7 +24,9 @@ _SHIMS = {
     "cast_boolean": "CAST(({0}) AS BOOLEAN)",
 }
 
-_registered_sessions: set = set()
+# weak: a session's id() is reused once it is collected, and a new
+# session must not inherit a dead one's registration
+_registered_sessions: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def register_feathr_functions(spark: SparkSession) -> None:
@@ -31,8 +35,7 @@ def register_feathr_functions(spark: SparkSession) -> None:
     relies on this — planner-built expressions go through
     :func:`rewrite_feathr_expr`, which inlines plain CAST expressions that
     Catalyst folds (no UDF call overhead)."""
-    key = id(spark)
-    if key in _registered_sessions:
+    if spark in _registered_sessions:
         return
     for name, template in _SHIMS.items():
         body = template.format("CAST(x AS STRING)")
@@ -41,9 +44,9 @@ def register_feathr_functions(spark: SparkSession) -> None:
                 f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(x STRING) RETURNS "
                 f"{_ret_type(name)} RETURN {body}"
             )
-        except Exception:
+        except PySparkException:  # no SQL-function DDL in this Spark
             break
-    _registered_sessions.add(key)
+    _registered_sessions.add(spark)
 
 
 def _ret_type(name: str) -> str:

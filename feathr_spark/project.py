@@ -192,7 +192,10 @@ class FeathrProject:
         planning runs one small eager Spark job (a column-pruned,
         row-limited key-skew sample, memoized per source plan) before the
         lazy result DataFrame is returned. Pass an explicit strategy to
-        keep planning fully lazy.
+        keep planning fully lazy. The first read of each file source
+        (``HdfsSource``, ``ObservationSettings``) in a session also runs
+        Spark's schema-inference job(s); later reads of unchanged files
+        reuse the inferred schema and run none (see ``HdfsSource.read``).
         """
         spark = spark or self.spark
         if isinstance(observation, ObservationSettings):

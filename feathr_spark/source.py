@@ -7,9 +7,11 @@ directly — no config round-trip, no job submission.
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
-from typing import Callable, Dict, Optional
+from typing import Callable, Dict, Optional, Tuple
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +51,11 @@ class Source:
         (source.rs:286, job_client/mod.rs:806-864) — here it is simply a
         ``DataFrame -> DataFrame`` callable applied before feature
         extraction.
+
+        File sources infer their schema once per session and reuse it
+        while their file listing is unchanged (see :meth:`HdfsSource.read`),
+        so only the first load of a path in a session runs Spark's
+        inference job(s).
         """
         df = self.read(spark)
         if self.preprocessing is not None:
@@ -103,15 +110,70 @@ class HdfsSource(Source):
         return "parquet"
 
     def read(self, spark: SparkSession) -> DataFrame:
+        """Read the files at ``path`` with the schema Spark infers for them.
+
+        Inference is a Spark job (one per parquet read, two per CSV read
+        with ``inferSchema``), so each ``(format, path, options)`` is
+        inferred once per session: the inferred schema is kept with a
+        fingerprint of the file listing that read made — a hash of its
+        set of file paths, and their total bytes. A later read hands the
+        kept schema to the reader, which lists the files afresh but runs
+        no job, and keeps it only if the new listing has the same
+        fingerprint; otherwise (a file added, removed or resized) it
+        infers again. The memo is per session and dies with it, because
+        session confs (case sensitivity, parquet timestamp/binary
+        inference) shape what inference returns.
+
+        Blind spot: a rewrite in place that keeps every file name and the
+        total byte count is not seen; Spark's catalog tables have the same
+        gap and need ``REFRESH TABLE`` for it. Likewise a session conf
+        changed after a path's first read reaches that path's schema only
+        once its files change; a new session starts empty.
+        """
         fmt = self._infer_format()
-        reader = spark.read.format(fmt)
         opts = dict(self.options)
         if fmt == "csv":
             opts.setdefault("header", "true")
             opts.setdefault("inferSchema", "true")
             if self.path.lower().endswith(".tsv"):
                 opts.setdefault("sep", "\t")
-        return reader.options(**opts).load(self.path)
+
+        def reader():
+            return spark.read.format(fmt).options(**opts)
+
+        memo = _SCHEMA_MEMO.setdefault(spark, {})
+        key = (fmt, self.path, tuple(sorted(opts.items())))
+        # one .get() and one assignment: two queries may plan at once
+        hit = memo.get(key)
+        if hit is not None:
+            schema, fingerprint = hit
+            df = reader().schema(schema).load(self.path)
+            if _listing_fingerprint(df) == fingerprint:
+                return df
+        df = reader().load(self.path)
+        fingerprint = _listing_fingerprint(df)
+        if fingerprint is not None:
+            memo[key] = (df.schema, fingerprint)
+        return df
+
+
+# SparkSession -> {(format, path, options): (inferred schema, listing
+# fingerprint)}; see HdfsSource.read
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
+    weakref.WeakKeyDictionary()
+
+
+def _listing_fingerprint(df: DataFrame) -> Optional[Tuple[int, int]]:
+    """(hash of the set of file paths, their total bytes) of the file
+    listing Spark made when ``df`` was read, read off its file index in a
+    fixed number of py4j calls whatever the file count: no listing and no
+    job. None when the read is not a file relation (a format switched to
+    DataSource V2), which is then inferred on every read."""
+    try:
+        index = df._jdf.queryExecution().analyzed().relation().location()
+    except Py4JError:
+        return None
+    return index.allFiles().toSet().hashCode(), index.sizeInBytes()
 
 
 @dataclass(frozen=True)

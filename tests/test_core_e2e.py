@@ -46,6 +46,27 @@ def tiny(spark):
     return spark.createDataFrame(rows)
 
 
+def test_sql_shims_registered_in_session_reusing_dead_id(spark):
+    """CPython hands a collected session's id() to a later object. A new
+    session that gets a dead session's id must still be registered, so
+    ``cast_float`` resolves in its ad-hoc SQL."""
+    import gc
+    from feathr_spark.functions import register_feathr_functions
+    dead = set()
+    for _ in range(2000):
+        s = spark.newSession()
+        reused = id(s) in dead
+        register_feathr_functions(s)
+        if reused:
+            break
+        dead.add(id(s))
+        del s
+        gc.collect()
+    else:
+        pytest.fail("no new session reused a dead session's id")
+    assert s.sql("SELECT cast_float('1.5') AS v").first().v == 1.5
+
+
 def test_nested_cast_rewrite(spark):
     from feathr_spark.functions import feathr_expr, rewrite_feathr_expr
     assert rewrite_feathr_expr("cast_float(coalesce(a, b))") == \
