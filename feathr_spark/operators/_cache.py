@@ -27,6 +27,7 @@ from __future__ import annotations
 import contextlib
 from typing import Iterable, Iterator
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 _ATTR = "_feathr_cached_deps"
@@ -56,7 +57,7 @@ def release_intermediates(result: DataFrame) -> None:
     for f in getattr(result, _ATTR, ()):
         try:
             f.unpersist()
-        except Exception:
+        except Py4JError:
             pass  # session already stopped — nothing to release
     if hasattr(result, _ATTR):
         setattr(result, _ATTR, ())

@@ -20,6 +20,7 @@ and the entry file's vocab_growth spread duplicated this logic.
 """
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -35,14 +36,15 @@ def spread_by(df: DataFrame, col: Column) -> DataFrame:
     catches "auto" strings on exotic platforms (ValueError) and Py4J
     errors from a stale session handle in long multi-session processes,
     and falls back to the context's parallelism, then to Spark's stock
-    200. ``repartition`` runs once, outside it, so a genuine failure
+    200 (a stopped context has no JVM handle and raises AttributeError
+    there). ``repartition`` runs once, outside it, so a genuine failure
     (e.g. an unresolved column) surfaces as itself."""
     sess = df.sparkSession
     try:
         n = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
+    except (ValueError, Py4JError):
         try:
             n = sess.sparkContext.defaultParallelism
-        except Exception:
+        except (AttributeError, Py4JError):
             n = 200
     return df.repartition(n, col)

@@ -635,7 +635,22 @@ class FeathrProject:
         the whole N-cutoff pass — and each sink then receives one write per
         cutoff, ``where(feathr_cutoff == cutoff)``, newest cutoff first.
         The frame is released when the writes end, also when a sink raises.
-        An empty backfill range writes nothing and returns ``[]``."""
+        An empty backfill range writes nothing and returns ``[]``.
+
+        Before it is persisted the frame is sized from Catalyst's estimate:
+        ``k = ceil(len(cutoffs) × est / advisory)`` partitions, with ``est``
+        the analyzed plan's ``sizeInBytes`` (each source row explodes into
+        at most ``len(cutoffs)`` rows, which the estimate does not model)
+        and ``advisory`` the session's
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. It is coalesced
+        to ``k`` only when ``k`` is below ``spark.sql.shuffle.partitions``,
+        so a small backfill writes one file per cutoff per sink instead of
+        one per shuffle partition, while a large one, or a source without
+        statistics (``Long.MaxValue``), keeps the full partition count. The
+        aggregate's reduce stage, the cache and every slice write then run
+        ``k`` tasks; no job is added. The frame is persisted, not
+        local-checkpointed: a checkpoint drops lineage, so a lost executor
+        would fail the backfill instead of recomputing its partitions."""
         spark = spark or self.spark
         bt = settings.backfill_time
         if bt is None:
@@ -646,6 +661,15 @@ class FeathrProject:
         df = self.compute_backfill(spark, settings.feature_names, bt)
         reused = len(cutoffs) * len(settings.sinks) > 1
         if reused:
+            # the analyzed plan's stats: the optimized plan's would run an
+            # optimizer pass that persist() repeats anyway
+            est = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+            advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+                .byteStringAsBytes(spark.conf.get(
+                    "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+            k = max(1, -(-len(cutoffs) * est // advisory))
+            if k < int(spark.conf.get("spark.sql.shuffle.partitions")):
+                df = df.coalesce(k)
             df = df.persist()
         try:
             for cutoff in cutoffs:

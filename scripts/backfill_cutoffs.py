@@ -12,18 +12,23 @@ as they are) and writes under ``.perfbench/``, like perfbench.
 
 For each cutoff count it runs one untimed warm-up job, then ``--reps``
 timed jobs, the counts interleaved. Per count it prints the Spark jobs
-one ``materialize_features`` call launches, the median CPU seconds of
-this process and its descendants less JIT threads (``run.engine_cpu_s``)
-and wall seconds, the rows written and a SHA-256 digest of the written
-rows, sorted. Run it in two checkouts to check that their outputs are
-bit-identical. Every job's rows per cutoff, and every cutoff of the
-warm-up job in full, are checked against perfbench's DuckDB/numpy
-oracle; a mismatch exits with code 1. The last line is one JSON object.
+one timed ``materialize_features`` call launches (the first warm-up job
+also pays the session's schema inference, so its count is not used),
+the most parquet files written for one cutoff, the median CPU seconds
+of this process and its descendants less JIT threads
+(``run.engine_cpu_s``) and wall seconds, the rows written and a SHA-256
+digest of the written rows, sorted. Run it in two checkouts to check
+that their outputs are bit-identical. Every job's rows per cutoff, and
+every cutoff of the warm-up job in full, are checked against
+perfbench's DuckDB/numpy oracle; a mismatch, or timed jobs of one count
+that differ in job count, file count or digest, exits with code 1. The
+last line is one JSON object.
 """
 
 from __future__ import annotations
 
 import argparse
+import collections
 import hashlib
 import json
 import os
@@ -46,6 +51,16 @@ def _digest(path: str) -> str:
                   key=lambda r: (r["feathr_cutoff"], r["user_id"]))
     body = json.dumps([table.column_names, rows], default=str)
     return hashlib.sha256(body.encode()).hexdigest()
+
+
+def _files_per_cutoff(path: str) -> int:
+    """The most parquet files any one cutoff was written to."""
+    import pyarrow.parquet as pq
+    files = collections.Counter()
+    for f in Path(path).glob("part-*.parquet"):
+        cuts = pq.read_table(f, columns=["feathr_cutoff"]).column(0).unique()
+        files.update(cuts.to_pylist())
+    return max(files.values(), default=0)
 
 
 def main(argv=None) -> int:
@@ -85,7 +100,9 @@ def main(argv=None) -> int:
     out_root = work / "out" / "backfill_cutoffs"
     problems: list = []
     samples = {n: [] for n in counts}
-    jobs, rows, digests = {}, {}, {n: set() for n in counts}
+    rows, digests = {}, {n: set() for n in counts}
+    jobs = {n: set() for n in counts}
+    files = {n: set() for n in counts}
 
     def one_job(n: int, tag: str, full_check: bool):
         bt = fs.BackfillTime(start=end - timedelta(days=n), end=end,
@@ -116,17 +133,19 @@ def main(argv=None) -> int:
             for c in cutoffs:
                 problems.extend(oracle.compare_snapshot(data, path, c))
         digests[n].add(_digest(path))
+        n_files = _files_per_cutoff(path)
         shutil.rmtree(path, ignore_errors=True)
-        return n_jobs, sum(got.values()), took_cpu, took
+        return n_jobs, n_files, sum(got.values()), took_cpu, took
 
     try:
         for n in counts:
-            jobs[n], rows[n], _, _ = one_job(n, "warmup", full_check=True)
+            _, _, rows[n], _, _ = one_job(n, "warmup", full_check=True)
         for rep in range(args.reps):
             for n in counts:
-                n_jobs, rows[n], took_cpu, took = one_job(n, str(rep), False)
-                if n_jobs != jobs[n]:
-                    problems.append(f"{n} cutoffs: {n_jobs} jobs, warm-up had {jobs[n]}")
+                n_jobs, n_files, rows[n], took_cpu, took = \
+                    one_job(n, str(rep), False)
+                jobs[n].add(n_jobs)
+                files[n].add(n_files)
                 samples[n].append((took_cpu, took))
     finally:
         run._stop(spark)
@@ -135,14 +154,18 @@ def main(argv=None) -> int:
     for n in counts:
         cpu = statistics.median(s[0] for s in samples[n])
         wall = statistics.median(s[1] for s in samples[n])
-        if len(digests[n]) != 1:
-            problems.append(f"{n} cutoffs: output differs between jobs")
-        digest = sorted(digests[n])[0]
-        print(f"cutoffs={n:<3d} jobs={jobs[n]:<3d} cpu_s={cpu:.3f} wall_s={wall:.3f} "
-              f"(median of {len(samples[n])}) rows={rows[n]} digest={digest[:16]}")
-        result[str(n)] = {"jobs": jobs[n], "cpu_s": round(cpu, 4),
-                          "wall_s": round(wall, 4), "rows": rows[n],
-                          "digest": digest}
+        for what, seen in (("output", digests[n]), ("job count", jobs[n]),
+                           ("file count", files[n])):
+            if len(seen) != 1:
+                problems.append(f"{n} cutoffs: {what} differs between jobs: "
+                                f"{sorted(seen)}")
+        digest, n_jobs, n_files = (max(x) for x in (digests[n], jobs[n], files[n]))
+        print(f"cutoffs={n:<3d} jobs={n_jobs:<3d} files/cutoff={n_files:<2d} "
+              f"cpu_s={cpu:.3f} wall_s={wall:.3f} (median of {len(samples[n])}) "
+              f"rows={rows[n]} digest={digest[:16]}")
+        result[str(n)] = {"jobs": n_jobs, "files_per_cutoff": n_files,
+                          "cpu_s": round(cpu, 4), "wall_s": round(wall, 4),
+                          "rows": rows[n], "digest": digest}
     for p in problems:
         print(f"problem: {p}", file=sys.stderr)
     print(json.dumps({"seed": args.seed, "cores": cores, "correct": not problems,

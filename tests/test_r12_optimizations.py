@@ -152,3 +152,51 @@ def test_spread_by_repartitions_once_and_surfaces_failure(spark):
     assert calls == [int(spark.conf.get("spark.sql.shuffle.partitions"))]
     assert spread_by(spark.range(8), F.col("id")).rdd.getNumPartitions() \
         == calls[0]
+
+
+def test_spread_by_falls_back_only_on_named_errors(spark, monkeypatch):
+    """The partition-count lookup falls back to the context's parallelism
+    on a non-integer value (ValueError); any other error from the lookup
+    propagates instead of being swallowed."""
+    from pyspark.sql.conf import RuntimeConfig
+    from feathr_spark.operators._partition import spread_by
+    real_get = RuntimeConfig.get
+
+    def conf_get(value):
+        def get(self, key, *default):
+            if key == "spark.sql.shuffle.partitions":
+                if isinstance(value, Exception):
+                    raise value
+                return value
+            return real_get(self, key, *default)
+        return get
+
+    monkeypatch.setattr(RuntimeConfig, "get", conf_get("auto"))
+    assert spread_by(spark.range(8), F.col("id")).rdd.getNumPartitions() \
+        == spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(RuntimeConfig, "get", conf_get(KeyError("lookup bug")))
+    with pytest.raises(KeyError, match="lookup bug"):
+        spread_by(spark.range(8), F.col("id"))
+
+
+def test_release_intermediates_propagates_real_failures(spark):
+    """release_intermediates stays quiet only for a stopped session (a
+    Py4J error from unpersist); any other failure of a dependency's
+    unpersist propagates."""
+    from py4j.protocol import Py4JError
+    from feathr_spark.operators._cache import (
+        attach_intermediates, cached_deps, release_intermediates)
+
+    class Dep:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def unpersist(self):
+            raise self.exc
+
+    stopped = attach_intermediates(spark.range(1), [Dep(Py4JError("stopped"))])
+    release_intermediates(stopped)
+    assert cached_deps(stopped) == ()
+    broken = attach_intermediates(spark.range(1), [Dep(ValueError("bad dep"))])
+    with pytest.raises(ValueError, match="bad dep"):
+        release_intermediates(broken)

@@ -540,6 +540,92 @@ def test_materialize_releases_cache(spark, tmp_path):
     assert persisted() <= before
 
 
+def _backfill_files(spark, tmp_path, n_keys=200):
+    """2-sink × 3-cutoff backfill of a parquet source with ``n_keys`` keys
+    (windowed SUM, COUNT and LATEST). Returns the project, the features, the
+    cutoffs, the two sink paths and, per sink, a Counter of parquet files
+    per cutoff; every file holds exactly one cutoff."""
+    import collections
+    import glob
+    import pyarrow.parquet as pq
+    from feathr_spark.materialization import (
+        BackfillTime, GenericSink, MaterializationSettings)
+    from feathr_spark.source import HdfsSource, TimeWindowParameters
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame([
+        Row(k=k, t=dt.datetime(2024, 1, 1) + dt.timedelta(hours=7 * i + k % 7),
+            v=float(k * i))
+        for k in range(n_keys) for i in range(1, 4)]).write.parquet(src_path)
+    p = FeathrProject("sized", spark)
+    key = [TypedKey(key_column="k")]
+    p.register_anchor(FeatureAnchor(
+        name="agg", source=HdfsSource(
+            name="src", path=src_path,
+            time_window_parameters=TimeWindowParameters("t")),
+        features=[
+            Feature(name="v_sum_1d", key=key,
+                    transform=WindowAggTransform("v", Aggregation.SUM, "1d")),
+            Feature(name="v_cnt_2d", key=key,
+                    transform=WindowAggTransform("1", Aggregation.COUNT, "2d")),
+            Feature(name="v_latest", transform="v", key=key),
+        ]))
+    feats = ["v_sum_1d", "v_cnt_2d", "v_latest"]
+    bt = BackfillTime(start=ts("2024-01-01 12:00:00"),
+                      end=ts("2024-01-04 12:00:00"), step="DAILY")
+    paths = [str(tmp_path / s) for s in ("a", "b")]
+    written = p.materialize_features(MaterializationSettings(
+        name="sized", feature_names=feats, backfill_time=bt,
+        sinks=[GenericSink(path=d, mode="append") for d in paths]))
+    assert written == bt.cutoffs() and len(written) == 3
+    files = []
+    for d in paths:
+        per_cutoff = collections.Counter()
+        for f in glob.glob(f"{d}/part-*.parquet"):
+            cuts = set(pq.read_table(f, columns=["feathr_cutoff"])
+                       .column(0).to_pylist())
+            assert len(cuts) == 1, (f, cuts)
+            per_cutoff[cuts.pop()] += 1
+        files.append(per_cutoff)
+    return p, feats, written, paths, files
+
+
+def test_materialize_small_backfill_one_file_per_cutoff(spark, tmp_path):
+    """The persisted backfill frame is coalesced to its estimated size: a
+    small 2-sink × 3-cutoff backfill writes one parquet file per cutoff per
+    sink, not one per shuffle partition, and each slice is still that
+    cutoff's snapshot."""
+    p, feats, cutoffs, paths, files = _backfill_files(spark, tmp_path)
+    want = {c.strftime("%Y-%m-%d %H:%M:%S"): 1 for c in cutoffs}
+    assert files == [want, want]
+    for d in paths:
+        got = spark.read.parquet(d)
+        for c in cutoffs:
+            snap = p.compute_snapshot(spark, feats, c)
+            slice_ = got.where(F.col("feathr_cutoff") == c.strftime(
+                "%Y-%m-%d %H:%M:%S")).select(*snap.columns)
+            assert sorted(slice_.collect()) == sorted(snap.collect())
+
+
+def test_materialize_size_check_decides_coalesce(spark, tmp_path):
+    """With a 1 KiB advisory partition size the same backfill's estimate
+    asks for at least the shuffle partition count, so the frame is not
+    coalesced and every cutoff writes one file per non-empty shuffle
+    partition (all of them, at 200 keys)."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1k")
+    try:
+        _, _, cutoffs, _, files = _backfill_files(spark, tmp_path)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    want = {c.strftime("%Y-%m-%d %H:%M:%S"): n for c in cutoffs}
+    assert files == [want, want]
+
+
 def test_key_alias_reuse(spark):
     """with_key: one feature joined under two different observation key
     columns (viewer/viewee pattern, reference feature.rs:224-241)."""
