@@ -6,42 +6,75 @@ event time *t*, aggregate ``def_expr`` over source rows with key *k* and
 source event time in ``(t − window, t]``, after applying ``filter``,
 optionally sub-grouped by ``group_by`` keeping at most ``limit`` groups.
 
-Two physical strategies, chosen per feature group:
+Two physical strategies, chosen per source:
 
-**union-window (default).** Tag source rows and observation rows, union
-them on (key, epoch_ms), and compute every aggregate with
-``Window.partitionBy(keys).orderBy(t).rangeBetween(-(w-1), 0)`` where the
-aggregated value is NULL on observation rows. One shuffle + one sort per
-(source, key-set) group — *no join, no row explosion* — and every window
-length / agg function over the same group shares that single
-shuffle+sort. This is the 100 TB-safe plan: cost is O(|obs|+|src|) state,
-skew handled by AQE; contrast with the naive interval join whose output is
+**lane-ordered window (``union_window``, the default).** Every source on
+one observation key set is unioned with the observation rows into ONE
+frame, partitioned by the keys and sorted by a lane-ordered epoch
+``__feathr_o = __feathr_t + p``: observation rows use p = 0, source
+group i uses p_i = (2i+1)·2^49 ms. Each feature of group i is one
+aggregate over ``rangeBetween(p_i − w + 1, p_i)``. So one shuffle, one
+sort and one Window pass serve every source and every window length —
+*no join, no row explosion*, cost O(|obs| + Σ|src|) state, skew handled
+by AQE; contrast with the naive interval join whose output is
 O(|obs| × rows-per-window).
 
-**interval-join (for group_by/limit).** Equi-join on keys with a range
-predicate, then two-level groupBy. Used only when the aggregation has a
-``group_by`` sub-clause, whose grouped top-k output is not expressible as
-a window aggregate. The join is a plain shuffled equi-join on the entity
-key; the range predicate is applied post-join (Catalyst pushes it into the
+  * *Exactness.* An observation row at t sees, in group i's frame,
+    exactly group i's source rows with event time in (t − w, t], in
+    time order: the rows, in the order, that a per-source window over
+    (key, t) would fold, minus the NULL-valued observation rows that no
+    aggregate counts. So the result is bit-identical to one window per
+    source. LATEST, NOP and DECAY read the raw ``__feathr_t``, never the
+    lane-shifted order value.
+  * *Why lanes.* Observation rows are in no frame buffer, so a frame's
+    aggregate is recomputed only when a source row enters or leaves it
+    (Spark's sliding frame re-folds its whole buffer on every change).
+    A source row's frames fall on ranges holding no row at all: two odd
+    multiples of 2^49 sum to an even one, and even multiples other than
+    0 hold no rows.
+  * *Bounds.* Spark timestamps span 0001-01-01 … 9999-12-31, about
+    3.2e14 ms; 2^49 ms ≈ 5.6e14 leaves room for any window up to
+    ``MAX_WINDOW_MS`` (≈ 7,840 years) — a longer window raises
+    ``ValueError`` at plan time, and an event time outside the range
+    raises at run time (it must never land in another lane). The largest
+    order value plus frame offset, (4N − 2)·2^49 plus the time range,
+    stays below 2^63 for up to ``MAX_LANES`` groups.
+
+**interval-join (for group_by/limit, or a skewed key).** Equi-join on
+keys with a range predicate, then two-level groupBy. Used when the
+aggregation has a ``group_by`` sub-clause, whose grouped top-k output is
+not expressible as a window aggregate, and when the skew sample finds
+one hot key. The join is a plain shuffled equi-join on the entity key;
+the range predicate is applied post-join (Catalyst pushes it into the
 join when profitable).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import List, Sequence
+from typing import Dict, List, Sequence, Tuple
 
 from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from ..functions import feathr_expr
-from ..model import Aggregation, WindowAggTransform
+from ..model import WindowAggTransform
 from .aggregations import make_agg, simple_agg
 
-_T = "__feathr_t"          # epoch millis ordering column
+_T = "__feathr_t"          # epoch millis (event time)
+_O = "__feathr_o"          # lane-ordered epoch: _T + the row's lane offset
 _TAG = "__feathr_is_obs"   # 1 = observation row, NULL = source row
+
+_LANE = 1 << 49                 # ms between an offset and the next lane's
+_T_MIN = -62_135_596_800_000    # 0001-01-01 00:00:00.000 UTC
+_T_MAX = 253_402_300_799_999    # 9999-12-31 23:59:59.999 UTC
+# the longest window whose frames stay inside their own lane
+MAX_WINDOW_MS = _LANE - (_T_MAX - _T_MIN)
+# (4N − 2)·2^49 + _T_MAX, the largest order value plus frame offset, < 2^63
+MAX_LANES = ((1 << 63) - _T_MAX) // (4 * _LANE)
 
 
 @dataclass(frozen=True)
@@ -50,10 +83,22 @@ class WindowFeatureSpec:
     transform: WindowAggTransform
 
 
-def _value_col(t: WindowAggTransform) -> Column:
-    v = feathr_expr(t.def_expr)
-    if t.filter:
-        v = F.when(feathr_expr(t.filter), v)
+@dataclass(frozen=True, eq=False)
+class PitSource:
+    """One source's windowed features for :func:`point_in_time_join`:
+    ``src_keys`` match the observation's ``obs_keys`` positionally and
+    ``src_ts`` is a TimestampType column."""
+    df: DataFrame
+    obs_keys: Sequence[str]
+    src_keys: Sequence[str]
+    src_ts: str
+    specs: Sequence[WindowFeatureSpec]
+
+
+def _value_col(def_expr: str, filter_expr) -> Column:
+    v = feathr_expr(def_expr)
+    if filter_expr:
+        v = F.when(feathr_expr(filter_expr), v)
     return v
 
 
@@ -118,24 +163,43 @@ def point_in_time_aggregate(
     specs: Sequence[WindowFeatureSpec],
     strategy: str = "auto",
 ) -> DataFrame:
-    """Attach one column per spec to ``obs``.
+    """Attach one column per spec to ``obs``: the one-source case of
+    :func:`point_in_time_join`.
 
     ``obs_keys``/``src_keys`` are positionally matched join columns.
     ``obs_ts``/``src_ts`` are TimestampType column names.
+    """
+    return point_in_time_join(
+        obs, obs_ts, [PitSource(source, obs_keys, src_keys, src_ts, specs)],
+        strategy)
 
-    ``strategy`` selects the physical plan for simple (non-group_by) specs:
 
-    * ``"auto"`` (default) — :func:`choose_pit_strategy` samples the
+def point_in_time_join(
+    obs: DataFrame,
+    obs_ts: str,
+    sources: Sequence[PitSource],
+    strategy: str = "auto",
+) -> DataFrame:
+    """Attach one column per spec of every source to ``obs``, in source
+    then spec order (each source's ``group_by`` specs after its simple
+    ones). ``obs_ts`` is the observation's TimestampType column.
+
+    ``strategy`` selects the physical plan for each source's simple
+    (non-group_by) specs:
+
+    * ``"auto"`` (default) — :func:`choose_pit_strategy` samples each
       source's key distribution and picks ``interval_join`` when one key
       tuple dominates (≥20% of the sample), else ``union_window``.
-    * ``"union_window"`` — one shuffle+sort, no row explosion;
-      the right choice almost always. Its one weakness is a pathologically
-      hot entity key: window functions need a key's full history in one
-      task and AQE cannot split it.
-    * ``"interval_join"`` — shuffled equi-join on the key + range predicate
-      + groupBy(distinct key/timestamp combo). Output is O(|obs| ×
-      rows-per-window), but AQE's skew-join splitting applies, so a single
-      mega-key spreads over many tasks. Pick this when key skew dominates.
+    * ``"union_window"`` — the lane-ordered window: all such sources on
+      one ``obs_keys`` share one shuffle, one sort and one Window pass, with no row
+      explosion; the right choice almost always. Its one weakness is a
+      pathologically hot entity key: window functions need a key's full
+      history in one task and AQE cannot split it.
+    * ``"interval_join"`` — shuffled equi-join on the key + range
+      predicate + groupBy(distinct key/timestamp combo). Output is
+      O(|obs| × rows-per-window), but AQE's skew-join splitting applies,
+      so a single mega-key spreads over many tasks. Pick this when key
+      skew dominates.
 
     Both strategies compute identical results (property-tested, including
     null keys/timestamps).
@@ -145,89 +209,137 @@ def point_in_time_aggregate(
     NULL timestamp never contribute to any window; observation rows with a
     NULL key or timestamp get empty-window aggregates (NULL, COUNT 0).
     """
-    simple = [s for s in specs if s.transform.group_by is None]
-    grouped = [s for s in specs if s.transform.group_by is not None]
+    lanes: Dict[Tuple[str, ...], List[PitSource]] = {}
+    joins: List[PitSource] = []
+    grouped: List[Tuple[PitSource, WindowFeatureSpec]] = []
+    for src in sources:
+        simple = [s for s in src.specs if s.transform.group_by is None]
+        if simple:
+            how = strategy
+            if how == "auto":
+                how = choose_pit_strategy(src.df, src.src_keys)
+            part = PitSource(src.df, src.obs_keys, src.src_keys, src.src_ts, simple)
+            if how == "union_window":
+                lanes.setdefault(tuple(src.obs_keys), []).append(part)
+            elif how == "interval_join":
+                joins.append(part)
+            else:
+                raise ValueError(f"unknown point-in-time strategy: {how}")
+        grouped += [(src, s) for s in src.specs if s.transform.group_by is not None]
     out = obs
-    if simple:
-        if strategy == "auto":
-            strategy = choose_pit_strategy(source, src_keys)
-        if strategy == "interval_join":
-            out = _interval_join_simple(out, source, obs_keys, src_keys,
-                                        obs_ts, src_ts, simple)
-        elif strategy == "union_window":
-            out = _union_window(out, source, obs_keys, src_keys, obs_ts, src_ts, simple)
-        else:
-            raise ValueError(f"unknown point-in-time strategy: {strategy}")
-    for s in grouped:
-        out = _interval_join_grouped(out, source, obs_keys, src_keys, obs_ts, src_ts, s)
+    for obs_keys, group in lanes.items():
+        out = _lane_window(out, obs_keys, obs_ts, group)
+    for src in joins:
+        out = _interval_join_simple(out, src.df, src.obs_keys, src.src_keys,
+                                    obs_ts, src.src_ts, src.specs)
+    for src, s in grouped:
+        out = _interval_join_grouped(out, src.df, src.obs_keys, src.src_keys,
+                                     obs_ts, src.src_ts, s)
+    names = _output_names(sources)
+    attached = _output_names([p for g in lanes.values() for p in g] + joins)
+    if attached + [s.out_name for _, s in grouped] != names:
+        out = out.select(*[F.col(_quote(c)) for c in obs.columns + names])
     return out
 
 
-def _union_window(
+def _output_names(sources: Sequence[PitSource]) -> List[str]:
+    """Feature columns in output order: per source, its simple specs,
+    then its ``group_by`` ones."""
+    return [s.out_name for src in sources for grouped in (False, True)
+            for s in src.specs if (s.transform.group_by is not None) == grouped]
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+# The projections below are SQL strings: one py4j call per column instead
+# of one per operator keeps the planning call cheap.
+def _sql_ref(col: str) -> str:
+    """SQL for ``F.col(col)``: dots separate nested fields, and a name
+    with backticks is already quoted."""
+    return col if "`" in col else ".".join(map(_quote, col.split(".")))
+
+
+def _epoch_ms(ts: str) -> str:
+    return f"unix_millis(CAST({_sql_ref(ts)} AS TIMESTAMP))"
+
+
+def _lane_order(ts: str, offset: int) -> str:
+    """``unix_millis(ts) + offset AS __feathr_o``, raising on an event
+    time outside Spark's timestamp range: such a time would fall into
+    another lane."""
+    t = _epoch_ms(ts)
+    return (f"CASE WHEN {t} < {_T_MIN} OR {t} > {_T_MAX} THEN raise_error("
+            "concat('point-in-time event time outside 0001-01-01..9999-12-31: ', "
+            f"CAST({t} AS STRING), ' ms')) ELSE {t} + {offset} END AS {_O}")
+
+
+def _lane_window(
     obs: DataFrame,
-    source: DataFrame,
     obs_keys: Sequence[str],
-    src_keys: Sequence[str],
     obs_ts: str,
-    src_ts: str,
-    specs: Sequence[WindowFeatureSpec],
+    lanes: Sequence[PitSource],
 ) -> DataFrame:
-    # Deduplicate identical (def_expr, filter) value expressions: N aggs over
-    # the same input shuffle ONE value column, not N (shuffle bytes scale
-    # with width; e.g. avg/max/min/sum/count of one expr share a column).
-    expr_index: dict = {}
-    spec_val: List[str] = []
-    for s in specs:
-        key = (s.transform.def_expr, s.transform.filter)
-        if key not in expr_index:
-            expr_index[key] = f"__feathr_v{len(expr_index)}"
-        spec_val.append(expr_index[key])
-    val_cols = list(expr_index.values())
-
-    # Source side: only keys + ordering + value columns survive the union —
-    # column pruning reaches the parquet scan.
-    uniq_specs = {vc: key for key, vc in expr_index.items()}
-    src_proj = source.select(
-        *[F.col(sk).alias(ok) for sk, ok in zip(src_keys, obs_keys)],
-        F.unix_millis(F.col(src_ts).cast("timestamp")).alias(_T),
-        *[
-            _value_col(WindowAggTransform(def_expr=de, agg_func=Aggregation.NOP,
-                                          window="1d", filter=flt)).alias(vc)
-            for vc, (de, flt) in uniq_specs.items()
-        ],
-    )
-    # NULL-key/NULL-ts source rows never contribute (SQL join semantics —
-    # Window.partitionBy would otherwise group NULL keys together and
-    # aggregate them, diverging from the interval-join strategy and the
-    # reference's join behavior).
-    null_free = F.col(_T).isNotNull()
-    for k in obs_keys:
-        null_free = null_free & F.col(k).isNotNull()
-    src_proj = src_proj.where(null_free)
-    obs_tagged = obs.withColumn(_T, F.unix_millis(F.col(obs_ts).cast("timestamp"))).withColumn(_TAG, F.lit(1))
-    unioned = obs_tagged.unionByName(src_proj, allowMissingColumns=True)
-
-    ts_for_order = F.col(_T)
+    if len(lanes) > MAX_LANES:
+        raise ValueError(f"{len(lanes)} windowed sources on one key exceed "
+                         f"the {MAX_LANES} lanes of one window pass")
+    parts = [obs.select("*", F.expr(f"{_epoch_ms(obs_ts)} AS {_T}"),
+                        F.expr(_lane_order(obs_ts, 0)), F.lit(1).alias(_TAG))]
+    by_key = Window.partitionBy(*obs_keys).orderBy(_O)
+    frames: Dict[Tuple[int, int], WindowSpec] = {}
     out_cols: List[Column] = []
-    for s, vc in zip(specs, spec_val):
-        wms = s.transform.window_ms
-        # (t − w, t] with millisecond granularity: rangeBetween is
-        # inclusive on both ends, so shift the lower bound by 1 ms.
-        frame = (
-            Window.partitionBy(*obs_keys)
-            .orderBy(_T)
-            .rangeBetween(-(wms - 1), Window.currentRow)
-        )
-        # obs_ts: in the post-transform's select context F.col(_T) is the
-        # CURRENT (observation) row's epoch — the same name the frame rows
-        # contributed to the aggregate state refers, per row, to each
-        # source event's epoch. DECAY uses both.
-        agg, post = make_agg(s.transform.agg_func, F.col(vc), ts_for_order,
-                             s.transform.agg_param, obs_ts=F.col(_T))
-        out_cols.append(post(agg.over(frame)).alias(s.out_name))
+    val_cols: List[str] = []
+    for i, src in enumerate(lanes):
+        p = (2 * i + 1) * _LANE
+        # Deduplicate identical (def_expr, filter) value expressions within
+        # the lane: N aggs over the same input shuffle ONE value column,
+        # not N (shuffle bytes scale with width; e.g. avg/max/min/sum/count
+        # of one expr share a column).
+        lane_vals: Dict[Tuple, str] = {}
+        for s in src.specs:
+            t = s.transform
+            wms = t.window_ms
+            if not 0 < wms <= MAX_WINDOW_MS:
+                raise ValueError(
+                    f"{s.out_name}: window of {wms} ms is outside "
+                    f"(0, {MAX_WINDOW_MS}] ms, the point-in-time lane bound")
+            vc = lane_vals.setdefault((t.def_expr, t.filter),
+                                      f"__feathr_l{i}_v{len(lane_vals)}")
+            # (t − w, t] in this lane: rangeBetween is inclusive on both
+            # ends, so the lower bound is shifted by 1 ms.
+            frame = frames.get((i, wms))
+            if frame is None:
+                frame = frames[(i, wms)] = by_key.rangeBetween(p - wms + 1, p)
+            # In the select, F.col(_T) is the CURRENT (observation) row's
+            # epoch; inside the aggregate it is each frame row's own event
+            # time. DECAY uses both; LATEST/NOP order by the latter.
+            agg, post = make_agg(t.agg_func, F.col(vc), F.col(_T),
+                                 t.agg_param, obs_ts=F.col(_T))
+            out_cols.append(post(agg.over(frame)).alias(s.out_name))
+        val_cols += lane_vals.values()
+        # Source side: only keys + ordering + value columns survive the
+        # union — column pruning reaches the parquet scan. NULL-key/NULL-ts
+        # source rows never contribute (SQL join semantics — the partition
+        # would otherwise group NULL keys together and aggregate them,
+        # diverging from the interval-join strategy and the reference's
+        # join behavior).
+        null_free = " AND ".join(f"{c} IS NOT NULL" for c in
+                                 [_epoch_ms(src.src_ts)]
+                                 + [_sql_ref(k) for k in src.src_keys])
+        parts.append(src.df.where(F.expr(null_free)).select(
+            *[F.expr(f"{_sql_ref(sk)} AS {_quote(ok)}")
+              for sk, ok in zip(src.src_keys, obs_keys)],
+            F.expr(f"{_epoch_ms(src.src_ts)} AS {_T}"),
+            F.expr(_lane_order(src.src_ts, p)),
+            *[_value_col(de, flt).alias(vc)
+              for (de, flt), vc in lane_vals.items()]))
 
+    unioned = parts[0]
+    for part in parts[1:]:
+        unioned = unioned.unionByName(part, allowMissingColumns=True)
     result = unioned.select("*", *out_cols).where(F.col(_TAG) == 1)
-    return result.drop(_T, _TAG, *val_cols)
+    return result.drop(_T, _O, _TAG, *val_cols)
 
 
 def _interval_join_simple(
@@ -261,7 +373,8 @@ def _interval_join_simple(
     right = source.select(
         *[F.col(k).alias(a) for k, a in zip(src_keys, kcols)],
         F.unix_millis(F.col(src_ts).cast("timestamp")).alias("__st"),
-        *[_value_col(s.transform).alias(f"__v{i}") for i, s in enumerate(specs)],
+        *[_value_col(s.transform.def_expr, s.transform.filter).alias(f"__v{i}")
+          for i, s in enumerate(specs)],
     )
     cond = [left[a] == right[a] for a in kcols]
     # range predicate INSIDE the left-join condition: combos whose matches
@@ -314,7 +427,7 @@ def _interval_join_grouped(
     right = source.select(
         *[F.col(k).alias(a) for k, a in zip(src_keys, kcols)],
         F.unix_millis(F.col(src_ts).cast("timestamp")).alias("__st"),
-        _value_col(t).alias("__v"),
+        _value_col(t.def_expr, t.filter).alias("__v"),
         feathr_expr(t.group_by).alias("__g"),
     )
     cond = [left[a] == right[a] for a in kcols]

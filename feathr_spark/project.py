@@ -28,7 +28,8 @@ from .feature import DerivedFeature, FeathrError, Feature, FeatureAnchor
 from .functions import feathr_expr, register_feathr_functions
 from .materialization import DATETIME_FMT, MaterializationSettings
 from .model import ExpressionTransform, UdfTransform, WindowAggTransform
-from .operators.point_in_time import WindowFeatureSpec, point_in_time_aggregate
+from .operators.point_in_time import (
+    PitSource, WindowFeatureSpec, point_in_time_join)
 from .source import EVENT_TS_COL, ObservationSettings, Source
 
 
@@ -175,18 +176,21 @@ class FeathrProject:
         frame (reference project.rs:248-278). Returns a lazy DataFrame.
 
         ``time_prune=True`` eagerly computes the observation's event-time
-        bounds (one tiny aggregate job) and restricts every windowed
-        source scan to ``[min_obs_ts − max_window, max_obs_ts]`` — at
-        scale this reaches parquet row-group/partition pruning (SURVEY §4
-        'partition pruning by time'). Leave False when observation ≈
-        source (self-join shape) where it prunes nothing.
+        bounds (one tiny aggregate job per call, over the observation
+        frame, shared by every windowed group and query) and restricts
+        every windowed source scan to ``(min_obs_ts − max_window,
+        max_obs_ts]`` — at scale this reaches parquet row-group/partition
+        pruning (SURVEY §4 'partition pruning by time'). Leave False when
+        observation ≈ source (self-join shape) where it prunes nothing.
 
         ``pit_strategy`` selects the windowed-feature physical plan:
-        ``"auto"`` (default — samples the source key distribution and
+        ``"auto"`` (default — samples each source's key distribution and
         switches to the skew-tolerant plan when one key dominates),
-        ``"union_window"`` (one shuffle+sort, no row explosion) or
-        ``"interval_join"`` (AQE-skew-splittable; pick when one entity
-        key dominates the source). See operators.point_in_time.
+        ``"union_window"`` (the lane-ordered window: every such source on
+        one observation key set shares one shuffle, one sort and one
+        Window pass, with no row explosion) or ``"interval_join"``
+        (AQE-skew-splittable; pick when one entity key dominates the
+        source). See operators.point_in_time.
 
         Note: with ``pit_strategy="auto"`` and windowed features present,
         planning runs one small eager Spark job (a column-pruned,
@@ -210,13 +214,28 @@ class FeathrProject:
         register_feathr_functions(spark)
 
         queries = [feature_query] if isinstance(feature_query, FeatureQuery) else list(feature_query)
+        bounds: list = []
+
+        def obs_bounds() -> Optional[Tuple[int, int]]:
+            # one eager job, on the observation frame itself, for all groups
+            if not bounds:
+                r = obs_df.select(
+                    F.unix_millis(F.min(EVENT_TS_COL).cast("timestamp")).alias("lo"),
+                    F.unix_millis(F.max(EVENT_TS_COL).cast("timestamp")).alias("hi"),
+                ).first()
+                bounds.append((r.lo, r.hi) if r and r.lo is not None else None)
+            return bounds[0]
+
         out = obs_df
         for q in queries:
-            out = self._apply_query(spark, out, q, time_prune, pit_strategy)
+            out = self._apply_query(spark, out, q,
+                                    obs_bounds if time_prune else None,
+                                    pit_strategy)
         return out.drop(EVENT_TS_COL)
 
     def _apply_query(self, spark: SparkSession, obs: DataFrame, q: FeatureQuery,
-                     time_prune: bool, pit_strategy: str) -> DataFrame:
+                     obs_bounds: Optional[Callable[[], Optional[Tuple[int, int]]]],
+                     pit_strategy: str) -> DataFrame:
         anchor_feats, derived_order = self._resolve(q.feature_list)
 
         def obs_keys_for(f: Feature) -> List[str]:
@@ -249,9 +268,19 @@ class FeathrProject:
         for (src_name, src_keys, obs_keys), feats in joins.items():
             out = self._attach_keyed_join(spark, out, src_keys, obs_keys, feats)
 
-        for (src_name, src_keys, obs_keys), feats in windows.items():
-            out = self._attach_windowed(spark, out, src_keys, obs_keys, feats,
-                                        time_prune, pit_strategy)
+        # ---- windowed groups: ONE point-in-time call, so the union-window
+        # sources on one observation key set share one shuffle, sort and
+        # Window pass ----
+        if windows:
+            if EVENT_TS_COL not in out.columns:
+                raise FeathrError(
+                    "windowed features require observation timestamp settings "
+                    "(ObservationSettings.timestamp_column)")
+            sources = [self._windowed_source(spark, src_keys, obs_keys, feats,
+                                             obs_bounds)
+                       for (_, src_keys, obs_keys), feats in windows.items()]
+            out = point_in_time_join(out, EVENT_TS_COL, sources,
+                                     strategy=pit_strategy)
 
         # ---- derived features: topo-ordered column expressions ----
         for d in derived_order:
@@ -288,66 +317,61 @@ class FeathrProject:
             feature_df = F.broadcast(feature_df)
         return obs.join(feature_df, on=list(obs_keys), how="left")
 
-    def _attach_windowed(self, spark: SparkSession, obs: DataFrame,
-                         src_keys: Sequence[str], obs_keys: Sequence[str],
+    def _windowed_source(self, spark: SparkSession, src_keys: Sequence[str],
+                         obs_keys: Sequence[str],
                          feats: List[Tuple[FeatureAnchor, Feature]],
-                         time_prune: bool, pit_strategy: str) -> DataFrame:
-        if EVENT_TS_COL not in obs.columns:
-            raise FeathrError(
-                "windowed features require observation timestamp settings "
-                "(ObservationSettings.timestamp_column)")
+                         obs_bounds: Optional[Callable[[], Optional[Tuple[int, int]]]],
+                         ) -> PitSource:
+        """One windowed group's source frame and specs. ``obs_bounds``
+        (time_prune only) returns the observation's event-time bounds in
+        epoch ms, or None for no non-NULL time; the source scan is then
+        restricted to ``(lo − max_window, hi]``."""
         anchor = feats[0][0]
         src_df = anchor.source.load(spark)
         specs = [WindowFeatureSpec(out_name=f.name, transform=f.transform)
                  for _, f in feats]
-        if time_prune:
-            bounds = obs.select(
-                F.unix_millis(F.min(EVENT_TS_COL).cast("timestamp")).alias("lo"),
-                F.unix_millis(F.max(EVENT_TS_COL).cast("timestamp")).alias("hi"),
-            ).first()
-            if bounds and bounds.lo is not None:
-                max_w = max(f.transform.window_ms for _, f in feats)
-                lo_ms, hi_ms = bounds.lo - max_w, bounds.hi
-                twp = anchor.source.time_window_parameters
-                raw_ts_type = dict(src_df.dtypes).get(
-                    twp.timestamp_column) if twp else None
-                # Naive-datetime literals (and ntz casts) are interpreted in
-                # the SESSION timezone — build the wall-clock literal there,
-                # not in UTC, or a non-UTC session shifts the pushed-down
-                # bound by the tz offset and silently prunes in-window rows.
-                from zoneinfo import ZoneInfo
-                tz_name = src_df.sparkSession.conf.get(
-                    "spark.sql.session.timeZone")
+        bounds = obs_bounds() if obs_bounds is not None else None
+        if bounds is not None:
+            max_w = max(f.transform.window_ms for _, f in feats)
+            lo_ms, hi_ms = bounds[0] - max_w, bounds[1]
+            twp = anchor.source.time_window_parameters
+            raw_ts_type = dict(src_df.dtypes).get(
+                twp.timestamp_column) if twp else None
+            # Naive-datetime literals (and ntz casts) are interpreted in
+            # the SESSION timezone — build the wall-clock literal there,
+            # not in UTC, or a non-UTC session shifts the pushed-down
+            # bound by the tz offset and silently prunes in-window rows.
+            from zoneinfo import ZoneInfo
+            tz_name = src_df.sparkSession.conf.get(
+                "spark.sql.session.timeZone")
+            try:
+                sess_tz = ZoneInfo(tz_name)
+            except (KeyError, ValueError):
+                # not an IANA name (e.g. GMT+08:00: ZoneInfoNotFoundError
+                # is a KeyError) → no pushdown form
+                sess_tz = None
+            if twp and twp.timestamp_column_format is None and \
+                    raw_ts_type in ("timestamp", "timestamp_ntz") and \
+                    sess_tz is not None:
+                # Predicate on the RAW column with timestamp literals —
+                # this form reaches parquet PushedFilters (row-group +
+                # partition pruning); an expression like
+                # unix_millis(cast(...)) does not.
+                from datetime import datetime as _dt
+                hi_lit = _dt.fromtimestamp(hi_ms / 1000, tz=sess_tz).replace(tzinfo=None)
+                raw = F.col(twp.timestamp_column)
+                keep = raw <= F.lit(hi_lit).cast(raw_ts_type)  # match ntz/ltz exactly
                 try:
-                    sess_tz = ZoneInfo(tz_name)
-                except (KeyError, ValueError):
-                    # not an IANA name (e.g. GMT+08:00: ZoneInfoNotFoundError
-                    # is a KeyError) → no pushdown form
-                    sess_tz = None
-                if twp and twp.timestamp_column_format is None and \
-                        raw_ts_type in ("timestamp", "timestamp_ntz") and \
-                        sess_tz is not None:
-                    # Predicate on the RAW column with timestamp literals —
-                    # this form reaches parquet PushedFilters (row-group +
-                    # partition pruning); an expression like
-                    # unix_millis(cast(...)) does not.
-                    from datetime import datetime as _dt
                     lo_lit = _dt.fromtimestamp(lo_ms / 1000, tz=sess_tz).replace(tzinfo=None)
-                    hi_lit = _dt.fromtimestamp(hi_ms / 1000, tz=sess_tz).replace(tzinfo=None)
-                    raw = F.col(twp.timestamp_column)
-                    lo_c = F.lit(lo_lit).cast(raw_ts_type)  # match ntz/ltz exactly
-                    hi_c = F.lit(hi_lit).cast(raw_ts_type)
-                    src_df = src_df.where((raw > lo_c) & (raw <= hi_c))
-                else:
-                    src_ms = F.unix_millis(F.col(EVENT_TS_COL).cast("timestamp"))
-                    src_df = src_df.where((src_ms > lo_ms) & (src_ms <= hi_ms))
-        return point_in_time_aggregate(
-            obs, src_df,
-            obs_keys=list(obs_keys), src_keys=list(src_keys),
-            obs_ts=EVENT_TS_COL, src_ts=EVENT_TS_COL,
-            specs=specs,
-            strategy=pit_strategy,
-        )
+                    keep = (raw > F.lit(lo_lit).cast(raw_ts_type)) & keep
+                except (ValueError, OverflowError):
+                    pass  # before year 1 in the session zone: no row is older
+                src_df = src_df.where(keep)
+            else:
+                src_ms = F.unix_millis(F.col(EVENT_TS_COL).cast("timestamp"))
+                src_df = src_df.where((src_ms > lo_ms) & (src_ms <= hi_ms))
+        return PitSource(src_df, list(obs_keys), list(src_keys), EVENT_TS_COL,
+                         specs)
 
     def to_feature_config(self) -> dict:
         """Serialize definitions in the reference's feature-config shape

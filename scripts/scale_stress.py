@@ -17,6 +17,11 @@ touched. Usage:
 
     python scripts/scale_stress.py              # 1x/3x/5x, min-of-2
     python scripts/scale_stress.py 1 3          # custom scale list
+    python scripts/scale_stress.py --pit --queries=pit_multi_source
+
+``--pit`` runs the point-in-time family (driver queries plus the cases
+in ``PIT_CASES``) and prints each one's shuffle Exchange count next to
+its time.
 """
 import os
 import sys
@@ -228,6 +233,68 @@ def gen_pit_dir(scale, con):
     return d
 
 
+def pit_multi_source(spark, sf_dir):
+    """Several windowed sources on one observation key, the shape no
+    driver query covers: the orders observation joined to 4 windowed
+    anchors over 3 sources keyed by customer — all orders, urgent orders
+    and large orders (each a filtered read of orders.parquet, so the
+    case runs on the replicated tables above). The point-in-time
+    planner gives all of them one shuffle, one sort and one Window pass
+    when they share the observation key."""
+    import __spark_entry__ as entry
+    from feathr_spark import (
+        Aggregation, FeathrProject, Feature, FeatureAnchor, FeatureQuery,
+        HdfsSource, ObservationSettings, TimeWindowParameters, TypedKey,
+        WindowAggTransform)
+    entry._utc(spark)
+    path = f"{sf_dir}/orders.parquet"
+    key = [TypedKey(key_column="o_custkey")]
+
+    def orders(name, where=None):
+        return HdfsSource(
+            name=name, path=path,
+            preprocessing=None if where is None else (lambda df: df.where(where)),
+            time_window_parameters=TimeWindowParameters("o_orderdate"))
+
+    def w(name, expr, agg, window):
+        return Feature(name=name, key=key,
+                       transform=WindowAggTransform(expr, agg, window))
+
+    A = Aggregation
+    p = FeathrProject("pit_multi_source", spark)
+    all_orders = orders("orders")
+    urgent = orders("urgent_orders", "o_orderpriority = '1-URGENT'")
+    large = orders("large_orders", "o_totalprice > 200000")
+    p.register_anchor(FeatureAnchor(name="spend", source=all_orders, features=[
+        w("spend_sum_90d", "o_totalprice", A.SUM, "90d"),
+        w("spend_avg_365d", "o_totalprice", A.AVG, "365d")]))
+    p.register_anchor(FeatureAnchor(name="activity", source=all_orders, features=[
+        w("orders_cnt_30d", "1", A.COUNT, "30d")]))
+    p.register_anchor(FeatureAnchor(name="urgent", source=urgent, features=[
+        w("urgent_cnt_90d", "1", A.COUNT, "90d"),
+        w("urgent_max_365d", "o_totalprice", A.MAX, "365d")]))
+    p.register_anchor(FeatureAnchor(name="large", source=large, features=[
+        w("large_last_365d", "o_totalprice", A.LATEST, "365d")]))
+    names = [f.name for a in p.anchors.values() for f in a.features]
+    obs = ObservationSettings(timestamp_column="o_orderdate").with_event_ts(
+        spark.read.parquet(path).select("o_orderkey", "o_custkey", "o_orderdate"))
+    return p.get_offline_features(obs, FeatureQuery(names),
+                                  pit_strategy="union_window")
+
+
+# scale cases defined here rather than as driver queries
+PIT_CASES = {"pit_multi_source": pit_multi_source}
+
+
+def shuffle_exchanges(df):
+    """Distinct shuffle Exchange operators of the formatted plan (the
+    count tests/test_plan_quality.py budgets)."""
+    import re
+    text = df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    return len(set(re.findall(r"\bExchange \((\d+)\)", text)))
+
+
 def stress_pit(spark, scales, con, only=None):
     """VERDICT r6 item 7: measure (not argue) the PIT core's growth —
     the union-window point-in-time join (single-key 90d window family,
@@ -236,6 +303,8 @@ def stress_pit(spark, scales, con, only=None):
     import __spark_entry__ as entry
     qs = entry.queries()
     names = ["window_agg_basic", "multi_key_window", "asof_join",
+             # several windowed sources on one observation key
+             "pit_multi_source",
              # r7 widening: one representative per orders/events family
              # (exact-percentile fold, global-ntile segmentation,
              # gap-rule sessions, +1/-1 concurrency sweep, recursive
@@ -276,11 +345,14 @@ def stress_pit(spark, scales, con, only=None):
         names = [n for n in names if n in set(only)]
     dirs = {s: gen_pit_dir(s, con) for s in scales}
 
+    def build(q, d):
+        return (PIT_CASES.get(q) or qs[q])(spark, d)
+
     def run(q, d):
         # .count() would let Catalyst PRUNE the whole feature pipeline
         # (windows never change row count); the noop sink materializes
         # every output column JVM-side, like a real write would
-        qs[q](spark, d).write.format("noop").mode("overwrite").save()
+        build(q, d).write.format("noop").mode("overwrite").save()
 
     for q in names:  # warm JVM/codegen on the smallest scale
         run(q, dirs[scales[0]])
@@ -293,7 +365,8 @@ def stress_pit(spark, scales, con, only=None):
                 run(q, dirs[s])
                 best = min(best, time.time() - t0)
             results[q][s] = best
-            print(f"x{s} {q:24s} {best:7.2f}s", flush=True)
+            print(f"x{s} {q:24s} {best:7.2f}s "
+                  f"exchanges={shuffle_exchanges(build(q, dirs[s]))}", flush=True)
     return results
 
 

@@ -8,11 +8,13 @@ example-based tests can miss.
 """
 
 import datetime as dt
+import math
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from feathr_spark import (
     Aggregation, DataFrameSource, Feature, FeatureAnchor, FeatureQuery,
@@ -32,16 +34,20 @@ events = st.lists(
 )
 
 
-def brute_force(rows, window_hours):
-    """(key, t) -> dict of expected aggregates over (t-w, t]."""
+def brute_force(rows, window_hours, obs=None):
+    """(key, t) -> dict of expected aggregates over (t-w, t].
+
+    ``obs`` lists the observation (key, hour) pairs (default: the rows'
+    own). A row or an observation with a NULL key or hour joins nothing
+    (SQL join semantics); ``win`` holds the window's (hour, value) rows."""
     out = {}
     wms = window_hours * 3600
-    for k, h, _ in rows:
-        t = h * 3600
-        in_win = [v for (k2, h2, v) in rows
-                  if k2 == k and t - wms < h2 * 3600 <= t]
-        latest_h = max((h2 for (k2, h2, v) in rows
-                        if k2 == k and t - wms < h2 * 3600 <= t), default=None)
+    for k, h in (obs if obs is not None else [(k, h) for k, h, _ in rows]):
+        win = [] if k is None or h is None else [
+            (h2, v) for (k2, h2, v) in rows
+            if k2 == k and h2 is not None and h * 3600 - wms < h2 * 3600 <= h * 3600]
+        in_win = [v for _, v in win]
+        latest_h = max((h2 for h2, _ in win), default=None)
         out[(k, h)] = {
             "sum": float(sum(in_win)) if in_win else None,
             "cnt": len(in_win),
@@ -50,6 +56,7 @@ def brute_force(rows, window_hours):
             # max_by semantics: value at the max timestamp (ties: engine
             # picks one; we keep only when unique at latest ts)
             "latest_ts": latest_h,
+            "win": win,
         }
     return out
 
@@ -93,6 +100,163 @@ def test_window_semantics_match_brute_force(spark, rows, window_hours):
         assert r.f_cnt == e["cnt"], (r, e)
         assert r.f_max == e["mx"], (r, e)
         assert sorted(r.f_union) == e["union"], (r, e)
+
+
+# ---------------------------------------------------------------------------
+# several sources on one key (the lane-ordered window serves them in one
+# pass): every union-window aggregation, a different window per source,
+# NULL keys and timestamps, duplicate timestamps, integer values
+# ---------------------------------------------------------------------------
+
+_nullable_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=1, max_value=3)),   # key
+        st.one_of(st.none(), st.integers(min_value=0, max_value=72)),  # hour
+        st.integers(min_value=-20, max_value=20),                      # value
+    ),
+    max_size=10,
+)
+multi_source_case = st.tuples(
+    st.lists(st.tuples(_nullable_rows, st.sampled_from([1, 5, 24, 48])),
+             min_size=2, max_size=3),
+    st.lists(st.tuples(st.one_of(st.none(), st.integers(1, 3)),
+                       st.one_of(st.none(), st.integers(0, 72))),
+             min_size=1, max_size=8),
+)
+
+_VEC = "array(v, v * 2)"
+_HALF_LIFE_D = 0.5
+# (feature suffix, aggregation, def_expr, agg_param) — every aggregation the
+# union-window path serves
+_LANE_AGGS = [
+    ("sum", Aggregation.SUM, "v", None),
+    ("avg", Aggregation.AVG, "v", None),
+    ("min", Aggregation.MIN, "v", None),
+    ("max", Aggregation.MAX, "v", None),
+    ("cnt", Aggregation.COUNT, "v", None),
+    ("ndist", Aggregation.COUNT_DISTINCT, "v", None),
+    ("adist", Aggregation.APPROX_COUNT_DISTINCT, "v", None),
+    ("p50", Aggregation.PERCENTILE, "v", 0.5),
+    ("first", Aggregation.NOP, "v", None),
+    ("latest", Aggregation.LATEST, "v", None),
+    ("union", Aggregation.UNION, "v", None),
+    ("dsum", Aggregation.DECAY_SUM, "v", _HALF_LIFE_D),
+    ("davg", Aggregation.DECAY_AVG, "v", _HALF_LIFE_D),
+    ("esum", Aggregation.ELEMENTWISE_SUM, _VEC, None),
+    ("eavg", Aggregation.ELEMENTWISE_AVG, _VEC, None),
+    ("emin", Aggregation.ELEMENTWISE_MIN, _VEC, None),
+    ("emax", Aggregation.ELEMENTWISE_MAX, _VEC, None),
+]
+
+
+def _expected_lane_aggs(win, obs_h):
+    """Expected value per _LANE_AGGS suffix over one window's
+    (hour, value) rows, except adist (checked against Spark's own HLL
+    over the same values); NOP/LATEST map to the set of values at the
+    earliest/latest hour (ties: the engine picks one)."""
+    vals = [v for _, v in win]
+    if not vals:
+        return {"cnt": 0, "ndist": 0, "union": []}
+    n, s = len(vals), sum(vals)
+    srt = sorted(vals)
+    pos = (n - 1) * 0.5
+    lo, hi = math.floor(pos), math.ceil(pos)
+    p50 = float(srt[lo]) if lo == hi or srt[lo] == srt[hi] else \
+        (hi - pos) * srt[lo] + (pos - lo) * srt[hi]
+    first_h, last_h = min(h for h, _ in win), max(h for h, _ in win)
+    half_ms = _HALF_LIFE_D * 86400000.0
+    w = [0.5 ** ((obs_h * 3600000.0 - h * 3600000.0) / half_ms) for h, _ in win]
+    return {
+        "sum": s, "avg": s / n, "min": min(vals), "max": max(vals),
+        "cnt": n, "ndist": len(set(vals)), "p50": p50,
+        "first": {v for h, v in win if h == first_h},
+        "latest": {v for h, v in win if h == last_h},
+        "union": srt,
+        "dsum": sum(wi * v for wi, (_, v) in zip(w, win)),
+        "davg": sum(wi * v for wi, (_, v) in zip(w, win)) / sum(w),
+        "esum": [s, 2 * s], "eavg": [s / n, 2 * s / n],
+        "emin": [min(vals), 2 * min(vals)], "emax": [max(vals), 2 * max(vals)],
+    }
+
+
+@pytest.mark.usefixtures("spark")
+@given(case=multi_source_case)
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_multi_source_windows_match_brute_force(spark, case):
+    sources, obs_rows = case
+
+    def ts(h):
+        return None if h is None else BASE + dt.timedelta(hours=h)
+
+    p = FeathrProject("lanes", spark)
+    key = TypedKey(key_column="k")
+    names = []
+    for i, (rows, wh) in enumerate(sources):
+        df = spark.createDataFrame(
+            [Row(k=k, t=ts(h), v=v) for k, h, v in rows],
+            "k int, t timestamp, v bigint")
+        feats = [Feature(name=f"s{i}_{sfx}", key=[key],
+                         transform=WindowAggTransform(
+                             expr, agg, f"{wh}h", agg_param=param))
+                 for sfx, agg, expr, param in _LANE_AGGS]
+        # a second window length and a filter in the same lane
+        feats.append(Feature(name=f"s{i}_fsum2", key=[key],
+                             transform=WindowAggTransform(
+                                 "v", Aggregation.SUM, f"{2 * wh}h",
+                                 filter="v > 0")))
+        p.register_anchor(FeatureAnchor(
+            name=f"a{i}", features=feats, source=DataFrameSource(
+                name=f"src{i}", df=df, time_window_parameters=
+                TimeWindowParameters(timestamp_column="t"))))
+        names += [f.name for f in feats]
+    # boundary probes per source row at t: an observation at t (the row
+    # is in its window) and at t + w (the row sits on the window's open
+    # lower end)
+    obs_rows = obs_rows + [(k, h2) for rows, wh in sources for k, h, _ in rows
+                           for h2 in (h, None if h is None else h + wh)]
+    obs = spark.createDataFrame(
+        [Row(k=k, t=ts(h)) for k, h in obs_rows], "k int, t timestamp")
+    out = p.get_offline_features(
+        ObservationSettings(timestamp_column="t").with_event_ts(obs),
+        FeatureQuery(names), pit_strategy="union_window")
+    assert out.columns == ["k", "t"] + names
+    got = out.collect()
+    assert len(got) == len(obs_rows)
+
+    obs_pairs = sorted(set(obs_rows), key=repr)
+    expected, adist_rows = {}, []
+    for i, (rows, wh) in enumerate(sources):
+        bf = brute_force(rows, wh, obs=obs_pairs)
+        bf2 = brute_force([r for r in rows if r[2] > 0], 2 * wh, obs=obs_pairs)
+        for j, kh in enumerate(obs_pairs):
+            e = _expected_lane_aggs(bf[kh]["win"], kh[1])
+            e["fsum2"] = bf2[kh]["sum"]
+            expected[(i, kh)] = e
+            adist_rows += [(i, j, v) for _, v in bf[kh]["win"]]
+    adist = {}
+    if adist_rows:
+        adist = {(r.i, r.j): r.n for r in spark.createDataFrame(
+            adist_rows, "i int, j int, v bigint").groupBy("i", "j").agg(
+            F.approx_count_distinct("v").alias("n")).collect()}
+
+    for r in got:
+        h = None if r.t is None else int((r.t - BASE).total_seconds() // 3600)
+        kh = (r.k, h)
+        for i in range(len(sources)):
+            e = expected[(i, kh)]
+            for sfx, agg, _, _ in _LANE_AGGS + [("fsum2", None, None, None)]:
+                v = r[f"s{i}_{sfx}"]
+                if sfx == "adist":
+                    assert v == adist.get((i, obs_pairs.index(kh)), 0), (r, i)
+                elif sfx in ("first", "latest"):
+                    assert (v is None) if sfx not in e else v in e[sfx], (r, i, sfx)
+                elif sfx in ("dsum", "davg"):
+                    assert (v is None) if sfx not in e else \
+                        math.isclose(v, e[sfx], rel_tol=1e-12, abs_tol=1e-12), \
+                        (r, i, sfx, e.get(sfx))
+                else:
+                    assert v == e.get(sfx), (r, i, sfx, e.get(sfx))
 
 
 # ---------------------------------------------------------------------------
