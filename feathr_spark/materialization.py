@@ -29,17 +29,17 @@ class GenericSink(Sink):
 
     ``num_parts`` mirrors the reference's ``--num-parts`` /
     ``spark_result_output_parts`` output-partition control
-    (job_client/mod.rs:289-292). With ``exact_parts=True`` (default) the
-    frame is round-robin ``repartition``-ed so exactly ``n`` files are
-    written whenever the frame has at least ``n`` rows (empty partitions
-    emit no file) — the only reliable contract: ``coalesce(n)`` is a
-    no-op whenever the final stage already has fewer than ``n``
-    partitions (common with AQE-coalesced small outputs), and inspecting
-    the actual count via ``df.rdd`` would force an RDD conversion of the
-    whole plan. The exactness costs one full shuffle of the output; set
-    ``exact_parts=False`` to treat ``num_parts`` as an UPPER bound
-    instead: a shuffle-free ``coalesce`` that never splits (cheaper for
-    shrink-heavy jobs where "at most n files" is enough).
+    (job_client/mod.rs:289-292): the files of ONE write. The frame is
+    round-robin ``repartition``-ed so exactly ``n`` files are written
+    whenever it has at least ``n`` rows (empty partitions emit no file);
+    ``coalesce(n)`` would be a no-op whenever the final stage already has
+    fewer than ``n`` partitions (common with AQE-coalesced small outputs).
+    The exactness costs one full shuffle of the output.
+
+    A backfill (``materialize_features``) writes every cutoff in one write,
+    so ``num_parts`` files hold all of them, each row tagged with its
+    ``feathr_cutoff``; for a directory per cutoff pass
+    ``partition_by=["feathr_cutoff"]``.
     """
     format: str = "parquet"
     path: Optional[str] = None
@@ -48,7 +48,6 @@ class GenericSink(Sink):
     streaming: bool = False
     timeout_ms: Optional[int] = None
     num_parts: Optional[int] = None
-    exact_parts: bool = True
     # catalog-table output (required for bucketing: Spark persists bucket
     # metadata only through the catalog, not plain files)
     table: Optional[str] = None
@@ -69,8 +68,7 @@ class GenericSink(Sink):
             from .operators.layout import zorder_sort
             df = zorder_sort(df, self.zorder_by, num_parts=self.num_parts)
         elif self.num_parts is not None:
-            df = (df.repartition(self.num_parts) if self.exact_parts
-                  else df.coalesce(self.num_parts))
+            df = df.repartition(self.num_parts)
         opts = {k.replace("__", "."): v for k, v in self.options.items()}
         writer = df.write.format(self.format).options(**opts).mode(self.mode)
         if self.partition_by:
@@ -147,7 +145,9 @@ def CosmosDbSink(endpoint: str, database: str, container: str, **kw) -> GenericS
 @dataclass
 class RedisSink(Sink):
     """Online-store sink (materialization.rs:28-55). The redis client is an
-    optional plugin; core scope is the partition-parallel write plumbing."""
+    optional plugin; core scope is the partition-parallel write plumbing.
+    One hash per entity key holds one cutoff, so a backfill writes this
+    sink the newest cutoff only."""
     table_name: str = ""
     streaming: bool = False
     timeout_ms: Optional[int] = None

@@ -236,19 +236,6 @@ def _hashed_char_tokens(df: DataFrame, text_col: str, id_col: str,
     return norm.mapInPandas(_toks, "__id long, __h long")
 
 
-def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
-    """MinHash signature: per permutation j, min over shingle base-hashes of
-    (a_j*h + b_j) mod M61. Base hash xxhash64 is computed once per shingle."""
-    base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-
-    def perm_fn(a: int, b: int):
-        return lambda h: F.pmod(h * a + b, F.lit(_MERSENNE))
-
-    sigs = [F.array_min(F.transform(base, perm_fn(a, b)))
-            for a, b in _perm_params(num_perm)]
-    return F.array(*sigs)
-
-
 def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(F.array_union(a, b))

@@ -23,7 +23,7 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
@@ -322,9 +322,3 @@ def sample_frames(df: DataFrame, n_frames_col: str = "n_frames",
         "frame_idx",
         F.explode(F.sequence(F.lit(0), F.greatest(F.col(n_frames_col) - 1, F.lit(0)),
                              F.lit(every))))
-
-
-def resize_spec(width: int, height: int) -> Column:
-    """Typed resize instruction (executed by the decoder at decode time —
-    engines should push resize into the codec, not post-process)."""
-    return F.struct(F.lit(width).alias("width"), F.lit(height).alias("height"))

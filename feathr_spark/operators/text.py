@@ -182,18 +182,6 @@ def md5_fingerprint(col: Column, normalize: bool = True) -> Column:
     return F.md5(c)
 
 
-def shingle_minhash_fingerprint(col: Column, k: int = 3) -> Column:
-    """Rolling-hash document fingerprint: min xxhash64 over word k-shingles
-    (near-dup-stable: insensitive to word order beyond k-grams)."""
-    tokens = F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " ")
-    n = F.size(tokens)
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, k)),
-    )
-    return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s)))
-
-
 # Winnowing polynomial-hash constants (Horner base / modulus). P = 2^31-1
 # keeps every intermediate (h*B + code) far below 2^63 for any Unicode
 # code point, so the arithmetic is portable 64-bit integer math.

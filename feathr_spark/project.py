@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .feature import DerivedFeature, FeathrError, Feature, FeatureAnchor
 from .functions import feathr_expr, register_feathr_functions
-from .materialization import DATETIME_FMT, MaterializationSettings
+from .materialization import DATETIME_FMT, MaterializationSettings, RedisSink
 from .model import ExpressionTransform, UdfTransform, WindowAggTransform
 from .operators.point_in_time import (
     PitSource, WindowFeatureSpec, point_in_time_join)
@@ -479,10 +479,7 @@ class FeathrProject:
                               **kwargs) -> None:
         """Offline join-job output (reference project.rs:266-277): compute
         the feature join and write it through a sink (any GenericSink —
-        format/path/mode/options; ``num_parts`` mirrors ``--num-parts``,
-        with the sink's ``exact_parts`` flag choosing between the exact
-        ``repartition(n)`` contract and a shuffle-free ``coalesce`` upper
-        bound for shrink-heavy jobs)."""
+        format/path/mode/options; ``num_parts`` mirrors ``--num-parts``)."""
         df = self.get_offline_features(observation, feature_query, **kwargs)
         sink.write(df)
 
@@ -635,8 +632,7 @@ class FeathrProject:
         """All backfill snapshots as one DataFrame (``feathr_cutoff``
         distinguishes them). Same cutoff stepping as
         ``materialize_features`` (materialization.rs:200-231) without the
-        sink writes — useful for validation and for sinks that ingest the
-        whole backfill in one write.
+        sink writes: this is the frame that method writes to each sink.
 
         Unlike the reference's one-job-per-cutoff submission loop, all
         cutoffs run in a single pass: one scan per source and one shuffle
@@ -653,28 +649,15 @@ class FeathrProject:
         (materialization.rs:200-231), written to every sink.
 
         The reference submits one job per cutoff (job_client/mod.rs:756-793);
-        here every cutoff is computed in ONE pass (:meth:`compute_backfill`).
-        That frame is persisted once when it is read more than once
-        (cutoffs × sinks > 1) — without it every slice write would re-run
-        the whole N-cutoff pass — and each sink then receives one write per
-        cutoff, ``where(feathr_cutoff == cutoff)``, newest cutoff first.
-        The frame is released when the writes end, also when a sink raises.
-        An empty backfill range writes nothing and returns ``[]``.
-
-        Before it is persisted the frame is sized from Catalyst's estimate:
-        ``k = ceil(len(cutoffs) × est / advisory)`` partitions, with ``est``
-        the analyzed plan's ``sizeInBytes`` (each source row explodes into
-        at most ``len(cutoffs)`` rows, which the estimate does not model)
-        and ``advisory`` the session's
-        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. It is coalesced
-        to ``k`` only when ``k`` is below ``spark.sql.shuffle.partitions``,
-        so a small backfill writes one file per cutoff per sink instead of
-        one per shuffle partition, while a large one, or a source without
-        statistics (``Long.MaxValue``), keeps the full partition count. The
-        aggregate's reduce stage, the cache and every slice write then run
-        ``k`` tasks; no job is added. The frame is persisted, not
-        local-checkpointed: a checkpoint drops lineage, so a lost executor
-        would fail the backfill instead of recomputing its partitions."""
+        here every cutoff is computed in ONE pass (:meth:`compute_backfill`)
+        and each sink gets ONE write of that frame: every row carries its
+        ``feathr_cutoff``, so a file sink holds all cutoffs, also in a
+        replacing (``overwrite``) or ``error`` mode. The exception is a
+        :class:`RedisSink`: it keeps one hash per entity key, which can hold
+        one cutoff only, so it is written the newest cutoff's slice.
+        Nothing is persisted: with several sinks each write re-runs the
+        pass. Returns the cutoffs, newest first; an empty backfill range
+        writes nothing and returns ``[]``."""
         spark = spark or self.spark
         bt = settings.backfill_time
         if bt is None:
@@ -683,25 +666,10 @@ class FeathrProject:
         if not cutoffs:
             return []
         df = self.compute_backfill(spark, settings.feature_names, bt)
-        reused = len(cutoffs) * len(settings.sinks) > 1
-        if reused:
-            # the analyzed plan's stats: the optimized plan's would run an
-            # optimizer pass that persist() repeats anyway
-            est = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
-            advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-                .byteStringAsBytes(spark.conf.get(
-                    "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-            k = max(1, -(-len(cutoffs) * est // advisory))
-            if k < int(spark.conf.get("spark.sql.shuffle.partitions")):
-                df = df.coalesce(k)
-            df = df.persist()
-        try:
-            for cutoff in cutoffs:
-                snap = df.where(F.col("feathr_cutoff")
-                                == cutoff.strftime(DATETIME_FMT))
-                for sink in settings.sinks:
-                    sink.write(snap)
-        finally:
-            if reused:
-                df.unpersist()
+        for sink in settings.sinks:
+            if isinstance(sink, RedisSink):
+                sink.write(df.where(F.col("feathr_cutoff")
+                                    == cutoffs[0].strftime(DATETIME_FMT)))
+            else:
+                sink.write(df)
         return cutoffs

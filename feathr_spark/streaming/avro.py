@@ -76,12 +76,6 @@ def parse_flat_record_schema(avro_json: str) -> List[Tuple[str, str, bool]]:
     return out
 
 
-def spark_schema_for(fields: List[Tuple[str, str, bool]]) -> T.StructType:
-    return T.StructType([
-        T.StructField(n, _PRIMITIVES[t], nullable=nullable or t != "boolean")
-        for n, t, nullable in fields])
-
-
 # -- binary codec -----------------------------------------------------------
 
 def _zigzag_encode(n: int) -> bytes:

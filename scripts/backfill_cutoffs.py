@@ -4,6 +4,7 @@ Run from the repository root:
 
     python3 scripts/backfill_cutoffs.py
     python3 scripts/backfill_cutoffs.py --cutoffs 2,14,30 --reps 4 --seed 102
+    python3 scripts/backfill_cutoffs.py --cutoffs 2,14,30 --sinks 2
 
 This is perfbench's ``backfill`` workload at other cutoff counts. It uses
 perfbench's generated inputs, feature definitions, session settings and
@@ -11,18 +12,21 @@ CPU counter (``perfbench/gen.py``, ``workloads.py``, ``run.py``, imported
 as they are) and writes under ``.perfbench/``, like perfbench.
 
 For each cutoff count it runs one untimed warm-up job, then ``--reps``
-timed jobs, the counts interleaved. Per count it prints the Spark jobs
-one timed ``materialize_features`` call launches (the first warm-up job
-also pays the session's schema inference, so its count is not used),
-the most parquet files written for one cutoff, the median CPU seconds
-of this process and its descendants less JIT threads
-(``run.engine_cpu_s``) and wall seconds, the rows written and a SHA-256
-digest of the written rows, sorted. Run it in two checkouts to check
+timed jobs, the counts interleaved. Every job writes ``--sinks``
+append-mode parquet sinks (default 1). Per count it prints the Spark
+jobs one timed ``materialize_features`` call launches (the first
+warm-up job also pays the session's schema inference, so its count is
+not used), the parquet files of one sink in total and the most that
+hold one cutoff (a file may hold several cutoffs), the median CPU
+seconds of this process and its descendants less JIT threads
+(``run.engine_cpu_s``) and wall seconds, the rows of one sink and a
+SHA-256 digest of its rows, sorted. Run it in two checkouts to check
 that their outputs are bit-identical. Every job's rows per cutoff, and
 every cutoff of the warm-up job in full, are checked against
-perfbench's DuckDB/numpy oracle; a mismatch, or timed jobs of one count
-that differ in job count, file count or digest, exits with code 1. The
-last line is one JSON object.
+perfbench's DuckDB/numpy oracle; a mismatch, sinks of one job that
+differ in digest, or timed jobs of one count that differ in job count,
+file counts or digest, exits with code 1. The last line is one JSON
+object.
 """
 
 from __future__ import annotations
@@ -53,14 +57,15 @@ def _digest(path: str) -> str:
     return hashlib.sha256(body.encode()).hexdigest()
 
 
-def _files_per_cutoff(path: str) -> int:
-    """The most parquet files any one cutoff was written to."""
+def _files(path: str) -> tuple:
+    """(parquet files in ``path``, the most of them holding one cutoff)."""
     import pyarrow.parquet as pq
+    parts = list(Path(path).glob("part-*.parquet"))
     files = collections.Counter()
-    for f in Path(path).glob("part-*.parquet"):
+    for f in parts:
         cuts = pq.read_table(f, columns=["feathr_cutoff"]).column(0).unique()
         files.update(cuts.to_pylist())
-    return max(files.values(), default=0)
+    return len(parts), max(files.values(), default=0)
 
 
 def main(argv=None) -> int:
@@ -69,7 +74,12 @@ def main(argv=None) -> int:
                     help="comma-separated DAILY cutoff counts (default 2,14)")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--seed", type=int, default=101)
+    ap.add_argument("--sinks", type=int, default=1,
+                    help="parquet sinks per materialize_features call "
+                         "(default 1)")
     args = ap.parse_args(argv)
+    if args.sinks < 1:
+        ap.error("--sinks must be at least 1")
     counts = [int(c) for c in args.cutoffs.split(",")]
 
     work = ROOT / ".perfbench"
@@ -107,11 +117,13 @@ def main(argv=None) -> int:
     def one_job(n: int, tag: str, full_check: bool):
         bt = fs.BackfillTime(start=end - timedelta(days=n), end=end,
                              step="DAILY")
-        path = str(out_root / f"{n}-{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        paths = [str(out_root / f"{n}-{tag}-{i}") for i in range(args.sinks)]
+        for path in paths:
+            shutil.rmtree(path, ignore_errors=True)
         settings = fs.MaterializationSettings(
             name="backfill_cutoffs",
-            sinks=[fs.GenericSink(format="parquet", path=path, mode="append")],
+            sinks=[fs.GenericSink(format="parquet", path=path, mode="append")
+                   for path in paths],
             feature_names=list(workloads.BACKFILL_FEATURES), backfill_time=bt)
         group = f"backfill_cutoffs_{n}_{tag}"
         sc.setJobGroup(group, group)
@@ -125,6 +137,12 @@ def main(argv=None) -> int:
         cutoffs = bt.cutoffs()
         if written != cutoffs:
             problems.append(f"{n} cutoffs: wrote {len(written)}")
+        # the sinks must hold the same rows; the oracle checks the first
+        sink_digests = {_digest(path) for path in paths}
+        if len(sink_digests) != 1:
+            problems.append(f"{n} cutoffs: sinks differ in output")
+        digests[n].update(sink_digests)
+        path = paths[0]
         expect = oracle.snapshot_row_counts(data, cutoffs)
         got = oracle.rows_per_cutoff(path)
         if got != expect:
@@ -132,9 +150,9 @@ def main(argv=None) -> int:
         if full_check:
             for c in cutoffs:
                 problems.extend(oracle.compare_snapshot(data, path, c))
-        digests[n].add(_digest(path))
-        n_files = _files_per_cutoff(path)
-        shutil.rmtree(path, ignore_errors=True)
+        n_files = {_files(path) for path in paths}
+        for path in paths:
+            shutil.rmtree(path, ignore_errors=True)
         return n_jobs, n_files, sum(got.values()), took_cpu, took
 
     try:
@@ -145,7 +163,7 @@ def main(argv=None) -> int:
                 n_jobs, n_files, rows[n], took_cpu, took = \
                     one_job(n, str(rep), False)
                 jobs[n].add(n_jobs)
-                files[n].add(n_files)
+                files[n].update(n_files)
                 samples[n].append((took_cpu, took))
     finally:
         run._stop(spark)
@@ -159,17 +177,20 @@ def main(argv=None) -> int:
             if len(seen) != 1:
                 problems.append(f"{n} cutoffs: {what} differs between jobs: "
                                 f"{sorted(seen)}")
-        digest, n_jobs, n_files = (max(x) for x in (digests[n], jobs[n], files[n]))
-        print(f"cutoffs={n:<3d} jobs={n_jobs:<3d} files/cutoff={n_files:<2d} "
-              f"cpu_s={cpu:.3f} wall_s={wall:.3f} (median of {len(samples[n])}) "
-              f"rows={rows[n]} digest={digest[:16]}")
-        result[str(n)] = {"jobs": n_jobs, "files_per_cutoff": n_files,
+        digest, n_jobs, (n_files, per_cutoff) = \
+            (max(x) for x in (digests[n], jobs[n], files[n]))
+        print(f"cutoffs={n:<3d} jobs={n_jobs:<3d} files/sink={n_files:<2d} "
+              f"files/cutoff={per_cutoff:<2d} cpu_s={cpu:.3f} wall_s={wall:.3f} "
+              f"(median of {len(samples[n])}) rows={rows[n]} "
+              f"digest={digest[:16]}")
+        result[str(n)] = {"jobs": n_jobs, "files_per_sink": n_files,
+                          "files_per_cutoff": per_cutoff,
                           "cpu_s": round(cpu, 4), "wall_s": round(wall, 4),
                           "rows": rows[n], "digest": digest}
     for p in problems:
         print(f"problem: {p}", file=sys.stderr)
-    print(json.dumps({"seed": args.seed, "cores": cores, "correct": not problems,
-                      "cutoffs": result}))
+    print(json.dumps({"seed": args.seed, "cores": cores, "sinks": args.sinks,
+                      "correct": not problems, "cutoffs": result}))
     return 1 if problems else 0
 
 

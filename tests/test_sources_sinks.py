@@ -141,34 +141,14 @@ def test_generic_sink_num_parts(spark, tmp_path):
 
 
 def test_generic_sink_num_parts_exact_on_grow(spark, tmp_path):
-    """exact_parts (default) must honor num_parts even when the plan's
-    final stage has FEWER partitions — the case coalesce() silently
-    no-ops on (e.g. AQE-coalesced small aggregate outputs)."""
+    """num_parts must be honored even when the plan's final stage has
+    FEWER partitions — the case coalesce() silently no-ops on (e.g.
+    AQE-coalesced small aggregate outputs)."""
     out = str(tmp_path / "out_grow")
     df = spark.range(1000).coalesce(1)   # final stage: 1 partition
     GenericSink(format="parquet", path=out, num_parts=4).write(df)
     files = [f for f in os.listdir(out) if f.endswith(".parquet")]
     assert len(files) == 4
-
-
-def test_generic_sink_num_parts_upper_bound_mode(spark, tmp_path):
-    """exact_parts=False treats num_parts as an upper bound: shuffle-free
-    coalesce that shrinks but never splits."""
-    out = str(tmp_path / "out_ub")
-    df = spark.range(1000).repartition(8)
-    sink = GenericSink(format="parquet", path=out, num_parts=2,
-                       exact_parts=False)
-    sink.write(df)
-    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert len(files) == 2
-    # a genuine 1-partition plan (single-file scan; a chained coalesce
-    # would be folded away by CollapseRepartition): coalesce never splits
-    single = str(tmp_path / "single")
-    spark.range(10).coalesce(1).write.parquet(single)
-    out2 = str(tmp_path / "out_ub2")
-    GenericSink(format="parquet", path=out2, num_parts=4,
-                exact_parts=False).write(spark.read.parquet(single))
-    assert len([f for f in os.listdir(out2) if f.endswith(".parquet")]) == 1
 
 
 def test_broadcast_hint_plan(spark):

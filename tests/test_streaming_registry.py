@@ -449,9 +449,9 @@ def test_backfill_multi_source_matches_joined_snapshots(spark):
 
 def test_backfill_multi_source_single_pass(spark, monkeypatch, count_jobs):
     """Two sources × three cutoffs: materialize_features loads each source
-    once (the per-cutoff loop loaded each once per cutoff), and the backfill
-    plan has one hash Exchange and no join. An empty backfill range writes
-    nothing and returns []."""
+    once (the per-cutoff loop loaded each once per cutoff) and writes the
+    sink once, and the backfill plan has one hash Exchange and no join. An
+    empty backfill range writes nothing and returns []."""
     import re
     from feathr_spark.feature import FeathrError
     from feathr_spark.materialization import (
@@ -467,7 +467,7 @@ def test_backfill_multi_source_single_pass(spark, monkeypatch, count_jobs):
             self.writes = []
 
         def write(self, df):
-            self.writes.append(sorted(tuple(r) for r in df.collect()))
+            self.writes.append(df.collect())
 
     loads = []
     real_load = Source.load
@@ -479,12 +479,16 @@ def test_backfill_multi_source_single_pass(spark, monkeypatch, count_jobs):
                                 backfill_time=bt)))
     assert sorted(loads) == ["events", "purchases"]
     assert written == bt.cutoffs()
-    # one write per cutoff, newest first, each exactly that cutoff's snapshot
-    assert len(sink.writes) == 3
-    for cutoff, rows in zip(bt.cutoffs(), sink.writes):
+    # one write per sink; each cutoff's slice of it is that cutoff's snapshot
+    assert len(sink.writes) == 1
+    rows = sink.writes[0]
+    cuts = [c.strftime("%Y-%m-%d %H:%M:%S") for c in written]
+    assert {r.feathr_cutoff for r in rows} == set(cuts)
+    for cutoff, cut in zip(written, cuts):
         snap = p.compute_snapshot(spark, feats, cutoff)
-        assert rows == sorted(tuple(r) for r in snap.collect())
-        assert rows and {r[-1] for r in rows} == {cutoff.strftime("%Y-%m-%d %H:%M:%S")}
+        want = sorted(tuple(r) for r in snap.collect())
+        assert want and sorted(tuple(r) for r in rows
+                               if r.feathr_cutoff == cut) == want
     # the per-cutoff loop launched at least two jobs per cutoff (15 here)
     assert jobs < 2 * len(written), jobs
 
@@ -540,22 +544,134 @@ def test_materialize_releases_cache(spark, tmp_path):
     assert persisted() <= before
 
 
-def _backfill_files(spark, tmp_path, n_keys=200):
-    """2-sink × 3-cutoff backfill of a parquet source with ``n_keys`` keys
-    (windowed SUM, COUNT and LATEST). Returns the project, the features, the
-    cutoffs, the two sink paths and, per sink, a Counter of parquet files
-    per cutoff; every file holds exactly one cutoff."""
-    import collections
+_SINK_FEATURES = ["ev_cnt_2d", "ev_sum_1d", "pu_cnt_2d", "pu_last_2d", "seg",
+                  "ev_per_pu"]
+
+
+def _three_cutoffs():
+    from feathr_spark.materialization import BackfillTime
+    return BackfillTime(start=ts("2024-01-01 12:00:00"),
+                        end=ts("2024-01-04 12:00:00"), step="DAILY")
+
+
+def _by_key_cutoff(df):
+    return {(r.k, r.feathr_cutoff): r.asDict() for r in df.collect()}
+
+
+def _materialize(p, bt, *sinks):
+    from feathr_spark.materialization import MaterializationSettings
+    return p.materialize_features(MaterializationSettings(
+        name="m", sinks=list(sinks), feature_names=_SINK_FEATURES,
+        backfill_time=bt))
+
+
+def test_backfill_overwrite_sink_holds_every_cutoff(spark, tmp_path):
+    """A default GenericSink replaces what its path held with ALL cutoffs
+    of the backfill (one slice write per cutoff left only the oldest)."""
+    from feathr_spark.materialization import GenericSink
+    p = _multi_source_project(spark)
+    bt = _three_cutoffs()
+    path = str(tmp_path / "out")
+    p.compute_snapshot(spark, _SINK_FEATURES, ts("2024-01-01 18:00:00")) \
+        .write.parquet(path)
+    assert _materialize(p, bt, GenericSink(path=path)) == bt.cutoffs()
+    want = _by_key_cutoff(p.compute_backfill(spark, _SINK_FEATURES, bt))
+    assert {c for _, c in want} == {c.strftime("%Y-%m-%d %H:%M:%S")
+                                   for c in bt.cutoffs()}
+    assert _by_key_cutoff(spark.read.parquet(path)) == want
+
+
+def test_backfill_error_mode_sink_writes_once(spark, tmp_path):
+    """mode="error" takes the whole backfill in one write (a second slice
+    write into the same path raised PATH_ALREADY_EXISTS)."""
+    from feathr_spark.materialization import GenericSink
+    p = _multi_source_project(spark)
+    bt = _three_cutoffs()
+    path = str(tmp_path / "out")
+    assert _materialize(p, bt, GenericSink(path=path, mode="error")) \
+        == bt.cutoffs()
+    assert _by_key_cutoff(spark.read.parquet(path)) == \
+        _by_key_cutoff(p.compute_backfill(spark, _SINK_FEATURES, bt))
+
+
+def test_backfill_redis_sink_keeps_newest_cutoff(spark, tmp_path):
+    """A RedisSink holds one hash per entity key, so a backfill writes it
+    the newest cutoff only: every key reads its newest-cutoff values."""
+    import json
+    from feathr_spark.materialization import RedisSink
+
+    class LoggedRedis:
+        """Each pipeline appends its HSETs to one shared log in execution
+        order (executors run in other processes); replaying the log into a
+        dict gives the hashes a server would hold."""
+
+        def __init__(self, log):
+            self.log, self.calls = log, []
+
+        def pipeline(self):
+            return self
+
+        def hset(self, name, mapping=None):
+            self.calls.append([name, mapping])
+
+        def execute(self):
+            import fcntl
+            import json
+            with open(self.log, "a") as f:
+                fcntl.flock(f, fcntl.LOCK_EX)
+                f.write("".join(json.dumps(c) + "\n" for c in self.calls))
+            self.calls = []
+
+    p = _multi_source_project(spark)
+    bt = _three_cutoffs()
+    log = str(tmp_path / "hset.jsonl")
+    sink = RedisSink(table_name="t", client_factory=lambda: LoggedRedis(log))
+    assert _materialize(p, bt, sink) == bt.cutoffs()
+    store = {}
+    with open(log) as f:
+        for line in f:
+            name, mapping = json.loads(line)
+            store.setdefault(name, {}).update(mapping)
+    newest = p.compute_snapshot(spark, _SINK_FEATURES, bt.cutoffs()[0])
+    want = dict(RedisSink.encode_row(r.asDict(), ["k"], "t")
+                for r in newest.collect())
+    assert len(want) == 5
+    assert store == want
+
+
+def test_backfill_jobs_do_not_grow_with_cutoffs(spark, tmp_path, count_jobs):
+    """A single-sink backfill launches as many Spark jobs at 6 cutoffs as
+    at 3 (one slice write per cutoff added jobs per cutoff)."""
+    from feathr_spark.materialization import BackfillTime, GenericSink
+    p = _multi_source_project(spark)
+    jobs = {}
+    for n in (3, 6):
+        end = ts("2024-01-03 12:00:00")
+        bt = BackfillTime(start=end - dt.timedelta(hours=n), end=end,
+                          step="HOURLY")
+        path = str(tmp_path / str(n))
+        written, jobs[n] = count_jobs(
+            lambda: _materialize(p, bt, GenericSink(path=path, mode="append")))
+        assert len(written) == n
+        assert spark.read.parquet(path).select("feathr_cutoff").distinct() \
+            .count() == n
+    assert jobs[3] == jobs[6], jobs
+
+
+def test_materialize_small_backfill_one_file(spark, tmp_path):
+    """A small single-sink backfill (3 cutoffs, 200 keys of a parquet
+    source) is one write of one parquet file holding every cutoff, and each
+    cutoff's slice is that cutoff's snapshot."""
     import glob
     import pyarrow.parquet as pq
     from feathr_spark.materialization import (
-        BackfillTime, GenericSink, MaterializationSettings)
+        GenericSink, MaterializationSettings)
     from feathr_spark.source import HdfsSource, TimeWindowParameters
     src_path = str(tmp_path / "src")
     spark.createDataFrame([
         Row(k=k, t=dt.datetime(2024, 1, 1) + dt.timedelta(hours=7 * i + k % 7),
             v=float(k * i))
-        for k in range(n_keys) for i in range(1, 4)]).write.parquet(src_path)
+        for k in range(200) for i in range(1, 4)]).write.parquet(src_path)
     p = FeathrProject("sized", spark)
     key = [TypedKey(key_column="k")]
     p.register_anchor(FeatureAnchor(
@@ -570,60 +686,23 @@ def _backfill_files(spark, tmp_path, n_keys=200):
             Feature(name="v_latest", transform="v", key=key),
         ]))
     feats = ["v_sum_1d", "v_cnt_2d", "v_latest"]
-    bt = BackfillTime(start=ts("2024-01-01 12:00:00"),
-                      end=ts("2024-01-04 12:00:00"), step="DAILY")
-    paths = [str(tmp_path / s) for s in ("a", "b")]
-    written = p.materialize_features(MaterializationSettings(
+    bt = _three_cutoffs()
+    out = str(tmp_path / "out")
+    cutoffs = p.materialize_features(MaterializationSettings(
         name="sized", feature_names=feats, backfill_time=bt,
-        sinks=[GenericSink(path=d, mode="append") for d in paths]))
-    assert written == bt.cutoffs() and len(written) == 3
-    files = []
-    for d in paths:
-        per_cutoff = collections.Counter()
-        for f in glob.glob(f"{d}/part-*.parquet"):
-            cuts = set(pq.read_table(f, columns=["feathr_cutoff"])
-                       .column(0).to_pylist())
-            assert len(cuts) == 1, (f, cuts)
-            per_cutoff[cuts.pop()] += 1
-        files.append(per_cutoff)
-    return p, feats, written, paths, files
-
-
-def test_materialize_small_backfill_one_file_per_cutoff(spark, tmp_path):
-    """The persisted backfill frame is coalesced to its estimated size: a
-    small 2-sink × 3-cutoff backfill writes one parquet file per cutoff per
-    sink, not one per shuffle partition, and each slice is still that
-    cutoff's snapshot."""
-    p, feats, cutoffs, paths, files = _backfill_files(spark, tmp_path)
-    want = {c.strftime("%Y-%m-%d %H:%M:%S"): 1 for c in cutoffs}
-    assert files == [want, want]
-    for d in paths:
-        got = spark.read.parquet(d)
-        for c in cutoffs:
-            snap = p.compute_snapshot(spark, feats, c)
-            slice_ = got.where(F.col("feathr_cutoff") == c.strftime(
-                "%Y-%m-%d %H:%M:%S")).select(*snap.columns)
-            assert sorted(slice_.collect()) == sorted(snap.collect())
-
-
-def test_materialize_size_check_decides_coalesce(spark, tmp_path):
-    """With a 1 KiB advisory partition size the same backfill's estimate
-    asks for at least the shuffle partition count, so the frame is not
-    coalesced and every cutoff writes one file per non-empty shuffle
-    partition (all of them, at 200 keys)."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "1k")
-    try:
-        _, _, cutoffs, _, files = _backfill_files(spark, tmp_path)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    want = {c.strftime("%Y-%m-%d %H:%M:%S"): n for c in cutoffs}
-    assert files == [want, want]
+        sinks=[GenericSink(path=out)]))
+    assert cutoffs == bt.cutoffs() and len(cutoffs) == 3
+    files = glob.glob(f"{out}/part-*.parquet")
+    assert len(files) == 1, files
+    assert set(pq.read_table(files[0], columns=["feathr_cutoff"])
+               .column(0).to_pylist()) == {
+        c.strftime("%Y-%m-%d %H:%M:%S") for c in cutoffs}
+    got = spark.read.parquet(out)
+    for c in cutoffs:
+        snap = p.compute_snapshot(spark, feats, c)
+        slice_ = got.where(F.col("feathr_cutoff") == c.strftime(
+            "%Y-%m-%d %H:%M:%S")).select(*snap.columns)
+        assert sorted(slice_.collect()) == sorted(snap.collect())
 
 
 def test_key_alias_reuse(spark):
