@@ -15,8 +15,9 @@ configured, so scale-adaptive rather than a local constant; at cluster
 scale the input is already multi-file parallel and this stays a cheap
 balanced exchange (skew-free when the key is unique per row).
 
-Hoisted here in r12 (ADVICE r11): dedup._spread, similarity._spread_by
-and the entry file's vocab_growth spread duplicated this logic.
+Hoisted here in r12 (ADVICE r11) from three copies, in dedup,
+similarity and the entry file's vocab_growth; all three call it
+directly.
 """
 from __future__ import annotations
 

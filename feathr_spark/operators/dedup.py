@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._cache import attach_intermediates
+from ._partition import spread_by
 
 # Permutation family h_j(x) = (a_j*x + b_j) mod M31 over 31-bit base
 # hashes: 31-bit operands keep a*h + b < 2^62, inside int64 even with ANSI
@@ -69,27 +70,6 @@ def portable_hash64(col: Column) -> Column:
     (SimHash, fake multimodal codec). 60 bits keeps the value inside a
     signed int64 with no sign-bit special cases."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Hash-repartition on the id before expensive per-row work.
-
-    A single-file parquet source arrives as ONE input partition locally,
-    serializing shingling/hashing onto one task; the exchange moves only the
-    raw rows and makes everything downstream partition-parallel. At cluster
-    scale the input is already multi-file parallel and this stays a cheap
-    balanced exchange (skew-free: ids are unique).
-
-    The partition count is passed EXPLICITLY (r11): a keys-only
-    ``repartition(col)`` is REPARTITION_BY_COL, which AQE's partition
-    coalescer may collapse back to ONE partition when the shuffle BYTES
-    are small (minPartitionSize 1 MB) — but the whole point of this
-    exchange is the work AFTER it (shingle/gram explosion fans out
-    100-1000x), which AQE cannot see. An explicit count makes the
-    shuffle REPARTITION_BY_NUM, which AQE must preserve. Shared logic
-    lives in :mod:`._partition` (r12 hoist)."""
-    from ._partition import spread_by
-    return spread_by(df, F.col(id_col))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -159,7 +139,7 @@ def _shingled_frame(df: DataFrame, text_col: str, id_col: str,
     ELEMENT (and the explode-inferred filter re-evaluates the whole array
     expression pre-shuffle). CollapseProject keeps the split because the
     alias is non-cheap and multiply-referenced."""
-    pre = _spread(df, id_col)
+    pre = spread_by(df, F.col(id_col))
     if kind == "char":
         normed = pre.select(F.col(id_col).alias("__id"),
                             normalize_text(F.col(text_col)).alias("__norm"))
@@ -230,7 +210,7 @@ def _hashed_char_tokens(df: DataFrame, text_col: str, id_col: str,
                 yield pd.DataFrame({"__id": np.concatenate(ids),
                                     "__h": np.concatenate(hs)})
 
-    norm = _spread(df, id_col).select(
+    norm = spread_by(df, F.col(id_col)).select(
         F.col(id_col).alias("__id"),
         normalize_text(F.col(text_col)).alias("__t"))
     return norm.mapInPandas(_toks, "__id long, __h long")
@@ -745,7 +725,7 @@ def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
         strategy = "exact" if frac > 0.05 else "lsh"
     if strategy == "exact":
         return cosine_pairs_exact(df, vec_col, id_col, threshold)
-    v = _spread(df, id_col).select(
+    v = spread_by(df, F.col(id_col)).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"))
     norm = F.greatest(l2_norm(F.col("__v")), F.lit(1e-12))
@@ -1052,11 +1032,11 @@ def exact_substring_spans(
     t = F.col(text_col)
     # docs shorter than min_len have no qualifying gram (filter BEFORE
     # the sequence: Spark's sequence(1, 0) counts DOWN, it isn't empty)
-    # r11: _spread first — a single-file local read is ONE partition, so
+    # r11: spread_by first — a single-file local read is ONE partition, so
     # the stride-1 gram explosion (the pipeline's heaviest narrow stage,
     # 54 MB of gram digests at sf0.1) serialized onto one task (measured
     # 3.1 s of its 4.0 s wall); the exchange moves only the raw rows
-    grams = (_spread(df, id_col).select(F.col(id_col), t.alias("__t"))
+    grams = (spread_by(df, F.col(id_col)).select(F.col(id_col), t.alias("__t"))
              .where(F.length("__t") >= L)
              .select(F.col(id_col),
                      F.length("__t").alias("__n"),

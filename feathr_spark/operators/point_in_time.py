@@ -6,18 +6,26 @@ event time *t*, aggregate ``def_expr`` over source rows with key *k* and
 source event time in ``(t − window, t]``, after applying ``filter``,
 optionally sub-grouped by ``group_by`` keeping at most ``limit`` groups.
 
-Two physical strategies, chosen per source:
+Two physical plans, chosen per spec from its shape alone by
+:func:`choose_pit_strategy`, so planning is lazy: this operator runs no
+Spark job. (The eager steps of a feature query come before it: the
+observation-bounds job of ``get_offline_features(time_prune=True)``, and
+Spark's schema inference on a file source's first read in a session.)
 
-**lane-ordered window (``union_window``, the default).** Every source on
-one observation key set is unioned with the observation rows into ONE
-frame, partitioned by the keys and sorted by a lane-ordered epoch
-``__feathr_o = __feathr_t + p``: observation rows use p = 0, source
-group i uses p_i = (2i+1)·2^49 ms. Each feature of group i is one
-aggregate over ``rangeBetween(p_i − w + 1, p_i)``. So one shuffle, one
-sort and one Window pass serve every source and every window length —
-*no join, no row explosion*, cost O(|obs| + Σ|src|) state, skew handled
-by AQE; contrast with the naive interval join whose output is
-O(|obs| × rows-per-window).
+**lane-ordered window (``union_window``, every spec without
+``group_by``).** Every source on one observation key set is unioned with
+the observation rows into ONE frame, partitioned by the keys and sorted
+by a lane-ordered epoch ``__feathr_o = __feathr_t + p``: observation
+rows use p = 0, source group i uses p_i = (2i+1)·2^49 ms. Each feature
+of group i is one aggregate over ``rangeBetween(p_i − w + 1, p_i)``. So
+one shuffle, one sort and one Window pass serve every source and every
+window length —
+*no join, no row explosion*, cost O(|obs| + Σ|src|) state; contrast
+with an interval join, whose output is O(|obs| × rows-per-window).
+A hot key's whole history is folded in one task; this plan still beat
+an interval join with 30% and 60% of the rows on one key (AQE splits
+only the observation side of that LEFT OUTER join, so the hot source key
+stays in one task there too).
 
   * *Exactness.* An observation row at t sees, in group i's frame,
     exactly group i's source rows with event time in (t − w, t], in
@@ -40,13 +48,11 @@ O(|obs| × rows-per-window).
     order value plus frame offset, (4N − 2)·2^49 plus the time range,
     stays below 2^63 for up to ``MAX_LANES`` groups.
 
-**interval-join (for group_by/limit, or a skewed key).** Equi-join on
-keys with a range predicate, then two-level groupBy. Used when the
-aggregation has a ``group_by`` sub-clause, whose grouped top-k output is
-not expressible as a window aggregate, and when the skew sample finds
-one hot key. The join is a plain shuffled equi-join on the entity key;
-the range predicate is applied post-join (Catalyst pushes it into the
-join when profitable).
+**interval join (``group_by`` specs).** Equi-join on keys with a range
+predicate, then two-level groupBy: the grouped top-k output is not
+expressible as a window aggregate. The join is a plain shuffled
+equi-join on the entity key; the range predicate is applied post-join
+(Catalyst pushes it into the join when profitable).
 """
 
 from __future__ import annotations
@@ -54,8 +60,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Dict, List, Sequence, Tuple
 
-from py4j.protocol import Py4JError
-from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
@@ -102,141 +106,51 @@ def _value_col(def_expr: str, filter_expr) -> Column:
     return v
 
 
-def choose_pit_strategy(
-    source: DataFrame,
-    src_keys: Sequence[str],
-    sample_rows: int = 100_000,
-    hot_share: float = 0.2,
-) -> str:
-    """Pick the physical PIT strategy from a sampled key-skew statistic.
-
-    A window function needs an entity key's entire history in ONE task —
-    a pathologically hot key (bot account, null-like sentinel id) pins a
-    partition no matter how many executors exist, and AQE cannot split a
-    window partition. The interval join, by contrast, is a shuffled
-    equi-join whose skewed key AQE splits across tasks. So: sample up to
-    ``sample_rows`` source rows (key columns only — pruned scan), and if
-    the most frequent key tuple holds ≥ ``hot_share`` of the sample,
-    return ``"interval_join"``; else ``"union_window"``.
-
-    Cost: one small aggregate job at plan time over a column-pruned
-    sampled scan (LocalLimit short-circuits the read). The sample is
-    per-partition-prefix rather than uniform — fine for a coarse
-    one-key-dominates signal; borderline skew just below the threshold
-    still runs union_window correctly. Decisions are memoized on the
-    source plan's semantic hash, so re-planning over the same source
-    (multiple anchors, repeated jobs in one session) samples once.
-    """
-    try:
-        cache_key = (source.semanticHash(), tuple(src_keys), hot_share)
-    except (Py4JError, PySparkException):
-        cache_key = None
-    # one .get(), not `in` then `[]`: another query planning in the same
-    # session may clear() the memo between the two
-    hit = _STRATEGY_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-    sample = source.select(*src_keys).limit(sample_rows)
-    top = (sample.groupBy(*src_keys).count()
-           .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
-           .first())
-    decision = "union_window"
-    if top and top.n and top.mx / top.n >= hot_share:
-        decision = "interval_join"
-    if cache_key is not None:
-        if len(_STRATEGY_CACHE) > 256:
-            _STRATEGY_CACHE.clear()
-        _STRATEGY_CACHE[cache_key] = decision
-    return decision
-
-
-_STRATEGY_CACHE: dict = {}
-
-
-def point_in_time_aggregate(
-    obs: DataFrame,
-    source: DataFrame,
-    obs_keys: Sequence[str],
-    src_keys: Sequence[str],
-    obs_ts: str,
-    src_ts: str,
-    specs: Sequence[WindowFeatureSpec],
-    strategy: str = "auto",
-) -> DataFrame:
-    """Attach one column per spec to ``obs``: the one-source case of
-    :func:`point_in_time_join`.
-
-    ``obs_keys``/``src_keys`` are positionally matched join columns.
-    ``obs_ts``/``src_ts`` are TimestampType column names.
-    """
-    return point_in_time_join(
-        obs, obs_ts, [PitSource(source, obs_keys, src_keys, src_ts, specs)],
-        strategy)
+def choose_pit_strategy(spec: WindowFeatureSpec) -> str:
+    """The physical plan for one spec: ``"interval_join"`` for a
+    ``group_by`` spec, ``"union_window"`` (the lane-ordered window) for
+    every other. The choice reads only the spec, so it runs no job."""
+    return "union_window" if spec.transform.group_by is None else "interval_join"
 
 
 def point_in_time_join(
     obs: DataFrame,
     obs_ts: str,
     sources: Sequence[PitSource],
-    strategy: str = "auto",
 ) -> DataFrame:
     """Attach one column per spec of every source to ``obs``, in source
     then spec order (each source's ``group_by`` specs after its simple
     ones). ``obs_ts`` is the observation's TimestampType column.
 
-    ``strategy`` selects the physical plan for each source's simple
-    (non-group_by) specs:
+    All simple specs of the sources on one ``obs_keys`` share one
+    lane-ordered window (one shuffle, one sort and one Window pass);
+    each ``group_by`` spec is one interval join.
 
-    * ``"auto"`` (default) — :func:`choose_pit_strategy` samples each
-      source's key distribution and picks ``interval_join`` when one key
-      tuple dominates (≥20% of the sample), else ``union_window``.
-    * ``"union_window"`` — the lane-ordered window: all such sources on
-      one ``obs_keys`` share one shuffle, one sort and one Window pass, with no row
-      explosion; the right choice almost always. Its one weakness is a
-      pathologically hot entity key: window functions need a key's full
-      history in one task and AQE cannot split it.
-    * ``"interval_join"`` — shuffled equi-join on the key + range
-      predicate + groupBy(distinct key/timestamp combo). Output is
-      O(|obs| × rows-per-window), but AQE's skew-join splitting applies,
-      so a single mega-key spreads over many tasks. Pick this when key
-      skew dominates.
-
-    Both strategies compute identical results (property-tested, including
-    null keys/timestamps).
-
-    NULL semantics (both strategies, matching SQL join semantics as the
-    reference's Spark join does): source rows with a NULL entity key or
-    NULL timestamp never contribute to any window; observation rows with a
-    NULL key or timestamp get empty-window aggregates (NULL, COUNT 0).
+    NULL semantics (matching SQL join semantics as the reference's Spark
+    join does): source rows with a NULL entity key or NULL timestamp never
+    contribute to any window; observation rows with a NULL key or
+    timestamp get empty-window aggregates (NULL, COUNT 0).
     """
     lanes: Dict[Tuple[str, ...], List[PitSource]] = {}
-    joins: List[PitSource] = []
     grouped: List[Tuple[PitSource, WindowFeatureSpec]] = []
     for src in sources:
-        simple = [s for s in src.specs if s.transform.group_by is None]
-        if simple:
-            how = strategy
-            if how == "auto":
-                how = choose_pit_strategy(src.df, src.src_keys)
-            part = PitSource(src.df, src.obs_keys, src.src_keys, src.src_ts, simple)
-            if how == "union_window":
-                lanes.setdefault(tuple(src.obs_keys), []).append(part)
-            elif how == "interval_join":
-                joins.append(part)
+        simple = []
+        for s in src.specs:
+            if choose_pit_strategy(s) == "union_window":
+                simple.append(s)
             else:
-                raise ValueError(f"unknown point-in-time strategy: {how}")
-        grouped += [(src, s) for s in src.specs if s.transform.group_by is not None]
+                grouped.append((src, s))
+        if simple:
+            lanes.setdefault(tuple(src.obs_keys), []).append(
+                PitSource(src.df, src.obs_keys, src.src_keys, src.src_ts, simple))
     out = obs
     for obs_keys, group in lanes.items():
         out = _lane_window(out, obs_keys, obs_ts, group)
-    for src in joins:
-        out = _interval_join_simple(out, src.df, src.obs_keys, src.src_keys,
-                                    obs_ts, src.src_ts, src.specs)
     for src, s in grouped:
         out = _interval_join_grouped(out, src.df, src.obs_keys, src.src_keys,
                                      obs_ts, src.src_ts, s)
     names = _output_names(sources)
-    attached = _output_names([p for g in lanes.values() for p in g] + joins)
+    attached = _output_names([p for g in lanes.values() for p in g])
     if attached + [s.out_name for _, s in grouped] != names:
         out = out.select(*[F.col(_quote(c)) for c in obs.columns + names])
     return out
@@ -322,7 +236,7 @@ def _lane_window(
         # union — column pruning reaches the parquet scan. NULL-key/NULL-ts
         # source rows never contribute (SQL join semantics — the partition
         # would otherwise group NULL keys together and aggregate them,
-        # diverging from the interval-join strategy and the reference's
+        # diverging from the grouped interval join and the reference's
         # join behavior).
         null_free = " AND ".join(f"{c} IS NOT NULL" for c in
                                  [_epoch_ms(src.src_ts)]
@@ -342,66 +256,6 @@ def _lane_window(
     return result.drop(_T, _O, _TAG, *val_cols)
 
 
-def _interval_join_simple(
-    obs: DataFrame,
-    source: DataFrame,
-    obs_keys: Sequence[str],
-    src_keys: Sequence[str],
-    obs_ts: str,
-    src_ts: str,
-    specs: Sequence[WindowFeatureSpec],
-) -> DataFrame:
-    """Skew-tolerant strategy: equi-join on keys, range predicate, one
-    groupBy per distinct (key-tuple, timestamp) computing every spec's
-    aggregate, then a deterministic attach join back onto the observation
-    frame. AQE can split a skewed key's join output across tasks (unlike a
-    window partition). LEFT join keeps combos with an empty window
-    (aggregates null/0 as in the window strategy).
-
-    The aggregate is a pure function of (keys, event time), so it is
-    computed once per DISTINCT combo — never per observation row (repeated
-    observations are free) — and the attach join needs no synthetic row id
-    (``monotonically_increasing_id`` is order-dependent and can disagree
-    between two evaluations of the same plan when lineage contains a
-    shuffle, silently mis-attaching features)."""
-    max_w = max(s.transform.window_ms for s in specs)
-    kcols = [f"__k{i}" for i in range(len(obs_keys))]
-    left = obs.select(
-        *[F.col(k).alias(a) for k, a in zip(obs_keys, kcols)],
-        F.unix_millis(F.col(obs_ts).cast("timestamp")).alias("__ot"),
-    ).distinct()
-    right = source.select(
-        *[F.col(k).alias(a) for k, a in zip(src_keys, kcols)],
-        F.unix_millis(F.col(src_ts).cast("timestamp")).alias("__st"),
-        *[_value_col(s.transform.def_expr, s.transform.filter).alias(f"__v{i}")
-          for i, s in enumerate(specs)],
-    )
-    cond = [left[a] == right[a] for a in kcols]
-    # range predicate INSIDE the left-join condition: combos whose matches
-    # all fall outside the window survive with nulls (count 0), exactly
-    # like an empty window frame.
-    cond.append((right["__st"] > left["__ot"] - max_w) & (right["__st"] <= left["__ot"]))
-    joined = left.join(right, cond, "left")
-    aggs = []
-    for i, s in enumerate(specs):
-        wms = s.transform.window_ms
-        v = F.col(f"__v{i}")
-        if wms != max_w:  # narrower windows mask values outside their range
-            v = F.when(F.col("__st") > F.col("__ot") - wms, v)
-        aggs.append(simple_agg(s.transform.agg_func, v, F.col("__st"),
-                               s.transform.agg_param,
-                               obs_ts=left["__ot"]).alias(s.out_name))
-    per_combo = joined.groupBy(*[left[a] for a in kcols], left["__ot"]).agg(*aggs)
-    # null-SAFE attach: a NULL-key/NULL-ts observation row still matches its
-    # distinct combo row, whose source join found nothing (NULL condition),
-    # i.e. it receives empty-window aggregates (COUNT 0) exactly like the
-    # union-window strategy — not a missing match.
-    attach = [obs[k].eqNullSafe(per_combo[a]) for k, a in zip(obs_keys, kcols)]
-    attach.append(F.unix_millis(F.col(obs_ts).cast("timestamp"))
-                  .eqNullSafe(per_combo["__ot"]))
-    return obs.join(per_combo, attach, "left").drop(*kcols, "__ot")
-
-
 def _interval_join_grouped(
     obs: DataFrame,
     source: DataFrame,
@@ -414,8 +268,13 @@ def _interval_join_grouped(
     """group_by sub-clause (+ optional limit top-k): result per observation
     row is a group→aggregate mapping, represented as an array of
     ``struct<group, value>`` sorted by group for deterministic output.
-    Same deterministic distinct-(keys, ts) frame as the simple interval
-    join — no synthetic row ids."""
+
+    The aggregate is a pure function of (keys, event time), so it is
+    computed once per DISTINCT combo — never per observation row — and
+    the attach join needs no synthetic row id
+    (``monotonically_increasing_id`` is order-dependent and can disagree
+    between two evaluations of the same plan when lineage contains a
+    shuffle, silently mis-attaching features)."""
     t = spec.transform
     wms = t.window_ms
 

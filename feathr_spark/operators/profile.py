@@ -369,9 +369,9 @@ def key_skew(
 ) -> DataFrame:
     """Join/aggregation skew diagnosis for a key set: how concentrated
     the per-key row counts are. The pre-flight readout for every
-    shuffle-on-key operator here — the PIT planner's auto strategy
-    samples exactly this signal at plan time (``choose_pit_strategy``);
-    this operator makes the full diagnosis a first-class query.
+    shuffle-on-key operator here, such as the point-in-time window, which
+    folds each key's whole history in one task; the planner samples
+    nothing at plan time, so this query is where a hot key shows.
 
     Plan: ONE data-sized shuffle (the per-key groupBy count, map-side
     combined); everything after operates on the keys-sized counts frame

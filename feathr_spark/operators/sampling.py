@@ -252,7 +252,6 @@ def poisson_bootstrap_ci(
     lo: float = 0.025,
     hi: float = 0.975,
     salt: str = "",
-    spread: bool = True,
 ) -> DataFrame:
     """Percentile bootstrap confidence interval for the MEAN of
     ``value_col``, web-scale formulation (Poisson bootstrap): instead
@@ -274,16 +273,15 @@ def poisson_bootstrap_ci(
     above the 2.3e-10 lane resolution). Replicate b uses chunk b//4,
     lane b%4 of ``md5(salt + id + ':' + chunk)``.
 
-    ``spread=True`` (default) repartitions the two-narrow-column
-    (id, value) projection to the configured parallelism before the
-    replicate fan-out: the downstream work is ``n_boot/4`` hashes plus
-    ``n_boot`` inverse-CDF ladder evaluations PER INPUT ROW, so when
-    the input arrives in few partitions (one small parquet file
-    locally; a coalesced upstream) the spread is the difference
-    between a single-task pipeline and cluster-wide execution
-    (measured 9.2 s -> 1.5 s at sf0.1 local[32]). Disable it when the
-    input partitioning is already adequate — the projection shuffle is
-    the only data-sized exchange in the operator.
+    The two-narrow-column (id, value) projection is repartitioned to the
+    configured parallelism before the replicate fan-out: the downstream
+    work is ``n_boot/4`` hashes plus ``n_boot`` inverse-CDF ladder
+    evaluations PER INPUT ROW, so when the input arrives in few
+    partitions (one small parquet file locally; a coalesced upstream)
+    the spread is the difference between a single-task pipeline and
+    cluster-wide execution (measured 9.2 s -> 1.5 s at sf0.1
+    local[32]). That projection shuffle is the only data-sized exchange
+    in the operator.
 
     Output: 1 row ``(n, n_boot, mean, ci_lo, ci_hi)``.
     """
@@ -295,10 +293,8 @@ def poisson_bootstrap_ci(
                     F.col(value_col).cast("decimal(18,4)").alias("__x")))
     # base stats fold off the UN-spread projection (a plain scan-agg
     # gains nothing from the fan-out); only the replicate path pays it
-    d = d0
-    if spread:
-        d = d0.repartition(int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32")))
+    d = d0.repartition(int(df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions", "32")))
     chunk = d.select(
         "__x",
         F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1)))

@@ -19,18 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _spread_by(df: DataFrame, col: Column) -> DataFrame:
-    """Hash-repartition with an EXPLICIT partition count (r11): keys-only
-    repartition is REPARTITION_BY_COL, which AQE's coalescer collapses
-    back toward ONE partition when the shuffled bytes are under its
-    1 MB minimum — but these exchanges exist to parallelize the
-    brute-force scoring loop AFTER them, whose pair fan-out AQE cannot
-    see (measured: the whole corpus × queries dot-product stage ran in
-    one task). REPARTITION_BY_NUM is preserved by AQE. Shared logic
-    lives in :mod:`._partition` (r12 hoist)."""
-    from ._partition import spread_by
-    return spread_by(df, col)
+from ._partition import spread_by
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -183,7 +172,7 @@ def cosine_pairs_exact(
     v = df.select(F.col(id_col).alias("__id"),
                   F.col(vec_col).cast("array<double>").alias("__v"))
     withn = v.select("__id", "__v", l2_norm(F.col("__v")).alias("__n"))
-    left = _spread_by(withn, F.col("__id")).alias("a")
+    left = spread_by(withn, F.col("__id")).alias("a")
     right = F.broadcast(withn).alias("b")
     # Join condition carries ONLY the cheap id ordering. Scoring happens in
     # the projection above, and the persist() seals the plan so the
@@ -228,7 +217,7 @@ def cosine_topk(
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).cast("array<double>").alias("__qv"))
     q = q.select("query_id", "__qv", l2_norm(F.col("__qv")).alias("__qn"))
-    joined = _spread_by(c, F.col("neighbor_id")).join(
+    joined = spread_by(c, F.col("neighbor_id")).join(
         F.broadcast(q), on=None, how="cross")
     if exclude_self:
         joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
@@ -572,7 +561,7 @@ def dot_topk(
                       F.col(vec_col).cast("array<double>").alias("__cv"))
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).cast("array<double>").alias("__qv"))
-    joined = _spread_by(c, F.col("neighbor_id")).join(
+    joined = spread_by(c, F.col("neighbor_id")).join(
         F.broadcast(q), on=None, how="cross")
     if exclude_self:
         joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
@@ -618,7 +607,7 @@ def cosine_and_dot_topk(
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).cast("array<double>").alias("__qv"))
     q = q.select("query_id", "__qv", l2_norm(F.col("__qv")).alias("__qn"))
-    joined = _spread_by(c, F.col("neighbor_id")).join(
+    joined = spread_by(c, F.col("neighbor_id")).join(
         F.broadcast(q), on=None, how="cross") \
         .where(F.col("query_id") != F.col("neighbor_id"))
     withd = joined.select(
@@ -693,7 +682,7 @@ def hard_negatives(
     c = c.select("*", l2_norm(F.col("__cv")).alias("__cn"))
     q = queries.select(*qcols)
     q = q.select("*", l2_norm(F.col("__qv")).alias("__qn"))
-    joined = _spread_by(c, F.col("neighbor_id")).join(
+    joined = spread_by(c, F.col("neighbor_id")).join(
         F.broadcast(q), on=None, how="cross")
     joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
     if has_label:

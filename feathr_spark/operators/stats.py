@@ -85,7 +85,6 @@ def roc_auc(
     score_col: str,
     by: Optional[Sequence[str]] = None,
     buckets: int = 64,
-    broadcast_frames: bool = True,
 ) -> DataFrame:
     """Exact ROC-AUC of ``score_col`` against boolean ``label_col``,
     optionally per group: the Mann–Whitney statistic
@@ -111,12 +110,10 @@ def roc_auc(
     (by..., auc, n_pos, n_neg). Exact — buckets only partition the
     cumsum, they never quantize scores.
 
-    ``broadcast_frames`` (default True) force-broadcasts the per-group
-    bounds and prefix-offset frames — right for the usual few-arm
-    grouping. Pass False when ``by`` is very high cardinality (the
-    frames are |groups|- and |groups|×buckets-sized and a forced
-    broadcast of millions of groups can OOM the driver); AQE then
-    picks broadcast vs shuffle from the measured sizes.
+    The per-group bounds and prefix-offset frames are force-broadcast:
+    they are |groups|- and |groups|×buckets-sized, small for the usual
+    few-arm grouping (a ``by`` of millions of groups would not fit the
+    driver).
     """
     if buckets < 1:
         raise ValueError("roc_auc: buckets must be >= 1")
@@ -132,9 +129,8 @@ def roc_auc(
     # 2. order-preserving range bucket from broadcast per-group bounds
     bounds = s.groupBy(*keys).agg(F.min("__s").alias("__lo"),
                                   F.max("__s").alias("__hi"))
-    bframe = F.broadcast(bounds) if broadcast_frames else bounds
     if keys:
-        sb = s.join(bframe, keys)
+        sb = s.join(F.broadcast(bounds), keys)
     else:
         sb = s.crossJoin(F.broadcast(bounds))
     lo, hi = F.col("__lo"), F.col("__hi")
@@ -160,8 +156,7 @@ def roc_auc(
     # 4. within-bucket running negatives (parallel across buckets)
     wrun = Window.partitionBy(*keys, "__b").orderBy("__s") \
         .rowsBetween(Window.unboundedPreceding, -1)
-    oframe = F.broadcast(offs) if broadcast_frames else offs
-    scored = (sb.join(oframe, keys + ["__b"])
+    scored = (sb.join(F.broadcast(offs), keys + ["__b"])
               .select(*keys, "__tp", "__tn",
                       (F.col("__p").cast("double") *
                        (F.coalesce(F.sum("__n").over(wrun), F.lit(0))

@@ -170,7 +170,6 @@ class FeathrProject:
         observation_settings: Optional[ObservationSettings] = None,
         spark: Optional[SparkSession] = None,
         time_prune: bool = False,
-        pit_strategy: str = "auto",
     ) -> DataFrame:
         """Point-in-time-correct LEFT feature join onto the observation
         frame (reference project.rs:248-278). Returns a lazy DataFrame.
@@ -183,23 +182,14 @@ class FeathrProject:
         pruning (SURVEY §4 'partition pruning by time'). Leave False when
         observation ≈ source (self-join shape) where it prunes nothing.
 
-        ``pit_strategy`` selects the windowed-feature physical plan:
-        ``"auto"`` (default — samples each source's key distribution and
-        switches to the skew-tolerant plan when one key dominates),
-        ``"union_window"`` (the lane-ordered window: every such source on
-        one observation key set shares one shuffle, one sort and one
-        Window pass, with no row explosion) or ``"interval_join"``
-        (AQE-skew-splittable; pick when one entity key dominates the
-        source). See operators.point_in_time.
-
-        Note: with ``pit_strategy="auto"`` and windowed features present,
-        planning runs one small eager Spark job (a column-pruned,
-        row-limited key-skew sample, memoized per source plan) before the
-        lazy result DataFrame is returned. Pass an explicit strategy to
-        keep planning fully lazy. The first read of each file source
-        (``HdfsSource``, ``ObservationSettings``) in a session also runs
-        Spark's schema-inference job(s); later reads of unchanged files
-        reuse the inferred schema and run none (see ``HdfsSource.read``).
+        Planning is lazy: the returned DataFrame is built without running
+        a Spark job, except for the ``time_prune`` bounds job above and,
+        on the first read of each file source (``HdfsSource``,
+        ``ObservationSettings``) in a session, Spark's schema-inference
+        job(s); later reads of unchanged files reuse the inferred schema
+        and run none (see ``HdfsSource.read``). Windowed features without
+        ``group_by`` use the lane-ordered window, ``group_by`` ones an
+        interval join (see operators.point_in_time).
         """
         spark = spark or self.spark
         if isinstance(observation, ObservationSettings):
@@ -229,13 +219,12 @@ class FeathrProject:
         out = obs_df
         for q in queries:
             out = self._apply_query(spark, out, q,
-                                    obs_bounds if time_prune else None,
-                                    pit_strategy)
+                                    obs_bounds if time_prune else None)
         return out.drop(EVENT_TS_COL)
 
     def _apply_query(self, spark: SparkSession, obs: DataFrame, q: FeatureQuery,
-                     obs_bounds: Optional[Callable[[], Optional[Tuple[int, int]]]],
-                     pit_strategy: str) -> DataFrame:
+                     obs_bounds: Optional[Callable[[], Optional[Tuple[int, int]]]]
+                     ) -> DataFrame:
         anchor_feats, derived_order = self._resolve(q.feature_list)
 
         def obs_keys_for(f: Feature) -> List[str]:
@@ -279,8 +268,7 @@ class FeathrProject:
             sources = [self._windowed_source(spark, src_keys, obs_keys, feats,
                                              obs_bounds)
                        for (_, src_keys, obs_keys), feats in windows.items()]
-            out = point_in_time_join(out, EVENT_TS_COL, sources,
-                                     strategy=pit_strategy)
+            out = point_in_time_join(out, EVENT_TS_COL, sources)
 
         # ---- derived features: topo-ordered column expressions ----
         for d in derived_order:

@@ -18,6 +18,7 @@ touched. Usage:
     python scripts/scale_stress.py              # 1x/3x/5x, min-of-2
     python scripts/scale_stress.py 1 3          # custom scale list
     python scripts/scale_stress.py --pit --queries=pit_multi_source
+    python scripts/scale_stress.py --pit --queries=pit_hot_key,pit_hot_key_90,pit_hot_key_90u
 
 ``--pit`` runs the point-in-time family (driver queries plus the cases
 in ``PIT_CASES``) and prints each one's shuffle Exchange count next to
@@ -278,12 +279,62 @@ def pit_multi_source(spark, sf_dir):
     names = [f.name for a in p.anchors.values() for f in a.features]
     obs = ObservationSettings(timestamp_column="o_orderdate").with_event_ts(
         spark.read.parquet(path).select("o_orderkey", "o_custkey", "o_orderdate"))
-    return p.get_offline_features(obs, FeatureQuery(names),
-                                  pit_strategy="union_window")
+    return p.get_offline_features(obs, FeatureQuery(names))
+
+
+def pit_hot_key(src_share, obs_share):
+    """A case with one hot customer: the orders are the source and a
+    tenth of them the observation, and the key is rewritten to -1 (no
+    real customer) on ``src_share`` of the source rows and ``obs_share``
+    of the observation rows. The hot key's history grows with the scale
+    while the time range stays fixed, so its window frames grow too."""
+    def case(spark, sf_dir):
+        import __spark_entry__ as entry
+        from pyspark.sql import functions as F
+        from feathr_spark import (
+            Aggregation, FeathrProject, Feature, FeatureAnchor, FeatureQuery,
+            HdfsSource, ObservationSettings, TimeWindowParameters, TypedKey,
+            WindowAggTransform)
+        entry._utc(spark)
+        path = f"{sf_dir}/orders.parquet"
+
+        def hot(df, sample, share):
+            # the hash picks the hot rows independently of the sample
+            return df.where(sample).withColumn("o_custkey", F.expr(
+                f"CASE WHEN pmod(xxhash64(o_orderkey), 100) < {round(share * 100)} "
+                "THEN -1 ELSE o_custkey END"))
+
+        src = HdfsSource(
+            name="orders", path=path,
+            preprocessing=lambda df: hot(df, "true", src_share),
+            time_window_parameters=TimeWindowParameters("o_orderdate"))
+        key = [TypedKey(key_column="o_custkey")]
+        A = Aggregation
+        p = FeathrProject("pit_hot_key", spark)
+        p.register_anchor(FeatureAnchor(name="orders", source=src, features=[
+            Feature(name=n, key=key, transform=WindowAggTransform(e, a, w))
+            for n, e, a, w in (
+                ("cnt_7d", "1", A.COUNT, "7d"),
+                ("sum_30d", "o_totalprice", A.SUM, "30d"),
+                ("max_30d", "o_totalprice", A.MAX, "30d"),
+                ("last_90d", "o_totalprice", A.LATEST, "90d"))]))
+        obs = hot(spark.read.parquet(path).select(
+            "o_orderkey", "o_custkey", "o_orderdate"),
+            "pmod(o_orderkey, 10) = 1", obs_share)
+        return p.get_offline_features(
+            ObservationSettings(timestamp_column="o_orderdate").with_event_ts(obs),
+            FeatureQuery(["cnt_7d", "sum_30d", "max_30d", "last_90d"]))
+    return case
 
 
 # scale cases defined here rather than as driver queries
-PIT_CASES = {"pit_multi_source": pit_multi_source}
+PIT_CASES = {"pit_multi_source": pit_multi_source,
+             # one key holds 60% of both sides
+             "pit_hot_key": pit_hot_key(0.6, 0.6),
+             # one key holds 90% of the source and 5% of the observation
+             "pit_hot_key_90": pit_hot_key(0.9, 0.05),
+             # ... and none of the observation
+             "pit_hot_key_90u": pit_hot_key(0.9, 0.0)}
 
 
 def shuffle_exchanges(df):
@@ -305,6 +356,8 @@ def stress_pit(spark, scales, con, only=None):
     names = ["window_agg_basic", "multi_key_window", "asof_join",
              # several windowed sources on one observation key
              "pit_multi_source",
+             # one hot key
+             "pit_hot_key", "pit_hot_key_90", "pit_hot_key_90u",
              # r7 widening: one representative per orders/events family
              # (exact-percentile fold, global-ntile segmentation,
              # gap-rule sessions, +1/-1 concurrency sweep, recursive

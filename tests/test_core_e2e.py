@@ -259,116 +259,68 @@ def test_elementwise(spark):
     assert r.f_eavg == [4.0, 5.0]
 
 
-def test_interval_join_strategy_matches_union_window(spark, tiny):
-    """Both point-in-time strategies (union-window vs AQE-skew-splittable
-    interval join) compute identical results on every agg kind, including
-    observation rows with an empty window."""
+def test_window_aggs_match_handwritten_rows(spark, tiny):
+    """Every aggregation kind of the lane-ordered window against
+    handwritten rows, including an observation row with an empty
+    window."""
     obs_extra = tiny.union(spark.createDataFrame(
         # key 3 exists only in the observation: empty window everywhere
         [Row(k=3, t=ts("2024-01-04 00:00:00"), v=1.0)]))
 
-    def run(strategy):
-        p = FeathrProject("t", spark)
-        key = TypedKey(key_column="k")
-        src = DataFrameSource(
-            name="src", df=tiny,
-            time_window_parameters=TimeWindowParameters(timestamp_column="t"))
-        p.register_anchor(FeatureAnchor(name="agg", source=src, features=[
-            Feature(name="f_sum", transform=WindowAggTransform("v", Aggregation.SUM, "2d"), key=[key]),
-            Feature(name="f_avg", transform=WindowAggTransform("v", Aggregation.AVG, "2d"), key=[key]),
-            Feature(name="f_cnt", transform=WindowAggTransform("v", Aggregation.COUNT, "2d"), key=[key]),
-            Feature(name="f_min", transform=WindowAggTransform("v", Aggregation.MIN, "5d"), key=[key]),
-            Feature(name="f_latest", transform=WindowAggTransform("v", Aggregation.LATEST, "2d"), key=[key]),
-            Feature(name="f_first", transform=WindowAggTransform("v", Aggregation.NOP, "5d"), key=[key]),
-            Feature(name="f_union", transform=WindowAggTransform("v", Aggregation.UNION, "5d"), key=[key]),
-            Feature(name="f_filt", transform=WindowAggTransform(
-                "v", Aggregation.SUM, "5d", filter="v > 15"), key=[key]),
-            Feature(name="f_ndist", transform=WindowAggTransform(
-                "v", Aggregation.COUNT_DISTINCT, "5d"), key=[key]),
-            Feature(name="f_adist", transform=WindowAggTransform(
-                "v", Aggregation.APPROX_COUNT_DISTINCT, "5d"), key=[key]),
-        ]))
-        obs = ObservationSettings(timestamp_column="t")
-        out = p.get_offline_features(
-            obs.with_event_ts(obs_extra),
-            FeatureQuery(["f_sum", "f_avg", "f_cnt", "f_min", "f_latest",
-                          "f_first", "f_union", "f_filt", "f_ndist",
-                          "f_adist"]),
-            pit_strategy=strategy)
-        return sorted([tuple(r) for r in out.collect()], key=repr)
-
-    uw = run("union_window")
-    ij = run("interval_join")
-    assert uw == ij
+    p = FeathrProject("t", spark)
+    key = TypedKey(key_column="k")
+    src = DataFrameSource(
+        name="src", df=tiny,
+        time_window_parameters=TimeWindowParameters(timestamp_column="t"))
+    p.register_anchor(FeatureAnchor(name="agg", source=src, features=[
+        Feature(name="f_sum", transform=WindowAggTransform("v", Aggregation.SUM, "2d"), key=[key]),
+        Feature(name="f_avg", transform=WindowAggTransform("v", Aggregation.AVG, "2d"), key=[key]),
+        Feature(name="f_cnt", transform=WindowAggTransform("v", Aggregation.COUNT, "2d"), key=[key]),
+        Feature(name="f_min", transform=WindowAggTransform("v", Aggregation.MIN, "5d"), key=[key]),
+        Feature(name="f_latest", transform=WindowAggTransform("v", Aggregation.LATEST, "2d"), key=[key]),
+        Feature(name="f_first", transform=WindowAggTransform("v", Aggregation.NOP, "5d"), key=[key]),
+        Feature(name="f_union", transform=WindowAggTransform("v", Aggregation.UNION, "5d"), key=[key]),
+        Feature(name="f_filt", transform=WindowAggTransform(
+            "v", Aggregation.SUM, "5d", filter="v > 15"), key=[key]),
+        Feature(name="f_ndist", transform=WindowAggTransform(
+            "v", Aggregation.COUNT_DISTINCT, "5d"), key=[key]),
+        Feature(name="f_adist", transform=WindowAggTransform(
+            "v", Aggregation.APPROX_COUNT_DISTINCT, "5d"), key=[key]),
+    ]))
+    obs = ObservationSettings(timestamp_column="t")
+    out = p.get_offline_features(
+        obs.with_event_ts(obs_extra),
+        FeatureQuery(["f_sum", "f_avg", "f_cnt", "f_min", "f_latest",
+                      "f_first", "f_union", "f_filt", "f_ndist",
+                      "f_adist"]))
+    got = {(r.k, r.t): tuple(r) for r in out.collect()}
+    # (k, day, v): 2d sum, avg, count, latest; 5d min, first, union,
+    # filtered sum, distinct counts
+    expected = [
+        (1, 1, 10.0, 10.0, 10.0, 1, 10.0, 10.0, 10.0, [10.0], None, 1, 1),
+        (1, 2, 20.0, 30.0, 15.0, 2, 10.0, 20.0, 10.0, [10.0, 20.0], 20.0, 2, 2),
+        (1, 3, 30.0, 50.0, 25.0, 2, 10.0, 30.0, 10.0, [10.0, 20.0, 30.0],
+         50.0, 3, 3),
+        (1, 10, 40.0, 40.0, 40.0, 1, 40.0, 40.0, 40.0, [40.0], 40.0, 1, 1),
+        (2, 5, 5.0, 5.0, 5.0, 1, 5.0, 5.0, 5.0, [5.0], None, 1, 1),
+        (3, 4, 1.0, None, None, 0, None, None, None, [], None, 0, 0),
+    ]
+    assert got == {(k, ts(f"2024-01-{d:02d} 00:00:00")):
+                   (k, ts(f"2024-01-{d:02d} 00:00:00"), *rest)
+                   for k, d, *rest in expected}
     # sanity: the empty-window key has null sum but count 0
-    k3 = [r for r in uw if r[0] == 3][0]
+    k3 = got[(3, ts("2024-01-04 00:00:00"))]
     assert k3[3] is None and k3[5] == 0
 
 
-def test_strategy_memo_survives_concurrent_clear(spark, monkeypatch,
-                                                 count_jobs):
-    """Two queries planning at once share the PIT strategy memo: another
-    thread's ``clear()`` may land between a membership test and the
-    read. Simulated with a memo that clears itself on ``__contains__``:
-    the second lookup must still be served from the memo, launching no
-    sample job."""
-    from feathr_spark.operators import point_in_time
-
-    class RacyMemo(dict):
-        def __contains__(self, key):
-            hit = dict.__contains__(self, key)
-            self.clear()
-            return hit
-
-    monkeypatch.setattr(point_in_time, "_STRATEGY_CACHE", RacyMemo())
-    src = spark.createDataFrame([Row(k=i % 40, v=float(i))
-                                 for i in range(400)])
-    assert point_in_time.choose_pit_strategy(src, ["k"]) == "union_window"
-    hit, jobs = count_jobs(
-        lambda: point_in_time.choose_pit_strategy(src, ["k"]))
-    assert (hit, jobs) == ("union_window", 0)
-
-
-def test_auto_strategy_switches_on_hot_key(spark):
-    """choose_pit_strategy picks the AQE-skew-splittable interval join
-    when one entity key dominates the source, union_window on a uniform
-    key distribution — and the auto-selected plan computes the same
-    values either way (strategy equality is proven separately)."""
-    from feathr_spark.operators.point_in_time import choose_pit_strategy
-    hot = spark.createDataFrame(
-        [Row(k=1 if i % 10 else 2, t=ts("2024-01-01 00:00:00")
-             + dt.timedelta(hours=i), v=float(i)) for i in range(400)])
-    uniform = spark.createDataFrame(
-        [Row(k=i % 40, t=ts("2024-01-01 00:00:00")
-             + dt.timedelta(hours=i), v=float(i)) for i in range(400)])
-    assert choose_pit_strategy(hot, ["k"]) == "interval_join"
-    assert choose_pit_strategy(uniform, ["k"]) == "union_window"
-
-    # the auto default end-to-end on the hot frame matches the explicit
-    # union_window answer
-    def run(strategy):
-        p = FeathrProject("t", spark)
-        src = DataFrameSource(name="src", df=hot, time_window_parameters=
-                              TimeWindowParameters(timestamp_column="t"))
-        p.register_anchor(FeatureAnchor(name="a", source=src, features=[
-            Feature(name="f_sum", transform=WindowAggTransform(
-                "v", Aggregation.SUM, "2d"), key=[TypedKey(key_column="k")]),
-        ]))
-        return sorted([tuple(r) for r in p.get_offline_features(
-            ObservationSettings(timestamp_column="t").with_event_ts(hot),
-            FeatureQuery(["f_sum"]), pit_strategy=strategy).collect()],
-            key=repr)
-
-    assert run("auto") == run("union_window")
-
-
-def test_strategies_agree_on_null_keys_and_ts(spark, tiny):
+def test_null_keys_and_ts_match_brute_force(spark, tiny):
     """NULL entity keys / NULL timestamps: source rows with NULLs never
     contribute to any window (SQL join semantics), and NULL-key/-ts
-    observation rows get empty-window aggregates (COUNT 0, others NULL) —
-    identically in both strategies."""
+    observation rows get empty-window aggregates (COUNT 0, others NULL),
+    as the brute-force window evaluation has it."""
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType, TimestampType)
+    from tests.test_property_window import brute_force
     schema = StructType([StructField("k", LongType(), True),
                          StructField("t", TimestampType(), True),
                          StructField("v", DoubleType(), True)])
@@ -380,27 +332,33 @@ def test_strategies_agree_on_null_keys_and_ts(spark, tiny):
     src_df = tiny.select("k", "t", "v").union(nulls)
     obs_df = src_df
 
-    def run(strategy):
-        p = FeathrProject("t", spark)
-        key = TypedKey(key_column="k")
-        src = DataFrameSource(
-            name="src", df=src_df,
-            time_window_parameters=TimeWindowParameters(timestamp_column="t"))
-        p.register_anchor(FeatureAnchor(name="agg", source=src, features=[
-            Feature(name="f_sum", transform=WindowAggTransform(
-                "v", Aggregation.SUM, "2d"), key=[key]),
-            Feature(name="f_cnt", transform=WindowAggTransform(
-                "v", Aggregation.COUNT, "2d"), key=[key]),
-        ]))
-        obs = ObservationSettings(timestamp_column="t")
-        out = p.get_offline_features(
-            obs.with_event_ts(obs_df), FeatureQuery(["f_sum", "f_cnt"]),
-            pit_strategy=strategy)
-        return sorted([tuple(r) for r in out.collect()], key=repr)
+    p = FeathrProject("t", spark)
+    key = TypedKey(key_column="k")
+    src = DataFrameSource(
+        name="src", df=src_df,
+        time_window_parameters=TimeWindowParameters(timestamp_column="t"))
+    p.register_anchor(FeatureAnchor(name="agg", source=src, features=[
+        Feature(name="f_sum", transform=WindowAggTransform(
+            "v", Aggregation.SUM, "2d"), key=[key]),
+        Feature(name="f_cnt", transform=WindowAggTransform(
+            "v", Aggregation.COUNT, "2d"), key=[key]),
+    ]))
+    obs = ObservationSettings(timestamp_column="t")
+    out = p.get_offline_features(
+        obs.with_event_ts(obs_df), FeatureQuery(["f_sum", "f_cnt"]))
+    uw = sorted([tuple(r) for r in out.collect()], key=repr)
 
-    uw = run("union_window")
-    ij = run("interval_join")
-    assert uw == ij
+    base = ts("2024-01-01 00:00:00")
+
+    def hour(t):
+        return None if t is None else int((t - base).total_seconds() // 3600)
+
+    src_rows = src_df.collect()
+    rows = [(r.k, hour(r.t), r.v) for r in src_rows]
+    bf = brute_force(rows, 48)  # the observation is the source
+    expected = sorted([(r.k, r.t, r.v, bf[(r.k, h)]["sum"], bf[(r.k, h)]["cnt"])
+                       for r, (_, h, _) in zip(src_rows, rows)], key=repr)
+    assert uw == expected
     # null-key/null-ts observation rows: empty window (sum NULL, count 0)
     for r in uw:
         if r[0] is None or r[1] is None:

@@ -1051,15 +1051,14 @@ def test_window_percentile_agg(spark, tmp_path):
 
 
 def test_window_decay_agg_values_and_strategies(spark):
-    """DECAY_SUM/DECAY_AVG: exponentially time-decayed counters. Values
-    checked against a brute-force python computation; union-window and
-    interval-join strategies must agree exactly in shape and to float
-    tolerance in value."""
+    """DECAY_SUM/DECAY_AVG: exponentially time-decayed counters. The
+    lane-ordered window's values are checked against a brute-force
+    python computation, to float tolerance."""
     import datetime as dt
     import math
     from feathr_spark.model import Aggregation, WindowAggTransform
     from feathr_spark.operators.point_in_time import (
-        WindowFeatureSpec, point_in_time_aggregate)
+        PitSource, WindowFeatureSpec, point_in_time_join)
 
     base = dt.datetime(2024, 1, 1)
     src_rows = [Row(k=1 + (i % 2), ts=base + dt.timedelta(days=i % 9),
@@ -1087,19 +1086,18 @@ def test_window_decay_agg_values_and_strategies(spark):
         s = sum(w * v for w, (v, _) in zip(ws, pairs))
         return s, s / sum(ws)
 
-    for strat in ("union_window", "interval_join"):
-        out = point_in_time_aggregate(
-            obs, src, ["k"], ["k"], "ots", "ts", specs, strategy=strat)
-        got = {(r.k, r.ots): (r.dsum, r.davg) for r in out.collect()}
-        assert len(got) == len(obs_rows), strat
-        for r in obs_rows:
-            es, ea = brute(r.k, r.ots)
-            gs, ga = got[(r.k, r.ots)]
-            if es is None:
-                assert gs is None and ga is None, (strat, r)
-            else:
-                assert math.isclose(gs, es, rel_tol=1e-9), (strat, r)
-                assert math.isclose(ga, ea, rel_tol=1e-9), (strat, r)
+    out = point_in_time_join(
+        obs, "ots", [PitSource(src, ["k"], ["k"], "ts", specs)])
+    got = {(r.k, r.ots): (r.dsum, r.davg) for r in out.collect()}
+    assert len(got) == len(obs_rows)
+    for r in obs_rows:
+        es, ea = brute(r.k, r.ots)
+        gs, ga = got[(r.k, r.ots)]
+        if es is None:
+            assert gs is None and ga is None, r
+        else:
+            assert math.isclose(gs, es, rel_tol=1e-9), r
+            assert math.isclose(ga, ea, rel_tol=1e-9), r
 
     from feathr_spark.operators.aggregations import make_agg
     with pytest.raises(ValueError):

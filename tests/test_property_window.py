@@ -219,7 +219,7 @@ def test_multi_source_windows_match_brute_force(spark, case):
         [Row(k=k, t=ts(h)) for k, h in obs_rows], "k int, t timestamp")
     out = p.get_offline_features(
         ObservationSettings(timestamp_column="t").with_event_ts(obs),
-        FeatureQuery(names), pit_strategy="union_window")
+        FeatureQuery(names))
     assert out.columns == ["k", "t"] + names
     got = out.collect()
     assert len(got) == len(obs_rows)
@@ -308,7 +308,7 @@ def brute_force_grouped(rows, obs_rows, window_hours, limit):
 def test_grouped_window_null_semantics_match_brute_force(spark, rows,
                                                          window_hours):
     from feathr_spark.operators.point_in_time import (
-        WindowFeatureSpec, point_in_time_aggregate)
+        PitSource, WindowFeatureSpec, point_in_time_join)
 
     def ts(h):
         return None if h is None else BASE + dt.timedelta(hours=h)
@@ -328,8 +328,7 @@ def test_grouped_window_null_semantics_match_brute_force(spark, rows,
         transform=WindowAggTransform("v", Aggregation.SUM,
                                      f"{window_hours}h", group_by="g",
                                      limit=2))
-    out = point_in_time_aggregate(obs, src, ["k"], ["k"], "t", "t", [spec],
-                                  strategy="interval_join")
+    out = point_in_time_join(obs, "t", [PitSource(src, ["k"], ["k"], "t", [spec])])
     expected = brute_force_grouped(rows, obs_rows, window_hours, limit=2)
     got = {}
     for r in out.collect():

@@ -68,10 +68,9 @@ def _project(spark, paths, extra_event_features=()):
 
 
 def _query(project, paths, features=FEATURES):
-    # an explicit strategy keeps the PIT skew sample out of the job counts
     return project.get_offline_features(
         ObservationSettings(observation_path=paths["obs"], timestamp_column="obs_ts"),
-        FeatureQuery(list(features)), pit_strategy="union_window")
+        FeatureQuery(list(features)))
 
 
 def _rows(df):

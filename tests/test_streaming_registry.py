@@ -1049,15 +1049,15 @@ def test_stream_decay_counters_match_batch_decay(spark, tmp_path):
     # cross-check the final value against the batch DECAY_SUM operator
     from feathr_spark.model import Aggregation, WindowAggTransform
     from feathr_spark.operators.point_in_time import (
-        WindowFeatureSpec, point_in_time_aggregate)
+        PitSource, WindowFeatureSpec, point_in_time_join)
     allev = b1.unionByName(b2)
     obs = spark.createDataFrame([Row(k="a",
                                      ots=ts("2024-01-03 00:00:00"))])
-    batch = point_in_time_aggregate(
-        obs, allev, ["k"], ["k"], "ots", "t",
+    batch = point_in_time_join(obs, "ots", [PitSource(
+        allev, ["k"], ["k"], "t",
         [WindowFeatureSpec("ds", WindowAggTransform(
-            "v", Aggregation.DECAY_SUM, "30d", agg_param=1.0))],
-        strategy="union_window").collect()[0].ds
+            "v", Aggregation.DECAY_SUM, "30d", agg_param=1.0))])]
+    ).collect()[0].ds
     assert abs(batch - max(got)) < 1e-9
 
 
