@@ -62,6 +62,32 @@ def feathr_expr(expr: str):
     return F.expr(rewrite_feathr_expr(expr))
 
 
+# SQL-text building blocks. The planner writes its expressions as SQL
+# text and parses each projection once (``selectExpr``/``F.expr``): one
+# py4j round trip per parsed expression, where a ``Column`` builder makes
+# one or more per function call.
+def quote_ident(name: str) -> str:
+    """``name`` as one quoted SQL identifier (dots and spaces included)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_ref(col: str) -> str:
+    """SQL for ``F.col(col)``: dots separate nested fields, and a name
+    with backticks is already quoted."""
+    return col if "`" in col else ".".join(map(quote_ident, col.split(".")))
+
+
+def sql_expr(expr: str) -> str:
+    """A Feathr expression (shims inlined) as a parenthesized SQL operand.
+    The newline ends a trailing ``--`` comment inside the expression."""
+    return f"({rewrite_feathr_expr(expr)}\n)"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _skip_string(s: str, j: int) -> int:
     """``s[j]`` opens a string literal: return the index just past its end.
     Handles both Spark SQL escape styles — backslash (``'a\\'b'``) and

@@ -12,6 +12,8 @@ from dataclasses import dataclass
 from enum import Enum
 from typing import Optional, Union
 
+from .functions import quote_ident, sql_str
+
 
 # ---------------------------------------------------------------------------
 # Value / tensor types (reference: feathr-rs/src/model.rs:12-63)
@@ -243,13 +245,14 @@ def timestamp_col_expr(column: str, fmt: Optional[str]):
     language for the subset Feathr uses, e.g. ``yyyy-MM-dd HH:mm:ss``).
     ``None`` means the column is already a timestamp.
     """
+    col = quote_ident(column)
     if fmt is None:
-        return f"CAST(`{column}` AS TIMESTAMP)"
+        return f"CAST({col} AS TIMESTAMP)"
     if fmt == EPOCH:
-        return f"CAST(CAST(`{column}` AS BIGINT) AS TIMESTAMP)"
+        return f"CAST(CAST({col} AS BIGINT) AS TIMESTAMP)"
     if fmt == EPOCH_MILLIS:
-        return f"TIMESTAMP_MILLIS(CAST(`{column}` AS BIGINT))"
-    return f"TO_TIMESTAMP(`{column}`, '{fmt}')"
+        return f"TIMESTAMP_MILLIS(CAST({col} AS BIGINT))"
+    return f"TO_TIMESTAMP({col}, {sql_str(fmt)})"
 
 
 # ---------------------------------------------------------------------------

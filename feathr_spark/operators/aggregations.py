@@ -5,20 +5,27 @@ Covers every reference Aggregation variant
 All constructions stay JVM-side (built-in functions / higher-order
 functions) — no Python UDFs in the hot path.
 
-``make_agg`` returns ``(aggregate, post)`` where ``aggregate`` is a pure
-aggregate expression (legal both in ``groupBy().agg`` and with
-``.over(window)``) and ``post`` is a scalar post-transform applied to the
-aggregated value (e.g. sorting a collected list) — needed because wrapping
-an aggregate in a scalar function before ``.over`` is not legal Spark.
+:func:`agg_sql` maps one aggregation to ONE SQL expression, as text. The
+planner parses it with the rest of its projection (``selectExpr``,
+``F.expr``), so an aggregation costs no py4j round trip of its own; a
+``Column`` builder costs one or more per function call. The same text
+serves both contexts: with ``over`` every aggregate call carries an
+inline ``OVER (...)`` clause (a scalar post-transform, e.g. sorting a
+collected list, then wraps the windowed aggregate, which is legal in a
+select), and without it the expression is legal in ``groupBy().agg``.
+
+Operands are SQL text too: quote column names with
+:func:`feathr_spark.functions.sql_ref`, and write doubles with
+:func:`sql_double` (a bare ``0.1`` parses as DECIMAL in Spark SQL).
+Lambda variables are named ``__acc``, ``__x``, …, so that they do not
+shadow a column an operand reads inside the lambda.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Tuple
+import math
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
+from ..functions import sql_expr
 from ..model import Aggregation
 
 _ELEMENTWISE = {
@@ -26,36 +33,68 @@ _ELEMENTWISE = {
     Aggregation.ELEMENTWISE_MAX, Aggregation.ELEMENTWISE_SUM,
 }
 
+_SIMPLE = {
+    Aggregation.AVG: "avg", Aggregation.SUM: "sum", Aggregation.MIN: "min",
+    Aggregation.MAX: "max", Aggregation.COUNT: "count",
+    # HLL++ sketch (Spark default rsd = 0.05): fixed-size state per
+    # group/frame instead of COUNT_DISTINCT's per-distinct-value
+    # collect_set entry — the memory-safe variant for high-cardinality
+    # 100 TB windows. Ignores nulls, so the filter clause works as for
+    # every other aggregate here.
+    Aggregation.APPROX_COUNT_DISTINCT: "approx_count_distinct",
+}
 
-def elementwise_reduce(lists: Column, agg: Aggregation) -> Column:
-    """Element-wise reduce an ``array<array<T>>`` column.
 
-    ELEMENTWISE_AVG/MIN/MAX/SUM over 1-d dense tensors (model.rs:209).
-    Uses ``aggregate``+``zip_with`` higher-order functions (whole-stage
-    codegen'd, no UDF). Empty input → null.
-    """
-    if agg in (Aggregation.ELEMENTWISE_SUM, Aggregation.ELEMENTWISE_AVG):
-        merge = lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b)
-    elif agg == Aggregation.ELEMENTWISE_MIN:
-        merge = lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b))
-    elif agg == Aggregation.ELEMENTWISE_MAX:
-        merge = lambda acc, x: F.zip_with(acc, x, lambda a, b: F.greatest(a, b))
-    else:
+def value_sql(def_expr: str, filter_expr) -> str:
+    """The SQL value an aggregation folds: ``def_expr`` where the Feathr
+    ``filter_expr`` holds, NULL elsewhere."""
+    v = sql_expr(def_expr)
+    if filter_expr:
+        v = f"CASE WHEN {sql_expr(filter_expr)} THEN {v} END"
+    return v
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a SQL DOUBLE literal."""
+    x = float(x)
+    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _reduce(items: str, agg: Aggregation, sparse: bool) -> str:
+    """Element-wise reduce an ``array<array<T>>`` SQL expression —
+    ELEMENTWISE_AVG/MIN/MAX/SUM over 1-d dense tensors (model.rs:209) —
+    or, with ``sparse``, an ``array<map<K, V>>`` one (see
+    :func:`elementwise_reduce_sparse`). Uses ``aggregate`` +
+    ``zip_with``/``map_zip_with`` higher-order functions (whole-stage
+    codegen'd, no UDF). Empty input → null."""
+    if agg not in _ELEMENTWISE:
         raise ValueError(f"not an elementwise aggregation: {agg}")
-
-    n = F.size(lists)
-    head = F.element_at(lists, 1)
-    tail = F.slice(lists, 2, F.greatest(n - 1, F.lit(0)))
-    reduced = F.aggregate(tail, head, merge)
+    n = f"size({items})"
+    if agg == Aggregation.ELEMENTWISE_MIN:
+        pick = "least(__a, __b)"
+    elif agg == Aggregation.ELEMENTWISE_MAX:
+        pick = "greatest(__a, __b)"
+    else:
+        pick = None
+    if not sparse:
+        merge = f"zip_with(__acc, __x, (__a, __b) -> {pick or '__a + __b'})"
+    elif pick is None:
+        merge = ("map_zip_with(__acc, __x, (__k, __a, __b) -> "
+                 "coalesce(__a, 0.0D) + coalesce(__b, 0.0D))")
+    else:
+        merge = f"map_zip_with(__acc, __x, (__k, __a, __b) -> coalesce({pick}, __a, __b))"
+    reduced = (f"aggregate(slice({items}, 2, greatest({n} - 1, 0)), "
+               f"element_at({items}, 1), (__acc, __x) -> {merge})")
     if agg == Aggregation.ELEMENTWISE_AVG:
-        reduced = F.transform(reduced, lambda x: x / n)
-    return F.when(n > 0, reduced)
+        reduced = (f"transform_values({reduced}, (__k, __e) -> __e / {n})" if sparse
+                   else f"transform({reduced}, __e -> __e / {n})")
+    return f"CASE WHEN {n} > 0 THEN {reduced} END"
 
 
-def elementwise_reduce_sparse(maps: Column, agg: Aggregation) -> Column:
-    """Element-wise reduce an ``array<map<K, V>>`` column — the SPARSE
-    tensor counterpart of :func:`elementwise_reduce` (SURVEY §1.2 maps
-    the reference's ``TensorCategory::SPARSE`` to ``MapType``; the
+def elementwise_reduce_sparse(maps: str, agg: Aggregation) -> str:
+    """Element-wise reduce an ``array<map<K, V>>`` SQL expression — the
+    SPARSE tensor counterpart of the dense ELEMENTWISE aggregations (SURVEY §1.2
+    maps the reference's ``TensorCategory::SPARSE`` to ``MapType``; the
     reference declares the category, model.rs:44-47, but its test surface
     never exercises it — semantics documented here as the engine's
     contract):
@@ -69,43 +108,31 @@ def elementwise_reduce_sparse(maps: Column, agg: Aggregation) -> Column:
     All map unions happen via ``map_zip_with`` higher-order functions
     (JVM-side, no UDF). Empty input → null.
     """
-    if agg in (Aggregation.ELEMENTWISE_SUM, Aggregation.ELEMENTWISE_AVG):
-        merge = lambda acc, x: F.map_zip_with(
-            acc, x, lambda k, a, b:
-            F.coalesce(a, F.lit(0.0)) + F.coalesce(b, F.lit(0.0)))
-    elif agg == Aggregation.ELEMENTWISE_MIN:
-        merge = lambda acc, x: F.map_zip_with(
-            acc, x, lambda k, a, b: F.coalesce(F.least(a, b), a, b))
-    elif agg == Aggregation.ELEMENTWISE_MAX:
-        merge = lambda acc, x: F.map_zip_with(
-            acc, x, lambda k, a, b: F.coalesce(F.greatest(a, b), a, b))
-    else:
-        raise ValueError(f"not an elementwise aggregation: {agg}")
-
-    n = F.size(maps)
-    head = F.element_at(maps, 1)
-    tail = F.slice(maps, 2, F.greatest(n - 1, F.lit(0)))
-    reduced = F.aggregate(tail, head, merge)
-    if agg == Aggregation.ELEMENTWISE_AVG:
-        reduced = F.transform_values(reduced, lambda k, v: v / n)
-    return F.when(n > 0, reduced)
+    return _reduce(maps, agg, sparse=True)
 
 
-def make_agg(agg: Aggregation, value: Column, ts: Column,
-             param: float = None, obs_ts: Column = None,
-             ) -> Tuple[Column, Callable[[Column], Column]]:
-    """(aggregate expression, scalar post-transform) for one frame/group.
+def agg_sql(agg: Aggregation, value: str, ts: str, param: float = None,
+            obs_ts: str = None, over: str = None) -> str:
+    """One SQL expression aggregating ``value`` over a frame or a group.
 
-    ``value`` is null outside the aggregation's filter; all builtins here
-    ignore nulls, which implements the pre-aggregation ``filter`` clause
+    ``value``, ``ts`` and ``obs_ts`` are SQL expressions. ``value`` is
+    null outside the aggregation's filter; all builtins here ignore
+    nulls, which implements the pre-aggregation ``filter`` clause
     (model.rs:270) for free. ``param`` parameterizes PERCENTILE (the
     fraction) and DECAY_SUM/DECAY_AVG (half-life in days) and is ignored
-    elsewhere. ``obs_ts`` is the observation-time epoch-ms column the post
-    transform may reference (required by the DECAY aggregations; the
-    callers guarantee it is legal in the post context — the current row in
-    a window select, a grouping column in ``groupBy().agg``).
+    elsewhere. ``obs_ts`` is the observation-time epoch-ms expression the
+    post-transform may reference (required by the DECAY aggregations; the
+    callers guarantee it is legal there — the current row in a window
+    select, a grouping column in ``groupBy().agg``). ``over`` is a window
+    specification (``PARTITION BY … ORDER BY … RANGE BETWEEN …``); given,
+    every aggregate call is evaluated over it.
     """
-    ident = lambda c: c
+    w = f" OVER ({over})" if over is not None else ""
+    v = f"({value})"
+
+    def call(fn: str, *args: str) -> str:
+        return f"{fn}({', '.join(args)}){w}"
+
     if agg in (Aggregation.DECAY_SUM, Aggregation.DECAY_AVG):
         # Exponentially time-decayed sum / weighted mean. The frame state
         # is the (value, ts) pair list — the exact-arithmetic formulation:
@@ -124,25 +151,17 @@ def make_agg(agg: Aggregation, value: Column, ts: Column,
         if obs_ts is None:
             raise ValueError(f"{agg.value} requires the observation-time "
                              "column (obs_ts)")
-        half_ms = float(param) * 86400000.0
-        pairs = F.collect_list(
-            F.when(value.isNotNull() & ts.isNotNull(),
-                   F.struct(value.cast("double").alias("v"),
-                            ts.cast("double").alias("t"))))
-        weighted = lambda x: x["v"] * F.pow(
-            F.lit(0.5), (obs_ts.cast("double") - x["t"]) / F.lit(half_ms))
-        wsum = lambda c: F.aggregate(
-            c, F.lit(0.0), lambda acc, x: acc + weighted(x))
-        if agg == Aggregation.DECAY_SUM:
-            post = lambda c: F.when(F.size(c) > 0, wsum(c))
-        else:
-            den = lambda c: F.aggregate(
-                c, F.lit(0.0),
-                lambda acc, x: acc + F.pow(
-                    F.lit(0.5),
-                    (obs_ts.cast("double") - x["t"]) / F.lit(half_ms)))
-            post = lambda c: F.when(F.size(c) > 0, wsum(c) / den(c))
-        return pairs, post
+        pairs = call("collect_list", (
+            f"CASE WHEN {v} IS NOT NULL AND ({ts}) IS NOT NULL THEN "
+            f"named_struct('v', CAST({value} AS DOUBLE), "
+            f"'t', CAST({ts} AS DOUBLE)) END"))
+        weight = (f"power(0.5D, (CAST({obs_ts} AS DOUBLE) - __x.t) / "
+                  f"{sql_double(float(param) * 86400000.0)})")
+        wsum = f"aggregate({pairs}, 0.0D, (__acc, __x) -> __acc + __x.v * {weight})"
+        if agg == Aggregation.DECAY_AVG:
+            den = f"aggregate({pairs}, 0.0D, (__acc, __x) -> __acc + {weight})"
+            wsum = f"{wsum} / {den}"
+        return f"CASE WHEN size({pairs}) > 0 THEN {wsum} END"
     if agg == Aggregation.PERCENTILE:
         # exact interpolated percentile — ANSI PERCENTILE_CONT semantics
         # ((n-1)·p rank, linear interpolation), identical to DuckDB
@@ -154,48 +173,24 @@ def make_agg(agg: Aggregation, value: Column, ts: Column,
             raise ValueError(
                 "PERCENTILE requires agg_param in [0, 1], got "
                 f"{param!r}")
-        return F.percentile(value, F.lit(float(param))), ident
-    if agg == Aggregation.AVG:
-        return F.avg(value), ident
-    if agg == Aggregation.SUM:
-        return F.sum(value), ident
-    if agg == Aggregation.MIN:
-        return F.min(value), ident
-    if agg == Aggregation.MAX:
-        return F.max(value), ident
-    if agg == Aggregation.COUNT:
-        return F.count(value), ident
+        return call("percentile", v, sql_double(param), "1")
+    if agg in _SIMPLE:
+        return call(_SIMPLE[agg], v)
     if agg == Aggregation.COUNT_DISTINCT:
         # collect_set + size is window-frame-legal (COUNT(DISTINCT) isn't
         # allowed over a range frame); state is one entry per distinct
         # value, the same as any exact distinct count. For cardinality at
         # 100 TB scale prefer an approx sketch upstream.
-        return F.collect_set(value), F.size
-    if agg == Aggregation.APPROX_COUNT_DISTINCT:
-        # HLL++ sketch (Spark default rsd = 0.05): fixed-size state per
-        # group/frame instead of COUNT_DISTINCT's per-distinct-value
-        # collect_set entry — the memory-safe variant for high-cardinality
-        # 100 TB windows. Ignores nulls, so the filter clause works as for
-        # every other aggregate here.
-        return F.approx_count_distinct(value), ident
+        return f"size({call('collect_set', v)})"
     if agg == Aggregation.NOP:
         # "no aggregation — pick value as-is": earliest value in scope.
-        return F.min_by(value, F.when(value.isNotNull(), ts)), ident
+        return call("min_by", v, f"CASE WHEN {v} IS NOT NULL THEN {ts} END")
     if agg == Aggregation.LATEST:
         # value with max timestamp (model.rs:214)
-        return F.max_by(value, F.when(value.isNotNull(), ts)), ident
+        return call("max_by", v, f"CASE WHEN {v} IS NOT NULL THEN {ts} END")
     if agg == Aggregation.UNION:
         # collect into one list; sorted for deterministic output
-        return F.collect_list(value), F.array_sort
+        return f"array_sort({call('collect_list', v)})"
     if agg in _ELEMENTWISE:
-        return F.collect_list(value), (lambda c, a=agg: elementwise_reduce(c, a))
+        return _reduce(call("collect_list", v), agg, sparse=False)
     raise ValueError(f"unsupported aggregation: {agg}")
-
-
-def simple_agg(agg: Aggregation, value: Column, ts: Column,
-               param: float = None, obs_ts: Column = None) -> Column:
-    """Single-expression form for ``groupBy().agg`` contexts (scalar
-    wrappers over aggregates are legal there). ``obs_ts`` must be a
-    grouping column when given (DECAY aggregations reference it)."""
-    a, post = make_agg(agg, value, ts, param, obs_ts)
-    return post(a)

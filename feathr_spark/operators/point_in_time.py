@@ -17,7 +17,8 @@ Spark's schema inference on a file source's first read in a session.)
 the observation rows into ONE frame, partitioned by the keys and sorted
 by a lane-ordered epoch ``__feathr_o = __feathr_t + p``: observation
 rows use p = 0, source group i uses p_i = (2i+1)·2^49 ms. Each feature
-of group i is one aggregate over ``rangeBetween(p_i − w + 1, p_i)``. So
+of group i is one aggregate ``OVER (… RANGE BETWEEN p_i − w + 1
+FOLLOWING AND p_i FOLLOWING)``. So
 one shuffle, one sort and one Window pass serve every source and every
 window length —
 *no join, no row explosion*, cost O(|obs| + Σ|src|) state; contrast
@@ -60,13 +61,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Dict, List, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import WindowSpec
 
-from ..functions import feathr_expr
+from ..functions import quote_ident, sql_expr, sql_ref
 from ..model import WindowAggTransform
-from .aggregations import make_agg, simple_agg
+from .aggregations import agg_sql, value_sql
 
 _T = "__feathr_t"          # epoch millis (event time)
 _O = "__feathr_o"          # lane-ordered epoch: _T + the row's lane offset
@@ -91,19 +91,15 @@ class WindowFeatureSpec:
 class PitSource:
     """One source's windowed features for :func:`point_in_time_join`:
     ``src_keys`` match the observation's ``obs_keys`` positionally and
-    ``src_ts`` is a TimestampType column."""
+    ``src_ts`` is a TimestampType column. ``obs_keys`` name top-level
+    observation columns; ``src_keys`` and ``src_ts`` are column
+    references as for ``F.col`` (a dot selects a nested field; quote a
+    name holding a dot or backtick in backticks)."""
     df: DataFrame
     obs_keys: Sequence[str]
     src_keys: Sequence[str]
     src_ts: str
     specs: Sequence[WindowFeatureSpec]
-
-
-def _value_col(def_expr: str, filter_expr) -> Column:
-    v = feathr_expr(def_expr)
-    if filter_expr:
-        v = F.when(feathr_expr(filter_expr), v)
-    return v
 
 
 def choose_pit_strategy(spec: WindowFeatureSpec) -> str:
@@ -152,7 +148,7 @@ def point_in_time_join(
     names = _output_names(sources)
     attached = _output_names([p for g in lanes.values() for p in g])
     if attached + [s.out_name for _, s in grouped] != names:
-        out = out.select(*[F.col(_quote(c)) for c in obs.columns + names])
+        out = out.selectExpr(*map(quote_ident, obs.columns + names))
     return out
 
 
@@ -163,20 +159,13 @@ def _output_names(sources: Sequence[PitSource]) -> List[str]:
             for s in src.specs if (s.transform.group_by is not None) == grouped]
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-# The projections below are SQL strings: one py4j call per column instead
-# of one per operator keeps the planning call cheap.
-def _sql_ref(col: str) -> str:
-    """SQL for ``F.col(col)``: dots separate nested fields, and a name
-    with backticks is already quoted."""
-    return col if "`" in col else ".".join(map(_quote, col.split(".")))
-
-
+# Every expression below is SQL text, parsed with its projection
+# (``selectExpr``/``where``/``F.expr``): one py4j round trip per
+# expression, where ``Column`` builders make one or more per function
+# call. Observation keys name top-level columns (``quote_ident``); source
+# keys and timestamps are column references (``sql_ref``).
 def _epoch_ms(ts: str) -> str:
-    return f"unix_millis(CAST({_sql_ref(ts)} AS TIMESTAMP))"
+    return f"unix_millis(CAST({sql_ref(ts)} AS TIMESTAMP))"
 
 
 def _lane_order(ts: str, offset: int) -> str:
@@ -198,11 +187,10 @@ def _lane_window(
     if len(lanes) > MAX_LANES:
         raise ValueError(f"{len(lanes)} windowed sources on one key exceed "
                          f"the {MAX_LANES} lanes of one window pass")
-    parts = [obs.select("*", F.expr(f"{_epoch_ms(obs_ts)} AS {_T}"),
-                        F.expr(_lane_order(obs_ts, 0)), F.lit(1).alias(_TAG))]
-    by_key = Window.partitionBy(*obs_keys).orderBy(_O)
-    frames: Dict[Tuple[int, int], WindowSpec] = {}
-    out_cols: List[Column] = []
+    parts = [obs.selectExpr("*", f"{_epoch_ms(obs_ts)} AS {_T}",
+                            _lane_order(obs_ts, 0), f"1 AS {_TAG}")]
+    by_key = f"PARTITION BY {', '.join(map(quote_ident, obs_keys))} ORDER BY {_O}"
+    out_cols: List[str] = []
     val_cols: List[str] = []
     for i, src in enumerate(lanes):
         p = (2 * i + 1) * _LANE
@@ -220,17 +208,16 @@ def _lane_window(
                     f"(0, {MAX_WINDOW_MS}] ms, the point-in-time lane bound")
             vc = lane_vals.setdefault((t.def_expr, t.filter),
                                       f"__feathr_l{i}_v{len(lane_vals)}")
-            # (t − w, t] in this lane: rangeBetween is inclusive on both
+            # (t − w, t] in this lane: the frame is inclusive on both
             # ends, so the lower bound is shifted by 1 ms.
-            frame = frames.get((i, wms))
-            if frame is None:
-                frame = frames[(i, wms)] = by_key.rangeBetween(p - wms + 1, p)
-            # In the select, F.col(_T) is the CURRENT (observation) row's
-            # epoch; inside the aggregate it is each frame row's own event
-            # time. DECAY uses both; LATEST/NOP order by the latter.
-            agg, post = make_agg(t.agg_func, F.col(vc), F.col(_T),
-                                 t.agg_param, obs_ts=F.col(_T))
-            out_cols.append(post(agg.over(frame)).alias(s.out_name))
+            frame = (f"{by_key} RANGE BETWEEN {p - wms + 1} FOLLOWING "
+                     f"AND {p} FOLLOWING")
+            # Outside the OVER clause _T is the CURRENT (observation)
+            # row's epoch; inside the aggregate it is each frame row's own
+            # event time. DECAY uses both; LATEST/NOP order by the latter.
+            out_cols.append(agg_sql(t.agg_func, vc, _T, t.agg_param,
+                                    obs_ts=_T, over=frame)
+                            + f" AS {quote_ident(s.out_name)}")
         val_cols += lane_vals.values()
         # Source side: only keys + ordering + value columns survive the
         # union — column pruning reaches the parquet scan. NULL-key/NULL-ts
@@ -240,19 +227,19 @@ def _lane_window(
         # join behavior).
         null_free = " AND ".join(f"{c} IS NOT NULL" for c in
                                  [_epoch_ms(src.src_ts)]
-                                 + [_sql_ref(k) for k in src.src_keys])
-        parts.append(src.df.where(F.expr(null_free)).select(
-            *[F.expr(f"{_sql_ref(sk)} AS {_quote(ok)}")
+                                 + [sql_ref(k) for k in src.src_keys])
+        parts.append(src.df.where(null_free).selectExpr(
+            *[f"{sql_ref(sk)} AS {quote_ident(ok)}"
               for sk, ok in zip(src.src_keys, obs_keys)],
-            F.expr(f"{_epoch_ms(src.src_ts)} AS {_T}"),
-            F.expr(_lane_order(src.src_ts, p)),
-            *[_value_col(de, flt).alias(vc)
+            f"{_epoch_ms(src.src_ts)} AS {_T}",
+            _lane_order(src.src_ts, p),
+            *[f"{value_sql(de, flt)} AS {vc}"
               for (de, flt), vc in lane_vals.items()]))
 
     unioned = parts[0]
     for part in parts[1:]:
         unioned = unioned.unionByName(part, allowMissingColumns=True)
-    result = unioned.select("*", *out_cols).where(F.col(_TAG) == 1)
+    result = unioned.selectExpr("*", *out_cols).where(f"{_TAG} = 1")
     return result.drop(_T, _O, _TAG, *val_cols)
 
 
@@ -279,44 +266,36 @@ def _interval_join_grouped(
     wms = t.window_ms
 
     kcols = [f"__k{i}" for i in range(len(obs_keys))]
-    left = obs.select(
-        *[F.col(k).alias(a) for k, a in zip(obs_keys, kcols)],
-        F.unix_millis(F.col(obs_ts).cast("timestamp")).alias("__ot"),
+    left = obs.selectExpr(
+        *[f"{quote_ident(k)} AS {a}" for k, a in zip(obs_keys, kcols)],
+        f"{_epoch_ms(obs_ts)} AS __ot",
     ).distinct()
-    right = source.select(
-        *[F.col(k).alias(a) for k, a in zip(src_keys, kcols)],
-        F.unix_millis(F.col(src_ts).cast("timestamp")).alias("__st"),
-        _value_col(t.def_expr, t.filter).alias("__v"),
-        feathr_expr(t.group_by).alias("__g"),
+    right = source.selectExpr(
+        *[f"{sql_ref(k)} AS {a}" for k, a in zip(src_keys, kcols)],
+        f"{_epoch_ms(src_ts)} AS __st",
+        f"{value_sql(t.def_expr, t.filter)} AS __v",
+        f"{sql_expr(t.group_by)} AS __g",
     )
-    cond = [left[a] == right[a] for a in kcols]
-    joined = left.join(right, cond, "inner").where(
-        (F.col("__st") > F.col("__ot") - wms) & (F.col("__st") <= F.col("__ot"))
-    )
-    combo = [left[a] for a in kcols] + [left["__ot"]]
-    per_group = joined.groupBy(*combo, "__g").agg(
-        simple_agg(t.agg_func, F.col("__v"), F.col("__st"),
-                   t.agg_param, obs_ts=F.col("__ot")).alias("__gv")
-    )
+    joined = left.join(right, kcols, "inner").where(
+        f"__st > __ot - {wms} AND __st <= __ot")
+    per_group = joined.groupBy(*kcols, "__ot", "__g").agg(F.expr(
+        agg_sql(t.agg_func, "__v", "__st", t.agg_param, obs_ts="__ot")
+        + " AS __gv"))
     if t.limit is not None:
-        rank_w = Window.partitionBy(*kcols, "__ot").orderBy(
-            F.col("__gv").desc(), F.col("__g").asc())
-        per_group = per_group.withColumn("__rn", F.row_number().over(rank_w)) \
-            .where(F.col("__rn") <= t.limit).drop("__rn")
-    per_combo = per_group.groupBy(*kcols, "__ot").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("__g").alias("group"),
-                                    F.col("__gv").alias("value")))
-        ).alias(spec.out_name)
-    )
-    # Plain == attach, NOT eqNullSafe. Invariant: per_combo's key/ts columns
+        per_group = per_group.selectExpr("*", (
+            f"row_number() OVER (PARTITION BY {', '.join(kcols)}, __ot "
+            "ORDER BY __gv DESC, __g ASC) AS __rn")).where(f"__rn <= {t.limit}")
+    per_combo = per_group.groupBy(*kcols, "__ot").agg(F.expr(
+        "array_sort(collect_list(named_struct('group', __g, 'value', __gv)))"
+        f" AS {quote_ident(spec.out_name)}"))
+    # Plain = attach, NOT <=>. Invariant: per_combo's key/ts columns
     # are non-null by construction — the source join above is INNER, so NULL
-    # keys/ts never reach per_combo, and == vs eqNullSafe cannot diverge
+    # keys/ts never reach per_combo, and = vs <=> cannot diverge
     # (pinned by the grouped-null property test in test_property_window).
-    # eqNullSafe would compile the keys to coalesce/isnull expressions whose
+    # <=> would compile the keys to coalesce/isnull expressions whose
     # required distribution no longer matches the upstream groupBy exchange,
     # forcing a fresh Exchange+Sort on both sides (measured 6.4x slowdown).
-    attach = [obs[k] == per_combo[a] for k, a in zip(obs_keys, kcols)]
-    attach.append(F.unix_millis(F.col(obs_ts).cast("timestamp"))
-                  == per_combo["__ot"])
-    return obs.join(per_combo, attach, "left").drop(*kcols, "__ot")
+    attach = [f"{quote_ident(k)} = {a}" for k, a in zip(obs_keys, kcols)]
+    attach.append(f"{_epoch_ms(obs_ts)} = __ot")
+    return obs.join(per_combo, F.expr(" AND ".join(attach)), "left") \
+        .drop(*kcols, "__ot")

@@ -25,9 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .feature import DerivedFeature, FeathrError, Feature, FeatureAnchor
-from .functions import feathr_expr, register_feathr_functions
+from .functions import (
+    feathr_expr, quote_ident, register_feathr_functions, sql_expr, sql_ref,
+    sql_str)
 from .materialization import DATETIME_FMT, MaterializationSettings, RedisSink
 from .model import ExpressionTransform, UdfTransform, WindowAggTransform
+from .operators.aggregations import agg_sql
 from .operators.point_in_time import (
     PitSource, WindowFeatureSpec, point_in_time_join)
 from .source import EVENT_TS_COL, ObservationSettings, Source
@@ -295,14 +298,14 @@ class FeathrProject:
         One scan serves every feature of the group. Spark/AQE picks
         broadcast vs shuffled join from size estimates."""
         anchor = feats[0][0]
-        src_df = anchor.source.load(spark)
-        cols = [F.col(sk).alias(ok) for sk, ok in zip(src_keys, obs_keys)]
+        cols = [f"{sql_ref(sk)} AS {quote_ident(ok)}"
+                for sk, ok in zip(src_keys, obs_keys)]
         for _, f in feats:
             assert isinstance(f.transform, ExpressionTransform)
-            cols.append(feathr_expr(f.transform.sql_expr).alias(f.name))
-        feature_df = src_df.select(*cols)
+            cols.append(f"{sql_expr(f.transform.sql_expr)} AS {quote_ident(f.name)}")
+        feature_df = anchor.source.load(spark).selectExpr(*cols)
         if anchor.broadcast_hint:
-            feature_df = F.broadcast(feature_df)
+            feature_df = feature_df.hint("broadcast")
         return obs.join(feature_df, on=list(obs_keys), how="left")
 
     def _windowed_source(self, spark: SparkSession, src_keys: Sequence[str],
@@ -537,19 +540,15 @@ class FeathrProject:
                           else cutoff.replace(tzinfo=timezone.utc))
             cut_items.append((cutoff.strftime(DATETIME_FMT),
                               int(cutoff_utc.timestamp() * 1000)))
-        cut_array = F.array(*[
-            F.struct(F.lit(s).alias("cut_str"), F.lit(ms).alias("cut_ms"))
-            for s, ms in cut_items])
+        cut_array = "array({})".format(", ".join(
+            f"named_struct('cut_str', {sql_str(s)}, 'cut_ms', {ms})"
+            for s, ms in cut_items))
+        ts_ms = f"unix_millis(CAST({EVENT_TS_COL} AS TIMESTAMP))"
 
         from .model import Aggregation
-        from .operators.aggregations import simple_agg
         tagged = len(groups) > 1
-        # cut_ms is grouped alongside cut_str (1:1 — group set is
-        # unchanged) so DECAY's post-transform may reference the cutoff
-        # epoch as a grouping expression.
-        cut_ms = F.col("__feathr_cut_ms")
         parts: List[DataFrame] = []
-        aggs = []
+        aggs: List[str] = []
         join_keys: Optional[List[str]] = None
         feature_order: List[str] = []
         for i, ((src_name, src_keys, aliases), feats) in enumerate(groups.items()):
@@ -562,58 +561,59 @@ class FeathrProject:
             anchor = feats[0][0]
             src_df = anchor.source.load(spark)
             time_aware = EVENT_TS_COL in src_df.columns
-            if time_aware:
-                ts_ms = F.unix_millis(F.col(EVENT_TS_COL).cast("timestamp"))
-                fanned = src_df.withColumn(
-                    "__cut", F.explode(F.filter(
-                        cut_array, lambda c: ts_ms <= c["cut_ms"])))
-            else:
-                fanned = src_df.withColumn("__cut", F.explode(cut_array))
-            cols = [F.col(sk).alias(a) for sk, a in zip(src_keys, aliases)]
-            cols += [F.col("__cut")["cut_str"].alias("feathr_cutoff"),
-                     F.col("__cut")["cut_ms"].alias("__feathr_cut_ms")]
+            fanned = src_df.selectExpr("*", (
+                f"explode(filter({cut_array}, __c -> {ts_ms} <= __c.cut_ms))"
+                if time_aware else f"explode({cut_array})") + " AS __cut")
+            # cut_ms is grouped alongside cut_str (1:1 — group set is
+            # unchanged) so DECAY's post-transform may reference the cutoff
+            # epoch as a grouping expression.
+            cols = [f"{sql_ref(sk)} AS {quote_ident(a)}"
+                    for sk, a in zip(src_keys, aliases)]
+            cols += ["__cut.cut_str AS feathr_cutoff",
+                     "__cut.cut_ms AS __feathr_cut_ms"]
             if tagged:
-                cols.append(F.lit(1).alias(f"__g{i}"))
+                cols.append(f"1 AS __g{i}")
             for _, f in feats:
                 t = f.transform
                 if isinstance(t, WindowAggTransform):
                     if not time_aware:
                         raise FeathrError(f"{f.name}: windowed feature needs event time")
-                    v = F.when(ts_ms > F.col("__cut")["cut_ms"] - t.window_ms,
-                               feathr_expr(t.def_expr))
+                    v = (f"CASE WHEN {ts_ms} > __cut.cut_ms - {t.window_ms} "
+                         f"THEN {sql_expr(t.def_expr)} END")
                     if t.filter:
-                        v = F.when(feathr_expr(t.filter), v)
+                        v = f"CASE WHEN {sql_expr(t.filter)} THEN {v} END"
                     # ts in epoch MILLIS to match obs_ts (cut_ms): DECAY
                     # subtracts the two; order-based aggs (NOP/LATEST) are
                     # unaffected by the monotone unit change.
                     agg, ts, param = t.agg_func, ts_ms, t.agg_param
                 else:
                     assert isinstance(t, ExpressionTransform)
-                    v = feathr_expr(t.sql_expr)
+                    v = sql_expr(t.sql_expr)
                     agg = Aggregation.LATEST if time_aware else Aggregation.NOP
-                    ts = F.col(EVENT_TS_COL) if time_aware else F.lit(0)
+                    ts = EVENT_TS_COL if time_aware else "0"
                     param = None
                 j = len(feature_order)
-                cols += [v.alias(f"__v{j}"), ts.alias(f"__t{j}")]
-                a = simple_agg(agg, F.col(f"__v{j}"), F.col(f"__t{j}"), param,
-                               obs_ts=cut_ms)
+                cols += [f"{v} AS __v{j}", f"{ts} AS __t{j}"]
+                a = agg_sql(agg, f"__v{j}", f"__t{j}", param,
+                            obs_ts="__feathr_cut_ms")
                 if tagged:
-                    a = F.when(F.count(f"__g{i}") > 0, a)
-                aggs.append(a.alias(f.name))
+                    a = f"CASE WHEN count(__g{i}) > 0 THEN {a} END"
+                aggs.append(f"{a} AS {quote_ident(f.name)}")
                 feature_order.append(f.name)
-            parts.append(fanned.select(*cols))
+            parts.append(fanned.selectExpr(*cols))
 
         union = parts[0]
         for part in parts[1:]:
             union = union.unionByName(part, allowMissingColumns=True)
-        result = union.groupBy(*join_keys, "feathr_cutoff", cut_ms) \
-            .agg(*aggs).drop("__feathr_cut_ms")
+        result = union.groupBy(*map(quote_ident, join_keys), "feathr_cutoff",
+                               "__feathr_cut_ms").agg(*map(F.expr, aggs))
         for d in derived_order:
             result = result.withColumn(d.name, feathr_expr(d.transform.sql_expr))
             feature_order.append(d.name)
         # column order matches the historical per-cutoff shape:
         # keys..., features..., feathr_cutoff last
-        return result.select(*join_keys, *feature_order, "feathr_cutoff")
+        return result.selectExpr(*map(quote_ident, [*join_keys, *feature_order,
+                                                    "feathr_cutoff"]))
 
     def compute_backfill(self, spark: SparkSession, feature_names: Sequence[str],
                          backfill_time) -> DataFrame:
@@ -656,8 +656,8 @@ class FeathrProject:
         df = self.compute_backfill(spark, settings.feature_names, bt)
         for sink in settings.sinks:
             if isinstance(sink, RedisSink):
-                sink.write(df.where(F.col("feathr_cutoff")
-                                    == cutoffs[0].strftime(DATETIME_FMT)))
+                sink.write(df.where("feathr_cutoff = "
+                                    + sql_str(cutoffs[0].strftime(DATETIME_FMT))))
             else:
                 sink.write(df)
         return cutoffs

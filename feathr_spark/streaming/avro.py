@@ -31,6 +31,7 @@ import json
 import struct
 from typing import Iterator, List, Optional, Tuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -455,8 +456,11 @@ def decode_avro_payload(df: DataFrame, avro_json: str,
             *[F.col(c) for c in keep_cols])
         decoded.schema  # force analysis: raises if connector absent
         return decoded.select("payload.*", *keep_cols)
-    except Exception:  # ImportError or AnalysisException AVRO_NOT_LOADED
+    except ImportError:
         pass
+    except AnalysisException as e:
+        if e.getCondition() != "AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE":
+            raise
     payload_schema, _, decode = compile_schema(avro_json)
     names = [f.name for f in payload_schema.fields]
     out_schema = T.StructType(

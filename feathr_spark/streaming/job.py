@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..feature import Feature
-from ..functions import feathr_expr
+from ..functions import feathr_expr, quote_ident, sql_ref, sql_str
 from ..model import ExpressionTransform, WindowAggTransform
-from ..operators.aggregations import simple_agg
+from ..operators.aggregations import agg_sql, value_sql
 
 
 def stream_expression_features(stream_df: DataFrame,
@@ -75,20 +75,15 @@ def stream_window_agg(
     for f in features:
         t = f.transform
         assert isinstance(t, WindowAggTransform)
-        v = feathr_expr(t.def_expr)
-        if t.filter:
-            v = F.when(feathr_expr(t.filter), v)
-        aggs.append(simple_agg(t.agg_func, v, F.col(ts_col),
-                               t.agg_param).alias(f.name))
-    win = (F.window(F.col(ts_col), dur, slide_dur) if slide_dur
-           else F.window(F.col(ts_col), dur))
-    grouped = wm.groupBy(win.alias("__w"), *keys).agg(*aggs)
-    return grouped.select(
-        *keys,
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
-        *[f.name for f in features],
-    )
+        aggs.append(F.expr(agg_sql(t.agg_func, value_sql(t.def_expr, t.filter),
+                                   sql_ref(ts_col), t.agg_param)
+                           + f" AS {quote_ident(f.name)}"))
+    durs = ", ".join(map(sql_str, filter(None, (dur, slide_dur))))
+    grouped = wm.groupBy(F.expr(f"window({sql_ref(ts_col)}, {durs}) AS __w"),
+                         *map(sql_ref, keys)).agg(*aggs)
+    return grouped.selectExpr(
+        *map(sql_ref, keys), "__w.start AS window_start",
+        "__w.end AS window_end", *(quote_ident(f.name) for f in features))
 
 
 def stream_session_stats(

@@ -50,3 +50,39 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def count_py4j():
+    """``count_py4j(fn)`` runs ``fn()`` and returns (its result, the
+    number of py4j round trips it made: commands its thread sent to the
+    JVM gateway). Commands of other threads, such as releases of JVM
+    object proxies freed there, are not counted, and Python's cyclic
+    garbage collector is paused while ``fn`` runs: both release proxies
+    made before ``fn``, at times that vary between runs."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    def run(fn):
+        send = ClientServerConnection.send_command
+        calls = [0]
+        caller = threading.get_ident()
+
+        def counted(self, command):
+            if threading.get_ident() == caller:
+                calls[0] += 1
+            return send(self, command)
+
+        gc.collect()
+        gc.disable()
+        ClientServerConnection.send_command = counted
+        try:
+            out = fn()
+        finally:
+            ClientServerConnection.send_command = send
+            gc.enable()
+        return out, calls[0]
+
+    return run

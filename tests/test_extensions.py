@@ -398,7 +398,7 @@ def test_elementwise_reduce_sparse_semantics(spark):
          ([],)],
         "maps array<map<string,double>>")
     out = df.select(
-        *[elementwise_reduce_sparse(F.col("maps"), a).alias(n)
+        *[F.expr(elementwise_reduce_sparse("maps", a)).alias(n)
           for n, a in [("s", Aggregation.ELEMENTWISE_SUM),
                        ("avg", Aggregation.ELEMENTWISE_AVG),
                        ("mn", Aggregation.ELEMENTWISE_MIN),
@@ -410,7 +410,7 @@ def test_elementwise_reduce_sparse_semantics(spark):
     assert r.mx == {"a": 1.0, "b": 3.0, "c": 4.0}
     assert out[1].s is None and out[1].avg is None
     with pytest.raises(ValueError):
-        elementwise_reduce_sparse(F.col("maps"), Aggregation.SUM)
+        elementwise_reduce_sparse("maps", Aggregation.SUM)
 
 
 def test_winnow_overlap_pairs_verbatim_and_cap(spark):
@@ -1046,8 +1046,8 @@ def test_window_percentile_agg(spark, tmp_path):
                                    method="linear"))
         assert abs(out[day] - expect) < 1e-9, day
     with pytest.raises(ValueError):
-        from feathr_spark.operators.aggregations import make_agg
-        make_agg(Aggregation.PERCENTILE, F.col("x"), F.col("t"), None)
+        from feathr_spark.operators.aggregations import agg_sql
+        agg_sql(Aggregation.PERCENTILE, "x", "t", None)
 
 
 def test_window_decay_agg_values_and_strategies(spark):
@@ -1099,12 +1099,11 @@ def test_window_decay_agg_values_and_strategies(spark):
             assert math.isclose(gs, es, rel_tol=1e-9), r
             assert math.isclose(ga, ea, rel_tol=1e-9), r
 
-    from feathr_spark.operators.aggregations import make_agg
+    from feathr_spark.operators.aggregations import agg_sql
     with pytest.raises(ValueError):
-        make_agg(Aggregation.DECAY_SUM, F.col("x"), F.col("t"), None,
-                 obs_ts=F.col("o"))
+        agg_sql(Aggregation.DECAY_SUM, "x", "t", None, obs_ts="o")
     with pytest.raises(ValueError):
-        make_agg(Aggregation.DECAY_SUM, F.col("x"), F.col("t"), 2.0)
+        agg_sql(Aggregation.DECAY_SUM, "x", "t", 2.0)
 
 
 def test_decay_sum_in_materialization_snapshot(spark, tmp_path):

@@ -522,6 +522,36 @@ def test_kafka_jvm_branch_contract(spark):
     assert got[1].city == "nyc" and abs(got[1].fare - 12.5) < 1e-9
 
 
+@pytest.mark.parametrize("failure", ["analysis", "runtime"])
+def test_avro_jvm_path_errors_propagate(spark, monkeypatch, failure):
+    """Only a missing spark-avro connector sends decode_avro_payload to
+    the Python decoder: any other error of the JVM path (here an
+    unresolved column, or a plain RuntimeError) propagates."""
+    import pyspark.sql.avro.functions as paf
+    from pyspark.errors import AnalysisException
+    from feathr_spark.streaming import avro as avro_mod
+    from feathr_spark.streaming.avro import encode_record, parse_flat_record_schema
+
+    def broken_from_avro(data, jsonFormatSchema, options=None):
+        if failure == "runtime":
+            raise RuntimeError("broken JVM path")
+        return F.col("no_such_column")
+
+    def no_fallback(avro_json):
+        raise AssertionError("fell back to the Python decoder")
+
+    fields = parse_flat_record_schema(AVRO_SCHEMA)
+    kafka_shaped = spark.createDataFrame(
+        [Row(value=bytearray(encode_record(r, fields))) for r in AVRO_ROWS])
+    monkeypatch.setattr(paf, "from_avro", broken_from_avro)
+    monkeypatch.setattr(avro_mod, "compile_schema", no_fallback)
+    expected = AnalysisException if failure == "analysis" else RuntimeError
+    with pytest.raises(expected) as err:
+        avro_mod.decode_avro_payload(kafka_shaped, AVRO_SCHEMA)
+    if failure == "analysis":
+        assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+
+
 def test_redis_sink_write_plumbing_with_fake_client(spark, tmp_path):
     """RedisSink partition-parallel write + hash encoding E2E against an
     injected in-memory client: every row lands as one hash keyed
