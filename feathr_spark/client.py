@@ -120,8 +120,8 @@ class FeathrClient:
 
     def load_project_from_json(self, json_str: str) -> FeathrProject:
         """client.rs:45-48 — rebuild a project from a registry lineage
-        payload of either family (reference Atlas attributes or this
-        engine's ``save_project`` definitions)."""
+        payload (Atlas entity attributes, as the reference registry and
+        this engine's ``save_project`` store them)."""
         from .configio import from_lineage
         return from_lineage(json_str, spark=self.spark)
 

@@ -1,29 +1,35 @@
-"""Reference-config ingestion: parse Feathr config payloads into runnable
-:class:`FeathrProject` objects.
+"""Feathr definition formats: every encoder next to its decoder.
 
-A migrating Feathr user's first action is "load my existing config". Three
-entry points, one per payload shape the reference produces:
+The engine plans from dataclasses; definitions leave Python only in the
+formats below, and each is written and read in this module alone:
 
-* :func:`from_feature_config` — the feature-definition config (IR #1)
-  emitted by the reference client's ``get_feature_config``
-  (/root/reference/feathr-rs/src/project.rs:321-325, serializer at
-  374-437): ``anchors`` (group → key sqlExpr + source + features with
-  untagged Expression/WindowAgg/Udf transformations, model.rs:248-276),
-  ``derivations``, ``sources``. Accepts both the reference's camelCase
-  serialization and this engine's :meth:`FeathrProject.to_feature_config`
-  output (round-trip).
-* :func:`from_join_config` — the join request (IR #2,
-  project.rs:327-357 / observation.rs:50-97): ``observationPath`` +
+* the feature-definition config (IR #1) of the reference client's
+  ``get_feature_config`` (reference project.rs:321-325, serializer at
+  374-437): ``anchors`` (group → ``key.sqlExpr`` + source + features with
+  untagged Expression/WindowAgg/Udf transformations and a ``type``,
+  model.rs:248-276), ``derivations`` and ``sources``.
+  :func:`feature_config` writes it (:meth:`FeathrProject.to_feature_config`)
+  and :func:`from_feature_config` reads it, and the reference's camelCase
+  serialization too.
+* the join request (IR #2, project.rs:327-357 / observation.rs:50-97):
+  :func:`from_join_config` reads ``observationPath`` +
   ``settings.joinTimeSettings.timestampColumn{def,format}`` +
   ``featureList`` + ``outputPath``.
-* :func:`from_lineage` — a registry lineage payload (``guidEntityMap`` +
+* the registry's entity attributes, in the reference registry's Atlas
+  shape (its registry/test-data/sample.json): anchor and derived features
+  carry ``type``, ``transformation``, a typed ``key`` list and ``tags``;
+  an anchor refers to its ``source`` and ``features``, a derived feature
+  to its inputs, by entity reference. :func:`anchor_feature_attributes`,
+  :func:`derived_feature_attributes` and :func:`anchor_attributes` write
+  them (:func:`registry.roundtrip.save_project`); an anchor's
+  ``broadcast_hint`` and the ``input_order`` of a derived feature's
+  inputs ride as extra attributes. Sources keep this
+  engine's ``kind``-tagged :func:`source_to_dict` shape, as in IR #1:
+  Atlas has no fields for JDBC auth or Kafka/generic options.
+  :func:`from_lineage` reads a lineage payload (``guidEntityMap`` +
   ``relations``), mirroring the reference's ``TryFrom<EntityLineage> for
-  FeathrProjectImpl`` (project.rs:742-846). It reads both payload
-  families: the reference registry's Atlas-style attributes (the shape
-  of its registry/test-data/sample.json) and the
-  ``kind``-tagged definitions :func:`registry.roundtrip.save_project`
-  stores, as :class:`registry.api.RegistryApi` serves them. It is the
-  only lineage decoder: :func:`registry.roundtrip.load_project` and the
+  FeathrProjectImpl`` (project.rs:742-846). It is the only lineage
+  decoder: :func:`registry.roundtrip.load_project` and the
   :class:`client.FeathrClient` loaders all go through it.
 
 Python ``preprocessing`` source code embedded in lineage payloads is NOT
@@ -34,16 +40,18 @@ registry round-trips.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Dict, List, Optional, Sequence
 
 from .feature import DerivedFeature, Feature, FeatureAnchor
 from .model import (
-    Aggregation, ExpressionTransform, FeatureType, TensorCategory, TypedKey,
-    UdfTransform, ValueType, VectorType, WindowAggTransform,
+    DUMMY_KEY_NAME, Aggregation, ExpressionTransform, FeatureType,
+    TensorCategory, TypedKey, UdfTransform, ValueType, VectorType,
+    WindowAggTransform,
 )
 from .project import FeathrProject, FeatureQuery
-from .registry.catalog import EdgeType, RegistryError
+from .registry.api import TYPE_NAMES, entity_ref
+from .registry.catalog import Entity, EntityType, RegistryError
 from .source import (
     INPUT_CONTEXT, DataFrameSource, GenericSource, HdfsSource, JdbcSource,
     KafkaSource, ObservationSettings, Source, TimeWindowParameters,
@@ -64,7 +72,20 @@ _VALUE_TYPES = {
 
 
 def _value_type(v) -> ValueType:
+    if isinstance(v, ValueType):
+        return v
     return _VALUE_TYPES.get(str(v).upper(), ValueType.UNSPECIFIED)
+
+
+# ---------------------------------------------------------------------------
+# shared pieces: feature type, typed key, transformation, source
+# ---------------------------------------------------------------------------
+
+def _feature_type_to_dict(t: FeatureType) -> dict:
+    """The reference's tensor type (model.rs:55-63, camelCase)."""
+    return {"type": t.type_.value, "tensorCategory": t.tensor_category.value,
+            "dimensionType": [_value_type(v).value for v in t.dimension_type],
+            "valType": t.val_type.value}
 
 
 def _feature_type(d: Optional[dict]) -> FeatureType:
@@ -73,14 +94,23 @@ def _feature_type(d: Optional[dict]) -> FeatureType:
     return FeatureType(
         type_=VectorType(d.get("type", "TENSOR")),
         tensor_category=TensorCategory(d.get("tensorCategory", "DENSE")),
-        dimension_type=tuple(d.get("dimensionType", ())),
+        dimension_type=tuple(_value_type(v)
+                             for v in d.get("dimensionType", ())),
         val_type=_value_type(d.get("valType", "UNSPECIFIED")),
     )
 
 
+def _typed_key_to_dict(k: TypedKey) -> dict:
+    """One typed key (model.rs:146-167); the type is its serde name."""
+    return {"key_column": k.key_column,
+            "key_column_type": k.key_column_type.value,
+            "full_name": k.full_name, "description": k.description,
+            "key_column_alias": k.key_column_alias}
+
+
 def _typed_key(d: dict) -> TypedKey:
-    """One key entry of either lineage family: ``key_column_type`` is the
-    enum value ``save_project`` writes or the reference's name/ordinal."""
+    """One typed key entry; ``key_column_type`` is a serde name or an
+    ordinal."""
     return TypedKey(
         key_column=d["key_column"],
         key_column_type=_value_type(d.get("key_column_type", "UNSPECIFIED")),
@@ -91,38 +121,82 @@ def _typed_key(d: dict) -> TypedKey:
 
 
 def _keys_from_list(keys: Optional[Sequence[dict]]) -> tuple:
-    """Key list from a registry payload; the dummy/NOT_NEEDED sentinel maps
-    to an empty tuple (Feature defaults it back to DUMMY_KEY)."""
-    if not keys:
-        return ()
-    parsed = [_typed_key(k) for k in keys
-              if k.get("key_column") not in (None, "NOT_NEEDED")]
-    return tuple(parsed)
+    """Key list from a payload; the dummy/NOT_NEEDED sentinel maps to an
+    empty tuple (Feature defaults it back to DUMMY_KEY)."""
+    return tuple(_typed_key(k) for k in keys or ()
+                 if k.get("key_column") not in (None, DUMMY_KEY_NAME))
 
 
-def _transformation(d, keys: tuple = ()):
-    """Untagged Transformation (reference model.rs:248-276 serde shapes +
-    the registry's {transform_expr}/{def_expr, agg_func, ...} attributes)."""
+# WindowAggTransform field → (registry attribute, IR #1 config key, other
+# accepted config spellings); the decoder reads any of them
+_WINDOW_KEYS = {
+    "def_expr": ("def_expr", "def"),
+    "agg_func": ("agg_func", "aggregation"),
+    "window": ("window", "window"),
+    "group_by": ("group_by", "groupBy"),
+    "filter": ("filter", "filter"),
+    "limit": ("limit", "limit"),
+    "agg_param": ("agg_param", "agg_param", "aggParam"),
+}
+_ATTRIBUTE, _CONFIG = 0, 1  # spellings in _WINDOW_KEYS
+
+
+def _window_fields(t: WindowAggTransform, spelling: int) -> dict:
+    """``t``'s set fields, named by their ``spelling`` in
+    :data:`_WINDOW_KEYS`."""
+    values = {**asdict(t), "agg_func": t.agg_func.value}
+    return {keys[spelling]: values[field]
+            for field, keys in _WINDOW_KEYS.items()
+            if values[field] is not None}
+
+
+def _transformation_attributes(t) -> dict:
+    """The registry's untagged Transformation attributes:
+    ``{transform_expr}`` / ``{def_expr, agg_func, window, ...}`` /
+    ``{name}``."""
+    if isinstance(t, WindowAggTransform):
+        return _window_fields(t, _ATTRIBUTE)
+    if isinstance(t, UdfTransform):
+        return {"name": t.name}
+    if isinstance(t, ExpressionTransform):
+        return {"transform_expr": t.sql_expr}
+    raise RegistryError(f"unserializable transform {t!r}")
+
+
+def _transformation_config(t) -> dict:
+    """An IR #1 feature entry's transformation: ``{def: {sqlExpr}}`` /
+    ``{def, aggregation, window, ...}`` / ``{udf}``."""
+    if isinstance(t, WindowAggTransform):
+        return _window_fields(t, _CONFIG)
+    if isinstance(t, UdfTransform):
+        return {"udf": t.name}
+    if isinstance(t, ExpressionTransform):
+        return {"def": {"sqlExpr": t.sql_expr}}
+    raise ValueError(f"unserializable transform {t!r}")
+
+
+def _transformation(d):
+    """Inverse of :func:`_transformation_attributes` and
+    :func:`_transformation_config`, and the reference's serde shapes
+    (model.rs:248-276)."""
     if isinstance(d, str):
         return d
     if "udf" in d:
         return UdfTransform(d["udf"])
     if set(d) == {"name"}:
         return UdfTransform(d["name"])
-    agg = d.get("aggregation") or d.get("agg_func")
-    if agg:
-        expr = d.get("def", d.get("def_expr"))
-        if isinstance(expr, dict):
-            expr = expr["sqlExpr"]
-        return WindowAggTransform(
-            def_expr=expr,
-            agg_func=Aggregation(agg),
-            window=d.get("window") or "1d",
-            group_by=d.get("group_by") or d.get("groupBy"),
-            filter=d.get("filter"),
-            limit=d.get("limit"),
-            agg_param=d.get("agg_param") or d.get("aggParam"),
-        )
+    if "agg_func" in d or "aggregation" in d:
+        kw = {}
+        for field, keys in _WINDOW_KEYS.items():
+            present = [k for k in keys if k in d]
+            if present:
+                kw[field] = d[present[0]]
+        if kw.get("window") is None:
+            raise ValueError(f"window aggregation without a window: {d!r}")
+        if isinstance(kw.get("def_expr"), dict):
+            kw["def_expr"] = kw["def_expr"]["sqlExpr"]
+        kw["agg_func"] = Aggregation(kw["agg_func"])
+        return WindowAggTransform(**kw)
     expr = d.get("def", d.get("definition", d.get("transform_expr")))
     if isinstance(expr, dict):
         expr = expr["sqlExpr"]
@@ -131,8 +205,42 @@ def _transformation(d, keys: tuple = ()):
     return expr
 
 
+def _twp_to_dict(twp: Optional[TimeWindowParameters]) -> Optional[dict]:
+    if twp is None:
+        return None
+    return {"timestamp_column": twp.timestamp_column,
+            "timestamp_column_format": twp.timestamp_column_format}
+
+
+def source_to_dict(src: Source) -> dict:
+    """This engine's ``kind``-tagged source shape, for IR #1 and the
+    registry alike."""
+    d: dict = {"name": src.name, "twp": _twp_to_dict(src.time_window_parameters),
+               "has_preprocessing": src.preprocessing is not None}
+    if src.is_input_context:
+        d["kind"] = "input_context"
+    elif isinstance(src, HdfsSource):
+        d.update(kind="hdfs", path=src.path, format=src.format,
+                 options=dict(src.options))
+    elif isinstance(src, JdbcSource):
+        d.update(kind="jdbc", url=src.url, dbtable=src.dbtable,
+                 query=src.query, auth=src.auth, options=dict(src.options))
+    elif isinstance(src, KafkaSource):
+        d.update(kind="kafka", brokers=list(src.brokers),
+                 topics=list(src.topics), avro_schema_json=src.avro_schema_json,
+                 options=dict(src.options))
+    elif isinstance(src, GenericSource):
+        d.update(kind="generic", format=src.format, path=src.path,
+                 mode=src.mode, options=dict(src.options))
+    elif isinstance(src, DataFrameSource):
+        d["kind"] = "dataframe"  # frame itself is not serializable
+    else:
+        d["kind"] = "unknown"
+    return d
+
+
 def source_from_dict(d: dict) -> Source:
-    """Inverse of :func:`registry.roundtrip.source_to_dict`."""
+    """Inverse of :func:`source_to_dict`."""
     twp = d.get("twp")
     twp_obj = TimeWindowParameters(**twp) if twp else None
     kind = d.get("kind")
@@ -158,29 +266,6 @@ def source_from_dict(d: dict) -> Source:
     if kind == "dataframe":
         return DataFrameSource(df=None, **common)
     raise RegistryError(f"cannot reconstruct source kind {kind!r}")
-
-
-def _transform_from_dict(d: dict):
-    """Inverse of :func:`registry.roundtrip._transform_to_dict`."""
-    kind = d.get("kind")
-    if kind == "window":
-        return WindowAggTransform(
-            def_expr=d["def_expr"], agg_func=Aggregation(d["agg_func"]),
-            window=d["window"], group_by=d.get("group_by"),
-            filter=d.get("filter"), limit=d.get("limit"),
-            agg_param=d.get("agg_param"))
-    if kind == "udf":
-        return UdfTransform(d["name"])
-    if kind == "expr":
-        return ExpressionTransform(d["sql_expr"])
-    raise RegistryError(f"unknown transform kind {kind!r}")
-
-
-def feature_from_dict(d: dict) -> Feature:
-    """Inverse of :func:`registry.roundtrip.feature_to_dict`."""
-    return Feature(name=d["name"],
-                   transform=_transform_from_dict(d["transform"]),
-                   key=tuple(_typed_key(k) for k in d.get("keys") or ()))
 
 
 def _source_from_config(name: str, d: dict) -> Source:
@@ -242,11 +327,45 @@ def _source_from_config(name: str, d: dict) -> Source:
                       format=loc.get("format"), time_window_parameters=twp)
 
 
+def feature_config(p: FeathrProject) -> dict:
+    """IR #1 of ``p`` (see :meth:`FeathrProject.to_feature_config`).
+
+    An anchor's ``key.sqlExpr`` lists the source key columns of its first
+    feature, and ``typedKey`` that feature's typed keys (alias and type):
+    IR #1 holds one key list per anchor. It does not carry an anchor's
+    ``broadcast_hint``, a feature's ``registry_tags``, a DataFrame
+    source's frame or a source's ``preprocessing`` callable."""
+    anchors = {}
+    for aname, anchor in p.anchors.items():
+        keys = anchor.features[0].key
+        anchors[aname] = {
+            "source": anchor.source.name,
+            "key": {"sqlExpr": [k.key_column for k in keys]},
+            "typedKey": [_typed_key_to_dict(k) for k in keys],
+            "features": {
+                f.name: {**_transformation_config(f.transform),
+                         "type": _feature_type_to_dict(f.feature_type)}
+                for f in anchor.features},
+        }
+    derivations = {
+        d.name: {"definition": {"sqlExpr": d.transform.sql_expr},
+                 "inputs": list(d.input_names),
+                 "key": [_typed_key_to_dict(k) for k in d.key],
+                 "type": _feature_type_to_dict(d.feature_type)}
+        for d in p.derived.values()
+    }
+    sources = {s.name: source_to_dict(s) for s in p.sources.values()
+               if not s.is_input_context}
+    return {"anchors": anchors, "derivations": derivations,
+            "sources": sources}
+
+
 def from_feature_config(cfg, spark=None,
                         name: str = "imported") -> FeathrProject:
     """Build a runnable project from a feature-definition config dict (or
     JSON string) in the reference's shape. Inverse of
-    :meth:`FeathrProject.to_feature_config`."""
+    :func:`feature_config`; without ``typedKey`` (the reference's own
+    config) the ``key.sqlExpr`` columns become untyped keys."""
     if isinstance(cfg, str):
         cfg = json.loads(cfg)
     p = FeathrProject(name, spark)
@@ -262,9 +381,12 @@ def from_feature_config(cfg, spark=None,
         sname = ad["source"]
         src = (INPUT_CONTEXT if sname in (INPUT_CONTEXT.name, "PASSTHROUGH")
                else sources[sname])
-        key_aliases = [a for a in (ad.get("key", {}).get("sqlExpr") or ())
-                       if a != "NOT_NEEDED"]
-        keys = tuple(TypedKey(key_column=a) for a in key_aliases)
+        if "typedKey" in ad:
+            keys = _keys_from_list(ad["typedKey"])
+        else:
+            keys = tuple(TypedKey(key_column=c)
+                         for c in ad.get("key", {}).get("sqlExpr") or ()
+                         if c != DUMMY_KEY_NAME)
         feats = []
         for fname, fd in ad["features"].items():
             f = Feature(name=fname,
@@ -350,12 +472,45 @@ def from_join_config(cfg) -> JoinRequest:
 
 
 # ---------------------------------------------------------------------------
-# registry lineage payload (Atlas shape and save_project shape)
+# registry entity attributes and lineage payload (Atlas shape)
 # ---------------------------------------------------------------------------
 
 _WS, _SRC, _ANCHOR, _AF, _DF = (
-    "feathr_workspace_v1", "feathr_source_v1", "feathr_anchor_v1",
-    "feathr_anchor_feature_v1", "feathr_derived_feature_v1")
+    TYPE_NAMES[EntityType.Project], TYPE_NAMES[EntityType.Source],
+    TYPE_NAMES[EntityType.Anchor], TYPE_NAMES[EntityType.AnchorFeature],
+    TYPE_NAMES[EntityType.DerivedFeature])
+
+
+def anchor_feature_attributes(f: Feature) -> dict:
+    return {"name": f.name, "type": _feature_type_to_dict(f.feature_type),
+            "transformation": _transformation_attributes(f.transform),
+            "key": [_typed_key_to_dict(k) for k in f.key],
+            "tags": dict(f.registry_tags)}
+
+
+def derived_feature_attributes(d: DerivedFeature,
+                               inputs: Sequence[Entity]) -> dict:
+    """``inputs`` are the entities of ``d.input_features``, in order. Atlas
+    refers to anchor and derived inputs in two lists; ``input_order``
+    keeps their interleaving (the order of a derived feature's inputs
+    orders the anchor features a query resolves)."""
+    return {"name": d.name, "type": _feature_type_to_dict(d.feature_type),
+            "transformation": _transformation_attributes(d.transform),
+            "key": [_typed_key_to_dict(k) for k in d.key], "tags": {},
+            "input_anchor_features": [
+                entity_ref(e) for e in inputs
+                if e.entity_type == EntityType.AnchorFeature],
+            "input_derived_features": [
+                entity_ref(e) for e in inputs
+                if e.entity_type == EntityType.DerivedFeature],
+            "input_order": list(d.input_names)}
+
+
+def anchor_attributes(anchor: FeatureAnchor, source: Entity,
+                      features: Sequence[Entity]) -> dict:
+    return {"name": anchor.name, "source": entity_ref(source),
+            "features": [entity_ref(e) for e in features], "tags": {},
+            "broadcast_hint": anchor.broadcast_hint}
 
 
 def _qualified_name(e: dict) -> str:
@@ -365,13 +520,12 @@ def _qualified_name(e: dict) -> str:
 
 
 def _lineage_feature(a: dict) -> Feature:
-    if "transform" in a:  # save_project's kind-tagged definition
-        return feature_from_dict(a)
     return Feature(
         name=a["name"],
         feature_type=_feature_type(a.get("type")),
         transform=_transformation(a.get("transformation", {})),
         key=_keys_from_list(a.get("key")),
+        registry_tags=dict(a.get("tags") or {}),
     )
 
 
@@ -380,24 +534,20 @@ def from_lineage(payload, spark=None,
     """Rebuild a runnable project from a registry lineage payload
     (``guidEntityMap`` + ``relations``), the shape the reference registry
     returns and that its client consumes in ``TryFrom<EntityLineage>``
-    (project.rs:742-846). Entity attributes may come in either payload
-    family (see the module docstring): Atlas-style anchors list their
-    features and reference their source by guid, while ``save_project``
-    anchors name their source and own their features through
-    ``Contains`` relations. ``source_frames`` optionally re-binds named
-    sources to in-memory DataFrames (remote paths in archived payloads
-    are rarely reachable, DataFrame sources are saved without their
-    frame, and embedded preprocessing code is never executed)."""
+    (project.rs:742-846). Anchors list their features and refer to their
+    source by entity reference; derived features refer to their inputs
+    in two lists, anchor features then derived features, in the order of
+    their ``input_order`` names where a payload has one (the reference's
+    payloads do not). ``source_frames`` optionally re-binds
+    named sources to in-memory DataFrames (remote paths in archived
+    payloads are rarely reachable, DataFrame sources are saved without
+    their frame, and embedded preprocessing code is never executed)."""
     if isinstance(payload, str):
         payload = json.loads(payload)
     ents: Dict[str, dict] = payload["guidEntityMap"]
     by_type: Dict[str, list] = {}
     for guid, e in ents.items():
         by_type.setdefault(e["typeName"], []).append((guid, e))
-    contains: Dict[str, list] = {}
-    for r in payload.get("relations", ()):
-        if r["relationshipType"] == EdgeType.Contains.value:
-            contains.setdefault(r["fromEntityId"], []).append(r["toEntityId"])
 
     ws = by_type[_WS][0][1]
     project_name = ws["attributes"].get("name") or _qualified_name(ws)
@@ -418,17 +568,15 @@ def from_lineage(payload, spark=None,
     # "__" would land inside a project name that itself contains "__"
     prefix = f"{project_name}__"
     feature_index: Dict[str, Feature] = {}
-    for guid, e in by_type.get(_ANCHOR, ()):
+    for _, e in by_type.get(_ANCHOR, ()):
         a = e["attributes"]
         sref = a.get("source")
         if isinstance(sref, dict):  # Atlas entity reference
             sref = sref.get("guid") if sref.get("guid") in sources else \
                 (sref.get("uniqueAttributes") or {}).get("qualifiedName")
-        feature_guids = ([r["guid"] for r in a["features"]]
-                         if "features" in a else contains.get(guid, ()))
-        feats = [_lineage_feature(ents[g]["attributes"])
-                 for g in feature_guids
-                 if g in ents and ents[g]["typeName"] == _AF]
+        feats = [_lineage_feature(ents[r["guid"]]["attributes"])
+                 for r in a.get("features", ())
+                 if r["guid"] in ents and ents[r["guid"]]["typeName"] == _AF]
         qn = _qualified_name(e)
         name = a.get("name") or (qn[len(prefix):] if qn.startswith(prefix)
                                  else qn)
@@ -441,21 +589,15 @@ def from_lineage(payload, spark=None,
     pending: Dict[str, tuple] = {}
     for _, e in by_type.get(_DF, ()):
         a = e["attributes"]
-        if "sql_expr" in a:  # save_project shape: inputs by name
-            inputs = list(a.get("inputs") or ())
-            kwargs = dict(
-                transform=a["sql_expr"],
-                key=tuple(_typed_key(k) for k in a.get("keys") or ()),
-            )
-        else:  # Atlas shape: inputs by entity reference
-            refs = list(a.get("input_anchor_features", ())) + \
-                list(a.get("input_derived_features", ()))
-            inputs = [ents[r["guid"]]["attributes"]["name"] for r in refs]
-            kwargs = dict(
-                feature_type=_feature_type(a.get("type")),
-                transform=_transformation(a.get("transformation", {})),
-                key=_keys_from_list(a.get("key")),
-            )
-        pending[a["name"]] = (inputs, kwargs)
+        refs = list(a.get("input_anchor_features", ())) + \
+            list(a.get("input_derived_features", ()))
+        inputs = [ents[r["guid"]]["attributes"]["name"] for r in refs]
+        rank = {n: i for i, n in enumerate(a.get("input_order", ()))}
+        inputs.sort(key=lambda n: rank.get(n, len(rank)))
+        pending[a["name"]] = (
+            inputs,
+            dict(feature_type=_feature_type(a.get("type")),
+                 transform=_transformation(a.get("transformation", {})),
+                 key=_keys_from_list(a.get("key"))))
     _register_derived(p, pending, feature_index)
     return p

@@ -73,12 +73,12 @@ _O = "__feathr_o"          # lane-ordered epoch: _T + the row's lane offset
 _TAG = "__feathr_is_obs"   # 1 = observation row, NULL = source row
 
 _LANE = 1 << 49                 # ms between an offset and the next lane's
-_T_MIN = -62_135_596_800_000    # 0001-01-01 00:00:00.000 UTC
-_T_MAX = 253_402_300_799_999    # 9999-12-31 23:59:59.999 UTC
+T_MIN = -62_135_596_800_000     # 0001-01-01 00:00:00.000 UTC
+T_MAX = 253_402_300_799_999     # 9999-12-31 23:59:59.999 UTC
 # the longest window whose frames stay inside their own lane
-MAX_WINDOW_MS = _LANE - (_T_MAX - _T_MIN)
-# (4N − 2)·2^49 + _T_MAX, the largest order value plus frame offset, < 2^63
-MAX_LANES = ((1 << 63) - _T_MAX) // (4 * _LANE)
+MAX_WINDOW_MS = _LANE - (T_MAX - T_MIN)
+# (4N − 2)·2^49 + T_MAX, the largest order value plus frame offset, < 2^63
+MAX_LANES = ((1 << 63) - T_MAX) // (4 * _LANE)
 
 
 @dataclass(frozen=True)
@@ -173,7 +173,7 @@ def _lane_order(ts: str, offset: int) -> str:
     time outside Spark's timestamp range: such a time would fall into
     another lane."""
     t = _epoch_ms(ts)
-    return (f"CASE WHEN {t} < {_T_MIN} OR {t} > {_T_MAX} THEN raise_error("
+    return (f"CASE WHEN {t} < {T_MIN} OR {t} > {T_MAX} THEN raise_error("
             "concat('point-in-time event time outside 0001-01-01..9999-12-31: ', "
             f"CAST({t} AS STRING), ' ms')) ELSE {t} + {offset} END AS {_O}")
 

@@ -32,7 +32,7 @@ from .materialization import DATETIME_FMT, MaterializationSettings, RedisSink
 from .model import ExpressionTransform, UdfTransform, WindowAggTransform
 from .operators.aggregations import agg_sql
 from .operators.point_in_time import (
-    PitSource, WindowFeatureSpec, point_in_time_join)
+    T_MIN, PitSource, WindowFeatureSpec, point_in_time_join)
 from .source import EVENT_TS_COL, ObservationSettings, Source
 
 
@@ -324,43 +324,17 @@ class FeathrProject:
         bounds = obs_bounds() if obs_bounds is not None else None
         if bounds is not None:
             max_w = max(f.transform.window_ms for _, f in feats)
-            lo_ms, hi_ms = bounds[0] - max_w, bounds[1]
-            twp = anchor.source.time_window_parameters
-            raw_ts_type = dict(src_df.dtypes).get(
-                twp.timestamp_column) if twp else None
-            # Naive-datetime literals (and ntz casts) are interpreted in
-            # the SESSION timezone — build the wall-clock literal there,
-            # not in UTC, or a non-UTC session shifts the pushed-down
-            # bound by the tz offset and silently prunes in-window rows.
-            from zoneinfo import ZoneInfo
-            tz_name = src_df.sparkSession.conf.get(
-                "spark.sql.session.timeZone")
-            try:
-                sess_tz = ZoneInfo(tz_name)
-            except (KeyError, ValueError):
-                # not an IANA name (e.g. GMT+08:00: ZoneInfoNotFoundError
-                # is a KeyError) → no pushdown form
-                sess_tz = None
-            if twp and twp.timestamp_column_format is None and \
-                    raw_ts_type in ("timestamp", "timestamp_ntz") and \
-                    sess_tz is not None:
-                # Predicate on the RAW column with timestamp literals —
-                # this form reaches parquet PushedFilters (row-group +
-                # partition pruning); an expression like
-                # unix_millis(cast(...)) does not.
-                from datetime import datetime as _dt
-                hi_lit = _dt.fromtimestamp(hi_ms / 1000, tz=sess_tz).replace(tzinfo=None)
-                raw = F.col(twp.timestamp_column)
-                keep = raw <= F.lit(hi_lit).cast(raw_ts_type)  # match ntz/ltz exactly
-                try:
-                    lo_lit = _dt.fromtimestamp(lo_ms / 1000, tz=sess_tz).replace(tzinfo=None)
-                    keep = (raw > F.lit(lo_lit).cast(raw_ts_type)) & keep
-                except (ValueError, OverflowError):
-                    pass  # before year 1 in the session zone: no row is older
-                src_df = src_df.where(keep)
-            else:
-                src_ms = F.unix_millis(F.col(EVENT_TS_COL).cast("timestamp"))
-                src_df = src_df.where((src_ms > lo_ms) & (src_ms <= hi_ms))
+            # no row is older than year 1, and timestamp_millis raises
+            # "long overflow" for a bound far before it (a very long window)
+            lo_ms = max(bounds[0] - max_w, T_MIN - 1)
+            # Windows compare whole epoch ms, so the upper bound keeps the
+            # sub-ms rows of millisecond hi. On the event-time column,
+            # Catalyst unwraps the cast of a timestamp or timestamp_ntz
+            # source column and pushes this into the parquet scan
+            # (row-group and partition pruning).
+            src_df = src_df.where(
+                f"{EVENT_TS_COL} > timestamp_millis({lo_ms}) AND "
+                f"{EVENT_TS_COL} < timestamp_millis({bounds[1] + 1})")
         return PitSource(src_df, list(obs_keys), list(src_keys), EVENT_TS_COL,
                          specs)
 
@@ -369,49 +343,10 @@ class FeathrProject:
         (IR #1, project.rs:321-325 / 374-437): ``sources``, ``anchors``
         (group → key sqlExpr + features with type/def/aggregation), and
         ``derivations``. Our engine never round-trips through this config —
-        it exists for interop/debugging parity with the reference."""
-        from .registry.roundtrip import source_to_dict
-
-        def transform_entry(f: Feature) -> dict:
-            t = f.transform
-            if isinstance(t, WindowAggTransform):
-                d = {"def": t.def_expr, "aggregation": t.agg_func.value,
-                     "window": t.window}
-                if t.filter:
-                    d["filter"] = t.filter
-                if t.group_by:
-                    d["groupBy"] = t.group_by
-                if t.limit is not None:
-                    d["limit"] = t.limit
-                if t.agg_param is not None:
-                    d["agg_param"] = t.agg_param
-                return d
-            if isinstance(t, UdfTransform):
-                return {"udf": t.name}
-            assert isinstance(t, ExpressionTransform)
-            return {"def": {"sqlExpr": t.sql_expr}}
-
-        anchors = {}
-        for aname, anchor in self.anchors.items():
-            feats = {}
-            for f in anchor.features:
-                feats[f.name] = transform_entry(f)
-            key_cols = list(anchor.features[0].key_aliases)
-            anchors[aname] = {
-                "source": anchor.source.name,
-                "key": {"sqlExpr": key_cols},
-                "features": feats,
-            }
-        derivations = {
-            d.name: {"definition": {"sqlExpr": d.transform.sql_expr},
-                     "inputs": list(d.input_names),
-                     "key": [k.alias for k in d.key]}
-            for d in self.derived.values()
-        }
-        sources = {s.name: source_to_dict(s) for s in self.sources.values()
-                   if not s.is_input_context}
-        return {"anchors": anchors, "derivations": derivations,
-                "sources": sources}
+        it exists for interop/debugging parity with the reference; see
+        :func:`~feathr_spark.configio.feature_config` for what it carries."""
+        from .configio import feature_config
+        return feature_config(self)
 
     def to_join_config(self, observation: ObservationSettings,
                        feature_queries, output_path: str) -> dict:
@@ -578,6 +513,10 @@ class FeathrProject:
                 if isinstance(t, WindowAggTransform):
                     if not time_aware:
                         raise FeathrError(f"{f.name}: windowed feature needs event time")
+                    if t.group_by is not None or t.limit is not None:
+                        raise FeathrError(
+                            f"{f.name}: group_by/limit features cannot be "
+                            "materialized (a snapshot holds one value per key)")
                     v = (f"CASE WHEN {ts_ms} > __cut.cut_ms - {t.window_ms} "
                          f"THEN {sql_expr(t.def_expr)} END")
                     if t.filter:

@@ -21,7 +21,7 @@ reads need read): construct with an :class:`rbac.RbacStore` and pass
 
 Responses are JSON-shaped dicts: entities as ``{"guid", "name",
 "qualifiedName", "version", "attributes", "typeName"}``, lineage as
-``{"guidEntityMap", "relations"}`` — the same payload family
+``{"guidEntityMap", "relations"}`` — the payload
 :func:`feathr_spark.configio.from_lineage` consumes, so a project fetched
 through this API can be rebuilt and run.
 """
@@ -33,7 +33,7 @@ from typing import Dict, List, Optional
 
 from .catalog import EdgeType, Entity, EntityType, Registry, RegistryError
 
-_TYPE_NAMES = {
+TYPE_NAMES = {
     EntityType.Project: "feathr_workspace_v1",
     EntityType.Source: "feathr_source_v1",
     EntityType.Anchor: "feathr_anchor_v1",
@@ -48,9 +48,15 @@ def _ent(e: Entity) -> dict:
         "name": e.qualified_name.rsplit("__", 1)[-1],
         "qualifiedName": e.qualified_name,
         "version": e.version,
-        "typeName": _TYPE_NAMES.get(e.entity_type, e.entity_type.value),
+        "typeName": TYPE_NAMES.get(e.entity_type, e.entity_type.value),
         "attributes": e.attributes,
     }
+
+
+def entity_ref(e: Entity) -> dict:
+    """An Atlas entity reference to ``e``."""
+    return {"guid": e.id, "typeName": TYPE_NAMES[e.entity_type],
+            "uniqueAttributes": {"qualifiedName": e.qualified_name}}
 
 
 def _page(items: list, size: Optional[int], offset: Optional[int]) -> list:
@@ -148,17 +154,7 @@ class RegistryApi:
 
     def get_project_lineage(self, id_or_name: str) -> dict:
         p = self._project(id_or_name)
-        contained = self._children(p)
-        ids = {p.id} | {e.id for e in contained}
-        return {
-            "guidEntityMap": {e.id: _ent(e) for e in [p] + contained},
-            "relations": [
-                {"fromEntityId": r.from_id, "toEntityId": r.to_id,
-                 "relationshipType": r.edge_type.value}
-                for r in self.registry.edges()
-                if r.from_id in ids and r.to_id in ids
-            ],
-        }
+        return self._lineage([p] + self._children(p))
 
     def get_project_features(self, project_id_or_name: str,
                              keyword: Optional[str] = None,
@@ -336,18 +332,8 @@ class RegistryApi:
 
     def get_feature_lineage(self, id_or_name: str) -> dict:
         f = self._feature(id_or_name)
-        up = self.registry.lineage(f.id, "upstream")
-        down = self.registry.lineage(f.id, "downstream")
-        ents = {e.id: e for e in [f] + up + down}
-        return {
-            "guidEntityMap": {i: _ent(e) for i, e in ents.items()},
-            "relations": [
-                {"fromEntityId": r.from_id, "toEntityId": r.to_id,
-                 "relationshipType": r.edge_type.value}
-                for r in self.registry.edges()
-                if r.from_id in ents and r.to_id in ents
-            ],
-        }
+        return self._lineage([f] + self.registry.lineage(f.id, "upstream")
+                             + self.registry.lineage(f.id, "downstream"))
 
     def get_entity_project(self, id_or_name: str) -> dict:
         """Walk BelongsTo edges upward (feature → anchor → project) until
@@ -365,6 +351,32 @@ class RegistryApi:
         return _ent(e)
 
     # -- internals -------------------------------------------------------
+    def _lineage(self, ents: List[Entity]) -> dict:
+        """Lineage payload over ``ents`` and the edges among them. An
+        anchor created through this API (:meth:`create_project_anchor`,
+        then :meth:`create_anchor_feature`) stores no ``features``; it is
+        served with the entity references of its ``Contains`` edges, the
+        Atlas anchor shape the reference registry serves."""
+        by_id = {e.id: e for e in ents}
+        relations = [r for r in self.registry.edges()
+                     if r.from_id in by_id and r.to_id in by_id]
+        out = {i: _ent(e) for i, e in by_id.items()}
+        for i, e in by_id.items():
+            if e.entity_type == EntityType.Anchor \
+                    and "features" not in e.attributes:
+                out[i]["attributes"] = {**e.attributes, "features": [
+                    entity_ref(by_id[r.to_id]) for r in relations
+                    if r.from_id == i and r.edge_type == EdgeType.Contains
+                    and by_id[r.to_id].entity_type
+                    == EntityType.AnchorFeature]}
+        return {
+            "guidEntityMap": out,
+            "relations": [
+                {"fromEntityId": r.from_id, "toEntityId": r.to_id,
+                 "relationshipType": r.edge_type.value}
+                for r in relations],
+        }
+
     def _of_type(self, et: EntityType,
                  keyword: Optional[str]) -> List[Entity]:
         ents = [e for e in self.registry._all_entities()

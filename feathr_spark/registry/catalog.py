@@ -67,6 +67,9 @@ class RegistryError(Exception):
     pass
 
 
+_GUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+
+
 @dataclass
 class Entity:
     id: str
@@ -231,9 +234,9 @@ class Registry:
     # reference's Tantivy FTS (registry/sql-provider/src/fts.rs:59-265):
     # the name field is indexed separately from the attribute body and
     # scores higher, query terms AND together, and each term matches a
-    # token exactly or as a prefix (Tantivy's en_stem tokenizer reduces
-    # inflections; prefix matching covers the same "feature" ~ "features"
-    # ground without a stemmer dependency).
+    # token exactly or, from 3 characters on, as a prefix (Tantivy's
+    # en_stem tokenizer reduces inflections; prefix matching covers the
+    # same "feature" ~ "features" ground without a stemmer dependency).
 
     @staticmethod
     def _tokenize(text: str) -> List[str]:
@@ -249,19 +252,23 @@ class Registry:
         return out
 
     def _search_doc(self, e: Entity) -> Tuple[set, set]:
-        """(name tokens, body tokens) for one entity."""
+        """(name tokens, body tokens) for one entity. The body leaves out
+        the guids of entity references: their hex fragments are no
+        search terms."""
         name_toks = set(self._tokenize(e.qualified_name))
         if isinstance(e.attributes.get("name"), str):
             name_toks |= set(self._tokenize(e.attributes["name"]))
-        body_toks = set(self._tokenize(json.dumps(e.attributes)))
-        return name_toks, body_toks
+        body = _GUID.sub(" ", json.dumps(e.attributes))
+        return name_toks, set(self._tokenize(body))
 
     def search(self, query: str, entity_type: Optional[EntityType] = None,
                limit: Optional[int] = None) -> List[Entity]:
         """Multi-token AND search: every query term must hit some token
-        (exact or prefix) of the entity's name or attributes. Name-field
-        hits outrank body-only hits (fts.rs name_score boost); ties break
-        on qualified name then newest version."""
+        of the entity's name or attributes, exactly or, for a term of 3 or
+        more characters, as a prefix (a 1- or 2-character term such as the
+        ``c`` of ``f_c`` would otherwise prefix-match nearly every entity).
+        Name-field hits outrank body-only hits (fts.rs name_score boost);
+        ties break on qualified name then newest version."""
         terms = self._tokenize(query)
         if not terms:
             return []
@@ -272,13 +279,14 @@ class Registry:
             name_toks, body_toks = self._search_doc(e)
             score = 0.0
             for t in terms:
+                prefix = len(t) >= 3
                 if t in name_toks:
                     score += 3.0       # exact name token
-                elif any(tok.startswith(t) for tok in name_toks):
+                elif prefix and any(tok.startswith(t) for tok in name_toks):
                     score += 2.0       # name prefix
                 elif t in body_toks:
                     score += 1.0       # exact body token
-                elif any(tok.startswith(t) for tok in body_toks):
+                elif prefix and any(tok.startswith(t) for tok in body_toks):
                     score += 0.5       # body prefix
                 else:
                     score = 0.0
@@ -289,43 +297,3 @@ class Registry:
                                     -se[1].version))
         out = [e for _, e in scored]
         return out[:limit] if limit else out
-
-    # -- project round-trip (reference project.rs:742-846) -------------
-    def register_project(self, project) -> Dict[str, str]:
-        """Register a FeathrProject's full definition graph; returns
-        name → entity id."""
-        from ..feature import DerivedFeature
-        ids: Dict[str, str] = {}
-        p = self.create_entity(project.name, EntityType.Project)
-        ids[project.name] = p.id
-        for sname, src in project.sources.items():
-            e = self.create_entity(f"{project.name}__{sname}", EntityType.Source,
-                                   {"class": type(src).__name__})
-            ids[sname] = e.id
-            self.add_edge(e.id, EdgeType.BelongsTo, p.id)
-            self.add_edge(p.id, EdgeType.Contains, e.id)
-        for aname, anchor in project.anchors.items():
-            ae = self.create_entity(f"{project.name}__{aname}", EntityType.Anchor)
-            ids[aname] = ae.id
-            self.add_edge(ae.id, EdgeType.BelongsTo, p.id)
-            self.add_edge(p.id, EdgeType.Contains, ae.id)
-            self.add_edge(ae.id, EdgeType.Consumes, ids[anchor.source.name])
-            for f in anchor.features:
-                fe = self.create_entity(f"{project.name}__{f.name}",
-                                        EntityType.AnchorFeature,
-                                        {"keys": list(f.key_aliases)})
-                ids[f.name] = fe.id
-                self.add_edge(fe.id, EdgeType.BelongsTo, ae.id)
-                self.add_edge(ae.id, EdgeType.Contains, fe.id)
-                self.add_edge(fe.id, EdgeType.Consumes, ids[anchor.source.name])
-                self.add_edge(ids[anchor.source.name], EdgeType.Produces, fe.id)
-        for dname, d in project.derived.items():
-            de = self.create_entity(f"{project.name}__{dname}",
-                                    EntityType.DerivedFeature)
-            ids[dname] = de.id
-            self.add_edge(de.id, EdgeType.BelongsTo, p.id)
-            self.add_edge(p.id, EdgeType.Contains, de.id)
-            for inp in d.input_features:
-                self.add_edge(de.id, EdgeType.Consumes, ids[inp.name])
-                self.add_edge(ids[inp.name], EdgeType.Produces, de.id)
-        return ids

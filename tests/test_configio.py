@@ -2,12 +2,12 @@
 
 Round-trip: emit this engine's reference-shaped configs, parse them back,
 and prove the re-built project computes identical values. Lineage:
-``from_lineage`` loads both lineage payload families — a handwritten
-payload in the reference registry's Atlas shape, with the entities of the
-reference's sample registry (registry/test-data/sample.json), run
-end-to-end on a synthetic taxi frame; and this engine's own registry
-payload (``save_project`` then ``RegistryApi.get_project_lineage``),
-whose rebuilt project must compute the original's values.
+``from_lineage`` loads the reference registry's Atlas shape — a
+handwritten payload with the entities of the reference's sample registry
+(registry/test-data/sample.json), run end-to-end on a synthetic taxi
+frame; and this engine's own registry payload in that shape
+(``save_project`` then ``RegistryApi.get_project_lineage``), whose
+rebuilt project must compute the original's values.
 """
 
 import datetime as dt
@@ -363,3 +363,40 @@ def test_parameterized_agg_round_trip(spark, tmp_path):
     assert feats["p90"].transform.agg_param == 0.9
     assert feats["dsum"].transform.agg_func == Aggregation.DECAY_SUM
     assert feats["dsum"].transform.agg_param == 7.0
+
+
+def test_aggregation_payload_without_window_is_rejected():
+    """A window aggregation payload must name its window, in either
+    shape; a missing one is an error, not a default."""
+    from feathr_spark.configio import _transformation
+    for d in ({"def": "v", "aggregation": "SUM"},
+              {"def_expr": "v", "agg_func": "SUM", "filter": "v > 0"}):
+        with pytest.raises(ValueError, match="window"):
+            _transformation(d)
+    cfg = {"sources": {}, "anchors": {"a": {
+        "source": "PASSTHROUGH", "key": {"sqlExpr": ["NOT_NEEDED"]},
+        "features": {"f": {"def": "v", "aggregation": "SUM"}}}}}
+    with pytest.raises(ValueError, match="window"):
+        from_feature_config(cfg)
+
+
+def test_feature_config_reads_camel_case_agg_param():
+    """IR #1 names the window fields in camelCase too: ``aggParam`` reads
+    like ``agg_param``, next to ``groupBy``."""
+    features = {
+        "p0": {"def": "v", "aggregation": "PERCENTILE", "window": "3d",
+               "aggParam": 0.0},
+        "dsum": {"def": "v", "aggregation": "DECAY_SUM", "window": "3d",
+                 "aggParam": 7.0, "groupBy": "g", "limit": 2}}
+    cfg = {"sources": {"s": {
+               "location": {"path": "/data/s.parquet"},
+               "timeWindowParameters": {"timestampColumn": "ts"}}},
+           "anchors": {"a": {"source": "s", "key": {"sqlExpr": ["k"]},
+                             "features": features}}}
+    feats = {f.name: f.transform for f in
+             from_feature_config(json.dumps(cfg)).anchors["a"].features}
+    assert feats["p0"] == WindowAggTransform(
+        "v", Aggregation.PERCENTILE, "3d", agg_param=0.0)
+    assert feats["dsum"] == WindowAggTransform(
+        "v", Aggregation.DECAY_SUM, "3d", group_by="g", limit=2,
+        agg_param=7.0)

@@ -25,7 +25,7 @@ from feathr_spark import (
 )
 from feathr_spark.operators import point_in_time as pit
 
-T_MIN, T_MAX = pit._T_MIN, pit._T_MAX  # 0001-01-01, 9999-12-31 23:59:59.999
+T_MIN, T_MAX = pit.T_MIN, pit.T_MAX  # 0001-01-01, 9999-12-31 23:59:59.999
 DAY = 86_400_000
 
 

@@ -196,10 +196,13 @@ def test_feature_config_generation(spark, taxi):
     assert cfg["anchors"]["agg"]["source"] == "taxi"
     assert cfg["anchors"]["agg"]["key"]["sqlExpr"] == ["DOLocationID"]
     f = cfg["anchors"]["agg"]["features"]["f_fare_90d"]
+    untyped = {"type": "TENSOR", "tensorCategory": "DENSE",
+               "dimensionType": [], "valType": "UNSPECIFIED"}
     assert f == {"def": "fare_amount", "aggregation": "AVG",
-                 "window": "90d", "filter": "fare_amount > 0"}
+                 "window": "90d", "filter": "fare_amount > 0",
+                 "type": untyped}
     assert cfg["anchors"]["pt"]["features"]["f_dist"] == {
-        "def": {"sqlExpr": "trip_distance"}}
+        "def": {"sqlExpr": "trip_distance"}, "type": untyped}
     assert cfg["derivations"]["f_dist_x2"]["inputs"] == ["f_dist"]
     assert cfg["sources"]["taxi"]["twp"]["timestamp_column"] == "lpep_dropoff_datetime"
     import json

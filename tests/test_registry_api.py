@@ -9,6 +9,7 @@ from feathr_spark import (
 )
 from feathr_spark.registry.api import RegistryApi
 from feathr_spark.registry.catalog import Registry, RegistryError
+from feathr_spark.registry.roundtrip import save_project
 
 
 @pytest.fixture()
@@ -29,7 +30,7 @@ def api():
     p.register_derived(DerivedFeature(
         name="f_c", transform="f_a + f_b",
         input_features=[anchor.features[0], anchor.features[1]]))
-    reg.register_project(p)
+    save_project(reg, p)
     return RegistryApi(reg)
 
 
@@ -63,6 +64,19 @@ def test_children_listing_keyword_and_paging(api):
     assert [f["name"] for f in api.get_anchor_features("proj", "agg")] == \
         ["f_a", "f_b"]
     assert api.get_anchor_feature("proj", "agg", "f_a")["name"] == "f_a"
+
+
+def test_short_keyword_terms_match_whole_tokens(api):
+    """A query term under 3 characters matches whole tokens only: the
+    ``c`` of ``f_c`` does not prefix-match ``column`` in every feature's
+    key attributes, while a longer term still matches as a prefix."""
+    reg = api.registry
+    assert [e.qualified_name for e in reg.search("c")] == ["proj__f_c"]
+    # entities that refer to f_b hit too, ranked below f_b itself
+    assert [e.qualified_name for e in reg.search("f_b")] == \
+        ["proj__f_b", "proj__f_c", "proj__agg"]
+    hits = {e.qualified_name for e in reg.search("col")}
+    assert {"proj__f_a", "proj__f_b", "proj__f_c"} <= hits
 
 
 def test_lineage_payloads(api):

@@ -15,8 +15,9 @@ from pyspark.sql import Row
 
 from feathr_spark import (
     Aggregation, DerivedFeature, Feature, FeatureAnchor, FeatureQuery,
-    FeathrProject, HdfsSource, INPUT_CONTEXT, ObservationSettings,
-    TimeWindowParameters, TypedKey, WindowAggTransform,
+    FeathrProject, FeatureType, HdfsSource, INPUT_CONTEXT,
+    ObservationSettings, TimeWindowParameters, TypedKey, ValueType,
+    WindowAggTransform,
 )
 from feathr_spark.configio import from_lineage
 from feathr_spark.registry.catalog import Registry
@@ -102,12 +103,46 @@ def test_project_crud_and_listing(server):
     anchor = _post(f"{server}/api/v1/projects/p2/anchors",
                    {"name": "a1", "source": "s1"})
     feat = _post(f"{server}/api/v1/projects/p2/anchors/a1/features",
-                 {"name": "f1",
-                  "transform": {"kind": "expr", "sql_expr": "x + 1"},
-                  "keys": []})
+                 {"name": "f1", "transformation": {"transform_expr": "x + 1"},
+                  "key": []})
     assert anchor["name"] == "a1" and feat["qualifiedName"] == "p2__a1__f1"
     listed = _get(f"{server}/api/v1/projects/p2/anchors/a1/features")
     assert [f["name"] for f in listed] == ["f1"]
+
+
+def test_rebuild_project_built_through_the_api(server):
+    """A project posted piece by piece (source, anchor naming its source,
+    Atlas-shaped features) rebuilds from its lineage payload: the anchor's
+    features are served from its Contains edges."""
+    _post(f"{server}/api/v1/projects", {"name": "p3"})
+    _post(f"{server}/api/v1/projects/p3/datasources",
+          {"name": "s1", "kind": "hdfs", "path": "/tmp/p3.parquet",
+           "twp": {"timestamp_column": "ts", "timestamp_column_format": None},
+           "has_preprocessing": False})
+    _post(f"{server}/api/v1/projects/p3/anchors",
+          {"name": "a1", "source": "s1"})
+    key = {"key_column": "uid", "key_column_type": "INT64"}
+    for name, transformation in (
+            ("f1", {"transform_expr": "x + 1"}),
+            ("f2", {"def_expr": "x", "agg_func": "SUM", "window": "2d"})):
+        _post(f"{server}/api/v1/projects/p3/anchors/a1/features",
+              {"name": name, "transformation": transformation, "key": [key],
+               "type": {"type": "TENSOR", "tensorCategory": "DENSE",
+                        "dimensionType": [], "valType": "DOUBLE"}})
+    assert "features" not in _get(
+        f"{server}/api/v1/projects/p3/anchors/a1")["attributes"]
+
+    p3 = from_lineage(_get(f"{server}/api/v1/projects/p3/lineage"))
+    assert p3.anchors["a1"].source == HdfsSource(
+        name="s1", path="/tmp/p3.parquet",
+        time_window_parameters=TimeWindowParameters("ts"))
+    uid = [TypedKey(key_column="uid", key_column_type=ValueType.INT64)]
+    assert list(p3.anchors["a1"].features) == [
+        Feature(name="f1", feature_type=FeatureType.DOUBLE(),
+                transform="x + 1", key=uid),
+        Feature(name="f2", feature_type=FeatureType.DOUBLE(),
+                transform=WindowAggTransform("x", Aggregation.SUM, "2d"),
+                key=uid)]
 
 
 def test_search_paging_and_versions(server):

@@ -203,9 +203,9 @@ def test_time_prune_reaches_parquet_pushdown(spark, tmp_path):
 
 
 def test_time_prune_non_iana_session_tz_uses_epoch_predicate(spark, tmp_path):
-    """A session time zone that zoneinfo cannot parse (GMT+08:00) takes
-    the epoch-millis prune predicate instead of the pushed-down raw-column
-    form, and returns the same rows as no pruning."""
+    """Under a session time zone that is not an IANA name (GMT+08:00) the
+    prune predicate still reaches the parquet scan's PushedFilters, and
+    returns the same rows as no pruning."""
     import datetime as dt
     from feathr_spark import (
         Aggregation, Feature, FeatureAnchor, FeatureQuery, FeathrProject,
@@ -248,7 +248,41 @@ def test_time_prune_non_iana_session_tz_uses_epoch_predicate(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     assert got == want
     assert any(r[-1] for r in got)
-    assert "GreaterThan(t," not in plan, plan[:2000]
+    assert "PushedFilters: [IsNotNull(t), GreaterThan(t," in plan, plan[:2000]
+
+
+def test_time_prune_keeps_sub_millisecond_rows(spark, tmp_path):
+    """Windows compare whole epoch milliseconds: a source row 0.5 ms
+    after the millisecond of the latest observation, but before the
+    observation itself, is in its window, and time_prune keeps it."""
+    import datetime as dt
+    from feathr_spark import (
+        Aggregation, Feature, FeatureAnchor, FeatureQuery, FeathrProject,
+        HdfsSource, ObservationSettings, TimeWindowParameters, TypedKey,
+        WindowAggTransform,
+    )
+    t0 = dt.datetime(2024, 1, 10)
+    src_path = str(tmp_path / "src.parquet")
+    spark.createDataFrame([
+        Row(k=1, t=t0 - dt.timedelta(hours=1), v=1.0),
+        Row(k=1, t=t0 + dt.timedelta(microseconds=500), v=2.0),
+    ]).write.parquet(src_path)
+    p = FeathrProject("t", spark)
+    p.register_anchor(FeatureAnchor(
+        name="w",
+        source=HdfsSource(name="s", path=src_path,
+                          time_window_parameters=TimeWindowParameters("t")),
+        features=[Feature(name="f_sum", transform=WindowAggTransform(
+            "v", Aggregation.SUM, "1d"), key=[TypedKey(key_column="k")])]))
+    obs = spark.createDataFrame(
+        [Row(k=1, t=t0 + dt.timedelta(microseconds=700))])
+
+    def run(prune):
+        return [r.f_sum for r in p.get_offline_features(
+            ObservationSettings(timestamp_column="t").with_event_ts(obs),
+            FeatureQuery(["f_sum"]), time_prune=prune).collect()]
+
+    assert run(True) == run(False) == [3.0]
 
 
 def test_save_offline_features(spark, tmp_path):

@@ -180,6 +180,7 @@ def test_stream_watermark_drops_late_data(spark, tmp_path):
 def test_registry_graph_and_lineage():
     from feathr_spark.registry.catalog import (
         EdgeType, EntityType, Registry, RegistryError)
+    from feathr_spark.registry.roundtrip import save_project
     reg = Registry()
     p = FeathrProject("proj")
     src = DataFrameSource(name="orders_src", df=None)
@@ -193,7 +194,7 @@ def test_registry_graph_and_lineage():
         name="f_c", transform="f_a + f_b",
         input_features=[anchor.features[0], anchor.features[1]]))
 
-    ids = reg.register_project(p)
+    ids = save_project(reg, p)
     # lineage: upstream of derived feature = its inputs (+ their source)
     up = reg.lineage(ids["f_c"], "upstream")
     names = {e.qualified_name for e in up}
@@ -445,6 +446,36 @@ def test_backfill_multi_source_matches_joined_snapshots(spark):
                               key=[TypedKey(key_column="k", key_column_alias=alias)])]))
     with pytest.raises(FeathrError, match="must share key aliases"):
         q.compute_backfill(spark, ["f_a", "f_b"], bt)
+
+
+def test_snapshot_rejects_group_by_and_limit(spark):
+    """A snapshot holds one value per key, so a group_by or limit feature
+    cannot be materialized: compute_snapshot raises, naming the feature,
+    instead of writing the plain window aggregate."""
+    from feathr_spark import TimeWindowParameters
+    from feathr_spark.feature import FeathrError
+    df = spark.createDataFrame([
+        Row(k=1, g=1, t=ts("2024-01-01 00:00:00"), v=4.0),
+        Row(k=1, g=2, t=ts("2024-01-01 01:00:00"), v=2.0)])
+    p = FeathrProject("grouped", spark)
+    key = [TypedKey(key_column="k")]
+    p.register_anchor(FeatureAnchor(
+        name="a", source=DataFrameSource(
+            name="s", df=df, time_window_parameters=TimeWindowParameters("t")),
+        features=[
+            Feature(name="f_top", key=key, transform=WindowAggTransform(
+                "v", Aggregation.SUM, "1d", group_by="g", limit=1)),
+            Feature(name="f_limited", key=key, transform=WindowAggTransform(
+                "v", Aggregation.SUM, "1d", limit=1)),
+            Feature(name="f_sum", key=key, transform=WindowAggTransform(
+                "v", Aggregation.SUM, "1d")),
+        ]))
+    cutoff = ts("2024-01-01 12:00:00")
+    for name in ("f_top", "f_limited"):
+        with pytest.raises(FeathrError, match=name):
+            p.compute_snapshot(spark, ["f_sum", name], cutoff)
+    assert [r.f_sum for r in p.compute_snapshot(
+        spark, ["f_sum"], cutoff).collect()] == [6.0]
 
 
 def test_backfill_multi_source_single_pass(spark, monkeypatch, count_jobs):
