@@ -153,21 +153,24 @@ class Registry:
                 best = max(best, e.version)
         return best
 
+    @staticmethod
+    def _entity(eid: str, content: str) -> Entity:
+        d = json.loads(content)
+        return Entity(id=eid, qualified_name=d["qualified_name"],
+                      entity_type=EntityType(d["entity_type"]),
+                      version=d["version"], attributes=d["attributes"])
+
     def _all_entities(self) -> List[Entity]:
-        out = []
-        for eid, content in self.db.execute("SELECT * FROM entities"):
-            d = json.loads(content)
-            out.append(Entity(id=eid, qualified_name=d["qualified_name"],
-                              entity_type=EntityType(d["entity_type"]),
-                              version=d["version"], attributes=d["attributes"]))
-        return out
+        return [self._entity(*row)
+                for row in self.db.execute("SELECT * FROM entities")]
 
     def get_entity(self, name_or_id: str) -> Entity:
-        """Resolve by id, or by qualified name with optional ``:N`` /
-        ``:latest`` version suffix."""
-        for e in self._all_entities():
-            if e.id == name_or_id:
-                return e
+        """Resolve by id (a primary-key lookup), or by qualified name with
+        optional ``:N`` / ``:latest`` version suffix."""
+        row = self.db.execute("SELECT * FROM entities WHERE entity_id = ?",
+                              (name_or_id,)).fetchone()
+        if row is not None:
+            return self._entity(*row)
         base, version = parse_version_suffix(name_or_id)
         matches = [e for e in self._all_entities() if e.qualified_name == base]
         if not matches:

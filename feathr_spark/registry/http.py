@@ -8,12 +8,21 @@ mounted under ``{api_base}/v1`` and ``{api_base}/v2`` with
 /root/reference/registry/feathr-registry/src/main.rs:150-205 nests it,
 plus the unversioned ``/version`` probe (main.rs:192-204).
 
-Implementation is stdlib-only (``http.server``): each route parses to a
+Implementation is stdlib-only (``http.server``). :class:`RestHandler`
+is the one request front end of both registry servers: it answers the
+``/version`` probe, strips the ``{api_base}/v{1,2}`` prefix, parses the
+JSON body (400 when malformed), matches the route to a
 ``FeathrApiRequest``-shaped dict (the enum-variant vocabulary of
-/root/reference/registry/registry-api/src/api_provider.rs:20-169) and is
-dispatched through ``RegistryApi.handle`` — the HTTP layer contains zero
-business logic, mirroring how the reference's poem handlers only build a
-request and forward it.
+/root/reference/registry/registry-api/src/api_provider.rs:20-169),
+extracts the caller's credential, and maps errors to status codes (403
+for a denial, 404 for what is not found, 400 otherwise, 201 for a
+create). Each server supplies only the ``(request, credential) ->
+result`` callable that runs the parsed request: :class:`RegistryHttpServer`
+calls ``RegistryApi.handle`` under a dispatch lock; a Raft node
+(``raft_http.RaftRegistryServer``) reads from its local replica and
+writes through the Raft leader. The front end holds no business logic,
+mirroring how the reference's poem handlers only build a request and
+forward it.
 
 RBAC routes (``/userroles``, ``/users/{user}/userroles/add``) follow
 api_v2.rs:911-983; the principal arrives either as a VERIFIED
@@ -23,11 +32,10 @@ claims→credential mapping, rbac_middleware.rs:31-58; bad tokens are
 401) or via the ``x-registry-credential`` debug header (the
 reference's ``x-feathr-debug-token`` path, rbac_middleware.rs:68-84,
 on by default for in-process use, disable with
-``debug_credentials=False``). Permission failures map to 403. Raft management routes live on the
-clustered server (``raft_http.py`` — /raft-vote, /raft-append,
-/raft-snapshot, /init, /add-learner, /change-membership, /metrics,
-/handle-request, /handle-leader-request); this single-node server
-returns 404 for them.
+``debug_credentials=False``). Raft management routes (/raft-vote,
+/raft-append, /raft-snapshot, /init, /add-learner, /change-membership,
+/metrics, /handle-request, /handle-leader-request) exist only on a Raft
+node; this single-node server returns 404 for them.
 """
 
 from __future__ import annotations
@@ -41,6 +49,7 @@ from urllib.parse import parse_qs, urlparse
 
 from .api import RegistryApi
 from .catalog import RegistryError
+from .rbac import PermissionDenied
 from .token import AuthError, TokenDecoder, credential_from_claims
 
 # (method, path-regex, request-type, path-param names). Paths are relative
@@ -153,17 +162,21 @@ def _match(method: str, rel_path: str,
     return None
 
 
-class _Handler(BaseHTTPRequestHandler):
-    server_version = "FeathrSparkRegistry/1.0"
+class RestHandler(BaseHTTPRequestHandler):
+    """The registry's one REST front end, shared by both servers.
 
-    # injected by RegistryHttpServer
+    Subclasses bind ``api`` and ``serve``, the ``(request, credential) ->
+    result`` callable that runs each parsed request; a Raft node's
+    handler adds its cluster routes on top (``raft_http.py``)."""
+
+    server_version = "FeathrSparkRegistry/1.0"
+    version_info = {"version": "feathr-spark",
+                    "backends": ["sqlite", "memory"]}
     api: RegistryApi = None
     api_base: str = "/api"
-    # Serializes dispatch across worker threads: the sqlite-backed catalog
-    # is a single connection, and the reference registry serializes writes
-    # through Raft anyway — request-level serialization is the wire-level
-    # equivalent.
-    lock: threading.Lock = None
+    token_decoder: Optional[TokenDecoder] = None
+    debug_credentials: bool = True
+    serve = None  # staticmethod(request, credential) -> result
 
     def log_message(self, fmt, *args):  # quiet for tests
         pass
@@ -176,90 +189,92 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(data)
 
-    def _dispatch(self, method: str) -> None:
+    def _body(self) -> dict:
+        """The JSON object in the request body, ``{}`` when empty;
+        ``ValueError`` (a 400) when it is not a JSON object."""
+        n = int(self.headers.get("Content-Length") or 0)
+        try:
+            body = json.loads(self.rfile.read(n)) if n else {}
+        except ValueError as e:
+            raise ValueError(f"invalid JSON body: {e}") from None
+        if not isinstance(body, dict):
+            raise ValueError("invalid JSON body: not an object")
+        return body
+
+    def _credential(self) -> Optional[str]:
+        """The caller's principal, as the reference's RbacMiddleware
+        (raft-registry/src/rbac_middleware.rs:65-107) extracts it: with a
+        token decoder configured, an Authorization bearer token is
+        verified (RS256/HS256, nbf/exp) and its claims map to the
+        credential; a bad token is 401. The x-registry-credential header
+        is the debug path (the reference's x-feathr-debug-token, honored
+        only when debug_credentials is on). With debug off, RBAC
+        enforcing, and no token, the request is 403 "Missing token"
+        (rbac_middleware.rs:104). On an ENFORCING server with the debug
+        path a missing header is an anonymous caller (no grants ->
+        denied), never an RbacDisabled bypass."""
+        auth = self.headers.get("Authorization")
+        if self.token_decoder is not None and auth:
+            tok = auth[6:] if auth.startswith("Bearer") else auth
+            return credential_from_claims(self.token_decoder.decode(tok))
+        header = self.headers.get("x-registry-credential")
+        if header and self.debug_credentials:
+            return header
+        if self.token_decoder is not None and \
+                not self.debug_credentials and self.api.enforce:
+            raise PermissionDenied("Missing token")
+        return "anonymous" if self.api.enforce else None
+
+    def _answer(self, ok: int, call) -> None:
+        """Send ``call()``'s result with status ``ok``, or its error:
+        401 for a rejected token, 403 for a denial, 404 for what is not
+        found, 400 for any other bad request."""
+        try:
+            out = call()
+        except AuthError as e:
+            self._send(401, {"error": str(e)})
+        except PermissionDenied as e:
+            self._send(403, {"error": str(e)})
+        except RegistryError as e:
+            code = 404 if "not found" in str(e).lower() else 400
+            self._send(code, {"error": str(e)})
+        except (KeyError, TypeError, ValueError) as e:
+            self._send(400, {"error": str(e)})
+        else:
+            self._send(ok, out)
+
+    def _rest(self, method: str) -> None:
         url = urlparse(self.path)
         path = url.path.rstrip("/") or "/"
         if method == "GET" and path == "/version":
-            self._send(200, {"version": "feathr-spark",
-                             "rbac": self.api.enforce,
-                             "backends": ["sqlite", "memory"],
+            self._send(200, {**self.version_info, "rbac": self.api.enforce,
                              "api_versions": ["v1", "v2"]})
             return
-        rel = None
         for v in ("/v1", "/v2"):
             prefix = self.api_base + v
             if path.startswith(prefix + "/") or path == prefix:
                 rel = path[len(prefix):] or "/"
                 break
-        if rel is None:
+        else:
             self._send(404, {"error": f"not found: {path}"})
             return
-        body = None
-        if method == "POST":
-            n = int(self.headers.get("Content-Length") or 0)
-            raw = self.rfile.read(n) if n else b"{}"
-            try:
-                body = json.loads(raw or b"{}")
-            except json.JSONDecodeError:
-                self._send(400, {"error": "invalid JSON body"})
-                return
-        req = _match(method, rel, parse_qs(url.query), body)
-        if req is None:
-            self._send(404, {"error": f"no route: {method} {path}"})
-            return
-        # Principal extraction mirrors the reference's RbacMiddleware
-        # (raft-registry/src/rbac_middleware.rs:65-107): with a token
-        # decoder configured, an Authorization bearer token is verified
-        # (RS256/HS256, nbf/exp) and its claims map to the credential;
-        # a bad token is 401. The x-registry-credential header is the
-        # debug path (the reference's x-feathr-debug-token, honored
-        # only when debug_credentials is on). With debug off, RBAC
-        # enforcing, and no token, the request is 403 "Missing token"
-        # (rbac_middleware.rs:104). On an ENFORCING server with the
-        # debug path a missing header is an anonymous caller (no
-        # grants -> denied), never an RbacDisabled bypass.
-        auth = self.headers.get("Authorization")
-        if self.token_decoder is not None and auth:
-            tok = auth[6:] if auth.startswith("Bearer") else auth
-            try:
-                claims = self.token_decoder.decode(tok)
-                credential = credential_from_claims(claims)
-            except AuthError as e:
-                self._send(401, {"error": str(e)})
-                return
-        elif self.headers.get("x-registry-credential") and \
-                self.debug_credentials:
-            credential = self.headers.get("x-registry-credential")
-        elif self.token_decoder is not None and \
-                not self.debug_credentials and self.api.enforce:
-            self._send(403, {"error": "Missing token"})
-            return
-        else:
-            credential = "anonymous" if self.api.enforce else None
-        try:
-            with self.lock:
-                out = self.api.handle(req, credential=credential)
-        except RegistryError as e:
-            from .rbac import PermissionDenied
-            if isinstance(e, PermissionDenied):
-                code = 403
-            else:
-                code = 404 if "not found" in str(e).lower() else 400
-            self._send(code, {"error": str(e)})
-            return
-        except (KeyError, TypeError, ValueError) as e:
-            self._send(400, {"error": str(e)})
-            return
-        self._send(201 if method == "POST" else 200, out)
+
+        def call():
+            req = _match(method, rel, parse_qs(url.query), self._body())
+            if req is None:
+                raise RegistryError(f"route not found: {method} {path}")
+            return self.serve(req, self._credential())
+
+        self._answer(201 if method == "POST" else 200, call)
 
     def do_GET(self):
-        self._dispatch("GET")
+        self._rest("GET")
 
     def do_POST(self):
-        self._dispatch("POST")
+        self._rest("POST")
 
     def do_DELETE(self):
-        self._dispatch("DELETE")
+        self._rest("DELETE")
 
 
 class RegistryHttpServer:
@@ -275,12 +290,21 @@ class RegistryHttpServer:
                  token_decoder: Optional[TokenDecoder] = None,
                  debug_credentials: bool = True):
         self.api = api or RegistryApi()
-        handler = type("BoundHandler", (_Handler,),
+        # One dispatch at a time: the sqlite-backed catalog is a single
+        # connection, and the reference registry serializes writes
+        # through Raft anyway.
+        lock = threading.Lock()
+
+        def serve(request: dict, credential: Optional[str]) -> object:
+            with lock:
+                return self.api.handle(request, credential=credential)
+
+        handler = type("BoundHandler", (RestHandler,),
                        {"api": self.api,
                         "api_base": "/" + api_base.strip("/"),
                         "token_decoder": token_decoder,
                         "debug_credentials": debug_credentials,
-                        "lock": threading.Lock()})
+                        "serve": staticmethod(serve)})
         self._httpd = ThreadingHTTPServer((host, port), handler)
         self._thread: Optional[threading.Thread] = None
 

@@ -11,10 +11,17 @@ Wire-level mirror of the reference's raft-registry node surface:
   error, management.rs:91-95), ``POST /handle-leader-request`` (writes
   go through the log; non-leaders answer with a ForwardToLeader hint),
   ``GET /ping``, ``GET /ready``.
-* The full ``/api/v1`` + ``/api/v2`` REST surface from ``http.py`` is
-  mounted on every node; writing requests are transparently forwarded
-  to the current leader (the reference's RaftSequencer role), reads are
-  served from the local replica.
+* The REST surface mounted on every node IS ``http.py``'s: the same
+  :class:`~.http.RestHandler` front end parses routes, bodies and
+  credentials and maps errors to the same status codes (201 for a
+  create, 400 for a bad request, 403 for a denial, 404 for what is not
+  found), so RBAC holds on ``/api/v{1,2}`` and ``/handle-request``
+  alike. Reads are served from the local replica; writes are proposed
+  at the leader, and a follower forwards them through
+  :class:`RaftRegistryClient`'s leader-call loop (the reference's
+  RaftSequencer role), so a denial at the leader is a 403 at the
+  follower too. Credentials come from the ``x-registry-credential``
+  header; bearer-token decoding is the single-node server's only.
 
 The replicated state machine is the sqlite-backed Registry + RBAC
 store. Determinism across replicas comes from three choices: entity
@@ -31,21 +38,22 @@ A.lock -> HTTP -> B.handler wants B.lock while B ticks holding B.lock
 """
 from __future__ import annotations
 
+import http.client
 import json
 import threading
 import time
 import urllib.error
 import urllib.request
 from concurrent.futures import ThreadPoolExecutor
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 from typing import Any, Dict, Optional
-from urllib.parse import parse_qs, urlparse
+from urllib.parse import urlparse
 
-from . import http as resthttp
 from .api import _WRITING, RegistryApi
-from .catalog import Registry, RegistryError
-from .raft import LEADER, NotLeader, RaftNode
-from .rbac import _NOW_OVERRIDE
+from .catalog import RegistryError
+from .http import RestHandler
+from .raft import NotLeader, RaftNode
+from .rbac import _NOW_OVERRIDE, PermissionDenied
 
 
 class RegistryStateMachine:
@@ -68,7 +76,8 @@ class RegistryStateMachine:
         except Exception as e:  # failed applies are part of the
             # replicated history too: every replica runs the same
             # command and reaches the same (error) outcome
-            return {"ok": False, "error": str(e)}
+            return {"ok": False, "error": str(e),
+                    "denied": isinstance(e, PermissionDenied)}
         finally:
             _NOW_OVERRIDE.reset(token)
 
@@ -129,21 +138,25 @@ class HttpTransport:
         self.closed = False
 
     def send(self, dst: str, rpc: str, payload: Dict[str, Any]):
-        if self.closed or dst not in self.peer_urls:
+        url = self.peer_urls.get(dst)
+        if self.closed or url is None:
             return None
-        self.pool.submit(self._roundtrip, dst, rpc, payload)
+        self.pool.submit(self._roundtrip, dst, url + self.RPC_PATH[rpc],
+                         rpc, payload)
         return None  # async: never block while the node lock is held
 
-    def _roundtrip(self, dst: str, rpc: str, payload: Dict[str, Any]):
+    def _roundtrip(self, dst: str, url: str, rpc: str,
+                   payload: Dict[str, Any]):
+        data = json.dumps(payload).encode("utf-8")
+        req = urllib.request.Request(
+            url, data=data, headers={"Content-Type": "application/json"})
         try:
-            url = self.peer_urls[dst] + self.RPC_PATH[rpc]
-            data = json.dumps(payload).encode("utf-8")
-            req = urllib.request.Request(
-                url, data=data, headers={"Content-Type": "application/json"})
             with urllib.request.urlopen(req, timeout=self.timeout) as r:
                 resp = json.loads(r.read().decode("utf-8"))
-        except Exception:
-            return  # unreachable peer = dropped message; Raft retries
+        except (OSError, http.client.HTTPException, ValueError):
+            # unreachable peer, error status or undecodable reply:
+            # a dropped message, which Raft retries
+            return
         if self.closed:
             return
         if rpc == "vote":
@@ -283,70 +296,74 @@ class RaftRegistryServer:
         if res is None:
             raise RegistryError("write result unavailable")
         if not res["ok"]:
-            raise RegistryError(res["error"])
+            error = PermissionDenied if res["denied"] else RegistryError
+            raise error(res["error"])
         return res["value"]
 
-    def forward_write(self, request: dict, credential=None) -> Any:
-        """Server-side leader forwarding for the mounted REST surface
+    def serve(self, request: dict, credential: Optional[str] = None) -> Any:
+        """The REST front end's request callable: a read runs on the
+        local replica; a write is proposed here when this node leads,
+        else it goes to the leader through :class:`RaftRegistryClient`
         (the reference's RaftSequencer role)."""
-        for _ in range(3):  # leadership may move mid-flight
-            if self.node.is_leader():
-                return self.handle_write(request, credential)
-            target = self.leader_url()
-            if target is None:
-                time.sleep(0.2)
-                continue
-            body = json.dumps(request).encode("utf-8")
-            headers = {"Content-Type": "application/json"}
-            if credential:
-                headers["x-registry-credential"] = credential
-            req = urllib.request.Request(
-                target + "/handle-leader-request", data=body,
-                headers=headers)
-            try:
-                with urllib.request.urlopen(req, timeout=5.0) as r:
-                    payload = json.loads(r.read().decode("utf-8"))
-                return payload
-            except urllib.error.HTTPError as e:
-                detail = json.loads(e.read().decode("utf-8") or "{}")
-                if detail.get("error") == "ForwardToLeader":
-                    time.sleep(0.2)
-                    continue
-                raise RegistryError(detail.get("error", str(e)))
-            except Exception:
-                time.sleep(0.2)  # leader died mid-flight: rediscover
-                continue
-        raise RegistryError("no leader available for write")
+        if request.get("type") not in _WRITING:
+            return self.handle_read(request, credential)
+        if self.node.is_leader():
+            return self.handle_write(request, credential)
+        client = RaftRegistryClient(
+            self.leader_url() or self.url, credential=credential,
+            peers=list(self.transport.peer_urls.values()))
+        return client.consistent_request(request)
 
 
 def _make_handler(app: RaftRegistryServer):
-    class Handler(BaseHTTPRequestHandler):
+    node = app.node
+
+    def leader_request(body: dict, credential: Optional[str]) -> Any:
+        if not node.is_leader():
+            raise NotLeader(node.leader_id)
+        if body.get("type") in _WRITING:
+            return app.handle_write(body, credential)
+        return app.handle_read(body, credential)
+
+    def add_learner(body: dict) -> dict:
+        app.add_peer_url(body["node_id"], body["url"])
+        index, _ = node.add_learner(body["node_id"])
+        return {"status": "OK", "index": index}
+
+    def change_membership(body: dict) -> dict:
+        index, _ = node.change_membership(body["voters"])
+        return {"status": "OK", "index": index,
+                "voters": sorted(body["voters"])}
+
+    # POST routes of the cluster: path -> fn(body)
+    cluster_routes = {
+        "/raft-vote": node.handle_vote,
+        "/raft-append": node.handle_append,
+        "/raft-snapshot": node.handle_snapshot,
+        "/init": lambda body: app.init_cluster(body["nodes"],
+                                               body.get("voters")),
+        "/add-learner": add_learner,
+        "/change-membership": change_membership,
+    }
+    # registry requests in the body: path -> fn(body, credential)
+    request_routes = {"/handle-request": app.handle_read,
+                      "/handle-leader-request": leader_request}
+
+    class Handler(RestHandler):
         server_version = "FeathrSparkRaftRegistry/1.0"
+        version_info = {"version": "feathr-spark-raft", "raft": True}
+        api = app.sm.api
+        serve = staticmethod(app.serve)
 
-        def log_message(self, fmt, *args):
-            pass
+        def _answer(self, ok: int, call) -> None:
+            try:
+                super()._answer(ok, call)
+            except NotLeader:
+                self._send(421, {"error": "ForwardToLeader",
+                                 "leader": app.leader_url()})
 
-        def _send(self, code: int, payload: object) -> None:
-            data = json.dumps(payload).encode("utf-8")
-            self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def _body(self) -> Optional[dict]:
-            n = int(self.headers.get("Content-Length") or 0)
-            if not n:
-                return None
-            return json.loads(self.rfile.read(n).decode("utf-8"))
-
-        def _credential(self) -> Optional[str]:
-            return self.headers.get("x-registry-credential")
-
-        # ---- routes -------------------------------------------------
         def do_GET(self):
             path = urlparse(self.path).path.rstrip("/") or "/"
-            node = app.node
             if path == "/ping":
                 self._send(200, {"status": "OK"})
             elif path == "/ready":
@@ -362,89 +379,13 @@ def _make_handler(app: RaftRegistryServer):
 
         def do_POST(self):
             path = urlparse(self.path).path.rstrip("/") or "/"
-            node = app.node
-            body = self._body()
-            try:
-                if path == "/raft-vote":
-                    self._send(200, node.handle_vote(body))
-                elif path == "/raft-append":
-                    self._send(200, node.handle_append(body))
-                elif path == "/raft-snapshot":
-                    self._send(200, node.handle_snapshot(body))
-                elif path == "/init":
-                    self._send(200, app.init_cluster(
-                        body["nodes"], body.get("voters")))
-                elif path == "/add-learner":
-                    nid, url = body["node_id"], body["url"]
-                    app.add_peer_url(nid, url)
-                    idx, term = node.add_learner(nid)
-                    self._send(200, {"status": "OK", "index": idx})
-                elif path == "/change-membership":
-                    idx, term = node.change_membership(body["voters"])
-                    self._send(200, {"status": "OK", "index": idx,
-                                     "voters": sorted(body["voters"])})
-                elif path == "/handle-request":
-                    self._send(200, app.handle_read(body,
-                                                    self._credential()))
-                elif path == "/handle-leader-request":
-                    if not node.is_leader():
-                        self._send(421, {"error": "ForwardToLeader",
-                                         "leader": app.leader_url()})
-                        return
-                    if body.get("type") in _WRITING:
-                        out = app.handle_write(body, self._credential())
-                    else:
-                        out = app.handle_read(body, self._credential())
-                    self._send(200, out)
-                else:
-                    self._rest("POST", body)
-            except NotLeader as e:
-                self._send(421, {"error": "ForwardToLeader",
-                                 "leader": app.leader_url()})
-            except (ValueError, KeyError) as e:
-                self._send(400, {"error": str(e)})
-            except RegistryError as e:
-                self._send(400, {"error": str(e)})
-
-        def do_DELETE(self):
-            self._rest("DELETE", self._body())
-
-        # ---- mounted REST surface (http.py routes over raft) ---------
-        def _rest(self, method: str, body: Optional[dict] = None) -> None:
-            url = urlparse(self.path)
-            path = url.path.rstrip("/") or "/"
-            if method == "GET" and path == "/version":
-                self._send(200, {"version": "feathr-spark-raft",
-                                 "raft": True,
-                                 "api_versions": ["v1", "v2"]})
-                return
-            rel = None
-            for v in ("/v1", "/v2"):
-                prefix = "/api" + v
-                if path.startswith(prefix):
-                    rel = path[len(prefix):] or "/"
-                    break
-            if rel is None:
-                self._send(404, {"error": f"no route {path}"})
-                return
-            # the body was already consumed by do_POST/do_DELETE — the
-            # rfile stream cannot be read twice (a second read blocks
-            # until the client gives up)
-            req = resthttp._match(method, rel, parse_qs(url.query), body)
-            if req is None:
-                self._send(404, {"error": f"no route {method} {path}"})
-                return
-            try:
-                if req.get("type") in _WRITING:
-                    out = app.forward_write(req, self._credential())
-                else:
-                    out = app.handle_read(req, self._credential())
-                self._send(200, out)
-            except RegistryError as e:
-                msg = str(e)
-                code = 403 if "permission" in msg.lower() else (
-                    404 if "not found" in msg.lower() else 400)
-                self._send(code, {"error": msg})
+            if path in cluster_routes:
+                self._answer(200, lambda: cluster_routes[path](self._body()))
+            elif path in request_routes:
+                self._answer(200, lambda: request_routes[path](
+                    self._body(), self._credential()))
+            else:
+                self._rest("POST")
 
     return Handler
 
@@ -505,8 +446,10 @@ class RaftRegistryClient:
                         time.sleep(0.2)  # mid-election: wait and re-ask
                     last = RegistryError("leadership moved")
                     continue
-                raise RegistryError(detail.get("error", str(e)))
-            except Exception as e:  # connection refused: leader died —
+                error = PermissionDenied if e.code == 403 else RegistryError
+                raise error(detail.get("error", str(e)))
+            except (OSError, http.client.HTTPException) as e:
+                # connection refused or dropped: the leader died —
                 # rotate to the next known address; its ForwardToLeader
                 # hint (or success) re-establishes the leader
                 last = e

@@ -280,7 +280,7 @@ class KafkaSource(Source):
         df = reader.load()
         if self.avro_schema_json:
             # JVM from_avro when spark-avro is on the classpath, else the
-            # Arrow-batched pure-Python fallback for flat primitive records.
+            # Arrow-batched pure-Python fallback (compile_schema's codec).
             from .streaming.avro import decode_avro_payload
             df = decode_avro_payload(df, self.avro_schema_json,
                                      keep_cols=("timestamp",))

@@ -7,14 +7,13 @@ source builder source.rs:563-650) and lets the Spark runtime decode the
 expression (spark-avro on the classpath: codegen'd, zero Python); when
 the connector is absent, :func:`decode_avro_payload` falls back to an
 Arrow-batched ``mapInPandas`` decoder implementing the Avro binary
-encoding. Round 5 extends the fallback from flat primitives to the
-full structural subset: NESTED records, arrays, maps (string keys,
-per the spec), enums (→ string), fixed (→ binary), and ``["null",
-T]`` unions at any depth — compiled recursively by
+encoding over the structural subset: flat and NESTED records, arrays,
+maps (string keys, per the spec), enums (→ string), fixed (→ binary),
+``["null", T]`` unions at any depth and multi-branch unions (a struct
+of one nullable field per branch) — compiled recursively by
 :func:`compile_schema` into a Spark schema plus closure-based
-encoder/decoder pairs. Multi-branch non-null unions and recursive
-named-type self-references still need the connector (Spark itself
-cannot type a sum type as one column).
+encoder/decoder pairs. Only recursive named-type self-references
+still need the connector (they have no finite Spark schema).
 
 Binary encoding per the Avro 1.11 spec: int/long are zigzag varints,
 float/double little-endian IEEE, boolean one byte, string/bytes a long
@@ -29,7 +28,7 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, Tuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
@@ -45,36 +44,6 @@ _PRIMITIVES = {
     "string": T.StringType(),
     "bytes": T.BinaryType(),
 }
-
-
-def parse_flat_record_schema(avro_json: str) -> List[Tuple[str, str, bool]]:
-    """Parse an Avro record schema into ``[(field, primitive, nullable)]``.
-
-    Only flat records of primitives (optionally ``["null", prim]``) are
-    supported — the shape Kafka feature payloads use. Raises
-    ``NotImplementedError`` for anything that needs the spark-avro
-    connector."""
-    schema = json.loads(avro_json) if isinstance(avro_json, str) else avro_json
-    if not isinstance(schema, dict) or schema.get("type") != "record":
-        raise NotImplementedError(
-            f"only record schemas are supported, got {schema!r:.80}")
-    out = []
-    for f in schema.get("fields", []):
-        name, ftype = f["name"], f["type"]
-        nullable = False
-        if isinstance(ftype, list):
-            branches = [b for b in ftype if b != "null"]
-            if len(branches) != 1 or len(ftype) != 2 or "null" not in ftype:
-                raise NotImplementedError(
-                    f"field {name!r}: only ['null', primitive] unions are "
-                    "supported without the spark-avro connector")
-            ftype, nullable = branches[0], True
-        if not isinstance(ftype, str) or ftype not in _PRIMITIVES:
-            raise NotImplementedError(
-                f"field {name!r}: type {ftype!r} needs the spark-avro "
-                "connector (flat primitives only in the fallback decoder)")
-        out.append((name, ftype, nullable))
-    return out
 
 
 # -- binary codec -----------------------------------------------------------
@@ -139,34 +108,6 @@ def _decode_value(buf: bytes, pos: int, ftype: str):
     raise NotImplementedError(ftype)
 
 
-def encode_record(row: dict, fields: List[Tuple[str, str, bool]]) -> bytes:
-    """Avro-binary-encode one record (test/producer helper)."""
-    out = bytearray()
-    for name, ftype, nullable in fields:
-        val = row.get(name)
-        if nullable:
-            if val is None:
-                out += _zigzag_encode(0)     # union branch 0 = null
-                continue
-            out += _zigzag_encode(1)         # union branch 1 = value
-        elif val is None:
-            raise ValueError(f"field {name!r} is not nullable")
-        out += _encode_value(val, ftype)
-    return bytes(out)
-
-
-def decode_record(buf: bytes, fields: List[Tuple[str, str, bool]]) -> dict:
-    pos, out = 0, {}
-    for name, ftype, nullable in fields:
-        if nullable:
-            branch, pos = _zigzag_decode(buf, pos)
-            if branch == 0:
-                out[name] = None
-                continue
-        out[name], pos = _decode_value(buf, pos, ftype)
-    return out
-
-
 # -- recursive schema compiler (round 5) -------------------------------------
 
 def compile_schema(avro_json):
@@ -227,6 +168,8 @@ def _compile(sch, named):
         t = sch
 
         def enc_p(v, t=t):
+            if v is None:  # a nullable field is a ["null", T] union
+                raise ValueError(f"None for a non-nullable {t!r}")
             return bytearray(_encode_value(v, t))
 
         def dec_p(buf, pos, t=t):

@@ -1,6 +1,8 @@
+import contextlib
 import itertools
 import os
 import sys
+import time
 
 import pytest
 
@@ -86,3 +88,26 @@ def count_py4j():
         return out, calls[0]
 
     return run
+
+
+@contextlib.contextmanager
+def _one_node_raft(api):
+    from feathr_spark.registry.raft_http import RaftRegistryServer
+    server = RaftRegistryServer("n0", tick_ms=25, api=api).start()
+    try:
+        server.init_cluster({"n0": server.url})
+        deadline = time.time() + 10
+        while not server.node.is_leader():
+            assert time.time() < deadline, "the node elected no leader"
+            time.sleep(0.02)
+        yield server.url
+    finally:
+        server.stop()
+
+
+@pytest.fixture(scope="session")
+def one_node_raft():
+    """``with one_node_raft(api) as url:`` serves ``api`` from a one-node
+    Raft registry cluster whose node leads — a drop-in for
+    ``with RegistryHttpServer(api) as url:``."""
+    return _one_node_raft

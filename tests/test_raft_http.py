@@ -306,3 +306,80 @@ def test_client_tracks_leader_across_failover(cluster):
     assert out2["guid"]
     new_leader = next(s for s in survivors if s.node.is_leader())
     assert client.leader_url == new_leader.url
+
+
+def test_follower_forwarded_denial_is_403_and_writes_nothing():
+    """On an RBAC-enforcing cluster a follower forwards each REST write
+    to the leader, whose denial reaches the caller as a 403: for a
+    caller without the grant and for one with no credential at all.
+    Refused writes create nothing on any replica; a granted caller's
+    forwarded write is a 201."""
+    from feathr_spark.registry.api import RegistryApi
+    from feathr_spark.registry.catalog import Registry
+    from feathr_spark.registry.rbac import (
+        GLOBAL_SCOPE, Permission, RbacStore,
+    )
+
+    def enforcing_api():
+        reg = Registry()
+        rbac = RbacStore(reg.db)
+        rbac.grant(GLOBAL_SCOPE, "root", Permission.ADMIN, "root", "boot")
+        return RegistryApi(reg, rbac=rbac)
+
+    servers = [RaftRegistryServer(f"n{i}", tick_ms=25, seed=3000 + i,
+                                  api=enforcing_api()).start()
+               for i in range(3)]
+    try:
+        nodes = {s.node.id: s.url for s in servers}
+        for s in servers:
+            _post(s.url + "/init", {"nodes": nodes})
+        leader = _wait_leader(servers)
+        _wait(lambda: all(s.node.leader_id == leader.node.id
+                          for s in servers), msg="leader propagation")
+        follower = next(s for s in servers if s is not leader)
+        for credential in ("mallory", None):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _post(follower.url + "/api/v1/projects", {"name": "denied"},
+                      credential=credential)
+            assert e.value.code == 403, credential
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _post(follower.url + "/handle-request",
+                      {"type": "GetProjects"}, credential=credential)
+            assert e.value.code == 403, credential
+        req = urllib.request.Request(
+            follower.url + "/api/v1/projects",
+            data=json.dumps({"name": "granted"}).encode(),
+            headers={"Content-Type": "application/json",
+                     "x-registry-credential": "root"})
+        with urllib.request.urlopen(req, timeout=5.0) as r:
+            assert r.status == 201
+        # the refused writes precede the granted one in the log, so once
+        # every replica shows it they have all applied the refusals too
+
+        def names(s):
+            with s.sm.lock:
+                return {p["qualifiedName"] for p in s.sm.api.get_projects()}
+        _wait(lambda: all("granted" in names(s) for s in servers),
+              msg="granted write on every replica")
+        assert all(names(s) == {"granted"} for s in servers)
+    finally:
+        for s in servers:
+            s.stop()
+
+
+def test_malformed_json_body_is_400():
+    server = RaftRegistryServer("n0", tick_ms=25).start()
+    try:
+        _post(server.url + "/init", {"nodes": {"n0": server.url}})
+        _wait_leader([server])
+        for path in ("/api/v1/projects", "/handle-request",
+                     "/handle-leader-request"):
+            req = urllib.request.Request(
+                server.url + path, data=b"{not json",
+                headers={"Content-Type": "application/json"})
+            with pytest.raises(urllib.error.HTTPError) as e:
+                urllib.request.urlopen(req, timeout=5.0)
+            assert e.value.code == 400, path
+            assert "invalid JSON body" in json.loads(e.value.read())["error"]
+    finally:
+        server.stop()

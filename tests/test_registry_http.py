@@ -4,6 +4,9 @@ nested under {api_base}/v{1,2} per feathr-registry/src/main.rs:150-205)
 served by the stdlib shim in feathr_spark.registry.http and driven over
 real localhost sockets — CRUD, search/paging, versions, lineage, error
 mapping, and a full rebuild-and-run of a project fetched over the wire.
+Every test runs twice: against the single-node server and, in
+``TestOnRaftNode``, against a one-node Raft server (raft_http.py), which
+mounts the same front end.
 """
 
 import json
@@ -20,6 +23,7 @@ from feathr_spark import (
     WindowAggTransform,
 )
 from feathr_spark.configio import from_lineage
+from feathr_spark.registry.api import RegistryApi
 from feathr_spark.registry.catalog import Registry
 from feathr_spark.registry.http import RegistryHttpServer
 from feathr_spark.registry.roundtrip import save_project
@@ -51,10 +55,9 @@ def _post(url, body, expect=201):
         return json.loads(e.read())
 
 
-@pytest.fixture(scope="module")
-def server():
-    """One server for the module; project 'rt' saved with full serialized
-    definitions (save_project) so lineage payloads are reconstructable."""
+def _preloaded_api():
+    """Project 'rt' saved with full serialized definitions (save_project)
+    so lineage payloads are reconstructable."""
     reg = Registry()
     p = FeathrProject("rt")
     p.register_anchor(FeatureAnchor(name="pt", source=INPUT_CONTEXT, features=[
@@ -71,8 +74,13 @@ def server():
         name="f_ratio", transform="f_total / f_avg_90d",
         input_features=["f_total", "f_avg_90d"]))
     save_project(reg, p)
-    from feathr_spark.registry.api import RegistryApi
-    with RegistryHttpServer(RegistryApi(reg)) as url:
+    return RegistryApi(reg)
+
+
+@pytest.fixture(scope="module")
+def server():
+    """One single-node server for the module's tests."""
+    with RegistryHttpServer(_preloaded_api()) as url:
         yield url
 
 
@@ -218,3 +226,28 @@ def test_rebuild_project_from_http_lineage_and_run(server, spark):
                   for r in ref.get_offline_features(obs, q)
                   .select("o_orderkey", "f_ratio").collect())
     assert rows == want and len(rows) > 0
+
+
+class TestOnRaftNode:
+    """Every test above, unchanged, against a one-node Raft server over
+    the same preloaded api: both servers mount one REST front end."""
+
+    @pytest.fixture(scope="class")
+    def server(self, one_node_raft):
+        with one_node_raft(_preloaded_api()) as url:
+            yield url
+
+    test_version_probe_and_unrouted_paths = staticmethod(
+        test_version_probe_and_unrouted_paths)
+    test_project_crud_and_listing = staticmethod(
+        test_project_crud_and_listing)
+    test_rebuild_project_built_through_the_api = staticmethod(
+        test_rebuild_project_built_through_the_api)
+    test_search_paging_and_versions = staticmethod(
+        test_search_paging_and_versions)
+    test_feature_lineage_and_entity_project = staticmethod(
+        test_feature_lineage_and_entity_project)
+    test_error_mapping_bad_json_body = staticmethod(
+        test_error_mapping_bad_json_body)
+    test_rebuild_project_from_http_lineage_and_run = staticmethod(
+        test_rebuild_project_from_http_lineage_and_run)

@@ -119,11 +119,18 @@ def _req(url, method="GET", cred=None, expect=200):
         return json.loads(e.read())
 
 
-def test_rbac_over_http():
+@pytest.fixture(scope="module")
+def serve():
+    """``with serve(api) as url:`` — the server test_rbac_over_http runs
+    against: the single-node one here, a Raft node in the class below."""
+    return RegistryHttpServer
+
+
+def test_rbac_over_http(serve):
     reg, rbac = _store()
     api = RegistryApi(reg, rbac=rbac)
     rbac.grant(GLOBAL_SCOPE, "root", Permission.ADMIN, "root", "bootstrap")
-    with RegistryHttpServer(api) as url:
+    with serve(api) as url:
         base = f"{url}/api/v1"
         # version advertises rbac on
         assert _req(f"{url}/version")["rbac"] is True
@@ -165,3 +172,14 @@ def test_rbac_over_http():
         _req(f"{base}/users/alice/userroles/add?project=global&role=producer"
              f"&reason=done", method="DELETE", cred="root")
         _req(f"{base}/projects/proj", cred="alice", expect=403)
+
+
+class TestRbacOnRaftNode:
+    """test_rbac_over_http, unchanged, against a one-node Raft server:
+    its REST front end is the single-node server's, RBAC included."""
+
+    @pytest.fixture(scope="class")
+    def serve(self, one_node_raft):
+        return one_node_raft
+
+    test_rbac_over_http = staticmethod(test_rbac_over_http)

@@ -361,31 +361,30 @@ AVRO_ROWS = [
 def test_avro_codec_roundtrip_pure():
     """Encoder/decoder agree bit-for-bit on the primitive+nullable subset
     (zigzag varints, IEEE floats, length-prefixed strings/bytes, null
-    unions)."""
-    from feathr_spark.streaming.avro import (
-        decode_record, encode_record, parse_flat_record_schema,
-    )
-    fields = parse_flat_record_schema(AVRO_SCHEMA)
-    assert [f[0] for f in fields] == [
+    unions); None for a non-nullable field raises."""
+    from feathr_spark.streaming.avro import compile_schema
+    stype, enc, dec = compile_schema(AVRO_SCHEMA)
+    assert stype.fieldNames() == [
         "key", "fare", "city", "surge", "flag", "blob", "n", "note"]
     for row in AVRO_ROWS:
-        buf = encode_record(row, fields)
-        back = decode_record(buf, fields)
+        buf = enc(row)
+        back = dec(buf)
         for k, v in row.items():
             if isinstance(v, float) and k == "surge" and v is not None:
                 assert abs(back[k] - v) < 1e-6  # float32 round-trip
             else:
                 assert back[k] == v, (k, v, back[k])
+    for field in ("key", "fare", "city", "flag", "blob", "n"):
+        with pytest.raises(ValueError, match="non-nullable"):
+            enc(dict(AVRO_ROWS[0], **{field: None}))
 
 
 def test_avro_codec_property_roundtrip():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from feathr_spark.streaming.avro import (
-        decode_record, encode_record, parse_flat_record_schema,
-    )
-    fields = parse_flat_record_schema(AVRO_SCHEMA)
+    from feathr_spark.streaming.avro import compile_schema
+    _, enc, dec = compile_schema(AVRO_SCHEMA)
 
     @settings(max_examples=200, deadline=None)
     @given(key=st.integers(min_value=-2**63, max_value=2**63 - 1),
@@ -398,23 +397,29 @@ def test_avro_codec_property_roundtrip():
     def check(key, fare, city, flag, blob, n, note):
         row = {"key": key, "fare": fare, "city": city, "surge": None,
                "flag": flag, "blob": blob, "n": n, "note": note}
-        assert decode_record(encode_record(row, fields), fields) == row
+        assert dec(enc(row)) == row
 
     check()
 
 
 def test_avro_unsupported_shapes_raise():
-    from feathr_spark.streaming.avro import parse_flat_record_schema
+    """Only a record schema compiles; the array and multi-branch union
+    fields the deleted flat-record parser refused are part of
+    compile_schema's subset."""
+    from feathr_spark.streaming.avro import compile_schema
     with pytest.raises(NotImplementedError):
-        parse_flat_record_schema(
-            '{"type":"record","name":"r","fields":'
-            '[{"name":"xs","type":{"type":"array","items":"long"}}]}')
+        compile_schema('"long"')
     with pytest.raises(NotImplementedError):
-        parse_flat_record_schema(
-            '{"type":"record","name":"r","fields":'
-            '[{"name":"u","type":["long","string"]}]}')
-    with pytest.raises(NotImplementedError):
-        parse_flat_record_schema('"long"')
+        compile_schema('{"type":"array","items":"long"}')
+    _, enc, dec = compile_schema(
+        '{"type":"record","name":"r","fields":'
+        '[{"name":"xs","type":{"type":"array","items":"long"}}]}')
+    assert dec(enc({"xs": [1, -2]})) == {"xs": [1, -2]}
+    _, enc, dec = compile_schema(
+        '{"type":"record","name":"r","fields":'
+        '[{"name":"u","type":["long","string"]}]}')
+    assert dec(enc({"u": {"long": None, "string": "s"}})) == {
+        "u": {"long": None, "string": "s"}}
 
 
 def test_avro_decode_dataframe_values(spark):
@@ -423,13 +428,11 @@ def test_avro_decode_dataframe_values(spark):
     Arrow-batched fallback — either way the decoded values must match."""
     import datetime as dt
 
-    from feathr_spark.streaming.avro import (
-        decode_avro_payload, encode_record, parse_flat_record_schema,
-    )
-    fields = parse_flat_record_schema(AVRO_SCHEMA)
+    from feathr_spark.streaming.avro import compile_schema, decode_avro_payload
+    _, encode, _ = compile_schema(AVRO_SCHEMA)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     kafka_shaped = spark.createDataFrame(
-        [Row(value=bytearray(encode_record(r, fields)),
+        [Row(value=bytearray(encode(r)),
              timestamp=t0 + dt.timedelta(seconds=i))
          for i, r in enumerate(AVRO_ROWS)])
     out = decode_avro_payload(kafka_shaped, AVRO_SCHEMA,
@@ -456,15 +459,13 @@ def test_avro_decode_streaming_pipeline(spark, tmp_path):
     included)."""
     import datetime as dt
 
-    from feathr_spark.streaming.avro import (
-        decode_avro_payload, encode_record, parse_flat_record_schema,
-    )
-    fields = parse_flat_record_schema(AVRO_SCHEMA)
+    from feathr_spark.streaming.avro import compile_schema, decode_avro_payload
+    _, encode, _ = compile_schema(AVRO_SCHEMA)
     src_dir = tmp_path / "avro_stream"
     src_dir.mkdir()
     t0 = dt.datetime(2024, 1, 1)
     batch = spark.createDataFrame(
-        [Row(value=bytearray(encode_record(r, fields)), timestamp=t0)
+        [Row(value=bytearray(encode(r)), timestamp=t0)
          for r in AVRO_ROWS])
     batch.write.parquet(str(src_dir / "b1.parquet"))
     stream = spark.readStream.schema(batch.schema).parquet(
@@ -530,9 +531,7 @@ def test_kafka_jvm_branch_contract(spark):
     # exactly (value column, verbatim schema json); when the connector
     # is absent it falls back to the Arrow decoder with equal values.
     import pyspark.sql.avro.functions as paf
-    from feathr_spark.streaming.avro import (
-        encode_record, parse_flat_record_schema,
-    )
+    from feathr_spark.streaming.avro import compile_schema
     calls = []
     real_from_avro = paf.from_avro
 
@@ -540,9 +539,9 @@ def test_kafka_jvm_branch_contract(spark):
         calls.append(jsonFormatSchema)
         return real_from_avro(data, jsonFormatSchema, options or {})
 
-    fields = parse_flat_record_schema(AVRO_SCHEMA)
+    _, encode, _ = compile_schema(AVRO_SCHEMA)
     kafka_shaped = spark.createDataFrame(
-        [Row(value=bytearray(encode_record(r, fields))) for r in AVRO_ROWS])
+        [Row(value=bytearray(encode(r))) for r in AVRO_ROWS])
     paf.from_avro = recording_from_avro
     try:
         out = avro_mod.decode_avro_payload(kafka_shaped, AVRO_SCHEMA)
@@ -564,7 +563,7 @@ def test_avro_jvm_path_errors_propagate(spark, monkeypatch, failure):
     import pyspark.sql.avro.functions as paf
     from pyspark.errors import AnalysisException
     from feathr_spark.streaming import avro as avro_mod
-    from feathr_spark.streaming.avro import encode_record, parse_flat_record_schema
+    from feathr_spark.streaming.avro import compile_schema
 
     def broken_from_avro(data, jsonFormatSchema, options=None):
         if failure == "runtime":
@@ -574,9 +573,9 @@ def test_avro_jvm_path_errors_propagate(spark, monkeypatch, failure):
     def no_fallback(avro_json):
         raise AssertionError("fell back to the Python decoder")
 
-    fields = parse_flat_record_schema(AVRO_SCHEMA)
+    _, encode, _ = compile_schema(AVRO_SCHEMA)
     kafka_shaped = spark.createDataFrame(
-        [Row(value=bytearray(encode_record(r, fields))) for r in AVRO_ROWS])
+        [Row(value=bytearray(encode(r))) for r in AVRO_ROWS])
     monkeypatch.setattr(paf, "from_avro", broken_from_avro)
     monkeypatch.setattr(avro_mod, "compile_schema", no_fallback)
     expected = AnalysisException if failure == "analysis" else RuntimeError
